@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -1083,43 +1083,66 @@ object Components {
     * top-`topN` candidate edges — recommendation / missing-link
     * mining over any co-occurrence graph.
     *
-    * Scale shape: common-neighbor counts come from the wedge
-    * self-join of the symmetric edge list on its CENTER node (cost
-    * Σ deg² — the same quadratic-in-hub-degree intermediate every
-    * wedge method has; see [[triangleCounts]] for why orientation
-    * can't help here: both endpoints of an unordered candidate pair
-    * are needed, the center is fixed). One hash aggregate collapses
-    * wedges to pair counts, existing edges leave via one anti-join,
-    * degrees arrive via two node-keyed joins, and the global top-N is
-    * a `TakeOrderedAndProject` — no full sort, no driver state.
+    * Scale shape: the common-neighbor counts are the Σ deg² wedge mass
+    * of the graph — quadratic in the hottest hub's degree, whatever the
+    * plan (see [[triangleCounts]] for why orientation can't help here:
+    * both endpoints of an unordered candidate pair are needed, the
+    * center is fixed). [[jaccardFromCanon]] picks the plan that pays
+    * it; every route ends in a `TakeOrderedAndProject` — per-partition
+    * top-N heaps, no full sort.
     */
   def jaccardLinkPrediction(edges: DataFrame, srcCol: String,
       dstCol: String, topN: Int = 50): DataFrame =
-    jaccardFromCanon(
-      edges
-        .select(least(col(srcCol), col(dstCol)).as("u"),
-          greatest(col(srcCol), col(dstCol)).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        // three consumers (sym legs, degrees, anti-join) — compute once
-        .localCheckpoint(),
-      topN)
+    jaccardFromCanon(canonicalEdges(edges, srcCol, dstCol), topN)
 
-  /** Exact path over an already-canonicalized, already-checkpointed
-    * (u < v, distinct) edge relation — shared by
-    * [[jaccardLinkPrediction]] and [[jaccardLinksAuto]] so the router's
-    * degree probe and the wedge join read ONE materialization of the
-    * graph build (the probe re-paid the whole orders⋈lineitem build in
-    * the first r8 cut — measured +10 s on q154).
+  /** (u, v) with u < v, self-loops dropped, deduplicated and
+    * checkpointed, so the CSR collect, the probes and the wedge plans
+    * all read ONE materialization of the graph build. The checkpoint is
+    * lazy: its first reader (the CSR collect) materializes it, so it
+    * costs no job of its own.
+    */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .where(col("u") =!= col("v"))
+      .distinct()
+      .localCheckpoint(eager = false)
+
+  /** Exact top-N Jaccard over an already-canonicalized, already-
+    * checkpointed (u < v, distinct) edge relation. Three routes, all
+    * exact and row-identical (spec-pinned against each other on
+    * adversarial graphs):
     *
-    * Round 13: the wedge join runs over DISTINCT NEIGHBOR SETS, not
-    * nodes. The declared graph carries millions of jaccard-1.0 pairs —
-    * i.e. large groups of nodes with bit-identical adjacency — and the
-    * node-level self-join paid the full C(deg, 2) wedge mass for every
-    * group member (the approx path already collapsed identical MinHash
-    * signatures before its band join for exactly this reason). The
-    * collapse is EXACT, not approximate, on three provable facts about
-    * identical-adjacency groups in a simple graph:
+    *   1. KERNEL ([[jaccardCsr]]) — integral ids and 2|E| ≤
+    *      `maxSymRows`, counted by one bounded collect (never a stats
+    *      guess): the graph becomes a driver-built [[AdjacencyCsr]],
+    *      broadcast once, and each task counts its rows' common
+    *      neighbors in a sparse accumulator and keeps a local top-N.
+    *      No pair relation exists outside a task; the only exchange
+    *      carries ≤ topN rows per task into the global top-N. Under the
+    *      bound this is the route whatever the adjacency structure.
+    *   2. COLLAPSED ([[jaccardCollapsed]]) — past the bound, when
+    *      grouping nodes with identical neighbor sets at least halves
+    *      the wedge mass: Σ_u deg(u)² ≥ 2 · Σ_{distinct set} rdeg²,
+    *      where rdeg is the number of distinct neighbor GROUPS of the
+    *      set (its degree in the collapsed graph — not Σ_group deg²,
+    *      which hub centers dominate on both sides on a clone-fan
+    *      graph). The grouping is estimated by an order-free
+    *      fingerprint (degree + two xxhash64 xors); a collision can only
+    *      nudge the route, never the answer — the collapsed plan groups
+    *      by exact arrays.
+    *   3. SHUFFLE ([[jaccardNodeLevel]]) — past the bound, or for
+    *      non-integral ids, when collapse does not pay: the distributed
+    *      wedge self-join with a sorted pair count — the 100 TB shape.
+    *
+    * `spark.graft.jaccard.collapse` pins a route: `always` → 2 at any
+    * size; `never` → 1 under the bound, 3 past it; `auto` → 1 under the
+    * bound, the rule above past it.
+    *
+    * The collapse is EXACT on three facts about identical-adjacency
+    * groups in a simple graph:
     *
     *   1. two nodes with the same neighbor set are never adjacent
     *      (a ~ b with N(a)=N(b) would put b in N(b): a self-loop), so
@@ -1143,146 +1166,305 @@ object Components {
     * it (one per group pair: its minimum pair). Each expanded side is
     * sliced to its topN+1 smallest members, which provably contains
     * the group pair's own top-`topN` node pairs, so expansion is
-    * O(topN³) rows worst case — metadata scale, independent of group
-    * sizes.
+    * O(topN³) rows worst case, independent of group sizes.
     *
-    * Whether to collapse is itself MEASURED, not assumed: the declared
-    * q154 graph has no identical-adjacency structure at all (measured
-    * sf0.1: 15,987 nodes, 15,987 distinct neighbor sets), so running
-    * the collapse there pays two array shuffles for a 1.0× wedge
-    * saving — solo-measured +30% wall over the node-level plan. The
-    * probe computes a commutative neighbor-set fingerprint per node
-    * (degree + two independent xxhash64 xors — order-free, so no sort
-    * and no arrays; the same groupBy yields the degree relation the
-    * node path needs anyway), maps each node's neighbors to their
-    * fingerprints with one edge-linear join, and compares the exact
-    * node-level wedge mass Σ_u deg(u)² against the true collapsed
-    * wedge mass Σ_{distinct group} rdeg², where rdeg = the number of
-    * DISTINCT neighbor groups (the group's degree in the rep graph —
-    * NOT Σ_group deg²: on a clone-fan graph the un-collapsible hub
-    * centers dominate both sides of that naive ratio even though
-    * their rep-graph degree shrinks by the clone factor, which is
-    * where the entire saving lives). Collapse only when it buys ≥ 2×.
-    * A fingerprint collision can only nudge the ESTIMATE (the
-    * collapsed path still groups by exact arrays), never correctness.
-    *
-    * Scale shape, collapsed: two edge-linear shuffles build the
-    * adjacency-set groups (total payload 2|E| longs — arrays per
-    * node, never pair mass), the wedge self-join pays Σ deg² on the
-    * COLLAPSED group graph, and the node-level graph is never touched
-    * again. Probe overhead on the no-collapse route: the fingerprint
-    * groupBy IS the node path's degree computation, plus one 1-row
-    * duplicate-fingerprint count over #nodes rows; the heavier rdeg
-    * probe (an EDGE-linear join of the 2|E|-row sym relation against
-    * the fingerprints, then a per-node distinct-count) runs ONLY when
-    * duplicate fingerprints exist at all — a graph with all-distinct
-    * neighbor sets (the declared q154 regime) never pays it. Forced
-    * modes skip whatever they don't need: "always" builds no
-    * fingerprints, "never" computes degrees only.
+    * @param maxSymRows the kernel bound on 2|E|; a negative one forces
+    *                   the past-the-bound routes even on an empty graph
     */
-  private def jaccardFromCanon(canon: DataFrame, topN: Int): DataFrame = {
+  private[operators] def jaccardFromCanon(canon: DataFrame, topN: Int,
+      maxSymRows: Long = BcastSymRows): DataFrame =
+    jaccardRoute(canon, topN, AdjacencyCsr.collect(canon, maxSymRows))
+
+  /** [[jaccardFromCanon]] with the CSR collect passed by name: a caller
+    * that already holds it ([[jaccardLinksAuto]]) shares it, and the
+    * forced-collapse route never pays it.
+    */
+  private def jaccardRoute(canon: DataFrame, topN: Int,
+      csrOrNone: => Option[AdjacencyCsr]): DataFrame = {
     val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
-    // ops override: spark.graft.jaccard.collapse = auto|always|never
-    // ("auto" = the measured probe; the forced modes exist for A/B
-    // measurement and for pinning a plan in production)
     val mode = canon.sparkSession.conf
       .get("spark.graft.jaccard.collapse", "auto")
     if (mode == "always") return jaccardCollapsed(canon, sym, topN)
-    if (mode == "never") {
-      // node path needs degrees only — no fingerprint hashes
-      val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
-      return jaccardNodeLevel(canon, sym, deg, topN)
+    csrOrNone match {
+      case Some(csr) => jaccardCsr(canon, csr, topN)
+      case None if mode == "never" =>
+        val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+          .localCheckpoint()
+        jaccardNodeLevel(canon, sym, deg, topN)
+      case None =>
+        // bit_xor, not sum: order-free like sum but cannot overflow
+        // under ANSI; neighbors are distinct per node, so xor over two
+        // independent 64-bit hashes is a sound set fingerprint
+        val fp = sym.groupBy(col("u")).agg(
+          count(lit(1)).as("deg"),
+          bit_xor(xxhash64(col("v"))).as("s1"),
+          bit_xor(xxhash64(col("v"), lit(1))).as("s2"))
+          .localCheckpoint()
+        // zero duplicate fingerprints ⇒ no collapse possible, so the
+        // edge-linear rdeg probe runs only when duplicates exist; an
+        // empty graph (0 nodes = 0 distinct) routes node-level too,
+        // never reaching the probe's NULL sums
+        val gate = fp.agg(count(lit(1)).as("n"),
+          count_distinct(col("deg"), col("s1"), col("s2")).as("nd")).head()
+        val collapse = gate.getLong(0) != gate.getLong(1) && {
+          val gids = fp.select(col("u"),
+            xxhash64(col("deg"), col("s1"), col("s2")).as("gid"))
+          // identical-set nodes share rdeg, so the collapsed wedge
+          // mass sums rdeg² ONCE per distinct group
+          val rdeg = sym
+            .join(gids.withColumnRenamed("u", "v")
+              .withColumnRenamed("gid", "ngid"), Seq("v"))
+            .groupBy(col("u"))
+            .agg(count_distinct(col("ngid")).as("rdeg"))
+          val probe = fp.select(col("u"), col("deg"))
+            .join(gids, Seq("u")).join(rdeg, Seq("u"))
+            .groupBy(col("gid"))
+            .agg(count(lit(1)).as("g"), first(col("deg")).as("deg"),
+              first(col("rdeg")).as("rdeg"))
+            .agg(sum(col("g") * col("deg") * col("deg")).as("wedge_node"),
+              sum(col("rdeg") * col("rdeg")).as("wedge_grp"))
+            .head()
+          !probe.isNullAt(0) && !probe.isNullAt(1) &&
+            probe.getLong(0) >= 2 * probe.getLong(1)
+        }
+        if (collapse) jaccardCollapsed(canon, sym, topN)
+        else jaccardNodeLevel(canon, sym, fp.select(col("u"), col("deg")),
+          topN)
     }
-    // commutative fingerprint probe (see scaladoc): wedge mass before
-    // vs after identical-adjacency collapse, exactly, without arrays
-    // bit_xor, not sum: order-free like sum but cannot overflow under
-    // ANSI; neighbors are distinct per node, so xor over two
-    // independent 64-bit hashes is a sound set fingerprint
-    val fp = sym.groupBy(col("u")).agg(
-      count(lit(1)).as("deg"),
-      bit_xor(xxhash64(col("v"))).as("s1"),
-      bit_xor(xxhash64(col("v"), lit(1))).as("s2"))
-      .localCheckpoint()
-    // cheap gate first: with zero duplicate fingerprints no collapse
-    // is possible, so the edge-linear rdeg probe below never runs on
-    // all-distinct graphs. count() also covers the empty-graph case
-    // (0 nodes = 0 distinct → node-level, which returns empty) that
-    // would otherwise surface as NULL sums in the wedge-mass probe.
-    val gate = fp.agg(count(lit(1)).as("n"),
-      count_distinct(col("deg"), col("s1"), col("s2")).as("nd")).head()
-    val collapse = gate.getLong(0) != gate.getLong(1) && {
-      // gid: one 64-bit group id per node from its fingerprint
-      val gids = fp.select(col("u"),
-        xxhash64(col("deg"), col("s1"), col("s2")).as("gid"))
-      // rdeg(u) = u's degree in the rep graph = distinct neighbor
-      // groups; identical-set nodes share rdeg, so the collapsed
-      // wedge mass sums rdeg² ONCE per distinct group
-      val rdeg = sym
-        .join(gids.withColumnRenamed("u", "v")
-          .withColumnRenamed("gid", "ngid"), Seq("v"))
-        .groupBy(col("u"))
-        .agg(count_distinct(col("ngid")).as("rdeg"))
-      val probe = fp.select(col("u"), col("deg"))
-        .join(gids, Seq("u")).join(rdeg, Seq("u"))
-        .groupBy(col("gid"))
-        .agg(count(lit(1)).as("g"), first(col("deg")).as("deg"),
-          first(col("rdeg")).as("rdeg"))
-        .agg(sum(col("g") * col("deg") * col("deg")).as("wedge_node"),
-          sum(col("rdeg") * col("rdeg")).as("wedge_grp"))
-        .head()
-      // belt-and-braces: the gate guarantees fp is non-empty here, so
-      // the sums cannot be NULL; treat it as no-collapse if they ever are
-      !probe.isNullAt(0) && !probe.isNullAt(1) &&
-        probe.getLong(0) >= 2 * probe.getLong(1)
-    }
-    if (collapse) jaccardCollapsed(canon, sym, topN)
-    else jaccardNodeLevel(canon, sym,
-      fp.select(col("u"), col("deg")), topN)
   }
 
-  /** Node-level wedge plan — the right plan when the graph has little
-    * identical-adjacency structure (the declared q154 regime). `deg`
-    * arrives precomputed from [[jaccardFromCanon]]'s probe groupBy.
+  /** Compressed-sparse-row adjacency of a canonical edge set over dense
+    * node indices: row i is node `ids(i)`, and its neighbors are the
+    * ascending dense indices `nbrs(offsets(i) until offsets(i + 1))`.
+    * `ids` is sorted, so dense order is id order.
+    */
+  private[operators] final class AdjacencyCsr(val ids: Array[Long],
+      val offsets: Array[Int], val nbrs: Array[Int]) extends Serializable {
+
+    def n: Int = ids.length
+
+    def deg(u: Int): Int = offsets(u + 1) - offsets(u)
+
+    def maxDegree: Long = {
+      var m = 0
+      for (u <- 0 until n) m = m max deg(u)
+      m
+    }
+
+    /** Row boundaries of at most `parts` contiguous ranges holding
+      * equal shares of the kernel's inner-loop work. Row u visits, for
+      * each neighbor w, the x ∈ N(w) with x > u — and that count is
+      * deg(w) minus the rows ≤ u seen so far in N(w), which one cursor
+      * per row tracks in a single ascending pass.
+      */
+    def balancedRanges(parts: Int): Array[Int] = {
+      val cursor = new Array[Int](n)
+      val work = new Array[Long](n)
+      var total = 0L
+      var u = 0
+      while (u < n) {
+        var cost = deg(u).toLong
+        var i = offsets(u)
+        while (i < offsets(u + 1)) {
+          val w = nbrs(i)
+          cursor(w) += 1
+          cost += deg(w) - cursor(w) + 1
+          i += 1
+        }
+        work(u) = cost
+        total += cost
+        u += 1
+      }
+      val cuts = scala.collection.mutable.ArrayBuilder.make[Int]
+      cuts += 0
+      var acc = 0L
+      var next = 1
+      u = 0
+      while (u < n) {
+        acc += work(u)
+        if (next < parts && acc * parts >= total * next && u + 1 < n) {
+          cuts += u + 1
+          while (next < parts && acc * parts >= total * next) next += 1
+        }
+        u += 1
+      }
+      cuts += n
+      cuts.result()
+    }
+
+    /** The top-`k` non-adjacent pairs (a, b), a in rows [lo, hi), b > a,
+      * by (jaccard desc, a, b), as (a, b, n_common, deg_a, deg_b,
+      * jaccard) over original ids. A dense accumulator counts, for each
+      * row a, the x > a reached through each shared neighbor, with a
+      * touched list so reset costs the pairs found, not n.
+      */
+    def topPairs(lo: Int, hi: Int, k: Int): Iterator[Row] = {
+      if (k <= 0 || lo >= hi) return Iterator.empty
+      val acc = new Array[Int](n)
+      val mark = new Array[Int](n) // mark(x) == a + 1 ⇔ x ∈ N(a)
+      val touched = new Array[Int](n)
+      val top = new TopPairs(k)
+      var a = lo
+      while (a < hi) {
+        val s = offsets(a)
+        val e = offsets(a + 1)
+        var i = s
+        while (i < e) { mark(nbrs(i)) = a + 1; i += 1 }
+        var nt = 0
+        i = s
+        while (i < e) {
+          val w = nbrs(i)
+          var j = offsets(w + 1) - 1
+          while (j >= offsets(w) && nbrs(j) > a) {
+            val x = nbrs(j)
+            if (acc(x) == 0) { touched(nt) = x; nt += 1 }
+            acc(x) += 1
+            j -= 1
+          }
+          i += 1
+        }
+        var t = 0
+        while (t < nt) {
+          val b = touched(t)
+          val c = acc(b)
+          acc(b) = 0
+          if (mark(b) != a + 1)
+            top.offer(a, b, c, c.toDouble / (e - s + deg(b) - c).toDouble)
+          t += 1
+        }
+        a += 1
+      }
+      top.pairs.map(p => Row(ids(p.a), ids(p.b), p.c.toLong,
+        deg(p.a).toLong, deg(p.b).toLong, p.jaccard))
+    }
+  }
+
+  private[operators] object AdjacencyCsr {
+
+    /** The CSR of a canonical (u < v, distinct) edge relation, or None
+      * for non-integral ids, a negative bound or more than
+      * `maxSymRows / 2` edges — one bounded collect of at most that many
+      * rows plus one.
+      */
+    def collect(canon: DataFrame, maxSymRows: Long): Option[AdjacencyCsr] = {
+      import org.apache.spark.sql.types._
+      canon.schema("u").dataType match {
+        case ByteType | ShortType | IntegerType | LongType if maxSymRows >= 0 =>
+          val maxEdges = (maxSymRows / 2) min (Int.MaxValue - 1)
+          val rows = canon
+            .select(col("u").cast("long"), col("v").cast("long"))
+            .limit(maxEdges.toInt + 1).collect()
+          if (rows.length > maxEdges) None
+          else Some(build(rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+        case _ => None
+      }
+    }
+
+    def build(us: Array[Long], vs: Array[Long]): AdjacencyCsr = {
+      val all = us ++ vs
+      java.util.Arrays.sort(all)
+      var n = 0
+      for (i <- all.indices)
+        if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
+      val ids = java.util.Arrays.copyOf(all, n)
+      val du = us.map(java.util.Arrays.binarySearch(ids, _))
+      val dv = vs.map(java.util.Arrays.binarySearch(ids, _))
+      val offsets = new Array[Int](ids.length + 1)
+      (du ++ dv).foreach(x => offsets(x + 1) += 1)
+      for (i <- 1 to ids.length) offsets(i) += offsets(i - 1)
+      val fill = offsets.clone()
+      val nbrs = new Array[Int](2 * us.length)
+      for (e <- us.indices) {
+        nbrs(fill(du(e))) = dv(e); fill(du(e)) += 1
+        nbrs(fill(dv(e))) = du(e); fill(dv(e)) += 1
+      }
+      for (u <- ids.indices) java.util.Arrays.sort(nbrs, offsets(u), offsets(u + 1))
+      new AdjacencyCsr(ids, offsets, nbrs)
+    }
+  }
+
+  /** One candidate pair over dense indices. */
+  private final class ScoredPair(val a: Int, val b: Int, val c: Int,
+      val jaccard: Double)
+
+  /** Bounded top-k under the result order (jaccard desc, a, b): a heap
+    * whose head is the worst kept pair, so a candidate that does not
+    * beat it is rejected without allocating.
+    */
+  private final class TopPairs(k: Int) {
+    private def ahead(j: Double, a: Int, b: Int, q: ScoredPair): Boolean =
+      j > q.jaccard || (j == q.jaccard && (a < q.a || (a == q.a && b < q.b)))
+    private val heap = new java.util.PriorityQueue[ScoredPair](
+      math.min(k, 1024), (p: ScoredPair, q: ScoredPair) =>
+        if (ahead(p.jaccard, p.a, p.b, q)) 1
+        else if (ahead(q.jaccard, q.a, q.b, p)) -1 else 0)
+
+    def offer(a: Int, b: Int, c: Int, j: Double): Unit =
+      if (heap.size < k) heap.add(new ScoredPair(a, b, c, j))
+      else if (ahead(j, a, b, heap.peek)) {
+        heap.poll()
+        heap.add(new ScoredPair(a, b, c, j))
+      }
+
+    def pairs: Iterator[ScoredPair] = {
+      import scala.jdk.CollectionConverters._
+      heap.iterator.asScala
+    }
+  }
+
+  /** Route 1 of [[jaccardFromCanon]]: one broadcast of the CSR, one
+    * task per wedge-balanced row range, each emitting its local top-N,
+    * merged by the same `orderBy(...).limit(topN)` as the other routes
+    * (TakeOrderedAndProject). Node columns keep the input id type;
+    * n_common and degrees are long, jaccard is the same double
+    * expression, n / (deg_a + deg_b − n), as the wedge plans.
+    */
+  private[operators] def jaccardCsr(canon: DataFrame, csr: AdjacencyCsr,
+      topN: Int): DataFrame = {
+    import org.apache.spark.sql.types._
+    val spark = canon.sparkSession
+    val sc = spark.sparkContext
+    val cuts = csr.balancedRanges(2 * sc.defaultParallelism)
+    val bc = sc.broadcast(csr)
+    val rows = sc.parallelize(cuts.indices.init, cuts.length - 1)
+      .mapPartitions(_.flatMap(r => bc.value.topPairs(cuts(r), cuts(r + 1), topN)))
+    val schema = StructType(
+      Seq("node_a", "node_b", "n_common", "deg_a", "deg_b")
+        .map(StructField(_, LongType, nullable = false)) :+
+        StructField("jaccard", DoubleType))
+    val idType = canon.schema("u").dataType
+    spark.createDataFrame(rows, schema)
+      .select(col("node_a").cast(idType).as("node_a"),
+        col("node_b").cast(idType).as("node_b"), col("n_common"),
+        col("deg_a"), col("deg_b"), col("jaccard"))
+      .orderBy(col("jaccard").desc, col("node_a"), col("node_b"))
+      .limit(topN)
+  }
+
+  /** Route 3 of [[jaccardFromCanon]], the shuffle plan: reached only
+    * past the kernel bound (or for non-integral ids), so every join here
+    * is planned for data that does not fit a broadcast. `deg` arrives
+    * from the router's probe groupBy.
     *
-    * Round 14 (guide §2.3/§2.4, measured from the r13 plan): the old
-    * shape shuffled AND sorted the pair relation (56.3 M rows at sf0.1
-    * — bigger than the graph by 136×) three more times AFTER the wedge
-    * aggregate: a sort for the SMJ anti-join against the edge list and
-    * an exchange+sort each for the two degree joins (every join was
-    * SMJ because localCheckpoint scans carry no stats). The pair
-    * relation is the heavy proxy here, so those passes dominated:
-    * 416 cpu-s suite-measured, of which the wedge join + aggregate are
-    * only a fraction. Two fixes, both runtime-gated:
-    *
-    *   - PACKED LEGS: when every node id fits [0, 2³¹) (measured — one
-    *     aggregate over the node-sized deg relation), each wedge leg
-    *     carries (node << 32 | deg) as ONE long. deg ≤ #nodes < 2³¹ by
-    *     the same gate, ids are distinct per leg so packed comparisons
-    *     order exactly like node ids, and the wedge aggregate's keys
-    *     stay two primitive longs (same shuffle bytes as before) —
-    *     but the post-aggregate degree joins VANISH: degrees decode
-    *     out of the key with two bit ops per surviving row.
-    *   - MEASURED BROADCAST: the wedge join's build side, the packed
-    *     edge anti-join side and the leg degree-attach are broadcast
-    *     when the measured edge count is under `BcastSymRows/2` (the
-    *     hits/q81 strategy-select discipline — counts, not stats
-    *     guesses). Past the bound every join falls back to the shuffle
-    *     plan, which is the 100 TB shape.
-    *
-    * Net plan at sf0.1: pair relation touched by exactly ONE exchange
-    * (the wedge aggregate's own) and then consumed in a single stage —
-    * broadcast anti-join probe, decode projection, TakeOrdered heap —
-    * instead of 3 exchanges + 4 sorts (see plans/r14/
-    * q154_jaccard_links_{before,after}.txt). Ids past 2³¹ or edge
-    * counts past the bound take the legacy plan unchanged.
+    * Invariants:
+    *   - PACKED LEGS when the ids are LongType in [0, 2³¹) (one min/max
+    *     aggregate over the node-sized `deg`): each wedge leg carries
+    *     (node << 32 | deg) as ONE long. deg ≤ #nodes < 2³¹ by the same
+    *     gate and ids are distinct per leg, so packed comparisons order
+    *     exactly like ids, and the degrees decode out of the pair key
+    *     after the count — no post-aggregate degree joins. Other ids
+    *     take [[jaccardNodeLevelWide]].
+    *   - The pair relation, the only relation bigger than the graph, is
+    *     touched by exactly one exchange (on a single packed long key,
+    *     which radix-sorts) and counted by a streaming sort aggregate,
+    *     then consumed in the same stage by the anti-join, the decode
+    *     projection and the TakeOrdered heap.
     */
   private[operators] def jaccardNodeLevel(canon: DataFrame, sym: DataFrame,
       deg: DataFrame, topN: Int): DataFrame = {
     // Packable needs LongType ids, checked BEFORE the min/max probe:
     // Row.getLong throws on IntegerType and shiftleft on a 32-bit
-    // column masks the shift distance (a silent key collapse). Narrower
-    // integral ids take the wide fallback — correct, just unpacked.
+    // column masks the shift distance (a silent key collapse).
     val packable = deg.schema("u").dataType ==
       org.apache.spark.sql.types.LongType && {
       val bounds = deg.agg(min(col("u")), max(col("u"))).head()
@@ -1291,54 +1473,29 @@ object Components {
     }
     if (!packable)
       return jaccardNodeLevelWide(canon, sym, deg, topN)
-    val nEdges = canon.count()
-    val bcast = 2 * nEdges <= BcastSymRows
-    def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    // leg degree-attach: deg is node-sized (≤ 2|E| rows), broadcast
-    // under the same measured bound
     val packedLeg = sym
-      .join(hint(deg.select(col("u").as("v"), col("deg"))), Seq("v"))
+      .join(deg.select(col("u").as("v"), col("deg")), Seq("v"))
       .select(col("u").as("via"),
         shiftleft(col("v"), 32).bitwiseOR(col("deg")).as("p"))
-    // Probe-leg spread: on the broadcast path the whole wedge pipeline
-    // (emit → anti-probe → partial aggregate) runs in the probe leg's
-    // stage, and that leg inherits the localCheckpoint's AQE-coalesced
-    // partitioning — ~4 partitions for a 13 MB graph carrying a 92 M-row
-    // wedge mass (first cut of this plan measured 54 s wall / 3.4×
-    // parallelism at local[32]; the legacy SMJ's exchange was what
-    // spread it). One cheap keyed exchange of the EDGE-sized leg pins
-    // the heavy stage at the session's shuffle parallelism; hot centers
-    // spread by hash(via) over ~1000 suppliers stay balanced.
-    val nPart = sym.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val probeLeg =
-      if (bcast) packedLeg.repartition(nPart, col("via")) else packedLeg
     // Wedge generation stays a SELF-JOIN on the center column, not a
-    // grouped adjacency-list explode: a grouped variant (r9, measured
-    // 79 s vs 30 s solo at sf0.1) funnels each hub's C(deg, 2) pair
-    // mass through the single task holding that hub's row — the hot
-    // supplier's 4.5M-element combination array materializes in one
-    // JVM — while the join's probe side streams hub pairs across
+    // grouped adjacency-list explode: a grouped explode funnels each
+    // hub's C(deg, 2) pair mass through the single task holding that
+    // hub's row, while the join's probe side streams hub pairs across
     // every partition that holds a probe row.
-    val wedges = probeLeg.select(col("via"), col("p").as("pa"))
-      .join(hint(packedLeg.select(col("via"), col("p").as("pb"))),
-        Seq("via"))
+    val wedges = packedLeg.select(col("via"), col("p").as("pa"))
+      .join(packedLeg.select(col("via"), col("p").as("pb")), Seq("via"))
       .where(col("pa") < col("pb"))
-    // The pair COUNT is the irreducible kernel (56.3 M distinct keys at
-    // sf0.1) and a hash aggregate pays a random-access probe per wedge
-    // row into a map far larger than cache, twice (partial + final) —
-    // the r14 JFR profile put >60 % of q154's cpu in
-    // UnsafeFixedWidthAggregationMap/BytesToBytesMap probes, with the
-    // partial step deduplicating almost nothing (92 M rows → 56 M
-    // groups spread over every partition). So count by SORTING instead:
-    // one explicit exchange on a SINGLE packed long pair key
-    // (a << 32 | b) — radix-sortable, which a (pa, pb) two-column sort
-    // is not — then a streaming sort aggregate (sequential compares, no
-    // map; `replaceHashWithSortAgg` in the engine's sessions turns the
-    // planned hash aggregate into it because the child is sorted). The
+    // Count by SORTING, not hashing: a hash aggregate pays a random
+    // probe per wedge row into a map far larger than cache, twice
+    // (partial + final), and the partial step deduplicates almost
+    // nothing. One exchange on the packed pair key (a << 32 | b), then
+    // a streaming sort aggregate (`replaceHashWithSortAgg` in the
+    // engine's sessions turns the planned hash aggregate into it). The
     // degrees ride as a first() over the packed (deg_a << 32 | deg_b)
     // payload — constant within a group, and an order-SENSITIVE
     // aggregate, which also pins the sort against EliminateSorts.
+    val nPart = sym.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toInt
     val m32 = lit((1L << 32) - 1)
     val common = wedges
       .select(
@@ -1351,12 +1508,11 @@ object Components {
       .groupBy(col("pk"))
       .agg(count(lit(1)).as("n_common"), first(col("dd")).as("dd"))
     // packed edge list for the anti-join: u < v ⇒ same key orientation
-    // as the wedge pairs, and a single-long join key gets the
-    // LongHashedRelation fast path when broadcast
+    // as the wedge pairs
     val canonPk = canon
       .select(shiftleft(col("u"), 32).bitwiseOR(col("v")).as("pk"))
     common
-      .join(hint(canonPk), Seq("pk"), "left_anti")
+      .join(canonPk, Seq("pk"), "left_anti")
       .select(shiftright(col("pk"), 32).as("node_a"),
         col("pk").bitwiseAND(m32).as("node_b"), col("n_common"),
         shiftright(col("dd"), 32).as("deg_a"),
@@ -1369,17 +1525,18 @@ object Components {
       .limit(topN)
   }
 
-  /** Measured-broadcast bound for the jaccard kernels' node/edge-sized
-    * relations (≈ 64 MB of packed sym legs) — the q163/q81 discipline:
-    * a counted gate, not a stats guess, because localCheckpoint scans
-    * carry no statistics and would otherwise force SMJ everywhere.
+  /** Broadcast bound, in rows, for the graph kernels' node/edge-sized
+    * relations (≈ 64 MB of packed sym legs; for the jaccard kernel,
+    * 2|E| of the broadcast CSR) — the q163/q81 discipline: a counted
+    * gate, not a stats guess, because localCheckpoint scans carry no
+    * statistics and would otherwise force SMJ everywhere.
     */
   private val BcastSymRows = 4000000L
 
-  /** Legacy unpacked node-level plan — the fallback when node ids
-    * exceed 2³¹ (packing unavailable). Kept verbatim from round 13.
+  /** Unpacked node-level shuffle plan — [[jaccardNodeLevel]] for ids
+    * that do not pack (not LongType, or outside [0, 2³¹)).
     */
-  private def jaccardNodeLevelWide(canon: DataFrame, sym: DataFrame,
+  private[operators] def jaccardNodeLevelWide(canon: DataFrame, sym: DataFrame,
       deg: DataFrame, topN: Int): DataFrame = {
     val wedges = sym.select(col("u").as("via"), col("v").as("a"))
       .join(sym.select(col("u").as("via"), col("v").as("b")), Seq("via"))
@@ -1457,7 +1614,7 @@ object Components {
     //     carry (rep << 32 | deg), the aggregate keys stay two longs,
     //     and the post-aggregate degree joins decode out of the key.
     //   - MEASURED BROADCAST of the group-sized relations under the
-    //     counted [[BcastSymRows]] bound, matching the node plan.
+    //     counted [[BcastSymRows]] bound.
     // same LongType pre-gate as the node plan: getLong/shiftleft are
     // only sound on 64-bit ids; anything narrower routes to the
     // unpacked branch below. The probe also measures max(gsize): in the
@@ -1486,9 +1643,11 @@ object Components {
         val pmap = groups
           .select(col("rep"), shiftleft(col("rep"), 32)
             .bitwiseOR(col("deg")).as("p"))
-        // probe-leg spread: same rationale as the node plan — the
-        // broadcast wedge pipeline runs in this leg's stage, which
-        // otherwise inherits the checkpoint's coalesced partitioning
+        // probe-leg spread: the broadcast wedge pipeline runs in this
+        // leg's stage, which otherwise inherits the checkpoint's
+        // AQE-coalesced partitioning (a few tasks for the whole wedge
+        // mass); one exchange of the edge-sized leg pins it at the
+        // session's shuffle parallelism
         val nPart2 = repAdj.sparkSession.conf
           .get("spark.sql.shuffle.partitions").toInt
         val leftBase = repAdj.select(col("ru").as("via"), col("rv").as("rep"))
@@ -1608,10 +1767,12 @@ object Components {
   /** Degree-routed Jaccard link prediction — the production entry
     * point that picks between [[jaccardLinkPrediction]]'s exact wedge
     * join and [[approxJaccardLinks]]'s MinHash-LSH path on a MEASURED
-    * degree bound. The exact path's Σ deg² wedge intermediate is
-    * quadratic in the hottest hub's degree; one cheap degree probe
-    * (edge-linear aggregate, 1-row collect) decides whether that
-    * intermediate is affordable:
+    * degree bound. The exact path's Σ deg² wedge mass is quadratic in
+    * the hottest hub's degree; the max degree decides whether it is
+    * affordable. Under the kernel bound it is read off the CSR that
+    * [[jaccardFromCanon]]'s kernel runs on (one bounded collect serves
+    * both); past it, or when `spark.graft.jaccard.collapse=always`
+    * pins the collapsed plan, one edge-linear aggregate measures it:
     *
     *   - max degree ≤ `maxExactDegree` → exact top-N (identical to
     *     calling [[jaccardLinkPrediction]] directly — spec-pinned);
@@ -1639,20 +1800,19 @@ object Components {
   def jaccardLinksAuto(edges: DataFrame, srcCol: String, dstCol: String,
       topN: Int = 50, maxExactDegree: Long = 1L << 13,
       threshold: Double = 0.7): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      // one materialization serves the degree probe AND the routed
-      // exact path
-      .localCheckpoint()
-    val maxDeg = canon.select(col("u"))
+    val canon = canonicalEdges(edges, srcCol, dstCol)
+    // the forced-collapse route never runs the kernel, so it skips the
+    // CSR and probes the degree with the aggregate
+    val forced = canon.sparkSession.conf
+      .get("spark.graft.jaccard.collapse", "auto") == "always"
+    val csr =
+      if (forced) None else AdjacencyCsr.collect(canon, BcastSymRows)
+    val maxDeg = csr.fold(canon.select(col("u"))
       .unionAll(canon.select(col("v")))
       .groupBy(col("u")).agg(count(lit(1)).as("d"))
-      .agg(max(col("d"))).head().getLong(0)
+      .agg(max(col("d"))).head().getLong(0))(_.maxDegree)
     if (maxDeg <= maxExactDegree)
-      jaccardFromCanon(canon, topN)
+      jaccardRoute(canon, topN, csr)
     else
       // top-N means TOP-N on the approx side too — the ordering
       // contract lives HERE, at the limit site (approxJaccardLinks

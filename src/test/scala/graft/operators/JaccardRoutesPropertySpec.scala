@@ -1,0 +1,165 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, greatest, least, lit}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.GraftSession
+
+/** Differential checks of the four exact Jaccard link-prediction plans —
+  * the broadcast-CSR kernel, the node-level shuffle plan (reached by a
+  * negative kernel bound, which no edge count meets), its unpacked twin
+  * and the
+  * identical-adjacency collapsed plan — against each other and a local
+  * all-pairs oracle, over seeded adversarial graphs (deterministic
+  * reruns, as in the merge property checks): Int and Long ids, negative
+  * ids and ids past 2³¹, duplicate and reversed edges, self-loops, empty
+  * graphs, stars, clone fans and score ties at the top-N cut.
+  */
+class JaccardRoutesPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private var spark: SparkSession = _
+
+  override def beforeAll(): Unit = {
+    spark = GraftSession.local("jaccard-routes", cores = 4)
+  }
+  override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  private type Out = (Long, Long, Long, Long, Long, Double)
+
+  /** A kernel bound no edge count meets, the empty graph's included. */
+  private val PastBound = -1L
+
+  /** Raw edge lists over small dense labels; `ids` maps them to the
+    * id space under test.
+    */
+  private def graphs(rnd: scala.util.Random): Seq[(String, Seq[(Int, Int)])] = {
+    def random(n: Int, m: Int): Seq[(Int, Int)] = {
+      val es = Seq.fill(m)((rnd.nextInt(n), rnd.nextInt(n)))
+      // duplicates, reversed copies and self-loops ride along
+      es ++ es.take(m / 4) ++ es.take(m / 4).map(_.swap) ++
+        Seq.fill(3) { val x = rnd.nextInt(n); (x, x) }
+    }
+    val star = (1 to 12).map(l => (0, l))
+    // templates with 1–3 clones each: every clone carries exactly its
+    // template's neighbor set (jaccard-1.0 pairs, collapse-sized mass)
+    val base = random(30, 60).filter(e => e._1 != e._2)
+    val nbrs = base.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+      .map { case (x, es) => x -> es.map(_._2).distinct }
+    var next = 100
+    val clones = nbrs.toSeq.sortBy(_._1).take(8).flatMap { case (_, ns) =>
+      (0 to rnd.nextInt(3)).flatMap { _ => next += 1; ns.map(y => (next, y)) }
+    }
+    // hubs 0 and 1 share 6 leaves: many leaf pairs tie at 2/2 = 1.0 and
+    // at 2/3, so every cut below the candidate count lands on a tie
+    val ties = (2 to 7).flatMap(l => Seq((0, l), (1, l))) ++
+      Seq((2, 20), (3, 21), (4, 22))
+    Seq(
+      "empty" -> Seq.empty,
+      "self-loops only" -> Seq((3, 3), (4, 4)),
+      "random sparse" -> random(40, 70),
+      "random dense" -> random(14, 60),
+      "star" -> (star ++ star.map(_.swap)),
+      "clone fans" -> (base ++ clones),
+      "ties at the cut" -> ties)
+  }
+
+  private def canonOf(edges: DataFrame): DataFrame =
+    edges.select(least(col("u"), col("v")).as("u"),
+        greatest(col("u"), col("v")).as("v"))
+      .where(col("u") =!= col("v")).distinct().localCheckpoint()
+
+  private def rows(df: DataFrame): Seq[Out] = df.collect().toSeq.map(r =>
+    (r.get(0).asInstanceOf[Number].longValue,
+      r.get(1).asInstanceOf[Number].longValue,
+      r.getAs[Long]("n_common"), r.getAs[Long]("deg_a"),
+      r.getAs[Long]("deg_b"), r.getAs[Double]("jaccard")))
+
+  /** All non-adjacent pairs with a shared neighbor, in result order. */
+  private def oracle(edges: Seq[(Long, Long)], topN: Int): Seq[Out] = {
+    val canon = edges.collect {
+      case (a, b) if a != b => (a min b, a max b)
+    }.distinct
+    val adj = canon.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+      .map { case (k, vs) => k -> vs.map(_._2).toSet }
+    val nodes = adj.keys.toSeq.sorted
+    val all = for {
+      i <- nodes.indices; j <- (i + 1) until nodes.size
+      a = nodes(i); b = nodes(j)
+      if !adj(a).contains(b)
+      c = (adj(a) & adj(b)).size
+      if c > 0
+      da = adj(a).size.toLong; db = adj(b).size.toLong
+    } yield (a, b, c.toLong, da, db, c.toDouble / (da + db - c))
+    all.sortBy(o => (-o._6, o._1, o._2)).take(topN)
+  }
+
+  private def checkRoutes(idType: DataType, ids: Int => Long,
+      seed: Int): Unit = {
+    val sp = spark; import sp.implicits._
+    val rnd = new scala.util.Random(seed)
+    for ((name, raw) <- graphs(rnd)) {
+      val edges = raw.map { case (a, b) => (ids(a), ids(b)) }
+      val df =
+        if (idType == IntegerType)
+          edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("u", "v")
+        else edges.toDF("u", "v")
+      val canon = canonOf(df)
+      val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
+      val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      val csr = Components.AdjacencyCsr.collect(canon, Long.MaxValue).get
+      val nCand = oracle(edges, Int.MaxValue).size
+      for (topN <- Seq(0, 1, 50, nCand + 7)) {
+        val want = oracle(edges, topN)
+        val ctx = s"$idType $name topN=$topN"
+        val kernel = Components.jaccardCsr(canon, csr, topN)
+        assert(rows(kernel) === want, s"kernel: $ctx")
+        val shuffle = Components.jaccardFromCanon(canon, topN, PastBound)
+        spark.conf.set("spark.graft.jaccard.collapse", "never")
+        val forcedNodeLevel =
+          try Components.jaccardFromCanon(canon, topN, PastBound)
+          finally spark.conf.unset("spark.graft.jaccard.collapse")
+        assert(rows(forcedNodeLevel) === want, s"node level: $ctx")
+        assert(rows(shuffle) === want, s"past-bound auto: $ctx")
+        assert(rows(Components.jaccardNodeLevelWide(canon, sym, deg, topN))
+          === want, s"wide: $ctx")
+        assert(rows(Components.jaccardCollapsed(canon, sym, topN)) === want,
+          s"collapsed: $ctx")
+        assert(rows(Components.jaccardLinkPrediction(df, "u", "v", topN))
+          === want, s"auto: $ctx")
+        val expected = Seq("node_a" -> idType, "node_b" -> idType,
+          "n_common" -> LongType, "deg_a" -> LongType, "deg_b" -> LongType,
+          "jaccard" -> DoubleType)
+        for (out <- Seq(kernel, forcedNodeLevel))
+          assert(out.schema.map(f => f.name -> f.dataType) === expected,
+            s"schema: $ctx")
+      }
+    }
+  }
+
+  test("jaccard routes agree on Int ids, negative ids included") {
+    checkRoutes(IntegerType, i => i.toLong - 17L, seed = 154)
+  }
+
+  test("jaccard routes agree on Long ids past 2^31 and below zero") {
+    // order-preserving spread: labels keep their order, ids span
+    // negative values and values well past the 32-bit packing range
+    checkRoutes(LongType, i => (i.toLong - 40L) * (1L << 33) + 5L, seed = 282)
+  }
+
+  test("jaccard routes: kernel bound counts symmetric rows") {
+    val sp = spark; import sp.implicits._
+    val canon = canonOf(Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("u", "v"))
+    assert(Components.AdjacencyCsr.collect(canon, 6).map(_.n) === Some(4))
+    assert(Components.AdjacencyCsr.collect(canon, 5) === None)
+    // a negative bound refuses even the empty graph
+    val none = canonOf(Seq.empty[(Long, Long)].toDF("u", "v"))
+    assert(Components.AdjacencyCsr.collect(none, 0).map(_.n) === Some(0))
+    assert(Components.AdjacencyCsr.collect(none, PastBound) === None)
+    // non-integral ids always take the shuffle plans
+    val strs = canonOf(Seq(("a", "b")).toDF("u", "v"))
+    assert(Components.AdjacencyCsr.collect(strs, Long.MaxValue) === None)
+  }
+}

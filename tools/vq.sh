@@ -2,6 +2,8 @@
 # Subset correctness check: tools/vq.sh <q1,q2,...> [sfDir]
 # Runs graft.Verify on the compiled classes for the named queries, then the
 # DuckDB compare (tools/compare.py) against the same fixture dir.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+. "$ROOT/tools/host_env.sh"
 QS="$1"; SF="${2:-/root/testdata/sf0.01}"; OUT=/tmp/graft_verify
 ADD=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -10,9 +12,9 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD="$ADD --add-opens=java.base/$p=ALL-UNNAMED"
 done
 rm -rf "$OUT"
-SPARK_GRAFT_ONLY="$QS" SPARK_GRAFT_CPUS=32 \
-java -Xms${SPARK_DRIVER_MEM:-32g} -Xmx${SPARK_DRIVER_MEM:-32g} -XX:ReservedCodeCacheSize=1g -XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy -XX:NewRatio=1 $ADD \
+SPARK_GRAFT_ONLY="$QS" \
+java -Xms$SPARK_DRIVER_MEM -Xmx$SPARK_DRIVER_MEM -XX:ReservedCodeCacheSize=1g -XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy -XX:NewRatio=1 $ADD \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_HOME/jars/*" \
   graft.Verify "$SF" "$OUT" 2>/dev/null | grep "\[verify\]"
-python3 /root/repo/tools/compare.py "$SF" "$OUT"
+python3 "$ROOT/tools/compare.py" "$SF" "$OUT"
