@@ -612,31 +612,56 @@ object Components {
     * / community-density signal (local clustering coefficient's
     * numerator, spam-farm detection, graph health checks).
     *
-    * Algorithm: DEGREE-ORDERED edge orientation (Chiba–Nishizeki /
-    * Schank's forward algorithm). Every canonical edge {u,v} is
-    * directed from the endpoint that is SMALLER in the total order
-    * (degree, id) to the larger; a triangle {a,b,c} then materializes
-    * exactly once, as the wedge b←a→c (a the order-minimum) closed by
-    * the oriented edge b→c. Orienting by degree bounds every node's
-    * out-degree by O(√m), so the wedge relation — the only
-    * super-linear intermediate — is O(m^1.5) worst-case instead of the
-    * Θ(Σ deg²) a star graph inflicts on id-ordering: at web scale one
-    * celebrity hub with 10M neighbors would otherwise emit 10¹⁴
-    * wedges from a single key. Per-node counts are
-    * orientation-invariant (each triangle contributes one to each of
-    * its three corners), so the oracle can use plain id-ordering.
-    *
-    * Scale shape: two hash joins on node keys build the orientation,
-    * one self-join of out-edges on their source builds wedges, one
-    * hash join closes them against the oriented edges, and the
-    * per-corner count is an explode of triangle rows (3× triangle
-    * count) into a hash aggregate. No driver state, no all-pairs.
+    * @return (node, n_tri) for every node in at least one triangle;
+    *         node keeps the input id type, n_tri is long
     */
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
-      assumeCanonical: Boolean = false): DataFrame =
-    triangleList(edges, srcCol, dstCol, assumeCanonical)
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+  def triangleCounts(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    trianglesFromCanon(canonicalEdges(edges, srcCol, dstCol))
+
+  /** [[triangleCounts]] over [[canonicalEdges]]. Two routes, row-identical
+    * (spec-pinned against each other and a local oracle); the bounded
+    * CSR collect is the only probe, and the fallback runs unchanged
+    * after it:
+    *
+    *   1. KERNEL ([[triangleCensus]]) — integral ids and 2|E| ≤
+    *      `maxSymRows`: the broadcast [[AdjacencyCsr]] and one
+    *      `mapPartitions` over row ranges. Nothing is shuffled and no
+    *      wedge exists outside a task; the work is
+    *      Σ_{(x,y) ∈ E} min(deg y, deg x · ⌈log₂ deg y⌉) =
+    *      O(m^1.5 log m) even on a star hub
+    *      ([[AdjacencyCsr.common]]).
+    *   2. FALLBACK — past the bound or for non-integral ids: one row per
+    *      triangle from [[triangleList]], exploded to its three corners
+    *      into a hash aggregate.
+    *
+    * @param maxSymRows the kernel bound on 2|E|; a negative one forces
+    *                   the fallback even on an empty graph
+    */
+  private[operators] def trianglesFromCanon(canon: DataFrame,
+      maxSymRows: Long = BcastSymRows): DataFrame =
+    AdjacencyCsr.collect(canon, maxSymRows) match {
+      case Some(csr) => triangleCensus(canon, csr)
+        .where(col("n_tri") > 0).select(col("node"), col("n_tri"))
+      case None => cornerCounts(triangleList(canon, "u", "v"))
+    }
+
+  /** (node, n_tri) from one row per triangle (a, b, c): each triangle
+    * counts once at each of its corners.
+    */
+  private def cornerCounts(tri: DataFrame): DataFrame =
+    tri.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
+
+  /** The kernel route of [[triangleCounts]] and
+    * [[localClusteringCoefficient]]: (node, deg, n_tri) for every node
+    * of degree ≥ 2, over the broadcast CSR — row ranges balanced by
+    * [[AdjacencyCsr.intersectWork]].
+    */
+  private def triangleCensus(canon: DataFrame, csr: AdjacencyCsr): DataFrame =
+    csrFrame(canon, Seq("node", "deg", "n_tri"), ids = Set("node"))(
+      csrRows(canon, csr, csr.intersectWork(above = false))(
+        (g, lo, hi) => g.census(lo, hi)))
 
   /** Out-degree gate for the id-ordered map-side wedge path: a node
     * whose greater-id neighbor array has ≤ 2¹² elements generates at
@@ -647,69 +672,48 @@ object Components {
   private val IdOrderOutDegreeBound = 1 << 12
 
   /** Triangle ENUMERATION — one row per triangle {a,b,c}, a the
-    * orientation-minimum corner. Factored out of [[triangleCounts]] so
-    * edge-support consumers ([[ktruss]]) reuse the wedge machinery.
+    * orientation-minimum corner: the shuffle plan behind the fallback
+    * route of [[triangleCounts]], [[localClusteringCoefficient]] and
+    * [[ktruss]], which reach it only past the kernel bound or for
+    * non-integral ids. No driver state, no all-pairs. Invariants:
     *
-    * Measured strategy select between two orientations, routed by an
-    * out-degree probe on ONE adjacency relation (the r10 grind: the
-    * always-degree-ordered join path spent 2× its actual wedge stream
-    * on orientation overhead at sf0.1 — degree shuffle, two rank
-    * joins, a repartition and a second checkpoint were 5.4 s of the
-    * 7.3 s total, while the wedge+closing+count tail was 1.6 s):
-    *   - ID-ORDERED map-side wedges (the default): one exchange
-    *     groups each node's greater-id out-neighbors into a set array
-    *     (collect_set dedups as it groups, so callers need no
-    *     upstream distinct); wedges explode straight from the arrays
-    *     — no wedge join exists at all — and close against the packed
-    *     edge set. Σ outdeg² is unbounded under skew (a 10M-neighbor
-    *     celebrity hub would emit 10¹⁴ wedges from one row), hence
-    *     the gate: taken only when the MEASURED max out-degree is
-    *     ≤ [[IdOrderOutDegreeBound]]. On the q107 part-co-purchase
-    *     graph the id-ordered wedge mass is only ~20% above the
-    *     degree-ordered one (49.2M vs 41.1M at sf0.1) — the skew
-    *     bound, not wedge volume, is what degree ordering buys.
-    *   - DEGREE-ORDERED join path (the skew fallback; Chiba–Nishizeki
-    *     / Schank's forward algorithm): orient each edge from its
-    *     (deg, id)-smaller endpoint, bounding every out-degree by
-    *     O(√m) so the wedge relation is O(m^1.5) worst-case — the
-    *     celebrity-hub 100 TB path. The wedge self-join reads both
-    *     sides co-partitioned from a repartition(src) checkpoint.
-    * Both orientations enumerate the SAME triangle set (each triangle
-    * materializes exactly once, as its order-minimum corner's wedge),
-    * so the router never changes results — only the intermediate.
-    *
-    * Adjacency-build bound (applies BEFORE the gate can route): the
-    * stats probe itself materializes each node's greater-id neighbor
-    * set as one array row, so the build needs the hottest hub's set to
-    * fit a single JVM allocation — fine through ~10⁷–10⁸ neighbors
-    * (an 80 MB row at 10⁷ longs), broken near ~2.5×10⁸ elements where
-    * array allocation fails. A graph suspected of hubs beyond that
-    * (a 10⁹-degree super-node in a 100 TB web graph) must pre-probe
-    * degrees from the EDGE relation (`groupBy(u).count`) and feed the
-    * degree-ordered branch directly; the probe is not built in here
-    * because it re-scans the (often derived, uncached) edge input a
-    * second time on every non-pathological graph.
-    *
-    * Closing join (both paths): wedges outnumber edges ~20:1 on dense
-    * co-occurrence graphs, so this probe IS the tail's cost. When
-    * every node id fits 32 bits, pack (b,c) into ONE long so the
-    * probe hits a LongHashedRelation (primitive open hashing, ~3×
-    * cheaper per probe than a two-column UnsafeHashedRelation); when
-    * the edge set fits an executor, broadcast it so the wedge stream
-    * never leaves its map tasks; past that bound, the shuffle join a
-    * 100 TB edge set needs.
+    *   - ONE adjacency relation: one exchange groups each node's
+    *     greater-id neighbors into a set array (collect_set dedups as it
+    *     groups, so callers need no upstream distinct); one aggregate
+    *     over it probes the edge count, the max out-degree and the id
+    *     range.
+    *   - ID-ORDERED map-side wedges when the measured max out-degree is
+    *     ≤ [[IdOrderOutDegreeBound]]: wedges explode straight from the
+    *     arrays, no wedge join. Σ outdeg² is unbounded under skew (a
+    *     10M-neighbor hub would emit 10¹⁴ wedges from one row), hence
+    *     the gate.
+    *   - DEGREE-ORDERED join path past the gate (Chiba–Nishizeki /
+    *     Schank's forward algorithm): each edge is oriented from its
+    *     (deg, id)-smaller endpoint, which bounds every out-degree by
+    *     O(√m), so the wedge relation is O(m^1.5) worst-case. The wedge
+    *     self-join reads both sides co-partitioned from a
+    *     repartition(src) checkpoint.
+    *   - Both orientations enumerate the SAME triangle set (each
+    *     triangle once, as its order-minimum corner's wedge), emitted
+    *     with (b, c) id-canonical, so the gate changes the intermediate,
+    *     never the result.
+    *   - ONE closing probe: when every id fits 32 bits, (b, c) packs
+    *     into one long (a LongHashedRelation probe); the edge side is
+    *     broadcast up to 2·10⁷ edges and shuffled past that.
+    *   - The adjacency build needs the hottest hub's set to fit one JVM
+    *     array (fine through ~10⁷–10⁸ neighbors). A graph with a hub
+    *     past that must probe degrees from the edge relation and feed
+    *     the degree-ordered branch directly.
     */
-  def triangleList(edges: DataFrame, srcCol: String, dstCol: String,
-      assumeCanonical: Boolean = false): DataFrame = {
-    // canonical undirected edges {lo, hi}, self-loops dropped. No
-    // distinct: the adjacency collect_set dedups as it groups, so a
-    // caller-side pre-distinct would only add an exchange.
-    val canon =
-      if (assumeCanonical) edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      else edges
-        .select(least(col(srcCol), col(dstCol)).as("u"),
-          greatest(col(srcCol), col(dstCol)).as("v"))
-        .where(col("u") =!= col("v"))
+  def triangleList(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
+    // canonical undirected edges {lo, hi}, self-loops dropped — a no-op
+    // projection on canonical input. No distinct: the adjacency
+    // collect_set dedups as it groups.
+    val canon = edges
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .where(col("u") =!= col("v"))
     // ONE exchange builds the id-ordered out-adjacency: dedup, group,
     // and colocate each node's greater-id neighbors. Checkpointed —
     // consumed by the stats probe, the wedge source, the closing side,
@@ -795,8 +799,7 @@ object Components {
   def q107Triangles(spark: SparkSession, d: String): DataFrame = {
     // co-occurrence pairs WITHOUT a self-join: one shuffle groups each
     // order's parts into an array (≤7 elements), the pairs explode
-    // map-side, and the global dedup rides [[triangleList]]'s own
-    // adjacency collect_set — no distinct exchange here at all.
+    // map-side, and the global dedup is [[canonicalEdges]]' distinct.
     // Double codegen explode + where, NOT a higher-order `filter`
     // lambda inside the second explode: interpreted lambdas cost ~7x
     // per element (the q76/q116 lesson), and with k ≤ 7 parts per
@@ -809,7 +812,7 @@ object Components {
       .select(explode(col("ps")).as("u"), col("ps"))
       .select(col("u"), explode(col("ps")).as("v"))
       .where(col("u") < col("v"))
-    triangleCounts(co, "u", "v", assumeCanonical = true)
+    triangleCounts(co, "u", "v")
   }
 
   val q107Sql: String =
@@ -1099,9 +1102,10 @@ object Components {
     * checkpointed, so the CSR collect, the probes and the wedge plans
     * all read ONE materialization of the graph build. The checkpoint is
     * lazy: its first reader (the CSR collect) materializes it, so it
-    * costs no job of its own.
+    * costs no job of its own. Every common-neighbour operator starts
+    * here.
     */
-  private def canonicalEdges(edges: DataFrame, srcCol: String,
+  private[operators] def canonicalEdges(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
     edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
@@ -1251,37 +1255,20 @@ object Components {
       m
     }
 
-    /** Row boundaries of at most `parts` contiguous ranges holding
-      * equal shares of the kernel's inner-loop work. Row u visits, for
-      * each neighbor w, the x ∈ N(w) with x > u — and that count is
-      * deg(w) minus the rows ≤ u seen so far in N(w), which one cursor
-      * per row tracks in a single ascending pass.
+    /** Row boundaries of at most `parts` contiguous ranges holding equal
+      * shares of `work`, which is evaluated once per row, in ascending
+      * row order.
       */
-    def balancedRanges(parts: Int): Array[Int] = {
-      val cursor = new Array[Int](n)
-      val work = new Array[Long](n)
-      var total = 0L
-      var u = 0
-      while (u < n) {
-        var cost = deg(u).toLong
-        var i = offsets(u)
-        while (i < offsets(u + 1)) {
-          val w = nbrs(i)
-          cursor(w) += 1
-          cost += deg(w) - cursor(w) + 1
-          i += 1
-        }
-        work(u) = cost
-        total += cost
-        u += 1
-      }
+    def ranges(parts: Int, work: Int => Long): Array[Int] = {
+      val cost = Array.tabulate(n)(work)
+      val total = cost.sum
       val cuts = scala.collection.mutable.ArrayBuilder.make[Int]
       cuts += 0
       var acc = 0L
       var next = 1
-      u = 0
+      var u = 0
       while (u < n) {
-        acc += work(u)
+        acc += cost(u)
         if (next < parts && acc * parts >= total * next && u + 1 < n) {
           cuts += u + 1
           while (next < parts && acc * parts >= total * next) next += 1
@@ -1290,6 +1277,110 @@ object Components {
       }
       cuts += n
       cuts.result()
+    }
+
+    /** Per-row cost of [[topPairs]]: row u visits, for each neighbor w,
+      * the x ∈ N(w) with x > u — deg(w) minus the rows ≤ u seen so far
+      * in N(w), which one cursor per row tracks across the ascending
+      * pass [[ranges]] makes.
+      */
+    def pairWork: Int => Long = {
+      val cursor = new Array[Int](n)
+      u => {
+        var cost = deg(u).toLong
+        var i = offsets(u)
+        while (i < offsets(u + 1)) {
+          val w = nbrs(i)
+          cursor(w) += 1
+          cost += deg(w) - cursor(w) + 1
+          i += 1
+        }
+        cost
+      }
+    }
+
+    /** Per-row cost of [[census]] (every neighbor) or [[supports]]
+      * (`above`: the neighbors after the row): deg(u) to mark the row,
+      * plus one [[common]] per neighbor.
+      */
+    def intersectWork(above: Boolean): Int => Long = u => {
+      var cost = deg(u).toLong
+      var i = offsets(u)
+      while (i < offsets(u + 1)) {
+        val v = nbrs(i)
+        if (!above || v > u) cost += AdjacencyCsr.intersectCost(deg(u), deg(v))
+        i += 1
+      }
+      cost
+    }
+
+    /** Sets mark(x) = u + 1 for every x ∈ N(u): a per-row stamp, so a
+      * task's mark array never needs a reset.
+      */
+    private def markRow(u: Int, mark: Array[Int]): Unit = {
+      var i = offsets(u)
+      while (i < offsets(u + 1)) { mark(nbrs(i)) = u + 1; i += 1 }
+    }
+
+    /** |N(u) ∩ N(v)|, with N(u) marked by [[markRow]]. Scans N(v)
+      * against the marks, unless that scan costs more than deg(u)
+      * binary searches — deg(v) > deg(u) · ⌈log₂ deg(v)⌉ — when it
+      * binary-searches N(v) for each member of N(u) instead. So it costs
+      * [[AdjacencyCsr.intersectCost]] ≤ ⌈log₂ m⌉ · min(deg u, deg v),
+      * and a row sweep over all edges costs O(m^1.5 log m): a star
+      * hub's leaves search the hub's row, they never scan it.
+      */
+    def common(u: Int, v: Int, mark: Array[Int]): Int = {
+      var c = 0
+      if (AdjacencyCsr.searches(deg(u), deg(v))) {
+        var i = offsets(u)
+        while (i < offsets(u + 1)) {
+          if (java.util.Arrays.binarySearch(nbrs, offsets(v), offsets(v + 1),
+              nbrs(i)) >= 0) c += 1
+          i += 1
+        }
+      } else {
+        var j = offsets(v)
+        while (j < offsets(v + 1)) {
+          if (mark(nbrs(j)) == u + 1) c += 1
+          j += 1
+        }
+      }
+      c
+    }
+
+    /** (id, deg, n_tri) for each row x in [lo, hi) of degree ≥ 2, where
+      * n_tri = ½ Σ_{y ∈ N(x)} |N(x) ∩ N(y)|: a triangle at x is seen
+      * once from each of its two other corners.
+      */
+    def census(lo: Int, hi: Int): Iterator[Row] = {
+      val mark = new Array[Int](n)
+      Iterator.range(lo, hi).filter(deg(_) >= 2).map { x =>
+        markRow(x, mark)
+        var twice = 0L
+        var i = offsets(x)
+        while (i < offsets(x + 1)) { twice += common(x, nbrs(i), mark); i += 1 }
+        Row(ids(x), deg(x).toLong, twice / 2)
+      }
+    }
+
+    /** (id_u, id_v, support) for each edge u < v with u in rows
+      * [lo, hi) whose support — |N(u) ∩ N(v)|, the triangles through
+      * the edge — is at least `minSupport`.
+      */
+    def supports(lo: Int, hi: Int, minSupport: Int): Iterator[Row] = {
+      val mark = new Array[Int](n)
+      Iterator.range(lo, hi).flatMap { u =>
+        markRow(u, mark)
+        val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var i = offsets(u + 1) - 1
+        while (i >= offsets(u) && nbrs(i) > u) {
+          val s = common(u, nbrs(i), mark)
+          if (s >= minSupport) kept += Row(ids(u), ids(nbrs(i)), s.toLong)
+          i -= 1
+        }
+        kept
+      }
     }
 
     /** The top-`k` non-adjacent pairs (a, b), a in rows [lo, hi), b > a,
@@ -1301,17 +1392,16 @@ object Components {
     def topPairs(lo: Int, hi: Int, k: Int): Iterator[Row] = {
       if (k <= 0 || lo >= hi) return Iterator.empty
       val acc = new Array[Int](n)
-      val mark = new Array[Int](n) // mark(x) == a + 1 ⇔ x ∈ N(a)
+      val mark = new Array[Int](n)
       val touched = new Array[Int](n)
       val top = new TopPairs(k)
       var a = lo
       while (a < hi) {
+        markRow(a, mark)
         val s = offsets(a)
         val e = offsets(a + 1)
-        var i = s
-        while (i < e) { mark(nbrs(i)) = a + 1; i += 1 }
         var nt = 0
-        i = s
+        var i = s
         while (i < e) {
           val w = nbrs(i)
           var j = offsets(w + 1) - 1
@@ -1381,6 +1471,19 @@ object Components {
       for (u <- ids.indices) java.util.Arrays.sort(nbrs, offsets(u), offsets(u + 1))
       new AdjacencyCsr(ids, offsets, nbrs)
     }
+
+    /** deg(u) binary searches of a row of deg(v): at least one probe
+      * each, hence the log floor of 1.
+      */
+    private def searchCost(du: Int, dv: Int): Long =
+      du.toLong * ((32 - Integer.numberOfLeadingZeros(dv - 1)) max 1)
+
+    /** Whether [[AdjacencyCsr.common]] binary-searches N(v) (deg `dv`)
+      * for the members of N(u) (deg `du`) instead of scanning N(v).
+      */
+    def searches(du: Int, dv: Int): Boolean = dv > searchCost(du, dv)
+
+    def intersectCost(du: Int, dv: Int): Long = searchCost(du, dv) min dv
   }
 
   /** One candidate pair over dense indices. */
@@ -1412,9 +1515,38 @@ object Components {
     }
   }
 
-  /** Route 1 of [[jaccardFromCanon]]: one broadcast of the CSR, one
-    * task per wedge-balanced row range, each emitting its local top-N,
-    * merged by the same `orderBy(...).limit(topN)` as the other routes
+  /** One broadcast of `csr` and one task per row range of equal `work`
+    * ([[AdjacencyCsr.ranges]], two ranges per core), each emitting
+    * `rows(csr, lo, hi)` — the launcher of every CSR kernel.
+    */
+  private def csrRows(canon: DataFrame, csr: AdjacencyCsr, work: Int => Long)(
+      rows: (AdjacencyCsr, Int, Int) => Iterator[Row])
+      : org.apache.spark.rdd.RDD[Row] = {
+    val sc = canon.sparkSession.sparkContext
+    val cuts = csr.ranges(2 * sc.defaultParallelism, work)
+    val bc = sc.broadcast(csr)
+    sc.parallelize(cuts.indices.init, cuts.length - 1)
+      .mapPartitions(_.flatMap(r => rows(bc.value, cuts(r), cuts(r + 1))))
+  }
+
+  /** A kernel's rows as a DataFrame of non-null longs named `longs`,
+    * then `tail`, with the `ids` columns cast back to `canon`'s id type.
+    */
+  private def csrFrame(canon: DataFrame, longs: Seq[String], ids: Set[String],
+      tail: Seq[org.apache.spark.sql.types.StructField] = Nil)(
+      rows: org.apache.spark.rdd.RDD[Row]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(
+      longs.map(StructField(_, LongType, nullable = false)) ++ tail)
+    val idType = canon.schema("u").dataType
+    canon.sparkSession.createDataFrame(rows, schema)
+      .select(schema.fieldNames.toIndexedSeq.map(c =>
+        if (ids(c)) col(c).cast(idType).as(c) else col(c)): _*)
+  }
+
+  /** Route 1 of [[jaccardFromCanon]]: one task per wedge-balanced row
+    * range, each emitting its local top-N, merged by the same
+    * `orderBy(...).limit(topN)` as the other routes
     * (TakeOrderedAndProject). Node columns keep the input id type;
     * n_common and degrees are long, jaccard is the same double
     * expression, n / (deg_a + deg_b − n), as the wedge plans.
@@ -1422,21 +1554,9 @@ object Components {
   private[operators] def jaccardCsr(canon: DataFrame, csr: AdjacencyCsr,
       topN: Int): DataFrame = {
     import org.apache.spark.sql.types._
-    val spark = canon.sparkSession
-    val sc = spark.sparkContext
-    val cuts = csr.balancedRanges(2 * sc.defaultParallelism)
-    val bc = sc.broadcast(csr)
-    val rows = sc.parallelize(cuts.indices.init, cuts.length - 1)
-      .mapPartitions(_.flatMap(r => bc.value.topPairs(cuts(r), cuts(r + 1), topN)))
-    val schema = StructType(
-      Seq("node_a", "node_b", "n_common", "deg_a", "deg_b")
-        .map(StructField(_, LongType, nullable = false)) :+
-        StructField("jaccard", DoubleType))
-    val idType = canon.schema("u").dataType
-    spark.createDataFrame(rows, schema)
-      .select(col("node_a").cast(idType).as("node_a"),
-        col("node_b").cast(idType).as("node_b"), col("n_common"),
-        col("deg_a"), col("deg_b"), col("jaccard"))
+    csrFrame(canon, Seq("node_a", "node_b", "n_common", "deg_a", "deg_b"),
+      ids = Set("node_a", "node_b"), tail = Seq(StructField("jaccard", DoubleType)))(
+      csrRows(canon, csr, csr.pairWork)((g, lo, hi) => g.topPairs(lo, hi, topN)))
       .orderBy(col("jaccard").desc, col("node_a"), col("node_b"))
       .limit(topN)
   }
@@ -2462,33 +2582,43 @@ object Components {
   /** Per-node local clustering coefficient: 2·T(v) / (deg(v)·(deg(v)−1))
     * over nodes with degree ≥ 2 — "how clique-like is each node's
     * neighborhood", the node-level refinement of [[triangleCounts]]'s
-    * global census (Watts–Strogatz 1998). Nodes in no triangle score 0
-    * (left join + coalesce), degree-1 nodes are excluded (the
-    * coefficient is undefined).
+    * global census (Watts–Strogatz 1998). Nodes in no triangle score 0,
+    * degree-1 nodes are excluded (the coefficient is undefined).
     *
-    * Scale shape: the triangle census IS the cost
-    * ([[triangleCounts]]'s degree-oriented wedge join, long-packed
-    * probe, broadcast gate); the coefficient adds one degree aggregate
-    * and one node-keyed left join.
+    * @return (node, deg, n_tri, lcc): node keeps the input id type, deg
+    *         and n_tri are long, lcc is double
     */
   def localClusteringCoefficient(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    val deg = canon.select(col("u").as("node"))
-      .unionAll(canon.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val tri = triangleCounts(canon, "u", "v", assumeCanonical = true)
-    deg.where(col("deg") >= 2)
-      .join(tri, Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-      .withColumn("lcc", lit(2.0) * col("n_tri") /
-        (col("deg") * (col("deg") - lit(1L))))
+      dstCol: String): DataFrame =
+    clusteringFromCanon(canonicalEdges(edges, srcCol, dstCol))
+
+  /** [[localClusteringCoefficient]] over [[canonicalEdges]]. The same two
+    * routes as [[trianglesFromCanon]], chosen by the same one probe:
+    *
+    *   1. KERNEL — integral ids and 2|E| ≤ `maxSymRows`:
+    *      [[triangleCensus]] emits (node, deg, n_tri) for every node of
+    *      degree ≥ 2 in one `mapPartitions`, O(m^1.5 log m) work, no
+    *      shuffle.
+    *   2. FALLBACK — otherwise: a degree aggregate left-joined to the
+    *      [[triangleList]] corner counts (absent counts are 0).
+    *
+    * Both routes end in the same `lcc` expression.
+    */
+  private[operators] def clusteringFromCanon(canon: DataFrame,
+      maxSymRows: Long = BcastSymRows): DataFrame = {
+    val census = AdjacencyCsr.collect(canon, maxSymRows) match {
+      case Some(csr) => triangleCensus(canon, csr)
+      case None =>
+        val deg = canon.select(col("u").as("node"))
+          .unionAll(canon.select(col("v").as("node")))
+          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+        deg.where(col("deg") >= 2)
+          .join(cornerCounts(triangleList(canon, "u", "v")), Seq("node"), "left")
+          .select(col("node"), col("deg"),
+            coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+    }
+    census.withColumn("lcc", lit(2.0) * col("n_tri") /
+      (col("deg") * (col("deg") - lit(1L))))
   }
 
   /** Declared q194: clustering coefficients of the HIGH-QUANTITY part
@@ -2505,7 +2635,6 @@ object Components {
       .select(explode(col("ps")).as("u"), col("ps"))
       .select(col("u"), explode(col("ps")).as("v"))
       .where(col("u") < col("v"))
-      .distinct()
     localClusteringCoefficient(co, "u", "v")
   }
 
@@ -2617,77 +2746,89 @@ object Components {
   /** k-truss edge pruning (Cohen 2008) with a FIXED round budget:
     * repeatedly drop edges supported by fewer than k−2 triangles in
     * the surviving graph. The truss is the standard cohesive-subgraph
-    * upgrade over [[kcore]] — degree can be faked by one hub, triangle
+    * upgrade over [[kCore]] — degree can be faked by one hub, triangle
     * support cannot — and the pruning round count is pinned (not
     * run-to-fixpoint) so the oracle is expressible and the cluster job
     * has a deterministic stage count; COVERAGE.md records the
     * fixed-rounds semantics.
     *
-    * Scale shape (round 15): ONE [[triangleList]] pass total, not one
-    * per round. Round r+1's graph is an edge-subset of round r's, and a
-    * triangle exists in a subgraph iff all three of its edges do — so
-    * the triangles of every later round are exactly the ROUND-1
-    * triangles whose three edges survived the latest prune. The O(m^1.5)
-    * wedge enumeration (49 M wedge rows at sf0.1, ~20× the edge count)
-    * therefore runs once; each later round is three edge semi-joins over
-    * the materialized triangle list (guide §1.2 step 1: remove a whole
-    * pass; measured 8.1 s → see OPTIMIZATION_r15.md). The survivor set's
-    * count is already on hand from the checkpointed relation, so the
-    * semi-joins broadcast under the counted [[BcastSymRows]] bound (the
-    * q81/q163 discipline) and fall back to shuffle joins past it — a
-    * 100 TB graph pays three edge-keyed shuffles of the triangle list
-    * per round, still an order below re-enumerating wedges.
-    *
-    * The round-1 triangle list is localCheckpoint'd only when a later
-    * round will consume it; each round's survivor set is checkpointed so
-    * round r+1's plan does not replay round r.
-    *
     * @return surviving edges after `rounds` prunes with the support
-    *         that qualified them in the final round: (u, v, support)
+    *         that qualified them in the final round: (u, v, support),
+    *         u < v in the input id type, support long
     */
   def ktruss(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int): DataFrame = {
+      k: Int, rounds: Int): DataFrame =
+    ktrussFromCanon(canonicalEdges(edges, srcCol, dstCol), k, rounds)
+
+  /** [[ktruss]] over [[canonicalEdges]]. Two routes, row-identical
+    * (spec-pinned against each other and a local oracle), chosen by the
+    * one bounded CSR collect:
+    *
+    *   1. KERNEL — integral ids and 2|E| ≤ `maxSymRows`: each round is
+    *      one `mapPartitions` over the broadcast [[AdjacencyCsr]] that
+    *      emits (u, v, support) for the edges it keeps, support =
+    *      |N(u) ∩ N(v)| in O(m^1.5 log m) total work. Between rounds the
+    *      survivors are collected and rebuilt into the next round's CSR
+    *      — an edge subset of a graph already under the bound. The last
+    *      round is the returned relation. No wedge relation, closing
+    *      join or support aggregate exists.
+    *   2. FALLBACK — otherwise: ONE [[triangleList]] pass for all
+    *      rounds. Round r+1's graph is an edge subset of round r's, and
+    *      a triangle survives into a subgraph iff all three of its edges
+    *      do, so every later round's triangles are the round-1 triangles
+    *      whose edges survived the latest prune: three edge semi-joins
+    *      per round (broadcast under the counted [[BcastSymRows]] bound,
+    *      shuffled past it), then a per-edge support aggregate. Each
+    *      intermediate survivor set and triangle list is checkpointed so
+    *      no round replays the previous one; the final support relation
+    *      is checkpointed so the caller does not re-run the last round.
+    */
+  private[operators] def ktrussFromCanon(canon: DataFrame, k: Int, rounds: Int,
+      maxSymRows: Long = BcastSymRows): DataFrame = {
     require(k >= 3, s"ktruss: k must be >= 3, got $k")
     require(rounds >= 1, s"ktruss: rounds must be >= 1, got $rounds")
+    AdjacencyCsr.collect(canon, maxSymRows) match {
+      case Some(first) =>
+        def round(csr: AdjacencyCsr) =
+          csrRows(canon, csr, csr.intersectWork(above = true))(
+            (g, lo, hi) => g.supports(lo, hi, k - 2))
+        var csr = first
+        for (_ <- 1 until rounds) {
+          val kept = round(csr).collect()
+          csr = AdjacencyCsr.build(kept.map(_.getLong(0)), kept.map(_.getLong(1)))
+        }
+        csrFrame(canon, Seq("u", "v", "support"), ids = Set("u", "v"))(round(csr))
+      case None => ktrussShuffle(canon, k, rounds)
+    }
+  }
+
+  /** Route 2 of [[ktrussFromCanon]]. (b, c) is id-canonical (b < c) on
+    * both of [[triangleList]]'s orientation branches; a is the
+    * orientation minimum, at an arbitrary id position on the
+    * degree-ordered branch — hence least/greatest on the a-edges.
+    */
+  private def ktrussShuffle(canon: DataFrame, k: Int, rounds: Int): DataFrame = {
     val pair = (x: Column, y: Column) =>
       struct(least(x, y).as("u"), greatest(x, y).as("v"))
-    var canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    // ops/measurement toggle (the kcore.broadcast precedent):
-    // spark.graft.ktruss.reuse = auto|off — "off" pins the round-13
-    // shape (a fresh census per round) for A/B runs.
-    val reuse = rounds > 1 && edges.sparkSession.conf
-      .get("spark.graft.ktruss.reuse", "auto") != "off"
-    // the ONLY wedge enumeration (when reusing); (b, c) is id-canonical
-    // (b < c) on both orientation branches, a is the orientation
-    // minimum (arbitrary id position on the degree-ordered branch —
-    // hence least/greatest on the a-edges below)
-    var tri = triangleList(canon, "u", "v", assumeCanonical = true)
-    if (reuse) tri = tri.localCheckpoint()
+    var surv = canon
+    var tri = triangleList(canon, "u", "v")
+    if (rounds > 1) tri = tri.localCheckpoint()
     var sup: DataFrame = null
     for (r <- 1 to rounds) {
-      if (r > 1 && reuse) {
-        // triangles of the pruned graph = round-1 triangles whose three
-        // edges all survived the previous round's support filter
-        val nSurv = canon.count()
+      if (r > 1) {
+        val nSurv = surv.count()
         def hintT(df: DataFrame): DataFrame =
           if (nSurv <= BcastSymRows) broadcast(df) else df
         tri = tri
-          .join(hintT(canon.select(col("u").as("b"), col("v").as("c"))),
+          .join(hintT(surv.select(col("u").as("b"), col("v").as("c"))),
             Seq("b", "c"), "left_semi")
-          .join(hintT(canon.select(col("u").as("su"), col("v").as("sv"))),
+          .join(hintT(surv.select(col("u").as("su"), col("v").as("sv"))),
             least(col("a"), col("b")) === col("su") &&
               greatest(col("a"), col("b")) === col("sv"), "left_semi")
-          .join(hintT(canon.select(col("u").as("tu"), col("v").as("tv"))),
+          .join(hintT(surv.select(col("u").as("tu"), col("v").as("tv"))),
             least(col("a"), col("c")) === col("tu") &&
               greatest(col("a"), col("c")) === col("tv"), "left_semi")
         if (r < rounds) tri = tri.localCheckpoint()
-      } else if (r > 1) {
-        tri = triangleList(canon, "u", "v", assumeCanonical = true)
       }
       sup = tri
         .select(explode(array(pair(col("a"), col("b")),
@@ -2696,14 +2837,7 @@ object Components {
         .groupBy(col("u"), col("v"))
         .agg(count(lit(1)).as("support"))
         .where(col("support") >= k - 2)
-      // intermediate rounds checkpoint the survivor EDGES (consumed by
-      // the next round); the FINAL round checkpoints the result itself —
-      // the old shape checkpointed canon here too, so the final round's
-      // whole census+aggregate ran twice: once inside the eager canon
-      // checkpoint and again when the caller consumed the returned sup
-      // (kCore always returned its checkpointed relation; ktruss was
-      // the outlier — measured 1/3 of q209's cpu).
-      if (r < rounds) canon = sup.select(col("u"), col("v")).localCheckpoint()
+      if (r < rounds) surv = sup.select(col("u"), col("v")).localCheckpoint()
       else sup = sup.localCheckpoint()
     }
     sup
@@ -2721,7 +2855,6 @@ object Components {
       .select(explode(col("ps")).as("u"), col("ps"))
       .select(col("u"), explode(col("ps")).as("v"))
       .where(col("u") < col("v"))
-      .distinct()
     ktruss(co, "u", "v", k = 4, rounds = 2)
   }
 

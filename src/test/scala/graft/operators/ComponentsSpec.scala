@@ -234,9 +234,17 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (deg,id) order disagrees with id order
     val hub = (1L to 4200L).map(0L -> _)
     val planted = Seq((9001L, 9002L), (9002L, 9003L), (9001L, 9003L), (1L, 2L))
-    val got = Components.triangleCounts((hub ++ planted).toDF("a", "b"), "a", "b")
+    val edges = (hub ++ planted).toDF("a", "b")
+    val got = Components.triangleCounts(edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(9001L -> 1L, 9002L -> 1L, 9003L -> 1L,
+      0L -> 1L, 1L -> 1L, 2L -> 1L))
+    // the graph is under the kernel bound, so force the fallback (a
+    // negative bound) to reach the degree-ordered path itself
+    val past = Components.trianglesFromCanon(
+      Components.canonicalEdges(edges, "a", "b"), maxSymRows = -1L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(past === Map(9001L -> 1L, 9002L -> 1L, 9003L -> 1L,
       0L -> 1L, 1L -> 1L, 2L -> 1L))
   }
 
@@ -597,14 +605,21 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = Components.ktruss(broken.toDF("a", "b"), "a", "b",
       k = 4, rounds = 1).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(r1.toSeq === Seq((1L, 2L)))
-    // rounds=3 exercises the triangle-reuse path twice (round-2 filter
-    // re-checkpointed, round-3 filter over it): K4 is a fixpoint, so the
-    // extra rounds must be no-ops
+    // rounds=3: K4 is a fixpoint, so the extra rounds must be no-ops.
+    // The forced-fallback call (negative bound) exercises the
+    // triangle-reuse path twice (round-2 filter re-checkpointed, round-3
+    // filter over it); the graph is under the kernel bound otherwise.
     val out3 = Components.ktruss(k4.toDF("a", "b"), "a", "b",
       k = 4, rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("support"))
       .toMap
     assert(out3 === out)
+    val past3 = Components.ktrussFromCanon(
+      Components.canonicalEdges(k4.toDF("a", "b"), "a", "b"),
+      k = 4, rounds = 3, maxSymRows = -1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Long]("support"))
+      .toMap
+    assert(past3 === out)
     // and a cascade under rounds=3: two K4s sharing edge (1,2), with k=4
     // — round 1 keeps each K4's edges (support ≥ 2: shared edge has 4),
     // fixpoint thereafter
@@ -615,6 +630,11 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
       k = 4, rounds = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(t3 === twoK4.distinct.toSet)
+    val pastT3 = Components.ktrussFromCanon(
+      Components.canonicalEdges(twoK4.distinct.toDF("a", "b"), "a", "b"),
+      k = 4, rounds = 3, maxSymRows = -1L).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pastT3 === twoK4.distinct.toSet)
   }
 
   test("jaccard link prediction: IntegerType ids take the unpacked plans, same results") {
