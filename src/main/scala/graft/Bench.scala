@@ -1,25 +1,18 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.core.{GraftSession, Harness}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // environment GATE, sampled before this JVM creates any load:
-    // anything above ~1.5 means another workload is competing for the
-    // same cores and every timing in this artifact is suspect (BENCH_r09
-    // recorded 362 s at loadavg 4.5, BENCH_r10 375 s at 2.5+, vs
-    // 304.5 s blessed-idle — two rounds of driver captures needed
-    // manual de-noising). The driver benches right after its 32-thread
-    // verify gate, so the start almost always lands in a decaying
-    // 1-min average; the r10 60 s cap was too short to ride it out.
-    // Gate, don't just annotate: wait up to 10 minutes for the load to
-    // decay below the clean threshold, record how long we waited in
-    // the artifact, and only if it NEVER clears run anyway with
-    // env:"dirty" (per-query mins ride along as the de-noised series).
+    // environment GATE, sampled before this JVM creates any load: above
+    // ~1.5 another workload is competing for the same cores and every
+    // timing in this artifact is suspect. Wait up to 10 minutes for the
+    // 1-min average to decay below that, record the wait in the
+    // artifact, and if it never clears run anyway with env:"dirty"
+    // (per-query mins ride along as the de-noised series).
     def sampleLoad: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -33,78 +26,28 @@ object Bench {
       l
     }
     val gateWaitSec = (System.nanoTime() - gateT0) / 1e9
-    // scale-measurement knob: on a real cluster shuffle-partition count
-    // grows with the data, but the K× scale runs (tools/scale_run.sh)
-    // reuse this one harness at fixed cpus — without the override, a
-    // 30× corpus pushed through 32 partitions measures spill pressure,
-    // not the operator (q99's 30× exponent read 1.17 at 32 partitions
-    // purely from that; the per-copy-isolated corpus makes its true
-    // candidate mass linear by construction). The driver never sets
-    // this env var, so suite benches are unaffected.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      // streaming sort aggregates where the operator pre-sorts its input
-      // on the grouping key (the jaccard wedge kernels): a no-op unless
-      // a child's ordering already satisfies the grouping
-      .config("spark.sql.execution.replaceHashWithSortAgg", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // liveness slack: host steal + 32 g-heap
-      // full GCs have stalled the in-JVM heartbeat loop past the 120 s
-      // default, and BENCH_r11's executor self-terminated 31 minutes in
-      // ("unable to send heartbeats to driver more than 60 times",
-      // rc 1, parsed: null — the round's only hard artifact, lost). A
-      // local[32] "executor" lives in the driver JVM; its death is pure
-      // false-positive liveness, so give the plumbing generous slack.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // Bound the in-memory status store (kept even with the UI off):
-      // ~850 plans × 3 reps would retain 1000 SQLExecutionUIData plan
-      // graphs + 100k task wrappers as old-gen residue — part of the
-      // suite-tail GC inflation on the heavy wedge rows (the 8-cpu
-      // q282 probe measured 37 task-GC-s on one rep of the pair-shuffle
-      // stage vs 1.3 s on the next). Engine-wide default, mirrored in
-      // GraftSession/Verify/QueryTimer.
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.ui.retainedJobs", "300")
-      .config("spark.ui.retainedStages", "300")
-      .config("spark.ui.retainedTasks", "20000")
-      // Tungsten execution memory OFF-HEAP (round 15): the 8-cpu q282
-      // probe caught a full-GC cascade — 362 task-GC-seconds on one rep
-      // of the pair-shuffle sort stage vs 5.8 on its identical neighbor
-      // — because promoted sort/aggregation pages churn the old gen.
-      // Off-heap pages are invisible to the collector: the same stage
-      // ran GC-quiet and q282@8cpus went 29-88 s (run-dependent) ->
-      // 17.9 s stable, cpu 135 -> 90 s. Standard practice for
-      // shuffle-heavy clusters; sized ~1/3 of heap here, per-executor
-      // on a real deployment.
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "12g")
-      // ContextCleaner only GCs the driver every 30 MINUTES by default —
-      // a ~6 min suite never triggers it, so weakly-referenced shuffle
-      // files and broadcast blocks from ~825 finished plans pile up in
-      // the old gen until memory pressure forces long collections inside
-      // whichever query runs next (the q239/q56/q72/q154 suite-median
-      // inflation BASELINE.md documents). A 45 s interval keeps the
-      // driver heap bounded by live state, not by suite history.
-      .config("spark.cleaner.periodicGC.interval", "45s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = GraftSession.defaultCores
+    val spark = GraftSession.local("bench", cores,
+      // ContextCleaner only GCs the driver every 30 minutes by default,
+      // so a suite never triggers it: weakly-referenced shuffle files and
+      // broadcast blocks from ~825 finished plans pile up in the old gen
+      // until memory pressure forces long collections inside whichever
+      // query runs next. 45 s keeps the driver heap bounded by live state.
+      Map("spark.cleaner.periodicGC.interval" -> "45s") ++
+        // scale-measurement knob: the K× scale runs (tools/scale_run.sh)
+        // reuse this harness at fixed cpus, and a 30× corpus pushed
+        // through a cores-sized partition count measures spill pressure,
+        // not the operator. Suite runs never set it.
+        sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+          .map("spark.sql.shuffle.partitions" -> _))
     // steal-robust second series: wall-clock on this box swings 2-3×
     // between identical runs (hypervisor steal is invisible to guest
     // loadavg), so every artifact also carries per-query task
     // CPU-seconds (sum of executorCpuTime over the query's tasks).
-    // Attribution is by JOB GROUP — each timed run sets a unique
-    // "graftq:<name>#<rep>" group; SQLExecution propagates local
-    // properties onto AQE/broadcast exec threads, so sub-jobs land in
-    // the right bucket, and attribution-by-group (not by fencing a
-    // global counter) means late bus events can never bleed across
-    // queries. Wall-clock medians remain the blessed-table CONTRACT
+    // Attribution is by the "graftq:<name>#<rep>" JOB GROUP that
+    // Harness.each gives each timed run: attribution-by-group (not by
+    // fencing a global counter) means late bus events can never bleed
+    // across queries. Wall-clock medians remain the blessed-table CONTRACT
     // (comparable to the DuckDB baseline); cpu-seconds are the
     // contention-robust series the 10×/30× exponent math uses.
     // KNOWN GAP: streaming rows (q276-q281) under-attribute —
@@ -128,11 +71,6 @@ object Bench {
         }
       }
     })
-    // WindowExec's per-plan "No Partition Defined" warning × 190 queries
-    // × 3 reps drowned BENCH_r06's summary line in the driver's capture
-    // (parsed: null). The bounded windows are intentional and inventoried
-    // in BASELINE.md; silence the logger so the artifact parses.
-    graft.core.GraftSession.quietNoisyLoggers()
     // untimed JVM warmup on the tiny fixture: codegen compilation, shuffle
     // machinery, and parquet reader init otherwise land on whichever query
     // happens to run first (~6s of pure startup attributed to one query)
@@ -150,20 +88,12 @@ object Bench {
     // (rep 1 of every query, then rep 2, then rep 3): a transient load
     // spike then inflates one repetition of many queries instead of all
     // three repetitions of a few, so the per-query median stays
-    // load-robust — the r5 bench's 2-5x inflation on a dozen queries
-    // spanned all three back-to-back reps and median-of-3 couldn't help.
-    // A query that throws is recorded as an ERROR, never as a timing.
+    // load-robust. A query that throws is recorded as an ERROR, never as
+    // a timing, and is not run again.
     val reps = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // local-iteration aid, mirroring Verify: SPARK_GRAFT_ONLY=q1,q2
-    // times a subset (the driver never sets it → full run)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    def loadavg: Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean
-        .getSystemLoadAverage
+    val only = Harness.onlyFromEnv
+    val queries = SparkEntry.queries.keys.toSeq
     val envClean = loadInitial <= 1.5
     if (!envClean)
       System.err.println(
@@ -171,54 +101,26 @@ object Bench {
           "at start — timings will be inflated; rerun on an idle machine")
     val loadPerRep = scala.collection.mutable.ListBuffer[Double]()
     (1 to 3).foreach { rep =>
-      loadPerRep += loadavg
-      queries.foreach { case (name, fn) =>
-        if (!errors.contains(name)) {
-          spark.sparkContext.setJobGroup(s"graftq:$name#$rep", name)
-          val t0 = System.nanoTime()
-          try {
-            // toRdd.count(), NOT Dataset.count(): count() lets Catalyst
-            // prune every projected column — and even the aggregate
-            // expressions inside a groupBy — so queries whose cost
-            // lives in the projection timed only their scan (q46's
-            // winnow compute was invisible for four rounds; q01's sums
-            // were pruned too). toRdd executes the SAME adaptive plan
-            // Verify materializes, building every output column, with
-            // no write machinery and no driver transfer.
-            fn(spark, sfDir).queryExecution.toRdd.count()
-            reps(name) = ((System.nanoTime() - t0) / 1e9) :: reps.getOrElse(name, Nil)
-          } catch { case e: Throwable =>
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
-            reps.remove(name)
-          } finally {
-            // localCheckpoint blocks outlive their query (the RDDs stay
-            // registered in the block manager until unpersisted) — after
-            // ~600 query runs the accumulated dead blocks evict live
-            // shuffle/storage memory and the big wedge joins GC-thrash:
-            // q154's median tripled from exactly this. Each query's
-            // checkpoints are dead the moment its count() returns, so
-            // sweep them between queries. BLOCKING: an async sweep only
-            // posts removal messages, so under a backed-up dispatcher
-            // the dead blocks were still resident when the next query's
-            // timer started — the sweep runs outside the timed region,
-            // so waiting here costs nothing that is measured.
-            // suite-shared relations (SharedRelations) stay alive
-            spark.sparkContext.getPersistentRDDs
-              .foreach { case (id, rdd) =>
-                if (!graft.core.SharedRelations.isShared(spark, id))
-                  rdd.unpersist(blocking = true)
-              }
-            spark.sparkContext.clearJobGroup()
-          }
-        }
+      loadPerRep += sampleLoad
+      errors ++= Harness.each(spark, queries.filterNot(errors.contains), only, rep) { name =>
+        val t0 = System.nanoTime()
+        // toRdd.count(), NOT Dataset.count(): count() lets Catalyst
+        // prune every projected column — and even the aggregate
+        // expressions inside a groupBy — so queries whose cost lives in
+        // the projection would time only their scan. toRdd executes the
+        // SAME adaptive plan Verify materializes, building every output
+        // column, with no write machinery and no driver transfer.
+        SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+        reps(name) = ((System.nanoTime() - t0) / 1e9) :: reps.getOrElse(name, Nil)
       }
     }
+    errors.keys.foreach(reps.remove)
     // one suite-end settle for the async listener bus: every task has
     // finished (count() barriers), only their task-end EVENTS may still
     // be in flight; group-keyed attribution means a late event can only
     // be missed, never mis-billed
     Thread.sleep(2000)
-    val loadEnd = loadavg
+    val loadEnd = sampleLoad
     // median is the headline (robust to one bad rep); min rides along in
     // the artifact so a reader can tell load noise (median >> min) from
     // a real regression (median ≈ min, both high)
@@ -252,7 +154,10 @@ object Bench {
     val total = medians.values.sum + shared.values.sum
     val loadJson = loadPerRep.map(l => f"$l%.2f").mkString("[", ",", "]")
     val meta =
-      s""""sf":${jstr(sfDir)},"cpus":$cpus,"reps":3,"scheme":"interleaved",""" +
+      s""""sf":${jstr(sfDir)},"cpus":$cores,"reps":3,"scheme":"interleaved",""" +
+        s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+        s""""max_memory":${Runtime.getRuntime.maxMemory},""" +
+        s""""offheap_size":${spark.sparkContext.getConf.getSizeAsBytes("spark.memory.offHeap.size")},""" +
         s""""loadavg_initial":${f"$loadInitial%.2f"},"gate_wait_sec":${f"$gateWaitSec%.1f"},""" +
         s""""env":${jstr(if (envClean) "clean" else "dirty")},""" +
         s""""loadavg_reps":$loadJson,"loadavg_end":${f"$loadEnd%.2f"}"""
@@ -263,26 +168,15 @@ object Bench {
         s""""cpu_total":${f"$cpuTotal%.3f"},"errors":$errJson,$meta}"""
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), full + "\n")
-    // the DRIVER-FACING artifact: two rounds of BENCH_rN.json carried
-    // parsed:null because the driver scrapes sbt-prefixed stdout. The
-    // full summary (per-query medians/mins/cpu) is also written to a
-    // fixed repo-root path the driver's end-of-round commit picks up —
-    // log parsing is no longer load-bearing.
+    // the full summary also goes to a fixed repo-root path, so reading
+    // it never depends on parsing a log
     Files.writeString(Paths.get("BENCH_SUMMARY.json"), full + "\n")
-    // stdout contract (round 15): every BENCH_rN.json since round 1 is
-    // parsed:null because sbt's LoggedOutput prefixed each forked stdout
-    // line with "[info] " — no line ever STARTED with '{'. build.sbt now
-    // forces StdoutOutput (unprefixed), and two JSON lines go out:
-    //   1. the FULL summary (the declared contract: a "queries" map on
-    //      one stdout line) — a parser that scans whole stdout gets the
-    //      per-query medians from here;
-    //   2. LAST, a compact line (~400 B) that fits intact inside a
-    //      2000-char tail capture (the recorded BENCH_rN tails are
-    //      exactly 2000 chars, which truncated the 26 KB full line
-    //      mid-object in r14) — a tail-window parser gets the totals
-    //      plus "queries_file" pointers to the full object.
-    // Both parse as standalone JSON; the full object also lives at
-    // target/bench.json and BENCH_SUMMARY.json.
+    // stdout contract: two JSON lines, each parseable on its own —
+    //   1. the FULL summary (the per-query "queries" map on one line);
+    //   2. LAST, a compact line that fits intact inside a 2000-char tail
+    //      capture: the totals, the host shape, and "queries_file"
+    //      pointers to the full object.
+    // build.sbt forces StdoutOutput, so no line gets an "[info] " prefix.
     println(full)
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${medians.size},""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{GraftSession, Harness}
 
 /** Plan-inspection main: prints `explain("formatted")` for the named
   * queries (or all) against a fixture dir — the iterate-on-the-plan
@@ -13,20 +13,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      // streaming sort aggregates where the operator pre-sorts its input
-      // on the grouping key (the jaccard wedge kernels): a no-op unless
-      // a child's ordering already satisfies the grouping
-      .config("spark.sql.execution.replaceHashWithSortAgg", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("explain")
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    Harness.each(spark, names) { n =>
       println(s"\n========== $n ==========")
       // "exec:<name>" executes the query and prints the FINAL adaptive
       // plan — with AQE on, exchange/stage reuse only appears there,
@@ -36,7 +25,7 @@ object Explain {
         df.collect()
         println(df.queryExecution.executedPlan.toString)
       } else SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-    }
+    }.foreach { case (n, m) => println(s"$n failed: $m") }
     spark.stop()
   }
 }

@@ -37,8 +37,7 @@ object IngestLadder {
     val mode = if (args.length > 2) args(2) else "indexed"
     require(mode == "indexed" || mode == "banded",
       s"mode must be indexed|banded, got $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.core.GraftSession.local("ingest-ladder", cpus)
+    val spark = graft.core.GraftSession.local("ingest-ladder")
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{GraftSession, Harness}
 
 /** One-query timer with config toggles, for plan/config experiments:
   * runMain graft.QueryTimer <queryName> <aqe:true|false> [sfDir] [conf=k:v,...]
@@ -13,46 +13,14 @@ object QueryTimer {
     val extra = if (args.length > 3)
       args(3).split(",").map { kv => val Array(k, v) = kv.split(":"); (k, v) }.toSeq
     else Seq.empty
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      // streaming sort aggregates where the operator pre-sorts its input
-      // on the grouping key (the jaccard wedge kernels): a no-op unless
-      // a child's ordering already satisfies the grouping
-      .config("spark.sql.execution.replaceHashWithSortAgg", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // liveness slack (see Bench): steal + GC pauses have killed the
-      // in-JVM local executor via missed heartbeats mid-run
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      // Bound the in-memory status store (see Bench/GraftSession): the
-      // engine-wide default that stops plan-graph/task-wrapper history
-      // from accumulating as old-gen residue over long sessions.
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.ui.retainedJobs", "300")
-      .config("spark.ui.retainedStages", "300")
-      .config("spark.ui.retainedTasks", "20000")
-      // Tungsten execution memory OFF-HEAP (round 15): the 8-cpu q282
-      // probe caught a full-GC cascade — 362 task-GC-seconds on one rep
-      // of the pair-shuffle sort stage vs 5.8 on its identical neighbor
-      // — because promoted sort/aggregation pages churn the old gen.
-      // Off-heap pages are invisible to the collector: the same stage
-      // ran GC-quiet and q282@8cpus went 29-88 s (run-dependent) ->
-      // 17.9 s stable, cpu 135 -> 90 s. Standard practice for
-      // shuffle-heavy clusters; sized ~1/3 of heap here, per-executor
-      // on a real deployment.
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "12g")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("query-timer", extraConf =
+      Map("spark.sql.adaptive.enabled" -> aqe.toString) ++ extra)
     (1 to 2).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
-      println(f"RUN$i $name aqe=$aqe rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
+      Harness.each(spark, Seq(name), rep = i) { _ =>
+        val t0 = System.nanoTime()
+        val n = SparkEntry.queries(name)(spark, sfDir).count()
+        println(f"RUN$i $name aqe=$aqe rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
+      }.foreach { case (_, m) => println(s"RUN$i $name aqe=$aqe failed: $m") }
     }
     spark.stop()
   }

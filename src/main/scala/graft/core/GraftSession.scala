@@ -2,10 +2,11 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory mirroring the reference's session surface
+/** The one session factory, mirroring the reference's session surface
   * (`/root/reference/sparkcode/titanic_example_delta.py:4-12`: builder +
-  * config injection + log level), tuned for this container: `local[N]`,
-  * shuffle partitions sized to cores (not the 200 default), AQE on so
+  * config injection + log level). Every entry point and spec builds its
+  * session here, sized to the host it runs on: `local[cores]`, shuffle
+  * partitions equal to the cores (not the 200 default), AQE on so
   * runtime stats can re-plan skewed shuffles/joins — the same settings
   * that matter on a real multi-executor cluster.
   */
@@ -56,45 +57,69 @@ object GraftSession {
       ".*lineage.*truncated.*")
   }
 
+  /** `SPARK_GRAFT_CPUS` when set, else every processor the JVM sees;
+    * the only reader of that variable.
+    */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Off-heap execution memory: the physical memory the heap leaves, so
+    * heap + off-heap fit in physical memory on any host (≤ 0 disables
+    * off-heap). It is a cap, allocated only as sorts and aggregates ask,
+    * and what they ask grows with their data, not with the heap: q282's
+    * pair sort at sf0.1 holds ~6.6 GB at once at 4 cores, and spills to
+    * disk under a pool of a third of the heap or of the heap itself.
+    */
+  def offHeapBytes: Long = {
+    val physical = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getTotalMemorySize
+    physical - Runtime.getRuntime.maxMemory
+  }
+
+  /** Invariants of every session this factory builds; `extraConf` keys
+    * override them:
+    *
+    *   - Liveness: the `local[N]` "executor" lives in the driver JVM, so
+    *     a missed heartbeat is always a false positive (host steal or a
+    *     long full GC stalling the in-JVM loop). The 120 s default has
+    *     killed a 30-minute bench mid-artifact; the timeouts are slack.
+    *   - Retention: the status store is kept even with the UI off, and
+    *     by default holds 1000 plan graphs and 100k task wrappers. A
+    *     session running hundreds of distinct plans accumulates them as
+    *     old-gen residue that inflates GC on later heavy queries; these
+    *     processes serve no UI, so keep only post-mortem history.
+    *   - Off-heap: Tungsten sort/aggregation pages live off-heap, where
+    *     the collector never sees them. Promoted on-heap pages churn the
+    *     old gen into full-GC cascades on the shuffle-heavy rows (q282's
+    *     pair sort). Sized by [[offHeapBytes]].
+    */
   def local(
       appName: String = "graft",
-      cores: Int = Runtime.getRuntime.availableProcessors(),
+      cores: Int = defaultCores,
       extraConf: Map[String, String] = Map.empty): SparkSession = {
+    val offHeapMb = offHeapBytes >> 20
+    val defaults = Map(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      // streaming sort aggregates where the operator pre-sorts its input
+      // on the grouping key: a no-op unless a child's ordering already
+      // satisfies the grouping
+      "spark.sql.execution.replaceHashWithSortAgg" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.network.timeout" -> "600s",
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.sql.ui.retainedExecutions" -> "50",
+      "spark.ui.retainedJobs" -> "300",
+      "spark.ui.retainedStages" -> "300",
+      "spark.ui.retainedTasks" -> "20000",
+      "spark.memory.offHeap.enabled" -> (offHeapMb > 0).toString,
+      "spark.memory.offHeap.size" -> s"${offHeapMb max 0}m")
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // streaming sort aggregates where the operator pre-sorts its input
-      // on the grouping key (the jaccard wedge kernels): a no-op unless
-      // a child's ordering already satisfies the grouping
-      .config("spark.sql.execution.replaceHashWithSortAgg", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Bound the in-memory status store (kept even with the UI off):
-      // defaults retain 1000 SQLExecutionUIData plan graphs + 100k task
-      // wrappers, and a long-lived session running hundreds of distinct
-      // plans accumulates them as old-gen residue — the suite-tail GC
-      // inflation BASELINE.md tracks on the heavy wedge rows. These
-      // processes never serve a UI; keep enough history for post-mortem
-      // probes only. Mirrored in Bench/Verify/QueryTimer.
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.ui.retainedJobs", "300")
-      .config("spark.ui.retainedStages", "300")
-      .config("spark.ui.retainedTasks", "20000")
-      // Tungsten execution memory OFF-HEAP (round 15): the 8-cpu q282
-      // probe caught a full-GC cascade — 362 task-GC-seconds on one rep
-      // of the pair-shuffle sort stage vs 5.8 on its identical neighbor
-      // — because promoted sort/aggregation pages churn the old gen.
-      // Off-heap pages are invisible to the collector: the same stage
-      // ran GC-quiet and q282@8cpus went 29-88 s (run-dependent) ->
-      // 17.9 s stable, cpu 135 -> 90 s. Standard practice for
-      // shuffle-heavy clusters; sized ~1/3 of heap here, per-executor
-      // on a real deployment.
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "12g")
-    extraConf.foreach { case (k, v) => b.config(k, v) }
+    (defaults ++ extraConf).foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     quietNoisyLoggers()

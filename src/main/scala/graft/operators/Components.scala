@@ -982,7 +982,15 @@ object Components {
     * rounds, which is what keeps the bounded-unroll oracle exact.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIterations: Int = 12): DataFrame = {
+      maxIterations: Int = 12): DataFrame =
+    kCorePeel(edges, srcCol, dstCol, k, maxIterations, BcastSymRows)
+
+  /** [[kCore]] with the survivor-broadcast bound as a parameter: each
+    * round broadcasts the survivor set while its counted size is at most
+    * `maxSymRows`; a negative bound forces the shuffle semi-joins.
+    */
+  private[operators] def kCorePeel(edges: DataFrame, srcCol: String,
+      dstCol: String, k: Int, maxIterations: Int, maxSymRows: Long): DataFrame = {
     val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
@@ -1001,24 +1009,16 @@ object Components {
     var alive = keep.count()
     var done = alive == 0
     var it = 0
-    // ops/measurement toggle (the jaccard.collapse precedent):
-    // spark.graft.kcore.broadcast = auto|off — "off" pins the round-13
-    // SMJ loop for A/B runs; "auto" (default) broadcasts the survivor
-    // set under the counted bound.
-    val bcastMode = edges.sparkSession.conf
-      .get("spark.graft.kcore.broadcast", "auto")
     while (!done && it < maxIterations) {
-      // Round 14: the survivor relation is node-sized and its count is
-      // ALREADY measured every round (`alive`, the fixpoint test) —
-      // broadcast it under the counted bound (the q81/q163 strategy-
-      // select discipline). Without the hint both semi-joins planned
-      // SMJ (checkpoint scans carry no stats), exchanging + sorting
-      // the edge-sized sym relation twice per peel round; with it the
-      // edge relation never shuffles inside the loop. Past the bound
-      // the shuffle plan returns — the 100 TB shape.
+      // the survivor relation is node-sized and its count is already
+      // measured every round (`alive`, the fixpoint test): broadcast it
+      // under the counted bound. Without the hint both semi-joins plan
+      // SMJ (checkpoint scans carry no stats) and exchange + sort the
+      // edge-sized sym relation twice per round; with it the edge
+      // relation never shuffles inside the loop. Past the bound the
+      // shuffle plan returns.
       def hintK(df: DataFrame): DataFrame =
-        if (bcastMode != "off" && alive <= BcastSymRows) broadcast(df)
-        else df
+        if (alive <= maxSymRows) broadcast(df) else df
       val next = sym
         .join(hintK(keep.select(col("u"))), Seq("u"), "left_semi")
         .join(hintK(keep.select(col("u").as("v"))), Seq("v"), "left_semi")

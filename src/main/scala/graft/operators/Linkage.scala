@@ -93,7 +93,7 @@ object Linkage {
     // session's shuffle-partition knob): with a broadcastable `b` the
     // pair scoring otherwise runs at the SCAN's split count — one small
     // parquet file = one task = the whole JW/weight kernel mass on one
-    // core (measured cpu ≈ wall on q140/q218 at local[32]). Same
+    // core (measured cpu ≈ wall on q140/q218 on 32 cores). Same
     // rationale as NearDup.jaroWinklerJoin; no second exchange on the
     // shuffle-join path at scale because the count matches the join's
     // required distribution.

@@ -532,7 +532,7 @@ object NearDup {
     // side the candidate generation + levenshtein verify otherwise run
     // at the upstream stage's AQE-coalesced partition count — tiny
     // bytes, heavy per-row compute, the case AQE's byte advisory
-    // cannot see (measured cpu ≈ wall on q99 at local[32]).
+    // cannot see (measured cpu ≈ wall on q99 on 32 cores).
     // The verify filter runs BEFORE the pair dedup: dist is a pure
     // function of the pair, so filtering first is result-identical,
     // keeps the kernel inside the wide probe stage, and shrinks the
@@ -641,7 +641,7 @@ object NearDup {
     // relation is small enough to broadcast, the probe stage otherwise
     // inherits the SCAN's split count (one small parquet file = one
     // task), serializing the whole JW kernel mass on a single core —
-    // measured cpu ≈ wall at local[32] on q110/q125/q218. The explicit
+    // measured cpu ≈ wall on 32 cores on q110/q125/q218. The explicit
     // partition count pins the exchange against AQE coalescing (bytes
     // are tiny, compute is not — the one case AQE's byte-sized
     // advisory cannot see), matches the join's required distribution

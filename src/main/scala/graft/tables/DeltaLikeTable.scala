@@ -1169,7 +1169,7 @@ object DeltaLikeTable {
       else {
         val zc = "__graft_z"
         val n = stagedDf.sparkSession.conf
-          .get("spark.sql.shuffle.partitions", "32").toInt
+          .get("spark.sql.shuffle.partitions").toInt
         // AQE coalesces the range exchange, so small batches still land
         // in few (sorted) files
         stagedDf.withColumn(zc, ZOrder.zvalue(stagedDf, effectiveCluster))

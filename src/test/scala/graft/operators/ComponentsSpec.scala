@@ -281,6 +281,11 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.values.forall(_ === 4L))
     // k above the clique degree: everything peels, empty core
     assert(Components.kCore(edges, "u", "v", k = 5).isEmpty)
+    // forced shuffle semi-joins (bound -1): same cores
+    val shuffled = Components.kCorePeel(edges, "u", "v", k = 2, 12, -1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(shuffled === out)
+    assert(Components.kCorePeel(edges, "u", "v", k = 5, 12, -1).isEmpty)
   }
 
   test("kCore: duplicate/reversed/self-loop edges do not inflate degrees") {
@@ -291,6 +296,9 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = Components.kCore(edges, "u", "v", k = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    val shuffled = Components.kCorePeel(edges, "u", "v", k = 2, 12, -1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(shuffled === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
 
   test("jaccardLinkPrediction: square diagonals score 1, adjacency excluded") {
