@@ -542,8 +542,8 @@ object SparkEntry {
     // q278 with the signature relation persisted as its own table:
     // per-trigger cost is O(batch + collisions), corpus text untouched
     "q281_stream_ingest_indexed" -> (graft.streaming.IngestDedup.q281StreamIngestIndexed _),
-    // q154's graph forced through the identical-adjacency collapsed
-    // exact path — pins the jaccard router's third regime in the gate
+    // q154's graph through the router-free exact entry point — pins
+    // direct entry ≡ the router's exact branch in the gate
     "q282_jaccard_links_collapsed" -> (graft.operators.Components.q282JaccardLinksCollapsed _),
     // q281's loop over the BAND-BUCKETED index: per-trigger corpus
     // touch is two file-pruned point lookups, flat in corpus size
@@ -844,7 +844,7 @@ object SparkEntry {
     "q280_stream_anomalies" -> graft.streaming.EventStream.q280Sql,
     // the indexed loop must be indistinguishable from the from-text loop
     "q281_stream_ingest_indexed" -> graft.streaming.IngestDedup.q278Sql,
-    // the collapse is exact, so the oracle is q154's SQL unchanged
+    // the same exact top-N as q154, so the oracle is q154's SQL
     "q282_jaccard_links_collapsed" -> graft.operators.Components.q154Sql,
     // pruned point lookups must be verdict-invisible: q278's SQL again
     "q283_stream_ingest_banded" -> graft.streaming.IngestDedup.q278Sql,

@@ -66,9 +66,11 @@ object GraftSession {
   /** Off-heap execution memory: the physical memory the heap leaves, so
     * heap + off-heap fit in physical memory on any host (≤ 0 disables
     * off-heap). It is a cap, allocated only as sorts and aggregates ask,
-    * and what they ask grows with their data, not with the heap: q282's
-    * pair sort at sf0.1 holds ~6.6 GB at once at 4 cores, and spills to
-    * disk under a pool of a third of the heap or of the heap itself.
+    * and what they ask grows with their data, not with the heap: the
+    * past-bound Jaccard shuffle plan sorts the whole wedge-pair
+    * relation, and a sort of that relation over q154's graph at sf0.1
+    * (56 M pairs) held ~6.6 GB at once at 4 cores and spilled to disk
+    * under a pool of a third of the heap or of the heap itself.
     */
   def offHeapBytes: Long = {
     val physical = java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -90,8 +92,8 @@ object GraftSession {
     *     processes serve no UI, so keep only post-mortem history.
     *   - Off-heap: Tungsten sort/aggregation pages live off-heap, where
     *     the collector never sees them. Promoted on-heap pages churn the
-    *     old gen into full-GC cascades on the shuffle-heavy rows (q282's
-    *     pair sort). Sized by [[offHeapBytes]].
+    *     old gen into full-GC cascades on the shuffle-heavy rows (the
+    *     past-bound Jaccard pair sort). Sized by [[offHeapBytes]].
     */
   def local(
       appName: String = "graft",

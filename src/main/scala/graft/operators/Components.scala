@@ -1095,8 +1095,10 @@ object Components {
     * top-N heaps, no full sort.
     */
   def jaccardLinkPrediction(edges: DataFrame, srcCol: String,
-      dstCol: String, topN: Int = 50): DataFrame =
-    jaccardFromCanon(canonicalEdges(edges, srcCol, dstCol), topN)
+      dstCol: String, topN: Int = 50): DataFrame = {
+    val canon = canonicalEdges(edges, srcCol, dstCol)
+    jaccardFromCanon(canon, topN, AdjacencyCsr.collect(canon, BcastSymRows))
+  }
 
   /** (u, v) with u < v, self-loops dropped, deduplicated and
     * checkpointed, so the CSR collect, the probes and the wedge plans
@@ -1115,126 +1117,34 @@ object Components {
       .localCheckpoint(eager = false)
 
   /** Exact top-N Jaccard over an already-canonicalized, already-
-    * checkpointed (u < v, distinct) edge relation. Three routes, all
-    * exact and row-identical (spec-pinned against each other on
-    * adversarial graphs):
+    * checkpointed (u < v, distinct) edge relation. Two routes, both
+    * exact and row-identical (spec-pinned against each other and a
+    * local oracle on adversarial graphs):
     *
-    *   1. KERNEL ([[jaccardCsr]]) — integral ids and 2|E| ≤
-    *      `maxSymRows`, counted by one bounded collect (never a stats
-    *      guess): the graph becomes a driver-built [[AdjacencyCsr]],
-    *      broadcast once, and each task counts its rows' common
-    *      neighbors in a sparse accumulator and keeps a local top-N.
-    *      No pair relation exists outside a task; the only exchange
-    *      carries ≤ topN rows per task into the global top-N. Under the
-    *      bound this is the route whatever the adjacency structure.
-    *   2. COLLAPSED ([[jaccardCollapsed]]) — past the bound, when
-    *      grouping nodes with identical neighbor sets at least halves
-    *      the wedge mass: Σ_u deg(u)² ≥ 2 · Σ_{distinct set} rdeg²,
-    *      where rdeg is the number of distinct neighbor GROUPS of the
-    *      set (its degree in the collapsed graph — not Σ_group deg²,
-    *      which hub centers dominate on both sides on a clone-fan
-    *      graph). The grouping is estimated by an order-free
-    *      fingerprint (degree + two xxhash64 xors); a collision can only
-    *      nudge the route, never the answer — the collapsed plan groups
-    *      by exact arrays.
-    *   3. SHUFFLE ([[jaccardNodeLevel]]) — past the bound, or for
-    *      non-integral ids, when collapse does not pay: the distributed
-    *      wedge self-join with a sorted pair count — the 100 TB shape.
+    *   1. KERNEL ([[jaccardCsr]]) — `csr` is present: integral ids and
+    *      2|E| within the kernel bound, counted by one bounded collect
+    *      (never a stats guess). The graph is a driver-built
+    *      [[AdjacencyCsr]], broadcast once, and each task counts its
+    *      rows' common neighbors in a sparse accumulator and keeps a
+    *      local top-N. No pair relation exists outside a task; the only
+    *      exchange carries ≤ topN rows per task into the global top-N.
+    *      Under the bound this is the route whatever the adjacency
+    *      structure.
+    *   2. SHUFFLE ([[jaccardNodeLevel]]) — past the bound, or for
+    *      non-integral ids: the distributed wedge self-join with a
+    *      sorted pair count — the 100 TB shape.
     *
-    * `spark.graft.jaccard.collapse` pins a route: `always` → 2 at any
-    * size; `never` → 1 under the bound, 3 past it; `auto` → 1 under the
-    * bound, the rule above past it.
-    *
-    * The collapse is EXACT on three facts about identical-adjacency
-    * groups in a simple graph:
-    *
-    *   1. two nodes with the same neighbor set are never adjacent
-    *      (a ~ b with N(a)=N(b) would put b in N(b): a self-loop), so
-    *      every within-group pair is a valid candidate with jaccard
-    *      exactly |S|/|S| = 1.0;
-    *   2. adjacency between two groups is all-or-nothing (a ~ b iff
-    *      b ∈ N(a), and N(a) is the same set for every a in the
-    *      group), so the existing-edge anti-join is exact at group
-    *      level;
-    *   3. |N(a) ∩ N(b)| depends only on the two neighbor SETS, and a
-    *      shared neighbor group C contributes all gsize(C) of its
-    *      members — so the group-graph wedge join weighted by the
-    *      center's group size computes node-level common-neighbor
-    *      counts exactly.
-    *
-    * Top-N re-expansion never re-materializes the collapsed pair mass:
-    * group pairs are ranked by (jaccard desc, lexicographically
-    * smallest member pair) and only the first `topN` are expanded —
-    * sound because every node pair of a group pair ranked below the
-    * cut is beaten by at least `topN` pairs from the group pairs above
-    * it (one per group pair: its minimum pair). Each expanded side is
-    * sliced to its topN+1 smallest members, which provably contains
-    * the group pair's own top-`topN` node pairs, so expansion is
-    * O(topN³) rows worst case, independent of group sizes.
-    *
-    * @param maxSymRows the kernel bound on 2|E|; a negative one forces
-    *                   the past-the-bound routes even on an empty graph
+    * @param csr `canon`'s bounded [[AdjacencyCsr.collect]], taken by the
+    *            caller so [[jaccardLinksAuto]]'s degree probe shares it
     */
   private[operators] def jaccardFromCanon(canon: DataFrame, topN: Int,
-      maxSymRows: Long = BcastSymRows): DataFrame =
-    jaccardRoute(canon, topN, AdjacencyCsr.collect(canon, maxSymRows))
-
-  /** [[jaccardFromCanon]] with the CSR collect passed by name: a caller
-    * that already holds it ([[jaccardLinksAuto]]) shares it, and the
-    * forced-collapse route never pays it.
-    */
-  private def jaccardRoute(canon: DataFrame, topN: Int,
-      csrOrNone: => Option[AdjacencyCsr]): DataFrame = {
-    val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
-    val mode = canon.sparkSession.conf
-      .get("spark.graft.jaccard.collapse", "auto")
-    if (mode == "always") return jaccardCollapsed(canon, sym, topN)
-    csrOrNone match {
-      case Some(csr) => jaccardCsr(canon, csr, topN)
-      case None if mode == "never" =>
-        val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-          .localCheckpoint()
-        jaccardNodeLevel(canon, sym, deg, topN)
-      case None =>
-        // bit_xor, not sum: order-free like sum but cannot overflow
-        // under ANSI; neighbors are distinct per node, so xor over two
-        // independent 64-bit hashes is a sound set fingerprint
-        val fp = sym.groupBy(col("u")).agg(
-          count(lit(1)).as("deg"),
-          bit_xor(xxhash64(col("v"))).as("s1"),
-          bit_xor(xxhash64(col("v"), lit(1))).as("s2"))
-          .localCheckpoint()
-        // zero duplicate fingerprints ⇒ no collapse possible, so the
-        // edge-linear rdeg probe runs only when duplicates exist; an
-        // empty graph (0 nodes = 0 distinct) routes node-level too,
-        // never reaching the probe's NULL sums
-        val gate = fp.agg(count(lit(1)).as("n"),
-          count_distinct(col("deg"), col("s1"), col("s2")).as("nd")).head()
-        val collapse = gate.getLong(0) != gate.getLong(1) && {
-          val gids = fp.select(col("u"),
-            xxhash64(col("deg"), col("s1"), col("s2")).as("gid"))
-          // identical-set nodes share rdeg, so the collapsed wedge
-          // mass sums rdeg² ONCE per distinct group
-          val rdeg = sym
-            .join(gids.withColumnRenamed("u", "v")
-              .withColumnRenamed("gid", "ngid"), Seq("v"))
-            .groupBy(col("u"))
-            .agg(count_distinct(col("ngid")).as("rdeg"))
-          val probe = fp.select(col("u"), col("deg"))
-            .join(gids, Seq("u")).join(rdeg, Seq("u"))
-            .groupBy(col("gid"))
-            .agg(count(lit(1)).as("g"), first(col("deg")).as("deg"),
-              first(col("rdeg")).as("rdeg"))
-            .agg(sum(col("g") * col("deg") * col("deg")).as("wedge_node"),
-              sum(col("rdeg") * col("rdeg")).as("wedge_grp"))
-            .head()
-          !probe.isNullAt(0) && !probe.isNullAt(1) &&
-            probe.getLong(0) >= 2 * probe.getLong(1)
-        }
-        if (collapse) jaccardCollapsed(canon, sym, topN)
-        else jaccardNodeLevel(canon, sym, fp.select(col("u"), col("deg")),
-          topN)
-    }
+      csr: Option[AdjacencyCsr]): DataFrame = csr match {
+    case Some(g) => jaccardCsr(canon, g, topN)
+    case None =>
+      val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
+      val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+        .localCheckpoint()
+      jaccardNodeLevel(canon, sym, deg, topN)
   }
 
   /** Compressed-sparse-row adjacency of a canonical edge set over dense
@@ -1561,10 +1471,10 @@ object Components {
       .limit(topN)
   }
 
-  /** Route 3 of [[jaccardFromCanon]], the shuffle plan: reached only
+  /** Route 2 of [[jaccardFromCanon]], the shuffle plan: reached only
     * past the kernel bound (or for non-integral ids), so every join here
     * is planned for data that does not fit a broadcast. `deg` arrives
-    * from the router's probe groupBy.
+    * checkpointed from the router's degree groupBy.
     *
     * Invariants:
     *   - PACKED LEGS when the ids are LongType in [0, 2³¹) (one min/max
@@ -1676,214 +1586,6 @@ object Components {
       .limit(topN)
   }
 
-  /** Identical-adjacency collapsed wedge plan (facts 1–3 in
-    * [[jaccardFromCanon]]'s scaladoc) — the clone-fan regime.
-    */
-  private[operators] def jaccardCollapsed(canon: DataFrame, symIn: DataFrame,
-      topN: Int): DataFrame = {
-    val sym = symIn
-    // one row per node: its full sorted adjacency (Σ sizes = 2|E|) —
-    // NOT the r9 grouped-wedge variant this file rejects below: the
-    // arrays here are degree-sized and feed a groupBy, never a
-    // C(deg, 2) in-task explosion
-    val adj = sym.groupBy(col("u"))
-      .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-    // collapse: one row per distinct neighbor set, with the sorted
-    // member list; rep = smallest member (stable, unique across groups)
-    val groups = adj.groupBy(col("nbrs"))
-      .agg(sort_array(collect_list(col("u"))).as("members"),
-        count(lit(1)).as("gsize"))
-      .select(element_at(col("members"), 1).as("rep"), col("members"),
-        col("gsize"), size(col("nbrs")).cast("long").as("deg"),
-        col("nbrs"))
-      // consumed 4× below (mapping, rep edges, per-side info, within)
-      .localCheckpoint()
-    val mapping = groups.select(explode(col("members")).as("node"),
-      col("rep").as("nbr_rep"))
-    // symmetric group-graph adjacency: the rep's own neighbor set
-    // mapped node→rep (fact 2 makes this exact and duplicate-free per
-    // (ru, rv) after distinct)
-    val repAdj = groups.select(col("rep").as("ru"),
-        explode(col("nbrs")).as("node"))
-      .join(mapping, Seq("node"))
-      .select(col("ru"), col("nbr_rep").as("rv"))
-      .distinct()
-      // consumed 3× (two wedge legs + the group-level anti-join)
-      .localCheckpoint()
-    // wedge self-join on the group graph; center weighted by its
-    // group size (fact 3). Stays a SELF-JOIN on the center column,
-    // not a grouped adjacency-list explode: a grouped variant (r9,
-    // measured 79 s vs 30 s solo at sf0.1) funnels each hub's
-    // C(deg, 2) pair mass through the single task holding that hub's
-    // row, while the join's probe side streams hub pairs across every
-    // partition that holds a probe row.
-    val gsizes = groups.select(col("rep"), col("gsize"), col("deg"))
-    // Round 14 (same measurement as [[jaccardNodeLevel]]): the group-
-    // pair relation is node-pair-sized in the all-singleton regime
-    // (56.3 M rows on q282's graph at sf0.1), and the old shape not
-    // only paid the three post-aggregate SMJ passes the node plan paid
-    // — it attached BOTH (topN+1)-member slice arrays (~400 B each)
-    // to every group pair before the top-N cut. Three fixes:
-    //
-    //   - NARROW FIRST: rep = members[1] = m1 by construction and the
-    //     wedge pairs already satisfy a < b, so the cross tie-break key
-    //     (mp_a, mp_b) = (least(m1_a, m1_b), greatest(..)) is just
-    //     (a, b) — no member data is needed before the cut at all. The
-    //     ms slices join onto the ≤ topN winners AFTER the limit.
-    //   - PACKED LEGS when rep ids fit [0, 2³¹) (measured): wedge legs
-    //     carry (rep << 32 | deg), the aggregate keys stay two longs,
-    //     and the post-aggregate degree joins decode out of the key.
-    //   - MEASURED BROADCAST of the group-sized relations under the
-    //     counted [[BcastSymRows]] bound.
-    // same LongType pre-gate as the node plan: getLong/shiftleft are
-    // only sound on 64-bit ids; anything narrower routes to the
-    // unpacked branch below. The probe also measures max(gsize): in the
-    // ALL-SINGLETON regime (forced collapse on a graph with no
-    // duplicate adjacency — the declared q282 case) every center weight
-    // is 1, so the wedge count needs no gsize payload at all — the
-    // pair-mass shuffle drops its weight column (8 of 24 bytes/row,
-    // ~340 MB at sf0.1) and the per-leg gsize attach join disappears
-    // (guide §2.3: shuffle fewer bytes).
-    val repIsLong = groups.schema("rep").dataType ==
-      org.apache.spark.sql.types.LongType
-    val probe2 =
-      if (repIsLong)
-        groups.agg(min(col("rep")), max(col("rep")),
-          max(col("gsize"))).head()
-      else groups.agg(lit(null).cast("long"), lit(null).cast("long"),
-        max(col("gsize"))).head()
-    val packable2 = repIsLong && !probe2.isNullAt(0) &&
-      probe2.getLong(0) >= 0L && probe2.getLong(1) < (1L << 31)
-    val allSingleton = !probe2.isNullAt(2) && probe2.getLong(2) <= 1L
-    val nRepEdges = repAdj.count()
-    val bcast2 = nRepEdges <= BcastSymRows
-    def hint2(df: DataFrame): DataFrame = if (bcast2) broadcast(df) else df
-    val cross =
-      if (packable2) {
-        val pmap = groups
-          .select(col("rep"), shiftleft(col("rep"), 32)
-            .bitwiseOR(col("deg")).as("p"))
-        // probe-leg spread: the broadcast wedge pipeline runs in this
-        // leg's stage, which otherwise inherits the checkpoint's
-        // AQE-coalesced partitioning (a few tasks for the whole wedge
-        // mass); one exchange of the edge-sized leg pins it at the
-        // session's shuffle parallelism
-        val nPart2 = repAdj.sparkSession.conf
-          .get("spark.sql.shuffle.partitions").toInt
-        val leftBase = repAdj.select(col("ru").as("via"), col("rv").as("rep"))
-          .join(hint2(pmap), Seq("rep"))
-        val left =
-          (if (allSingleton) leftBase.select(col("via"), col("p").as("pa"))
-           else leftBase
-             .join(hint2(gsizes.select(col("rep").as("via"),
-               col("gsize").as("w"))), Seq("via"))
-             .select(col("via"), col("p").as("pa"), col("w")))
-            .repartition(nPart2, col("via"))
-        val right = repAdj.select(col("ru").as("via"), col("rv").as("rep"))
-          .join(hint2(pmap), Seq("rep"))
-          .select(col("via"), col("p").as("pb"))
-        // same sorted-count kernel as the node plan: single packed long
-        // pair key (radix sort + streaming sort aggregate), degrees as
-        // a first() payload, long-key broadcast anti-join
-        val m32 = lit((1L << 32) - 1)
-        val pairCols = Seq(
-          shiftleft(shiftright(col("pa"), 32), 32)
-            .bitwiseOR(shiftright(col("pb"), 32)).as("pk"),
-          shiftleft(col("pa").bitwiseAND(m32), 32)
-            .bitwiseOR(col("pb").bitwiseAND(m32)).as("dd")) ++
-          (if (allSingleton) Nil else Seq(col("w")))
-        val common = left.join(hint2(right), Seq("via"))
-          .where(col("pa") < col("pb"))
-          .select(pairCols: _*)
-          .repartition(nPart2, col("pk"))
-          .sortWithinPartitions(col("pk"))
-          .groupBy(col("pk"))
-          .agg(
-            (if (allSingleton) count(lit(1)) else sum(col("w")))
-              .as("n_common"),
-            first(col("dd")).as("dd"))
-        val repAdjPk = repAdj
-          .select(shiftleft(col("ru"), 32).bitwiseOR(col("rv")).as("pk"))
-        common.join(hint2(repAdjPk), Seq("pk"), "left_anti")
-          .select(lit(false).as("within"), col("n_common"),
-            shiftright(col("dd"), 32).as("deg_a"),
-            col("dd").bitwiseAND(m32).as("deg_b"),
-            shiftright(col("pk"), 32).as("mp_a"),
-            col("pk").bitwiseAND(m32).as("mp_b"),
-            shiftright(col("pk"), 32).as("rep_a"),
-            col("pk").bitwiseAND(m32).as("rep_b"))
-      } else {
-        val info0 = groups.select(col("rep"), col("deg"))
-        val left = repAdj.select(col("ru").as("via"), col("rv").as("a"))
-          .join(gsizes.select(col("rep").as("via"), col("gsize").as("w")),
-            Seq("via"))
-        val common = left
-          .join(repAdj.select(col("ru").as("via"), col("rv").as("b")),
-            Seq("via"))
-          .where(col("a") < col("b"))
-          .groupBy(col("a"), col("b"))
-          .agg(sum(col("w")).as("n_common"))
-        common
-          .join(repAdj.select(col("ru").as("a"), col("rv").as("b")),
-            Seq("a", "b"), "left_anti")
-          .join(info0.select(col("rep").as("a"), col("deg").as("deg_a")),
-            Seq("a"))
-          .join(info0.select(col("rep").as("b"), col("deg").as("deg_b")),
-            Seq("b"))
-          .select(lit(false).as("within"), col("n_common"),
-            col("deg_a"), col("deg_b"),
-            col("a").as("mp_a"), col("b").as("mp_b"),
-            col("a").as("rep_a"), col("b").as("rep_b"))
-      }
-    // within-group pairs: jaccard exactly 1.0 (fact 1)
-    val within = groups.where(col("gsize") >= 2)
-      .select(lit(true).as("within"), col("deg").as("n_common"),
-        col("deg").as("deg_a"), col("deg").as("deg_b"),
-        element_at(col("members"), 1).as("mp_a"),
-        element_at(col("members"), 2).as("mp_b"),
-        col("rep").as("rep_a"), col("rep").as("rep_b"))
-    // same jaccard expression (and type promotions) as the node-level
-    // plan, so collapsed results hash-match the uncollapsed pin
-    val scored = cross.unionByName(within)
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("deg_a") + col("deg_b") - col("n_common")))
-    // topN GROUP pairs cover the topN node pairs (scaladoc proof);
-    // TakeOrderedAndProject — per-partition heaps, no global sort
-    val candNarrow = scored
-      .orderBy(col("jaccard").desc, col("mp_a"), col("mp_b"))
-      .limit(topN)
-    // member slices attach to the ≤ topN winners only — the ~400 B
-    // arrays never ride through the group-pair mass (round-14 narrow-
-    // first restructure; the 50-row side broadcasts)
-    val msInfo = groups.select(col("rep"),
-      slice(col("members"), 1, topN + 1).as("ms"))
-    val cand = broadcast(candNarrow)
-      .join(msInfo.withColumnRenamed("rep", "rep_a")
-        .withColumnRenamed("ms", "ms_a"), Seq("rep_a"))
-      .join(msInfo.withColumnRenamed("rep", "rep_b")
-        .withColumnRenamed("ms", "ms_b"), Seq("rep_b"))
-    // expansion: ≤ topN rows × ≤ (topN+1)² member pairs — tiny
-    val pairs = cand
-      .select(col("within"), col("n_common"), col("deg_a"), col("deg_b"),
-        col("jaccard"), explode(col("ms_a")).as("x"), col("ms_b"))
-      .select(col("within"), col("n_common"), col("deg_a"), col("deg_b"),
-        col("jaccard"), col("x"),
-        explode(when(col("within"),
-            filter(col("ms_b"), y => y > col("x")))
-          .otherwise(col("ms_b"))).as("y"))
-    pairs
-      .select(least(col("x"), col("y")).as("node_a"),
-        greatest(col("x"), col("y")).as("node_b"), col("n_common"),
-        when(col("x") <= col("y"), col("deg_a")).otherwise(col("deg_b"))
-          .as("deg_a"),
-        when(col("x") <= col("y"), col("deg_b")).otherwise(col("deg_a"))
-          .as("deg_b"),
-        col("jaccard"))
-      .orderBy(col("jaccard").desc, col("node_a"), col("node_b"))
-      .limit(topN)
-  }
-
-
   /** Degree-routed Jaccard link prediction — the production entry
     * point that picks between [[jaccardLinkPrediction]]'s exact wedge
     * join and [[approxJaccardLinks]]'s MinHash-LSH path on a MEASURED
@@ -1891,8 +1593,7 @@ object Components {
     * the hottest hub's degree; the max degree decides whether it is
     * affordable. Under the kernel bound it is read off the CSR that
     * [[jaccardFromCanon]]'s kernel runs on (one bounded collect serves
-    * both); past it, or when `spark.graft.jaccard.collapse=always`
-    * pins the collapsed plan, one edge-linear aggregate measures it:
+    * both); past it, one edge-linear aggregate measures it:
     *
     *   - max degree ≤ `maxExactDegree` → exact top-N (identical to
     *     calling [[jaccardLinkPrediction]] directly — spec-pinned);
@@ -1921,18 +1622,13 @@ object Components {
       topN: Int = 50, maxExactDegree: Long = 1L << 13,
       threshold: Double = 0.7): DataFrame = {
     val canon = canonicalEdges(edges, srcCol, dstCol)
-    // the forced-collapse route never runs the kernel, so it skips the
-    // CSR and probes the degree with the aggregate
-    val forced = canon.sparkSession.conf
-      .get("spark.graft.jaccard.collapse", "auto") == "always"
-    val csr =
-      if (forced) None else AdjacencyCsr.collect(canon, BcastSymRows)
+    val csr = AdjacencyCsr.collect(canon, BcastSymRows)
     val maxDeg = csr.fold(canon.select(col("u"))
       .unionAll(canon.select(col("v")))
       .groupBy(col("u")).agg(count(lit(1)).as("d"))
       .agg(max(col("d"))).head().getLong(0))(_.maxDegree)
     if (maxDeg <= maxExactDegree)
-      jaccardRoute(canon, topN, csr)
+      jaccardFromCanon(canon, topN, csr)
     else
       // top-N means TOP-N on the approx side too — the ordering
       // contract lives HERE, at the limit site (approxJaccardLinks
@@ -2043,31 +1739,16 @@ object Components {
       |ORDER BY jaccard DESC, node_a, node_b
       |LIMIT 50""".stripMargin
 
-  /** Declared q282: q154's graph FORCED through the identical-adjacency
-    * COLLAPSED exact path (`spark.graft.jaccard.collapse=always`) — the
-    * row that makes the router's third regime driver-visible. The
-    * collapse is EXACT (facts 1–3 in [[jaccardFromCanon]]'s scaladoc),
-    * so the oracle is q154's own exact SQL unchanged: a hash match here
-    * pins collapsed ≡ node-level on a driver-checked relation, not just
-    * in the spec suite. On this graph every neighbor set is distinct
-    * (groups are all singletons), so the row also exercises the
-    * degenerate all-singleton shape of the group plan — the regime the
-    * auto-probe routes AWAY from for performance, which is exactly why
-    * a forced row is the only way to driver-check it.
+  /** Declared q282: q154's graph through [[jaccardLinkPrediction]],
+    * the router-free exact entry point (no degree probe, no LSH
+    * branch). Its oracle is q154's exact SQL, so a hash match pins
+    * direct entry ≡ [[jaccardLinksAuto]]'s exact branch on a
+    * driver-checked relation, not only in the spec suite. The key keeps
+    * its `_collapsed` suffix because the baselines and the oracle map
+    * are keyed by it.
     */
-  def q282JaccardLinksCollapsed(spark: SparkSession, d: String): DataFrame = {
-    val key = "spark.graft.jaccard.collapse"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "always")
-    // the route is chosen EAGERLY inside jaccardFromCanon (the probe
-    // collects), so restoring the conf after the builder returns
-    // cannot flip the returned plan
-    try jaccardLinksAuto(q154Edges(spark, d), "src", "dst", topN = 50)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  def q282JaccardLinksCollapsed(spark: SparkSession, d: String): DataFrame =
+    jaccardLinkPrediction(q154Edges(spark, d), "src", "dst", 50)
 
   /** Degree assortativity of an undirected graph — the Pearson
     * correlation of endpoint degrees over the symmetric edge list

@@ -134,8 +134,10 @@ object IngestDedup {
     * template, `writeString` onto an existing path) would silently
     * corrupt the shared template for all later reps — so every linked
     * file is also marked READ-ONLY here: the write then fails loudly
-    * (AccessDenied) instead. Deletion still works (POSIX delete needs
-    * directory write permission, not file write permission).
+    * (AccessDenied) instead. A link whose mark does not take is replaced
+    * by a real copy, so the guard is never silently missing. Deletion
+    * still works (POSIX delete needs directory write permission, not
+    * file write permission).
     */
   private def copyTree(src: java.nio.file.Path,
       dst: java.nio.file.Path): Unit = {
@@ -147,7 +149,12 @@ object IngestDedup {
       else
         try {
           java.nio.file.Files.createLink(target, p)
-          target.toFile.setWritable(false, false)
+          // a hard link shares the inode, so this also marks the
+          // template's own file read-only
+          if (!target.toFile.setWritable(false, false)) {
+            java.nio.file.Files.delete(target)
+            java.nio.file.Files.copy(p, target)
+          }
         } catch {
           case _: UnsupportedOperationException | _: java.io.IOException =>
             java.nio.file.Files.copy(p, target,

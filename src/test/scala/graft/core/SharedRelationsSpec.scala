@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The suite-shared relation contract: a checkpoint built through
   * [[SharedRelations.checkpointShared]] must survive the harness'
-  * inter-query unpersist sweep (the exact filter Bench/Verify run) and
-  * stay queryable, while an ordinary localCheckpoint built outside the
-  * registry is swept. This is what lets q94/q100/q195/q207 and
+  * inter-query unpersist sweep ([[Harness.each]], the loop Bench/Verify
+  * run) and stay queryable, while an ordinary localCheckpoint built
+  * outside the registry is swept. This is what lets q94/q100/q195/q207 and
   * q45/q173 share one materialized build per run. The registry is
   * keyed by (applicationId, rddId) because RDD ids restart at 0 per
   * SparkContext — a bare-id registry would shield unrelated RDDs in a
@@ -30,16 +30,18 @@ class SharedRelationsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1 to 100).toDF("n").localCheckpoint()
     }
     val unshared = (1 to 50).toDF("n").localCheckpoint()
-    assert(shared.count() === 100 && unshared.count() === 50)
 
-    // the exact sweep Bench/Verify run between queries
-    sp.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!SharedRelations.isShared(sp, id)) rdd.unpersist(blocking = true)
+    // the loop Bench/Verify run, which sweeps after every query
+    val failed = Harness.each(sp, Seq("spec-query")) { _ =>
+      assert(shared.count() === 100 && unshared.count() === 50)
     }
+    assert(failed.isEmpty, s"query body failed: $failed")
 
     val persisted = sp.sparkContext.getPersistentRDDs.keySet
     assert(persisted.exists(SharedRelations.isShared(sp, _)),
       "the registered checkpoint's blocks must still be persisted")
+    assert(persisted.forall(SharedRelations.isShared(sp, _)),
+      "every unregistered checkpoint must be swept")
     // and the shared relation still answers queries after the sweep
     assert(shared.agg(sum(col("n"))).head.getLong(0) === 5050L)
   }

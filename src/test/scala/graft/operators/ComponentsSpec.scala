@@ -650,20 +650,20 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // regression (round-15, ADVICE): the packed-key gates called
     // Row.getLong on the id bounds, so int-id graphs crashed instead of
     // routing to the wide fallbacks. 4-cycle again: diagonals score 1.
+    // Past the kernel bound (no CSR) the router takes the wide plan.
     val edges = Seq((1, 2), (2, 3), (3, 4), (4, 1)).toDF("u", "v")
-    for (mode <- Seq("auto", "always", "never")) {
-      spark.conf.set("spark.graft.jaccard.collapse", mode)
-      try {
-        val out = Components.jaccardLinkPrediction(edges, "u", "v",
-          topN = 10).collect()
-        val byPair = out.map(r =>
-          (r.getInt(out.head.fieldIndex("node_a")),
-            r.getInt(out.head.fieldIndex("node_b"))) ->
-            (r.getAs[Long]("n_common"), r.getAs[Double]("jaccard"))).toMap
-        assert(byPair.keySet === Set((1, 3), (2, 4)), s"mode=$mode")
-        assert(byPair((1, 3)) === ((2L, 1.0)), s"mode=$mode")
-        assert(byPair((2, 4)) === ((2L, 1.0)), s"mode=$mode")
-      } finally spark.conf.unset("spark.graft.jaccard.collapse")
+    val pastBound = Components.jaccardFromCanon(
+      Components.canonicalEdges(edges, "u", "v"), 10, None)
+    for (df <- Seq(Components.jaccardLinkPrediction(edges, "u", "v",
+        topN = 10), pastBound)) {
+      val out = df.collect()
+      val byPair = out.map(r =>
+        (r.getInt(out.head.fieldIndex("node_a")),
+          r.getInt(out.head.fieldIndex("node_b"))) ->
+          (r.getAs[Long]("n_common"), r.getAs[Double]("jaccard"))).toMap
+      assert(byPair.keySet === Set((1, 3), (2, 4)))
+      assert(byPair((1, 3)) === ((2L, 1.0)))
+      assert(byPair((2, 4)) === ((2L, 1.0)))
     }
   }
 
@@ -722,63 +722,11 @@ class ComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(bad.head.getAs[Double]("q_total") + 0.5) < 1e-12)
   }
 
-  test("jaccard collapse pin: identical-adjacency group path ≡ node-level wedge path") {
-    val sp = spark; import sp.implicits._
-    import org.apache.spark.sql.functions.{col, count, greatest, least, lit}
-    // random base graph with PLANTED identical-adjacency groups: each
-    // clone gets exactly its template's neighbor set (clones of x are
-    // never adjacent to x or each other — the structure the collapse
-    // exploits), plus random singles so most groups have size 1
-    val rnd = new scala.util.Random(7)
-    val base = (for {
-      u <- 0L until 60L
-      v <- (u + 1) until 60L
-      if rnd.nextDouble() < 0.12
-    } yield (u, v)).toSeq
-    val nbrs = base.flatMap { case (u, v) => Seq(u -> v, v -> u) }
-      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
-    var nextId = 100L
-    val clones = nbrs.toSeq.sortBy(_._1).take(12).flatMap { case (x, ns) =>
-      val k = 1 + rnd.nextInt(3) // group sizes 2–4 incl. the template
-      (0 until k).map { _ =>
-        val c = nextId; nextId += 1
-        ns.toSeq.sorted.map(y => (c, y))
-      }.reduce(_ ++ _)
-    }
-    val edges = (base ++ clones).toDF("u", "v")
-    val canon = edges
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint()
-    val sym = canon.unionAll(
-      canon.select(col("v").as("u"), col("u").as("v")))
-    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-    for (topN <- Seq(7, 40)) {
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-        (r.getAs[Long]("node_a"), r.getAs[Long]("node_b"),
-          r.getAs[Long]("n_common"), r.getAs[Long]("deg_a"),
-          r.getAs[Long]("deg_b"), r.getAs[Double]("jaccard"))).toSeq
-      // both paths pinned directly (the router picks by measured wedge
-      // saving, which depends on the planted group mass — the pin must
-      // not depend on which way it routes)
-      val collapsed = rows(
-        Components.jaccardCollapsed(canon, sym, topN))
-      val pinned = rows(
-        Components.jaccardNodeLevel(canon, sym, deg, topN))
-      assert(collapsed === pinned, s"collapse mismatch at topN=$topN")
-      // the public route must equal both, whichever path it takes
-      val routed = rows(
-        Components.jaccardLinkPrediction(edges, "u", "v", topN))
-      assert(routed === pinned, s"router mismatch at topN=$topN")
-    }
-  }
-
   test("jaccard auto probe: degenerate edge sets return empty, no crash") {
     val sp = spark; import sp.implicits._
-    // all edges self-loops → canonical edge set is EMPTY; the r13 auto
-    // probe aggregated it to one row of NULL sums and threw NPE. The
-    // duplicate-fingerprint gate now routes node-level (0 distinct =
-    // 0 nodes), which returns an empty relation like every other path.
+    // all edges self-loops → canonical edge set is EMPTY; an earlier
+    // past-the-bound probe aggregated it to one row of NULL sums and
+    // threw NPE. Every route returns an empty relation.
     val loops = Seq((1L, 1L), (2L, 2L)).toDF("u", "v")
     assert(Components.jaccardLinkPrediction(loops, "u", "v", 10)
       .count() === 0L)

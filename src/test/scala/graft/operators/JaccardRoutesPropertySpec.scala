@@ -8,15 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.GraftSession
 
-/** Differential checks of the four exact Jaccard link-prediction plans —
-  * the broadcast-CSR kernel, the node-level shuffle plan (reached by a
-  * negative kernel bound, which no edge count meets), its unpacked twin
-  * and the
-  * identical-adjacency collapsed plan — against each other and a local
-  * all-pairs oracle, over seeded adversarial graphs (deterministic
-  * reruns, as in the merge property checks): Int and Long ids, negative
-  * ids and ids past 2³¹, duplicate and reversed edges, self-loops, empty
-  * graphs, stars, clone fans and score ties at the top-N cut.
+/** Differential checks of the three exact Jaccard link-prediction plans —
+  * the broadcast-CSR kernel, the node-level shuffle plan (the router's
+  * past-the-bound branch) and its unpacked twin — and the public entry
+  * point against each other and a local all-pairs oracle, over seeded
+  * adversarial graphs (deterministic reruns, as in the merge property
+  * checks): Int and Long ids, negative ids and ids past 2³¹, duplicate
+  * and reversed edges, self-loops, empty graphs, stars, clone fans and
+  * score ties at the top-N cut.
   */
 class JaccardRoutesPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -82,23 +81,17 @@ class JaccardRoutesPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
         val ctx = s"$idType $name topN=$topN"
         val kernel = Components.jaccardCsr(canon, csr, topN)
         assert(rows(kernel) === want, s"kernel: $ctx")
-        val shuffle = Components.jaccardFromCanon(canon, topN, PastBound)
-        spark.conf.set("spark.graft.jaccard.collapse", "never")
-        val forcedNodeLevel =
-          try Components.jaccardFromCanon(canon, topN, PastBound)
-          finally spark.conf.unset("spark.graft.jaccard.collapse")
-        assert(rows(forcedNodeLevel) === want, s"node level: $ctx")
-        assert(rows(shuffle) === want, s"past-bound auto: $ctx")
+        val nodeLevel = Components.jaccardFromCanon(canon, topN,
+          Components.AdjacencyCsr.collect(canon, PastBound))
+        assert(rows(nodeLevel) === want, s"past-bound node level: $ctx")
         assert(rows(Components.jaccardNodeLevelWide(canon, sym, deg, topN))
           === want, s"wide: $ctx")
-        assert(rows(Components.jaccardCollapsed(canon, sym, topN)) === want,
-          s"collapsed: $ctx")
         assert(rows(Components.jaccardLinkPrediction(df, "u", "v", topN))
           === want, s"auto: $ctx")
         val expected = Seq("node_a" -> idType, "node_b" -> idType,
           "n_common" -> LongType, "deg_a" -> LongType, "deg_b" -> LongType,
           "jaccard" -> DoubleType)
-        for (out <- Seq(kernel, forcedNodeLevel))
+        for (out <- Seq(kernel, nodeLevel))
           assert(out.schema.map(f => f.name -> f.dataType) === expected,
             s"schema: $ctx")
       }

@@ -14,7 +14,7 @@ object RouteGraphs {
     }
     val star = (1 to 12).map(l => (0, l))
     // templates with 1–3 clones each: every clone carries exactly its
-    // template's neighbor set (jaccard-1.0 pairs, collapse-sized mass)
+    // template's neighbor set (jaccard-1.0 pairs between identical rows)
     val base = random(30, 60).filter(e => e._1 != e._2)
     val nbrs = base.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
       .map { case (x, es) => x -> es.map(_._2).distinct }
