@@ -1,96 +1,152 @@
 package graft.core
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Registry of suite-shared materialized relations — localCheckpointed
-  * DataFrames built once per (application, fixture dir) and reused by
-  * several declared queries (the BM25 postings/scores consumed by
-  * q94/q100/q195/q207 are the canonical case). The Bench/Verify
-  * harnesses sweep every persistent RDD between queries to stop dead
-  * checkpoint blocks from evicting live shuffle memory; relations
-  * registered here are the exception — they are deliberately alive
-  * across queries, so the sweeps skip their RDD ids.
+/** The registry of builds shared across queries of one session: the BM25
+  * scores q94/q100/q195/q207 rank, the corpus prediction of q45/q173, the
+  * PQ codebooks, the seeded tables and replay directories of the
+  * streaming rows, and Dedup's strategy decision.
   *
-  * Memory bound: entries are index-sized (queries × matched docs for
-  * BM25), never corpus-sized, and there is one per dataset dir per
-  * process — the same amortization a real search engine gets from
-  * keeping its inverted index resident across queries.
+  * Lifetime invariant: one entry per (application, name, key), built on
+  * first use and gone when the application ends. A listener registered on
+  * the application's first build drops its entries, pinned RDD ids and
+  * build timings, and deletes the directories it owns, on
+  * `onApplicationEnd` — which `SparkContext.stop()` posts, and which
+  * Spark's own shutdown hook therefore also posts on JVM exit. Keying by
+  * application matters because RDD ids restart at 0 per SparkContext: in
+  * a JVM that runs sessions one after another (the sbt test fork does) a
+  * bare-id registry would shield fresh, unrelated RDDs from the sweep.
   *
-  * The registry is keyed by (applicationId, rddId), not rddId alone:
-  * RDD ids restart at 0 per SparkContext, so in a JVM that runs several
-  * sessions sequentially (the sbt test suite does) a bare-id registry
-  * would alias fresh unrelated RDDs in a later context and silently
-  * shield them from the sweep.
+  * Relation builds are pinned: the Bench/Verify harnesses unpersist every
+  * persisted RDD between queries, except the ids [[isShared]] names.
+  * Entries are index-sized (queries × matched docs for BM25, 40 centroid
+  * rows for the codebooks), never corpus-sized.
   *
-  * Builds are named and timed so the bench can report the one-time
-  * shared-build cost as its own `shared:<name>` line item — otherwise
-  * the cost lands only in rep 1 of whichever payer runs first and the
-  * median-of-3 protocol makes it invisible in the suite total.
+  * Relation and directory builds are timed under their name, so the
+  * bench reports each one-time cost as its own `shared:<name>` row
+  * instead of hiding it in rep 1 of whichever query pays first.
+  *
+  * A build runs outside the registry's lock, so it may itself use the
+  * registry. Two threads racing on one key may both build; the first to
+  * finish wins and the loser's pins and directory live until the
+  * application ends (the harnesses run one query at a time).
   */
 object SharedRelations {
-  private val ids =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-  private val builds =
-    scala.collection.concurrent.TrieMap[(String, String), Double]()
+  private final class App {
+    val entries = mutable.Map.empty[(String, Any), Any]
+    val pinned = mutable.Set.empty[Int]
+    val seconds = mutable.Map.empty[String, Double]
+    val dirs = mutable.ListBuffer.empty[Path]
+  }
+
+  private val apps = mutable.Map.empty[String, App]
+
+  /** The application's state, registering its end-of-application
+    * eviction on first use.
+    */
+  private def app(spark: SparkSession): App = synchronized {
+    val sc = spark.sparkContext
+    val id = sc.applicationId
+    apps.getOrElseUpdate(id, {
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+          evict(id)
+      })
+      new App
+    })
+  }
+
+  private def evict(id: String): Unit = {
+    val gone = synchronized(apps.remove(id))
+    gone.foreach(_.dirs.foreach { dir =>
+      if (Files.exists(dir)) {
+        val s = Files.walk(dir)
+        try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+        finally s.close()
+      }
+    })
+  }
+
+  private def existing(spark: SparkSession): Option[App] =
+    synchronized(apps.get(spark.sparkContext.applicationId))
+
+  /** Applications that hold registry state. */
+  private[core] def applications: Set[String] = synchronized(apps.keySet.toSet)
 
   /** RDD ids (within the session's application) the inter-query sweeps
     * must not unpersist.
     */
   def isShared(spark: SparkSession, id: Int): Boolean =
-    ids.contains((spark.sparkContext.applicationId, id))
-
-  /** Build-and-register: runs `build` (expected to end in
-    * `.localCheckpoint()`), records whatever persistent RDDs the build
-    * pinned so the harness sweeps keep them alive, and records the
-    * build's wall-clock under `name` for [[buildSeconds]]. Callers
-    * memoize the returned DataFrame themselves (keyed by app + dir).
-    * Harness runs are sequential, so the before/after snapshot cannot
-    * capture another query's blocks.
-    */
-  def checkpointShared(spark: SparkSession, name: String)
-      (build: => DataFrame): DataFrame = {
-    val app = spark.sparkContext.applicationId
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val t0 = System.nanoTime()
-    val df = build
-    val secs = (System.nanoTime() - t0) / 1e9
-    // a name can be built once per fixture dir; sum if a second fixture
-    // pays the same build in one app (Bench never does — one sfDir)
-    builds.updateWith((app, name)) {
-      case Some(s) => Some(s + secs)
-      case None    => Some(secs)
-    }
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    (after -- before).foreach(id => ids.add((app, id)))
-    df
-  }
-
-  /** Timing-only variant for one-time SIDE-EFFECT builds (e.g. seeding
-    * a versioned table on disk): records the build's wall-clock under
-    * `name` for [[buildSeconds]] like [[checkpointShared]], but pins no
-    * RDDs — the artifact lives outside the block manager, so the
-    * harness sweeps have nothing to skip.
-    */
-  def timeShared[T](spark: SparkSession, name: String)(build: => T): T = {
-    val app = spark.sparkContext.applicationId
-    val t0 = System.nanoTime()
-    val r = build
-    val secs = (System.nanoTime() - t0) / 1e9
-    builds.updateWith((app, name)) {
-      case Some(s) => Some(s + secs)
-      case None    => Some(secs)
-    }
-    r
-  }
+    existing(spark).exists(a => a.synchronized(a.pinned(id)))
 
   /** Wall-clock seconds each named shared build cost in this
     * application — the bench folds these into its total as
-    * `shared:<name>` rows so the amortized cost stays visible.
+    * `shared:<name>` rows. Read it before `stop()`: the application's
+    * timings are dropped when it ends.
     */
-  def buildSeconds(spark: SparkSession): Map[String, Double] = {
-    val app = spark.sparkContext.applicationId
-    builds.collect {
-      case ((a, name), secs) if a == app => name -> secs
-    }.toMap
+  def buildSeconds(spark: SparkSession): Map[String, Double] =
+    existing(spark).fold(Map.empty[String, Double])(a => a.synchronized(a.seconds.toMap))
+
+  /** The value of `build` for (name, key) in this application, built on
+    * first use. Untimed: for decisions and other driver-side values.
+    */
+  def memo[T](spark: SparkSession, name: String, key: Any)(build: => T): T = {
+    val a = app(spark)
+    a.synchronized(a.entries.get((name, key))).getOrElse {
+      val v = build
+      a.synchronized(a.entries.getOrElseUpdate((name, key), v))
+    }.asInstanceOf[T]
   }
+
+  /** `memo` that also adds the build's wall-clock to `name`'s timing
+    * (summed if two keys share a name in one application).
+    */
+  private def timed[T](spark: SparkSession, name: String, key: Any)(build: => T): T =
+    memo(spark, name, key) {
+      val t0 = System.nanoTime()
+      val v = build
+      val secs = (System.nanoTime() - t0) / 1e9
+      val a = app(spark)
+      a.synchronized(a.seconds(name) = a.seconds.getOrElse(name, 0.0) + secs)
+      v
+    }
+
+  /** A shared relation: the DataFrame `build` returns is checkpointed
+    * eagerly and only that checkpoint is pinned; every other RDD the
+    * build persisted (a Lloyd loop's per-round checkpoints, say) is
+    * unpersisted, since the final checkpoint no longer needs its parents.
+    */
+  def relation(spark: SparkSession, name: String, key: Any)(
+      build: => DataFrame): DataFrame =
+    timed(spark, name, key) {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val raw = build
+      val mid = sc.getPersistentRDDs.keySet
+      val fin = raw.localCheckpoint()
+      (mid -- before).foreach(id =>
+        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      val a = app(spark)
+      a.synchronized(a.pinned ++= sc.getPersistentRDDs.keySet -- before)
+      fin
+    }
+
+  /** A shared directory: a fresh temp dir `graft_<name>…`, owned by the
+    * registry and deleted when the application ends, filled once by
+    * `fill`. Returns its path and whatever `fill` returned.
+    */
+  def directory[T](spark: SparkSession, name: String, key: Any)(
+      fill: Path => T): (String, T) =
+    timed(spark, name, key) {
+      val dir = Files.createTempDirectory(s"graft_$name")
+      val a = app(spark)
+      a.synchronized(a.dirs += dir)
+      (dir.toString, fill(dir))
+    }
 }

@@ -789,48 +789,22 @@ object Clustering {
         coalesce(col("__hit"), lit(false)).as("in_exact_topk"))
   }
 
-  /** Wrap a shared trainer build so ONLY its final relation stays
-    * pinned: the Lloyd loops localCheckpoint per round (the subvector
-    * relation plus one centroid set per iteration), and
-    * `checkpointShared`'s before/after RDD diff would otherwise pin
-    * every intermediate for the life of the suite — including the
-    * corpus-sized subvector relation. The final is re-checkpointed
-    * (eager, so its blocks exist before the parents go away) and the
-    * intermediates are unpersisted inside the timed build.
-    */
-  private def checkpointSharedFinal(spark: SparkSession, name: String)(
-      build: => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    graft.core.SharedRelations.checkpointShared(spark, name) {
-      val raw = build
-      val mid = sc.getPersistentRDDs.keySet
-      val fin = raw.localCheckpoint()
-      (mid -- before).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      fin
-    }
-  }
-
   /** Suite-shared trained codebooks for the declared PQ/IVF rows'
     * common configuration (4×16-dim PQ at 8 centroids, 2 Lloyd rounds,
     * 8 coarse lists): q268, q270 and q274 all train this exact codebook
     * set per invocation, and training is one-time index work in any
-    * real deployment — so it runs once per (application, fixture dir)
-    * as a `shared:pq_codebooks` bench row (the q94/BM25 precedent)
-    * while every declared row still pays its own ENCODE/probe pass
-    * over the corpus. The shared relation is ks·m + nlist = 40 rows of
-    * centroid metadata, never corpus-sized.
+    * real deployment — so it runs once as a `shared:pq_codebooks`
+    * bench row (the q94/BM25 precedent) while every declared row still
+    * pays its own ENCODE/probe pass over the corpus. The shared
+    * relation is ks·m + nlist = 40 rows of centroid metadata, never
+    * corpus-sized; the Lloyd rounds' own checkpoints (the corpus-sized
+    * subvector relation among them) are not kept.
     */
-  private val cbCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private def sharedCodebooks(spark: SparkSession, d: String): DataFrame =
-    cbCache.computeIfAbsent((spark.sparkContext.applicationId, d), _ =>
-      checkpointSharedFinal(spark, "pq_codebooks") {
-        ivfPqTrain(Tables.embeddings(spark, d), "vec_id", "embedding",
-          nlist = 8, m = 4, subDim = 16, ks = 8, iterations = 2)
-      })
+    graft.core.SharedRelations.relation(spark, "pq_codebooks", d) {
+      ivfPqTrain(Tables.embeddings(spark, d), "vec_id", "embedding",
+        nlist = 8, m = 4, subDim = 16, ks = 8, iterations = 2)
+    }
 
   /** PQ codes + reconstruction error per vector from an already-trained
     * codebook — the encode half of [[productQuantize]].

@@ -138,21 +138,18 @@ object Dedup {
     jaccardSimilarityJoin(
       Tables.documents(spark, d), "doc_id", "text", threshold = 0.6)
 
-  /** Decision memo: the strategy statistic is a property of the input
-    * relation + parameters, so repeated invocations (retries, the same
-    * table deduped in a loop) should not re-run the sampling job. Keyed
-    * by the Dataset's semantic hash — a collision can only flip a
-    * performance hint between two EXACT plans, never correctness.
-    */
-  private val strategyMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String, Double, Double, Long), String]()
-
   /** Sampled estimate of the inverted-index path's candidate-pair count
     * vs corpus size → `"inverted"` or `"prefix"`. Unbiased: E[df_s·
     * (df_s−1)] = p²·df·(df−1) under Bernoulli document sampling. Both
     * statistics (candidate estimate, sampled doc count) come back from
     * ONE action — a cross join of the two single-row aggregates — not a
     * `.head()` plus a `.count()` over the same sample.
+    *
+    * The decision is a property of the input relation + parameters, so
+    * it is memoized: repeated invocations (retries, the same table
+    * deduped in a loop) do not re-run the sampling job. Keyed by the
+    * Dataset's semantic hash — a collision can only flip a performance
+    * hint between two EXACT plans, never correctness.
     */
   private[operators] def chooseStrategy(
       docs: DataFrame,
@@ -161,31 +158,30 @@ object Dedup {
       sampleFraction: Double = 0.1,
       blowupFactor: Double = 500.0,
       seed: Long = 42L): String =
-    strategyMemo.computeIfAbsent(
+    graft.core.SharedRelations.memo(docs.sparkSession, "dedup_strategy",
       // idCol/textCol are part of the statistic, not just the plan: the
       // same relation deduped on a different text column has different
       // shingle frequencies
-      (docs.semanticHash(), idCol, textCol, sampleFraction, blowupFactor, seed),
-      _ => {
-        val sampled = docs.sample(sampleFraction, seed)
-          .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-          .select(col(idCol).as("__id"), shingles(split(col(textCol), " ")).as("sh"))
-          .where(size(col("sh")) > 0)
-        val candStats = sampled.select(explode(col("sh")).as("s"))
-          .groupBy(col("s")).agg(count(lit(1)).as("df"))
-          .agg(
-            sum(col("df") * (col("df") - 1) / 2).cast(DoubleType).as("cand"),
-            sum(col("df")).cast(DoubleType).as("postings"))
-        val docStats = sampled.agg(count(lit(1)).as("n_docs"))
-        val row = candStats.crossJoin(docStats).head()
-        val nDocsSampled = row.getLong(2).toDouble
-        if (row.isNullAt(0) || nDocsSampled == 0) "inverted" // empty corpus
-        else {
-          val estCandidates = row.getDouble(0) / (sampleFraction * sampleFraction)
-          val estDocs = nDocsSampled / sampleFraction
-          if (estCandidates > blowupFactor * estDocs) "prefix" else "inverted"
-        }
-      })
+      (docs.semanticHash(), idCol, textCol, sampleFraction, blowupFactor, seed)) {
+      val sampled = docs.sample(sampleFraction, seed)
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        .select(col(idCol).as("__id"), shingles(split(col(textCol), " ")).as("sh"))
+        .where(size(col("sh")) > 0)
+      val candStats = sampled.select(explode(col("sh")).as("s"))
+        .groupBy(col("s")).agg(count(lit(1)).as("df"))
+        .agg(
+          sum(col("df") * (col("df") - 1) / 2).cast(DoubleType).as("cand"),
+          sum(col("df")).cast(DoubleType).as("postings"))
+      val docStats = sampled.agg(count(lit(1)).as("n_docs"))
+      val row = candStats.crossJoin(docStats).head()
+      val nDocsSampled = row.getLong(2).toDouble
+      if (row.isNullAt(0) || nDocsSampled == 0) "inverted" // empty corpus
+      else {
+        val estCandidates = row.getDouble(0) / (sampleFraction * sampleFraction)
+        val estDocs = nDocsSampled / sampleFraction
+        if (estCandidates > blowupFactor * estDocs) "prefix" else "inverted"
+      }
+    }
 
   /** See [[q34JaccardPairs]]; reusable form over any (id, text) frame.
     * `strategy` ∈ {auto, inverted, prefix}.

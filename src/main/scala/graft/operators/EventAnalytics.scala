@@ -852,14 +852,6 @@ object EventAnalytics {
     spark.read.format("deltalike").load(path)
   }
 
-  /** (table path, batch cut point) of the seeded v0 session table, one
-    * per (application, fixture dir) — the q178 capstone's "history
-    * already exists" precondition, built once and MERGEd into by every
-    * rep (see [[q178IncrementalSessions]]).
-    */
-  private val seededSessions =
-    scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
   def q178IncrementalSessions(spark: SparkSession, d: String): DataFrame = {
     val gapUs = 30L * 60 * 1000 * 1000
     def events() = Tables.events(spark, d)
@@ -872,27 +864,18 @@ object EventAnalytics {
     // per batch — touched-user recompute, MERGE, snapshot read. Before
     // this split every rep paid the full history write and the 42×
     // weak ratio measured mostly the seed (BASELINE round-11 note).
-    val (path, cutUs) = seededSessions.getOrElseUpdate(
-      (spark.sparkContext.applicationId, d), {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_sessions_inc")
-        sys.addShutdownHook {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        }
+    val (path, cutUs) =
+      graft.core.SharedRelations.directory(spark, "sessions_v0", d) { p =>
         val e0 = events()
         // bounded driver scalar (one row): the batch split point
         val span = e0.agg(min(col("us")).as("lo"), max(col("us")).as("hi"))
           .collect().head
         val cut = (span.getLong(0) + span.getLong(1)) / 2
-        graft.core.SharedRelations.timeShared(spark, "sessions_v0") {
-          graft.tables.DeltaLikeTable.write(
-            sessionize(e0.where(col("us") < cut), gapUs), p.toString,
-            "overwrite")
-        }
-        (p.toString, cut)
-      })
+        graft.tables.DeltaLikeTable.write(
+          sessionize(e0.where(col("us") < cut), gapUs), p.toString,
+          "overwrite")
+        cut
+      }
     // the incremental step proper, paid per rep. Re-merging the same
     // batch is idempotent (recomputed sessions are deterministic and
     // the merge updates them in place), so bench reps 2-3 measure the

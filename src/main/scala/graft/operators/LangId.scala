@@ -158,24 +158,18 @@ object LangId {
         col("__score").as("lang_score"))
   }
 
-  /** One corpus prediction per (application, fixture dir): q45 IS this
-    * relation and q173 consumes it as its predicted leg — without the
-    * share, each paid the full train-and-classify pipeline (the corpus
-    * explode is ~text-length × corpus rows, the suite's single
-    * heaviest repeated subtree at ~2.5 s per payer at sf0.1). Built
-    * through [[graft.core.SharedRelations]] so the harness sweeps keep
-    * the checkpoint alive; the entry is |docs| × 3 thin columns.
+  /** The shared corpus prediction: q45 IS this relation and q173
+    * consumes it as its predicted leg — without the share, each paid
+    * the full train-and-classify pipeline (the corpus explode is
+    * ~text-length × corpus rows, the suite's single heaviest repeated
+    * subtree at ~2.5 s per payer at sf0.1). |docs| × 3 thin columns.
     */
-  private val predCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
   def sharedCorpusPrediction(spark: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    predCache.computeIfAbsent((spark.sparkContext.applicationId, d), _ =>
-      graft.core.SharedRelations.checkpointShared(spark, "langid") {
-        trainAndClassify(graft.core.Tables.documents(spark, d),
-          "doc_id", "text", "lang").localCheckpoint()
-      })
+    graft.core.SharedRelations.relation(spark, "langid", d) {
+      trainAndClassify(graft.core.Tables.documents(spark, d),
+        "doc_id", "text", "lang")
+    }
 
   /** Oracle for the declared q45 (train on the labeled corpus, classify
     * the same corpus): full SQL replication of [[trainProfiles]] +

@@ -113,24 +113,18 @@ object Retrieval {
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
   }
 
-  /** One BM25 scored relation per (application, fixture dir), built on
-    * first use and `localCheckpoint`ed. q94/q100/q195/q207 all rank the
+  /** The shared BM25 scored relation. q94/q100/q195/q207 all rank the
     * SAME query/corpus split (queries = doc_id < 5, corpus = rest) and
     * only differ in k, which the scoring relation does not depend on —
     * so the corpus tokenize + postings + scoring join runs once per
-    * suite instead of four times. The cache is metadata-bounded: one
-    * entry per dataset dir, |queries| × matched-docs rows each.
+    * suite instead of four times. |queries| × matched-docs rows.
     */
-  private val bm25Cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private def sharedBm25Scored(spark: SparkSession, d: String): DataFrame =
-    bm25Cache.computeIfAbsent((spark.sparkContext.applicationId, d), _ =>
-      graft.core.SharedRelations.checkpointShared(spark, "bm25") {
-        val docs = Tables.documents(spark, d)
-        bm25Scored(docs.where(col("doc_id") >= 5),
-          docs.where(col("doc_id") < 5), "doc_id", "text").localCheckpoint()
-      })
+    graft.core.SharedRelations.relation(spark, "bm25", d) {
+      val docs = Tables.documents(spark, d)
+      bm25Scored(docs.where(col("doc_id") >= 5),
+        docs.where(col("doc_id") < 5), "doc_id", "text")
+    }
 
   /** Declared q94: the first five documents as queries against the rest
     * of the corpus (same split as q77), BM25 top-5 each.

@@ -48,28 +48,22 @@ object EventStream {
 
   // ---- declared streaming query: finite replay of q33 -----------------
 
-  private val replayDirs =
-    scala.collection.concurrent.TrieMap[(String, String), String]()
   private val sinkCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Normalized multi-file replay copy of the events fixture, built once
-    * per (application, fixture dir): the raw fixture's ns timestamps go
+  /** Normalized multi-file replay copy of the events fixture, a shared
+    * directory built once: the raw fixture's ns timestamps go
     * through [[graft.core.Tables.events]]' µs normalization (a raw
     * readStream would mis-type them), and the 6-file layout makes the
     * replay arrive in several triggers — a real incremental run, not one
     * big batch wearing a streaming hat.
     */
   private def replayDir(spark: SparkSession, d: String): String =
-    replayDirs.getOrElseUpdate((spark.sparkContext.applicationId, d),
-      graft.core.SharedRelations.timeShared(spark, "stream_replay") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_stream_replay").toString
+    graft.core.SharedRelations.directory(spark, "stream_replay", d) { dir =>
       graft.core.Tables.events(spark, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props").cast("string"))
-        .repartition(6).write.mode("overwrite").parquet(dir)
-      dir
-    })
+        .repartition(6).write.mode("overwrite").parquet(dir.toString)
+    }._1
 
   /** Declared q276: the streaming twin of q33 — the SAME windowed
     * aggregation expression, but executed by a real Structured
@@ -113,11 +107,8 @@ object EventStream {
 
   // ---- declared streaming query: finite ordered replay of q66 --------
 
-  private val orderedReplayDirs =
-    scala.collection.concurrent.TrieMap[(String, String), String]()
-
-  /** Event-TIME-ordered multi-file replay of the events fixture, built
-    * once per (application, fixture dir): six contiguous time-range
+  /** Event-TIME-ordered multi-file replay of the events fixture, a
+    * shared directory built once: six contiguous time-range
     * chunks plus a far-future sentinel row, file mtimes ascending so
     * the file source replays them oldest-range first. Unlike
     * [[replayDir]]'s random 6-way split (fine for the order-free q276
@@ -130,10 +121,8 @@ object EventStream {
     * beyond the gap — the batch twin would have split there too.
     */
   private def orderedReplayDir(spark: SparkSession, d: String): String =
-    orderedReplayDirs.getOrElseUpdate((spark.sparkContext.applicationId, d),
-      graft.core.SharedRelations.timeShared(spark, "stream_oreplay") {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_stream_oreplay").toString
+    graft.core.SharedRelations.directory(spark, "stream_oreplay", d) { p =>
+      val dir = p.toString
       val ev = graft.core.Tables.events(spark, d)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props").cast("string"))
@@ -159,8 +148,7 @@ object EventStream {
         lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
         lit(0.0).as("value"), lit(null).cast("string").as("props"))
       writeReplayChunk(sentinel, dir, n)
-      dir
-    })
+    }._1
 
   /** Write one replay chunk as a single parquet file named and
     * mtime-stamped by its index, so the file stream source's

@@ -77,9 +77,6 @@ object IngestDedup {
 
   // ---- declared q278: finite replay of the whole ingest loop ---------
 
-  private val chunkDirs =
-    scala.collection.concurrent.TrieMap[(String, String), String]()
-
   /** The q278 batch chunk boundaries: docs ≥ 400 stream in as three
     * doc_id-ordered micro-batches. Ascending-id chunks make the
     * chunked keep set equal the atomic min-id rule a whole-batch run
@@ -90,18 +87,14 @@ object IngestDedup {
 
   private def q278ChunkDir(spark: org.apache.spark.sql.SparkSession,
       d: String): String =
-    chunkDirs.getOrElseUpdate((spark.sparkContext.applicationId, d),
-      graft.core.SharedRelations.timeShared(spark, "ingest_chunks") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_ingest_replay").toString
-        val docs = graft.core.Tables.documents(spark, d)
-          .select(col("doc_id"), col("text"))
-        ChunkBounds.zipWithIndex.foreach { case ((lo, hi), i) =>
-          EventStream.writeReplayChunk(
-            docs.where(col("doc_id") >= lo && col("doc_id") < hi), dir, i)
-        }
-        dir
-      })
+    graft.core.SharedRelations.directory(spark, "ingest_chunks", d) { dir =>
+      val docs = graft.core.Tables.documents(spark, d)
+        .select(col("doc_id"), col("text"))
+      ChunkBounds.zipWithIndex.foreach { case ((lo, hi), i) =>
+        EventStream.writeReplayChunk(
+          docs.where(col("doc_id") >= lo && col("doc_id") < hi), dir.toString, i)
+      }
+    }._1
 
   // ---- one-time seed scaffolding, shared across bench reps ----------
   //
@@ -109,14 +102,11 @@ object IngestDedup {
   // the declared streaming rows, not per-trigger work: building them
   // with a Spark write job inside every timed invocation made the
   // blessed medians measure scaffolding, not stream execution. Build
-  // each ONCE per (application, fixture dir) as an immutable template
-  // — timed as a `shared:` bench row like every other one-time build —
-  // and give each invocation a fresh FILESYSTEM COPY (the table must
-  // still mutate per run; add-file paths in the deltalike log are
+  // each ONCE as an immutable template — a shared directory, timed as
+  // a `shared:` bench row like every other one-time build — and give
+  // each invocation a fresh FILESYSTEM COPY (the table must still
+  // mutate per run; add-file paths in the deltalike log are
   // table-root-relative, so a copied directory is a valid table).
-
-  private val seedTemplates =
-    scala.collection.concurrent.TrieMap[(String, String, String), String]()
 
   /** Per-run "copy" of an immutable template tree. Delta-like table
     * files are never modified in place (appends add NEW data files and
@@ -171,30 +161,25 @@ object IngestDedup {
   }
 
   /** Immutable template of the doc_id < 400 seed corpus table, built
-    * once per (application, fixture dir, kind) and copied per run.
-    * `kind` distinguishes q281's variant, whose template also carries
-    * the backfilled signature index as a sibling `_sig` directory.
+    * once per kind and copied per run. `kind` distinguishes q281's
+    * variant, whose template also carries the backfilled signature
+    * index as a sibling `_sig` directory, and q283's, which carries the
+    * banded index as `_idx`.
     */
   private def seedTemplate(spark: org.apache.spark.sql.SparkSession,
       d: String, kind: String): String =
-    seedTemplates.getOrElseUpdate(
-      (spark.sparkContext.applicationId, d, kind),
-      graft.core.SharedRelations.timeShared(spark, s"ingest_seed_$kind") {
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_ingest_template_$kind")
-        val seed = graft.core.Tables.documents(spark, d)
-          .select(col("doc_id"), col("text"))
-          .where(col("doc_id") < 400)
-        val tbl = dir.resolve("tbl")
-        DeltaLikeTable.write(seed, tbl.toString, "overwrite")
-        if (kind == "indexed")
-          seedSignatureIndex(seed, dir.resolve("_sig").toString,
-            "doc_id", "text")
-        if (kind == "banded")
-          seedBandedIndex(seed, dir.resolve("_idx").toString,
-            "doc_id", "text")
-        dir.toString
-      })
+    graft.core.SharedRelations.directory(spark, s"ingest_seed_$kind", d) { dir =>
+      val seed = graft.core.Tables.documents(spark, d)
+        .select(col("doc_id"), col("text"))
+        .where(col("doc_id") < 400)
+      DeltaLikeTable.write(seed, dir.resolve("tbl").toString, "overwrite")
+      if (kind == "indexed")
+        seedSignatureIndex(seed, dir.resolve("_sig").toString,
+          "doc_id", "text")
+      if (kind == "banded")
+        seedBandedIndex(seed, dir.resolve("_idx").toString,
+          "doc_id", "text")
+    }._1
 
   /** Declared q278: the streaming ingest-dedup loop end-to-end — the
     * doc_id < 400 corpus is seeded as a deltalike table, docs ≥ 400
@@ -330,10 +315,14 @@ object IngestDedup {
             DeltaLikeTable.forPath(spark, sigPath).toDF
               .select(col(idCol), col("sh"), col("sig"))
           else batchSigs.select(col(idCol), col("sh"), col("sig")).limit(0)
+        // the trigger decides once: the sig and doc appends both read
+        // this set, and must not re-run the verdicts against a corpus
+        // the sig append has just grown
         val keep = NearDup
           .indexedNearDupVerdicts(batchSigs, corpusSigs, idCol, threshold)
           .where(col("keep"))
           .select(col(idCol))
+          .localCheckpoint()
         DeltaLikeSink.appendBatch(sigPath, queryId)(
           batchSigs.join(keep, Seq(idCol))
             .withColumn("ingest_batch", org.apache.spark.sql.functions.lit(batchId)),
@@ -506,6 +495,7 @@ object IngestDedup {
           idCol, threshold, bands, numHashes)
           .where(col("keep"))
           .select(col(idCol))
+          .localCheckpoint() // decided once: the sig, band and doc appends read it
         val keptSigs = batchSigs.join(keep, Seq(idCol))
           .withColumn("ingest_batch",
             org.apache.spark.sql.functions.lit(batchId))
@@ -516,10 +506,9 @@ object IngestDedup {
     if (batchId > DeltaLikeSink.lastCommittedBatchIn(bandPath, queryId)) {
       // derived relation: on the normal path the rows just appended to
       // the sig table are still in memory (checkpointed batchSigs ⋈
-      // keep) — the SAME row set the prior read-back produced, since
-      // the append wrote exactly these rows; a replay (keptSigsInMem
-      // null) rebuilds from the sig table's batch-pruned files. Commit
-      // order (sig → band → docs) and crash recovery are unchanged.
+      // checkpointed keep) — exactly the rows the append wrote; a
+      // replay (keptSigsInMem null) rebuilds from the sig table's
+      // batch-pruned files. Commit order: sig → band → docs.
       val keptSigs =
         if (keptSigsInMem != null) keptSigsInMem
         else DeltaLikeTable.readPruned(spark, sigPath,

@@ -77,44 +77,56 @@ final class DeltaLikeTable private (
       rewrite = rows => rows.where(!coalesce(condition, lit(false))))
   }
 
-  /** Inline-DV delete; None when the match count exceeds the cap. */
-  private def deleteViaVectors(condition: Column, snap: Snapshot): Option[Long] = {
+  /** The deletion-vector half DELETE and UPDATE share: the rows of
+    * `snap` matching `condition`, collected as (file, row) pairs (capped),
+    * and the touched files with those rows added to their vectors (a file
+    * left with no live row is dropped). Returns the matched scan, the
+    * touched files, their replacements and the match count; None when
+    * this statement's matches, or the vectors they would accumulate,
+    * exceed [[DeltaLikeTable.InlineDvMaxRows]] — the caller then rewrites,
+    * which also purges the touched vectors.
+    */
+  private def markDeleted(op: String, condition: Column, snap: Snapshot)
+      : Option[(DataFrame, Seq[AddFile], Seq[AddFile], Int)] = {
     val cap = DeltaLikeTable.InlineDvMaxRows
     val fileC = "__graft_dv_file"
     val idxC = "__graft_dv_row"
     val scanBase = DeltaLikeTable.readSnapshotWithMeta(
       spark, snap, Some(fileC), Some(idxC))
-    val scan = tableAlias.fold(scanBase)(scanBase.as(_))
-    val matched = scan.where(condition)
-      .select(col(fileC), col(idxC)).limit(cap + 1).collect()
+    val matchedScan = tableAlias.fold(scanBase)(scanBase.as(_)).where(condition)
+    val matched = matchedScan.select(col(fileC), col(idxC)).limit(cap + 1).collect()
     if (matched.length > cap) return None
-    if (matched.isEmpty) return Some(0L)
     val byFile = matched
       .map(r => DeltaLikeTable.fileNameOf(new java.net.URI(r.getString(0)).getPath) ->
         r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     val touched = snap.files.filter(f => byFile.contains(DeltaLikeTable.fileNameOf(f.path)))
     require(touched.map(f => DeltaLikeTable.fileNameOf(f.path)).toSet == byFile.keySet,
-      "deletion-vector delete could not resolve all touched files")
+      s"deletion-vector $op could not resolve all touched files")
     // the cap bounds the ACCUMULATED vector, not just this statement —
-    // repeated small deletes would otherwise grow the broadcast exclusion
-    // set without limit; the rewrite fallback purges the touched DVs
+    // repeated small changes would otherwise grow the broadcast exclusion
+    // set without limit
     if (touched.map(_.deletedRows.length).sum + matched.length > cap) return None
-    val updated = touched.map { f =>
+    val marked = touched.map { f =>
       val add = byFile(DeltaLikeTable.fileNameOf(f.path))
       f.copy(
         numRecords = f.numRecords - add.length,
         nullCounts = Map.empty, // live subset's null counts are unknown
         deletedRows = (f.deletedRows ++ add).sorted)
-    }
-    // a file whose last live row died is simply removed
-    val live = updated.filter(_.numRecords > 0)
-    DeltaLikeTable.commitRewrite(log, snap.version,
-      touched.map(f => RemoveFile(f.path)) ++ live :+
-        CommitInfo("DELETE", System.currentTimeMillis()),
-      touched.map(_.path).toSet)
-    Some(matched.length.toLong)
+    }.filter(_.numRecords > 0)
+    Some((matchedScan, touched, marked, matched.length))
   }
+
+  /** Inline-DV delete; None when the match count exceeds the cap. */
+  private def deleteViaVectors(condition: Column, snap: Snapshot): Option[Long] =
+    markDeleted("delete", condition, snap).map { case (_, touched, marked, n) =>
+      if (n > 0)
+        DeltaLikeTable.commitRewrite(log, snap.version,
+          touched.map(f => RemoveFile(f.path)) ++ marked :+
+            CommitInfo("DELETE", System.currentTimeMillis()),
+          touched.map(_.path).toSet)
+      n.toLong
+    }
 
   def delete(condition: String): Long = delete(expr(condition))
 
@@ -162,58 +174,31 @@ final class DeltaLikeTable private (
   private def updateViaVectors(
       condition: Column,
       set: Map[String, Column],
-      snap: Snapshot): Option[Long] = {
-    val cap = DeltaLikeTable.InlineDvMaxRows
-    val fileC = "__graft_dv_file"
-    val idxC = "__graft_dv_row"
-    val scanBase = DeltaLikeTable.readSnapshotWithMeta(
-      spark, snap, Some(fileC), Some(idxC))
-    val scan = tableAlias.fold(scanBase)(scanBase.as(_))
-    val matchedScan = scan.where(condition)
-    val matched = matchedScan.select(col(fileC), col(idxC)).limit(cap + 1).collect()
-    if (matched.length > cap) return None
-    if (matched.isEmpty) return Some(0L)
-
-    val byFile = matched
-      .map(r => DeltaLikeTable.fileNameOf(new java.net.URI(r.getString(0)).getPath) ->
-        r.getLong(1))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val touched = snap.files.filter(f => byFile.contains(DeltaLikeTable.fileNameOf(f.path)))
-    require(touched.map(f => DeltaLikeTable.fileNameOf(f.path)).toSet == byFile.keySet,
-      "deletion-vector update could not resolve all touched files")
-    // accumulated-vector cap, as in deleteViaVectors (checked before any
-    // staging so the fallback wastes no I/O)
-    if (touched.map(_.deletedRows.length).sum + matched.length > cap) return None
-
-    // rewritten versions of exactly the matched rows, appended as new files
-    val outCols = snap.schema.fieldNames.toSeq.map { c =>
-      set.get(c) match {
-        case Some(v) => v.cast(snap.schema(c).dataType).as(c)
-        case None    => col(c)
+      snap: Snapshot): Option[Long] =
+    markDeleted("update", condition, snap).map { case (matchedScan, touched, marked, n) =>
+      if (n > 0) {
+        // rewritten versions of exactly the matched rows, appended as new files
+        val outCols = snap.schema.fieldNames.toSeq.map { c =>
+          set.get(c) match {
+            case Some(v) => v.cast(snap.schema(c).dataType).as(c)
+            case None    => col(c)
+          }
+        }
+        val rewritten = DeltaLikeTable.regenerate(
+          matchedScan.select(outCols: _*), snap.generatedColumns)
+        DeltaLikeTable.enforceConstraints(rewritten, snap.constraints)
+        val newAdds = DeltaLikeTable.stageFiles(rewritten, snap.tableRoot,
+          snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
+        try DeltaLikeTable.commitRewrite(log, snap.version,
+          touched.map(f => RemoveFile(f.path)) ++ marked ++ newAdds :+
+            CommitInfo("UPDATE", System.currentTimeMillis()),
+          touched.map(_.path).toSet)
+        catch {
+          case e: Throwable => DeltaLikeTable.discardStaged(path, newAdds); throw e
+        }
       }
+      0L // mirrors the rewrite path's removed − added = 0 for pure updates
     }
-    val rewritten = DeltaLikeTable.regenerate(
-      matchedScan.select(outCols: _*), snap.generatedColumns)
-    DeltaLikeTable.enforceConstraints(rewritten, snap.constraints)
-    val newAdds = DeltaLikeTable.stageFiles(rewritten, snap.tableRoot,
-      snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
-
-    val dvAdds = touched.map { f =>
-      val add = byFile(DeltaLikeTable.fileNameOf(f.path))
-      f.copy(
-        numRecords = f.numRecords - add.length,
-        nullCounts = Map.empty,
-        deletedRows = (f.deletedRows ++ add).sorted)
-    }.filter(_.numRecords > 0)
-    try DeltaLikeTable.commitRewrite(log, snap.version,
-      touched.map(f => RemoveFile(f.path)) ++ dvAdds ++ newAdds :+
-        CommitInfo("UPDATE", System.currentTimeMillis()),
-      touched.map(_.path).toSet)
-    catch {
-      case e: Throwable => DeltaLikeTable.discardStaged(path, newAdds); throw e
-    }
-    Some(0L) // mirrors the rewrite path's removed − added = 0 for pure updates
-  }
 
   def update(condition: String, set: Map[String, Column]): Long =
     update(expr(condition), set)

@@ -68,8 +68,8 @@ class GraftSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Harness.each: the sweep unpersists plain checkpoints and keeps shared ones") {
     val sp = spark; import sp.implicits._
     val sc = sp.sparkContext
-    val shared = SharedRelations.checkpointShared(sp, "harness-spec") {
-      (1 to 100).toDF("n").localCheckpoint()
+    val shared = SharedRelations.relation(sp, "harness-spec", "k") {
+      (1 to 100).toDF("n")
     }
     var plain = Set.empty[Int]
     Harness.each(sp, Seq("q")) { _ =>
