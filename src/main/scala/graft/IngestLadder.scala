@@ -94,11 +94,7 @@ object IngestLadder {
         s""""batch_docs":${BatchHi - BatchLo},"n_triggers":$NTriggers,""" +
         s""""seed_sec":${f"$seedSec%.3f"},"trigger_wall":${arr(triggers.map(_._1))},""" +
         s""""trigger_cpu":${arr(triggers.map(_._2))},"admitted":$admitted}""")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(scratch).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
+    } finally graft.core.SharedRelations.deleteTree(scratch)
     spark.stop()
   }
 }

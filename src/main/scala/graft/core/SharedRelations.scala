@@ -11,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The registry of builds shared across queries of one session: the BM25
   * scores q94/q100/q195/q207 rank, the corpus prediction of q45/q173, the
   * PQ codebooks, the seeded tables and replay directories of the
-  * streaming rows, and Dedup's strategy decision.
+  * streaming rows, and Dedup's strategy decision. It also owns the
+  * per-call [[scratch]] dirs of queries whose result reads a table they
+  * wrote.
   *
   * Lifetime invariant: one entry per (application, name, key), built on
   * first use and gone when the application ends. A listener registered on
@@ -62,16 +64,18 @@ object SharedRelations {
     })
   }
 
-  private def evict(id: String): Unit = {
-    val gone = synchronized(apps.remove(id))
-    gone.foreach(_.dirs.foreach { dir =>
-      if (Files.exists(dir)) {
-        val s = Files.walk(dir)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-        finally s.close()
-      }
-    })
-  }
+  private def evict(id: String): Unit =
+    synchronized(apps.remove(id)).foreach(_.dirs.foreach(deleteTree))
+
+  /** Delete the tree at `root`, children before parents; a missing root
+    * is a no-op. The walk's directory handles are closed before return.
+    */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val s = Files.walk(root)
+      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally s.close()
+    }
 
   private def existing(spark: SparkSession): Option[App] =
     synchronized(apps.get(spark.sparkContext.applicationId))
@@ -137,16 +141,24 @@ object SharedRelations {
       fin
     }
 
-  /** A shared directory: a fresh temp dir `graft_<name>…`, owned by the
-    * registry and deleted when the application ends, filled once by
-    * `fill`. Returns its path and whatever `fill` returned.
+  /** A fresh temp dir `graft_<prefix>…` per call, owned by the registry
+    * and deleted when the application ends — for a result whose lazy
+    * read outlives the call that wrote it. Neither memoized nor timed.
+    */
+  def scratch(spark: SparkSession, prefix: String): Path = {
+    val dir = Files.createTempDirectory(s"graft_$prefix")
+    val a = app(spark)
+    a.synchronized(a.dirs += dir)
+    dir
+  }
+
+  /** A shared directory: a [[scratch]] dir `graft_<name>…` filled once
+    * by `fill`. Returns its path and whatever `fill` returned.
     */
   def directory[T](spark: SparkSession, name: String, key: Any)(
       fill: Path => T): (String, T) =
     timed(spark, name, key) {
-      val dir = Files.createTempDirectory(s"graft_$name")
-      val a = app(spark)
-      a.synchronized(a.dirs += dir)
+      val dir = scratch(spark, name)
       (dir.toString, fill(dir))
     }
 }

@@ -25,17 +25,128 @@ object NearDup {
   def shingleSet(textCol: Column): Column =
     Dedup.shingles(split(textCol, " "))
 
-  /** MinHash-LSH candidate pairs with signature-estimated Jaccard.
+  // ---- MinHash-LSH core: every MinHash plan below is built from these ----
+
+  /** From-text source: (__id, __is_batch, __text) of each (frame,
+    * isBatch) side, spread over the session's cores before shingling.
+    * Ids are unique across the sides (the batch is new documents).
+    */
+  private def textDocs(idCol: String, textCol: String,
+      sides: (DataFrame, Boolean)*): DataFrame = {
+    val tagged = sides.map { case (df, isBatch) =>
+      df.select(col(idCol).as("__id"), col(textCol).as("__text"),
+        lit(isBatch).as("__is_batch"))
+    }.reduce(_ unionByName _)
+    tagged.repartition(tagged.sparkSession.sparkContext.defaultParallelism)
+  }
+
+  /** (__id, __sh): the string shingle set of each [[textDocs]] row. */
+  private def textSets(docs: DataFrame): DataFrame =
+    docs.select(col("__id"), shingleSet(col("__text")).as("__sh"))
+
+  /** (__id, __sig, __is_batch): the k-long MinHash signature of each
+    * [[textDocs]] row with shingles, one typed aggregate per doc
+    * (primitive-array buffer via ObjectHashAggregate — see MinHashAgg).
+    * Grouping by id alone leaves the signatures hash-partitioned by id,
+    * which the id_a-keyed candidate dedup then reuses without a shuffle.
+    */
+  private def textSignatures(docs: DataFrame, numHashes: Int, seed: Long): DataFrame =
+    docs.select(col("__id"), col("__is_batch"),
+        explode(shingleSet(col("__text"))).as("__s"))
+      .select(col("__id"), col("__is_batch"),
+        pmod(xxhash64(col("__s")), lit(P)).as("__x"))
+      .groupBy(col("__id"))
+      .agg(graft.functions.MinHashAgg.of(numHashes, seed)(col("__x")).as("__sig"),
+        max(col("__is_batch")).as("__is_batch"))
+
+  /** (band, bh, idCol, carry…): one row per (doc, band) of the
+    * `numHashes`-long signatures in `sigCol`. The persisted band table
+    * and every probe slice signatures with this function, so the hash
+    * the index holds is the hash a later batch probes with. With
+    * `numHashes` = bands·r the S-curve threshold is ≈ (1/bands)^(1/r).
+    * Empty signatures (no shingles) yield no rows; any other length
+    * fails the job naming the doc, since banding a prefix would lose
+    * candidates silently.
+    */
+  private[graft] def bandRows(sigs: DataFrame, idCol: String, sigCol: String,
+      numHashes: Int, bands: Int, carry: String*): DataFrame = {
+    require(numHashes % bands == 0,
+      s"numHashes=$numHashes must be divisible by bands=$bands")
+    val r = numHashes / bands
+    sigs.where(size(col(sigCol)) > 0)
+      .withColumn(sigCol,
+        when(size(col(sigCol)) === numHashes, col(sigCol))
+          .otherwise(raise_error(concat(
+            lit(s"signature length != numHashes=$numHashes for id "),
+            col(idCol).cast("string")))))
+      .select(posexplode(expr(s"band_hashes(`$sigCol`, $bands, $r)")) +:
+        (idCol +: carry).map(col): _*)
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bh")
+  }
+
+  /** Flat candidate gate over (__id, __is_batch, __sig) signatures: the
+    * band self-join with a batch-only right side, keeping a pair when
+    * its left side is corpus or a smaller-id batch doc. Corpus×corpus
+    * never materializes, so the cost tracks the batch. Returns
+    * (id_a, __batch_a, id_b), one row per pair; with every row batch
+    * this is the plain id_a < id_b all-pairs gate.
+    */
+  private def flatCandidates(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    val banded = bandRows(sigs, "__id", "__sig", numHashes, bands, "__is_batch")
+    val left = banded.select(col("__id").as("id_a"),
+      col("__is_batch").as("__batch_a"), col("band"), col("bh"))
+    val right = banded.where(col("__is_batch"))
+      .select(col("__id").as("id_b"), col("band"), col("bh"))
+    left.join(right, Seq("band", "bh"))
+      .where(!col("__batch_a") || col("id_a") < col("id_b"))
+      .where(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("__batch_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** Exact Jaccard of two distinct-element arrays. */
+  private def setJaccard(a: Column, b: Column): Column = {
+    val common = size(array_intersect(a, b))
+    common.cast(DoubleType) / (size(a) + size(b) - common)
+  }
+
+  /** The candidates whose exact Jaccard over the (__id, __sh) `sets` is
+    * ≥ `threshold`, scored as `jaccard`: precision 1 whatever generated
+    * the candidates.
+    */
+  private def verified(candidates: DataFrame, sets: DataFrame,
+      threshold: Double): DataFrame =
+    candidates
+      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
+      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
+      .withColumn("jaccard", setJaccard(col("__sh_a"), col("__sh_b")))
+      .where(col("jaccard") >= threshold)
+
+  /** One verdict row per id of `batchIds`: (idCol, dup_of_corpus,
+    * dup_in_batch, keep). `dup_in_batch` flags a verified match with ANY
+    * smaller-id batch doc, whether or not that doc is itself kept — the
+    * conservative one-pass rule ingest pipelines use; a doc without a
+    * verified candidate (no shingles included) is kept.
+    */
+  private def verdicts(batchIds: DataFrame, idCol: String,
+      candidates: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
+    val dups = verified(candidates, sets, threshold)
+      .groupBy(col("id_b").as(idCol))
+      .agg(max(!col("__batch_a")).as("__dup_corpus"),
+        max(col("__batch_a")).as("__dup_batch"))
+    batchIds.join(dups, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("__dup_corpus"), lit(false)).as("dup_of_corpus"),
+        coalesce(col("__dup_batch"), lit(false)).as("dup_in_batch"))
+      .withColumn("keep", !col("dup_of_corpus") && !col("dup_in_batch"))
+  }
+
+  /** MinHash-LSH candidate pairs with signature-estimated Jaccard: the
+    * fraction of equal signature components, joined back onto the
+    * banded candidates.
     *
-    * Pipeline: shingle → xxhash64 → k min-hash aggregates (one shuffle
-    * on id; map-side partial min keeps it cheap) → band hashes → explode
-    * → self-join on (band, bandHash) → distinct pairs → estimate
-    * similarity as the fraction of equal signature components.
-    *
-    * With `numHashes` = bands·rowsPerBand, the S-curve threshold is
-    * ≈ (1/bands)^(1/rowsPerBand); defaults target ~0.4 Jaccard.
-    *
-    * @return (idA, idB, est_jaccard) with idA < idB, est ≥ `threshold`
+    * @return (id_a, id_b, est_jaccard) with id_a < id_b, est ≥ `threshold`
     */
   def minHashPairs(
       docs: DataFrame,
@@ -44,59 +155,17 @@ object NearDup {
       numHashes: Int = 128,
       bands: Int = 32,
       threshold: Double = 0.6,
-      seed: Long = 42L): DataFrame =
-    minHashCandidates(docs, idCol, textCol, numHashes, bands, seed)
+      seed: Long = 42L): DataFrame = {
+    val sigs = textSignatures(textDocs(idCol, textCol, docs -> true), numHashes, seed)
+    def side(s: String) = sigs.select(col("__id").as(s"id_$s"), col("__sig").as(s"__sig_$s"))
+    flatCandidates(sigs, numHashes, bands)
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         (aggregate(
           zip_with(col("__sig_a"), col("__sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).cast(DoubleType) / numHashes).as("est_jaccard"))
       .where(col("est_jaccard") >= threshold)
-
-  /** Banded candidate pairs with both signatures attached, no similarity
-    * estimate. Callers that verify candidates exactly project the ids
-    * only, and column pruning then drops the k-long signatures from the
-    * band shuffle entirely — the estimate is a per-candidate interpreted
-    * 2k-element fold, the dominant verify-side cost when evaluated and
-    * discarded.
-    */
-  private def minHashCandidates(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int,
-      seed: Long): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val r = numHashes / bands
-
-    val exploded = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("__id"), explode(shingleSet(col(textCol))).as("__s"))
-      .select(col("__id"), pmod(xxhash64(col("__s")), lit(P)).as("__x"))
-
-    // one typed aggregate computing the whole k-signature per doc
-    // (primitive-array buffer via ObjectHashAggregate — see MinHashAgg)
-    val sigs = exploded.groupBy(col("__id"))
-      .agg(graft.functions.MinHashAgg.of(numHashes, seed)(col("__x")).as("__sig"))
-
-    // Signatures ride through the band explode, so the expensive min-hash
-    // aggregation has exactly two consumers (the two sides of the bucket
-    // self-join) and Spark reuses one shuffle for both — no join-backs.
-    // Cost: each band row carries the k-long signature (~1 KB at k=128);
-    // the bucket join's shuffle grows by that factor but stays linear.
-    val withBands = sigs.select(
-      col("__id"), col("__sig"),
-      posexplode(expr(s"band_hashes(__sig, $bands, $r)")))
-      .withColumnRenamed("pos", "__band")
-      .withColumnRenamed("col", "__bh")
-
-    val left = withBands.select(
-      col("__id").as("id_a"), col("__sig").as("__sig_a"), col("__band"), col("__bh"))
-    val right = withBands.select(
-      col("__id").as("id_b"), col("__sig").as("__sig_b"), col("__band"), col("__bh"))
-    left.join(right, Seq("__band", "__bh"))
-      .where(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
   }
 
   /** MinHash-LSH candidates verified with EXACT shingle-set Jaccard —
@@ -119,24 +188,10 @@ object NearDup {
       numHashes: Int = 128,
       bands: Int = 32,
       seed: Long = 42L): DataFrame = {
-    val sets = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("__id"), shingleSet(col(textCol)).as("__sh"))
-      .where(size(col("__sh")) > 0)
-    // candidates: every banded collision, no estimate — the exact
-    // verification below decides, so evaluating the signature-fold
-    // estimate here would be pure waste
-    val candidates = minHashCandidates(docs, idCol, textCol,
-      numHashes = numHashes, bands = bands, seed = seed)
-      .select(col("id_a"), col("id_b"))
-    candidates
-      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
-      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("__sh_a"), col("__sh_b"))).cast(DoubleType) /
-          (size(col("__sh_a")) + size(col("__sh_b")) -
-            size(array_intersect(col("__sh_a"), col("__sh_b"))))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    val texts = textDocs(idCol, textCol, docs -> true)
+    val candidates = flatCandidates(textSignatures(texts, numHashes, seed), numHashes, bands)
+    verified(candidates, textSets(texts), threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** Oracle for [[minHashVerifiedPairs]]: the naive exact all-pairs
@@ -163,16 +218,9 @@ object NearDup {
     * dedup: a NEW batch arrives, and each batch document is checked for
     * a near-duplicate (exact shingle Jaccard ≥ `threshold`) against the
     * already-ingested CORPUS and against earlier (smaller-id) documents
-    * of the same batch. Corpus documents are never compared with each
-    * other: the bucket join keeps only pairs with a batch side, so a
+    * of the same batch, through [[flatCandidates]] and [[verdicts]]: a
     * 100 TB corpus contributes signatures to the index but no
-    * corpus×corpus candidate ever materializes — per-ingest cost scales
-    * with the batch, not the corpus. Candidates are exact-verified
-    * (precision 1), same contract as [[minHashVerifiedPairs]].
-    *
-    * `dup_in_batch` flags a match with ANY smaller-id batch doc
-    * (whether or not that doc is itself kept) — the conservative
-    * one-pass rule ingest pipelines use; transitive-group
+    * corpus×corpus candidate ever materializes. Transitive-group
     * representative selection is [[Components.connectedComponents]]'s
     * job when needed.
     *
@@ -188,61 +236,10 @@ object NearDup {
       numHashes: Int = 128,
       bands: Int = 32,
       seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val r = numHashes / bands
-    def side(df: DataFrame, isBatch: Boolean) = df.select(
-      col(idCol).as("__id"), col(textCol).as("__text"),
-      lit(isBatch).as("__is_batch"))
-    val tagged = side(corpus, isBatch = false)
-      .unionByName(side(batch, isBatch = true))
-      .repartition(batch.sparkSession.sparkContext.defaultParallelism)
-
-    val sets = tagged
-      .select(col("__id"), col("__is_batch"), shingleSet(col("__text")).as("__sh"))
-      .where(size(col("__sh")) > 0)
-    val sigs = sets
-      .select(col("__id"), col("__is_batch"), explode(col("__sh")).as("__s"))
-      .select(col("__id"), col("__is_batch"),
-        pmod(xxhash64(col("__s")), lit(P)).as("__x"))
-      .groupBy(col("__id"), col("__is_batch"))
-      .agg(graft.functions.MinHashAgg.of(numHashes, seed)(col("__x")).as("__sig"))
-    val withBands = sigs.select(
-      col("__id"), col("__is_batch"),
-      posexplode(expr(s"band_hashes(__sig, $bands, $r)")))
-      .withColumnRenamed("pos", "__band")
-      .withColumnRenamed("col", "__bh")
-
-    val left = withBands.select(col("__id").as("id_a"),
-      col("__is_batch").as("__batch_a"), col("__band"), col("__bh"))
-    val right = withBands
-      .where(col("__is_batch"))
-      .select(col("__id").as("id_b"), col("__band"), col("__bh"))
-    // candidate gate: the right side is always batch; the left side is
-    // corpus, or an earlier batch doc — corpus×corpus never survives
-    val candidates = left.join(right, Seq("__band", "__bh"))
-      .where(!col("__batch_a") || col("id_a") < col("id_b"))
-      .where(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("__batch_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    val verified = candidates
-      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
-      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .where((size(array_intersect(col("__sh_a"), col("__sh_b"))).cast(DoubleType) /
-        (size(col("__sh_a")) + size(col("__sh_b")) -
-          size(array_intersect(col("__sh_a"), col("__sh_b"))))) >= threshold)
-      .groupBy(col("id_b"))
-      .agg(
-        max(when(!col("__batch_a"), true).otherwise(false)).as("__dup_corpus"),
-        max(when(col("__batch_a"), true).otherwise(false)).as("__dup_batch"))
-
-    batch.select(col(idCol))
-      .join(verified.withColumnRenamed("id_b", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("__dup_corpus"), lit(false)).as("dup_of_corpus"),
-        coalesce(col("__dup_batch"), lit(false)).as("dup_in_batch"),
-        (!coalesce(col("__dup_corpus"), lit(false)) &&
-          !coalesce(col("__dup_batch"), lit(false))).as("keep"))
+    val texts = textDocs(idCol, textCol, corpus -> false, batch -> true)
+    verdicts(batch.select(col(idCol)), idCol,
+      flatCandidates(textSignatures(texts, numHashes, seed), numHashes, bands),
+      textSets(texts), threshold)
   }
 
   /** Declared q96: ingest doc_id < 100 as the new batch against the
@@ -880,12 +877,8 @@ object NearDup {
   /** [[incrementalNearDup]] verdicts computed from signature-index rows
     * instead of text: `batchSigs` / `corpusSigs` are [[signatureRows]]-
     * shaped. Returns one row per BATCH doc (including no-shingle docs:
-    * always keep): (idCol, dup_of_corpus, dup_in_batch, keep). The
-    * banding (hash over signature slices) matches the from-text path
-    * exactly, so the candidate sets — and with them recall — are the
-    * same; verification is exact Jaccard over the 64-bit shingle-hash
-    * sets. Corpus×corpus pairs never materialize (right side of the
-    * band join is batch-only).
+    * always keep): (idCol, dup_of_corpus, dup_in_batch, keep), verified
+    * by exact Jaccard over the 64-bit shingle-hash sets.
     */
   def indexedNearDupVerdicts(
       batchSigs: DataFrame,
@@ -894,67 +887,25 @@ object NearDup {
       threshold: Double = 0.6,
       bands: Int = 32,
       numHashes: Int = 128): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes=$numHashes must be divisible by bands=$bands")
-    val r = numHashes / bands
     def side(df: DataFrame, isBatch: Boolean) = df.select(
       col(idCol).as("__id"), col("sh").as("__sh"),
       col("sig").as("__sig"), lit(isBatch).as("__is_batch"))
     val tagged = side(corpusSigs, isBatch = false)
       .unionByName(side(batchSigs, isBatch = true))
-      .where(size(col("__sig")) > 0)
-      // fail LOUDLY if an index row was built with a different
-      // numHashes than this banding assumes: a silent mis-slice would
-      // band over a prefix of the signature (wrong candidate sets,
-      // recall loss) with no error anywhere downstream
-      .withColumn("__sig",
-        when(size(col("__sig")) === numHashes, col("__sig"))
-          .otherwise(raise_error(concat(
-            lit(s"indexedNearDupVerdicts: signature length != numHashes=$numHashes for id "),
-            col("__id").cast("string")))))
-    val withBands = tagged.select(
-      col("__id"), col("__is_batch"),
-      posexplode(expr(s"band_hashes(__sig, $bands, $r)")))
-      .withColumnRenamed("pos", "__band")
-      .withColumnRenamed("col", "__bh")
-    val left = withBands.select(col("__id").as("id_a"),
-      col("__is_batch").as("__batch_a"), col("__band"), col("__bh"))
-    val right = withBands.where(col("__is_batch"))
-      .select(col("__id").as("id_b"), col("__band"), col("__bh"))
-    val candidates = left.join(right, Seq("__band", "__bh"))
-      .where(!col("__batch_a") || col("id_a") < col("id_b"))
-      .where(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("__batch_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val sets = tagged.select(col("__id"), col("__sh"))
-    val verified = candidates
-      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
-      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .where((size(array_intersect(col("__sh_a"), col("__sh_b"))).cast(DoubleType) /
-        (size(col("__sh_a")) + size(col("__sh_b")) -
-          size(array_intersect(col("__sh_a"), col("__sh_b"))))) >= threshold)
-      .groupBy(col("id_b"))
-      .agg(
-        max(when(!col("__batch_a"), true).otherwise(false)).as("__dup_corpus"),
-        max(when(col("__batch_a"), true).otherwise(false)).as("__dup_batch"))
-    batchSigs.select(col(idCol))
-      .join(verified.withColumnRenamed("id_b", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("__dup_corpus"), lit(false)).as("dup_of_corpus"),
-        coalesce(col("__dup_batch"), lit(false)).as("dup_in_batch"),
-        (!coalesce(col("__dup_corpus"), lit(false)) &&
-          !coalesce(col("__dup_batch"), lit(false))).as("keep"))
+    verdicts(batchSigs.select(col(idCol)), idCol,
+      flatCandidates(tagged, numHashes, bands), tagged, threshold)
   }
 
-  /** [[indexedNearDupVerdicts]] semantics over a BAND-BUCKETED
-    * persisted index — the truly corpus-free per-trigger shape. The
-    * flat (id, sig) index still made every trigger scan the whole
-    * signature relation (read every sig array, compute every band
-    * hash): corpus-linear with a small constant, measured 1.6× wall /
-    * 2.0× cpu per trigger at 10× corpus (round-13 IngestLadder). Here
-    * the corpus side arrives through two PRUNED point-lookup reads the
-    * caller supplies (file-skipping via [[graft.tables.DeltaLikeTable.
-    * readPruned]] on the persisted band/signature tables):
+  /** [[indexedNearDupVerdicts]] over a BAND-BUCKETED persisted index —
+    * the truly corpus-free per-trigger shape. The flat (id, sig) index
+    * still made every trigger scan the whole signature relation (read
+    * every sig array, compute every band hash): corpus-linear with a
+    * small constant, measured 1.6× wall / 2.0× cpu per trigger at 10×
+    * corpus (round-13 IngestLadder). Here the candidate generator is a
+    * pruned probe instead of the flat self-join, and the corpus side
+    * arrives through two PRUNED point-lookup reads the caller supplies
+    * (file-skipping via [[graft.tables.DeltaLikeTable.readPruned]] on
+    * the persisted band/signature tables):
     *
     *   - `corpusBandsFor(bhs)`: (idCol, band, bh) rows from files whose
     *     bh stat-range covers a batch band hash — candidate generation
@@ -969,11 +920,6 @@ object NearDup {
     *     verify joins against the full scan instead — the flat-index
     *     behavior, correctness unchanged).
     *
-    * Candidate SEMANTICS are pinned to [[indexedNearDupVerdicts]]:
-    * same band_hashes banding, same id_a < id_b in-batch rule, same
-    * exact-Jaccard verify over 64-bit shingle sets, same output shape —
-    * the q283 oracle being q278's SQL is what driver-checks that pin.
-    *
     * Both returned probe relations are SUPERSETS (file granularity);
     * the equi-joins here re-apply the exact predicate, so pruning can
     * never change a verdict, only the bytes touched.
@@ -987,42 +933,23 @@ object NearDup {
       bands: Int = 32,
       numHashes: Int = 128,
       maxPrunedLookup: Int = 100000): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes=$numHashes must be divisible by bands=$bands")
-    val r = numHashes / bands
-    val batch = batchSigs
-      .select(col(idCol).as("__id"), col("sh").as("__sh"), col("sig").as("__sig"))
-      .where(size(col("__sig")) > 0)
-      // same loud length guard as the flat path — a mis-built index
-      // row must never silently band over a signature prefix
-      .withColumn("__sig",
-        when(size(col("__sig")) === numHashes, col("__sig"))
-          .otherwise(raise_error(concat(
-            lit(s"bandedNearDupVerdicts: signature length != numHashes=$numHashes for id "),
-            col("__id").cast("string")))))
-    val batchBands = batch.select(col("__id"),
-      posexplode(expr(s"band_hashes(__sig, $bands, $r)")))
-      .withColumnRenamed("pos", "__band")
-      .withColumnRenamed("col", "__bh")
+    val batchBands = bandRows(batchSigs, idCol, "sig", numHashes, bands)
       // consumed thrice (probe collect + corpus join + in-batch join);
       // batch-sized
       .localCheckpoint()
+    def bandSide(df: DataFrame, id: String) =
+      df.select(col(idCol).as(id), col("band"), col("bh"))
     // probe set: ≤ |batch|·bands ints by construction — driver-safe
-    val bhVals = batchBands.select(col("__bh")).distinct()
+    val bhVals = batchBands.select(col("bh")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val corpusCand = corpusBandsFor(bhVals)
-      .select(col(idCol).as("id_a"), col("band").as("__band"),
-        col("bh").as("__bh"))
-      // batch side broadcast: the corpus index is probed map-side,
-      // never shuffled
-      .join(broadcast(batchBands.select(col("__id").as("id_b"),
-        col("__band"), col("__bh"))), Seq("__band", "__bh"))
+    // batch side broadcast: the corpus index is probed map-side, never
+    // shuffled
+    val corpusCand = bandSide(corpusBandsFor(bhVals), "id_a")
+      .join(broadcast(bandSide(batchBands, "id_b")), Seq("band", "bh"))
       .where(col("id_a") =!= col("id_b"))
       .select(col("id_a"), lit(false).as("__batch_a"), col("id_b"))
-    val inBatchCand = batchBands
-      .select(col("__id").as("id_a"), col("__band"), col("__bh"))
-      .join(batchBands.select(col("__id").as("id_b"), col("__band"),
-        col("__bh")), Seq("__band", "__bh"))
+    val inBatchCand = bandSide(batchBands, "id_a")
+      .join(bandSide(batchBands, "id_b"), Seq("band", "bh"))
       .where(col("id_a") < col("id_b"))
       .select(col("id_a"), lit(true).as("__batch_a"), col("id_b"))
     val candidates = corpusCand.unionByName(inBatchCand)
@@ -1032,34 +959,15 @@ object NearDup {
     val corpusIds = candidates.where(!col("__batch_a"))
       .select(col("id_a")).distinct()
     val nCorpusIds = corpusIds.count()
-    val corpusSh = {
-      val base =
-        if (nCorpusIds <= maxPrunedLookup)
-          corpusShFor(Some(corpusIds.collect().map(_.get(0)).toSeq))
-        else corpusShFor(None)
-      // re-apply the exact id predicate over the file-granularity
-      // superset
-      base.select(col(idCol).as("__id"), col("sh").as("__sh"))
-        .join(broadcast(corpusIds.withColumnRenamed("id_a", "__id")),
-          Seq("__id"), "left_semi")
-    }
-    val sets = batch.select(col("__id"), col("__sh")).unionByName(corpusSh)
-    val verified = candidates
-      .join(sets.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
-      .join(sets.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .where((size(array_intersect(col("__sh_a"), col("__sh_b"))).cast(DoubleType) /
-        (size(col("__sh_a")) + size(col("__sh_b")) -
-          size(array_intersect(col("__sh_a"), col("__sh_b"))))) >= threshold)
-      .groupBy(col("id_b"))
-      .agg(
-        max(when(!col("__batch_a"), true).otherwise(false)).as("__dup_corpus"),
-        max(when(col("__batch_a"), true).otherwise(false)).as("__dup_batch"))
-    batchSigs.select(col(idCol))
-      .join(verified.withColumnRenamed("id_b", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("__dup_corpus"), lit(false)).as("dup_of_corpus"),
-        coalesce(col("__dup_batch"), lit(false)).as("dup_in_batch"),
-        (!coalesce(col("__dup_corpus"), lit(false)) &&
-          !coalesce(col("__dup_batch"), lit(false))).as("keep"))
+    val corpusSh =
+      if (nCorpusIds <= maxPrunedLookup)
+        corpusShFor(Some(corpusIds.collect().map(_.get(0)).toSeq))
+      else corpusShFor(None)
+    def sets(df: DataFrame) = df.select(col(idCol).as("__id"), col("sh").as("__sh"))
+    // re-apply the exact id predicate over the file-granularity superset
+    val corpusSets = sets(corpusSh)
+      .join(broadcast(corpusIds.withColumnRenamed("id_a", "__id")), Seq("__id"), "left_semi")
+    verdicts(batchSigs.select(col(idCol)), idCol, candidates,
+      sets(batchSigs).unionByName(corpusSets), threshold)
   }
 }

@@ -1,11 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SharedRelations, Tables}
 import graft.tables.DeltaLikeTable
 
 /** Versioned-table (deltalike) behaviors declared as oracle-checked
@@ -31,20 +29,27 @@ object Versioned {
     updates.union(inserts)
   }
 
-  /** Overwrite customer as v0, MERGE the deterministic source, return the
-    * post-merge snapshot (B1+B2+B4 in one verifiable relation).
+  /** Overwrite customer as v0 into a fresh application-owned scratch dir
+    * `graft_<prefix>…`, MERGE the deterministic source as v1, and return
+    * the table path. The dir outlives the call because the caller's
+    * result reads it lazily.
     */
-  def q26MergeUpsert(spark: SparkSession, d: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_merge").toString
+  private def mergedCustomer(spark: SparkSession, d: String, prefix: String): String = {
+    val path = SharedRelations.scratch(spark, prefix).toString
     DeltaLikeTable.write(Tables.customer(spark, d), path, "overwrite")
-    val t = DeltaLikeTable.forPath(spark, path)
-    t.as("old").merge(mergeSource(spark, d).as("new"),
-        "old.c_custkey = new.c_custkey")
+    DeltaLikeTable.forPath(spark, path).as("old")
+      .merge(mergeSource(spark, d).as("new"), "old.c_custkey = new.c_custkey")
       .whenMatchedUpdateAll()
       .whenNotMatchedInsertAll()
       .execute()
-    spark.read.format("deltalike").load(path)
+    path
   }
+
+  /** Overwrite customer as v0, MERGE the deterministic source, return the
+    * post-merge snapshot (B1+B2+B4 in one verifiable relation).
+    */
+  def q26MergeUpsert(spark: SparkSession, d: String): DataFrame =
+    spark.read.format("deltalike").load(mergedCustomer(spark, d, "merge"))
 
   val q26Sql: String =
     """SELECT c_custkey, c_name, c_nationkey, CAST(0.0 AS DOUBLE) AS c_acctbal,
@@ -60,17 +65,9 @@ object Versioned {
   /** Same write+merge, then a `versionAsOf 0` read — time travel must see
     * the pre-merge table unchanged (B5).
     */
-  def q27TimeTravel(spark: SparkSession, d: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_tt").toString
-    DeltaLikeTable.write(Tables.customer(spark, d), path, "overwrite")
-    val t = DeltaLikeTable.forPath(spark, path)
-    t.as("old").merge(mergeSource(spark, d).as("new"),
-        "old.c_custkey = new.c_custkey")
-      .whenMatchedUpdateAll()
-      .whenNotMatchedInsertAll()
-      .execute()
-    spark.read.format("deltalike").option("versionAsOf", "0").load(path)
-  }
+  def q27TimeTravel(spark: SparkSession, d: String): DataFrame =
+    spark.read.format("deltalike").option("versionAsOf", "0")
+      .load(mergedCustomer(spark, d, "tt"))
 
   val q27Sql: String = "SELECT * FROM customer"
 
@@ -82,20 +79,11 @@ object Versioned {
     * surface zero times — including matched rows the update left
     * bit-identical (acctbal already 0), which the multiset diff cancels.
     */
-  def q55ChangeFeed(spark: SparkSession, d: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_cdc").toString
-    DeltaLikeTable.write(Tables.customer(spark, d), path, "overwrite")
-    val t = DeltaLikeTable.forPath(spark, path)
-    t.as("old").merge(mergeSource(spark, d).as("new"),
-        "old.c_custkey = new.c_custkey")
-      .whenMatchedUpdateAll()
-      .whenNotMatchedInsertAll()
-      .execute()
-    graft.tables.ChangeReader.changeFeed(spark, path, 0)
+  def q55ChangeFeed(spark: SparkSession, d: String): DataFrame =
+    graft.tables.ChangeReader.changeFeed(spark, mergedCustomer(spark, d, "cdc"), 0)
       .select(col("c_custkey"), col("c_acctbal"),
         col("_change_type").as("change_type"),
         col("_commit_version").as("commit_version"))
-  }
 
   val q55Sql: String =
     """SELECT c_custkey, CAST(0.0 AS DOUBLE) AS c_acctbal,
@@ -116,17 +104,8 @@ object Versioned {
     * time travel a read-only user types first (B5 over the SQL
     * surface, not the DataFrame API).
     */
-  def q93SqlTimeTravel(spark: SparkSession, d: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_sqltt").toString
-    DeltaLikeTable.write(Tables.customer(spark, d), path, "overwrite")
-    val t = DeltaLikeTable.forPath(spark, path)
-    t.as("old").merge(mergeSource(spark, d).as("new"),
-        "old.c_custkey = new.c_custkey")
-      .whenMatchedUpdateAll()
-      .whenNotMatchedInsertAll()
-      .execute()
-    spark.sql(s"SELECT * FROM deltalike.`$path` VERSION AS OF 0")
-  }
+  def q93SqlTimeTravel(spark: SparkSession, d: String): DataFrame =
+    spark.sql(s"SELECT * FROM deltalike.`${mergedCustomer(spark, d, "sqltt")}` VERSION AS OF 0")
 
   val q93Sql: String = "SELECT * FROM customer"
 
@@ -148,7 +127,7 @@ object Versioned {
     * to a 100 TB table costs two aggregates, not a diff of rows.
     */
   def q92VersionDrift(spark: SparkSession, d: String): DataFrame = {
-    val path = Files.createTempDirectory("graft_drift").toString
+    val path = SharedRelations.scratch(spark, "drift").toString
     val base = Tables.documents(spark, d)
       .select(col("doc_id"), col("source"), col("n_chars"))
     DeltaLikeTable.write(base.where(col("doc_id") % 5 < 3), path, "overwrite")

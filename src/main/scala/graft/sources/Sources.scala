@@ -48,7 +48,7 @@ object Sources {
     */
   def q80JsonlRoundtrip(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val tmp = graft.core.SharedRelations.scratch(spark, "jsonl").toString
     graft.core.Tables.documents(spark, d)
       .write.mode("overwrite").json(tmp)
     jsonLines(spark, tmp,
@@ -80,7 +80,7 @@ object Sources {
     */
   def q97OrcRoundtrip(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = graft.core.SharedRelations.scratch(spark, "orc").toString
     graft.core.Tables.documents(spark, d)
       .write.mode("overwrite").orc(tmp)
     orc(spark, tmp,

@@ -164,9 +164,7 @@ object EventStream {
     java.nio.file.Files.move(part, dest)
     java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 1000L))
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    graft.core.SharedRelations.deleteTree(tmp)
   }
 
   /** Declared q277: the streaming twin of q66 — gap-based sessions via

@@ -1,9 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
+import graft.core.SharedRelations
 import graft.operators.NearDup
 import graft.tables.{DeltaLikeSink, DeltaLikeTable, DeltaLog}
 
@@ -85,9 +91,8 @@ object IngestDedup {
     */
   private val ChunkBounds = Seq((400L, 450L), (450L, 500L), (500L, Long.MaxValue))
 
-  private def q278ChunkDir(spark: org.apache.spark.sql.SparkSession,
-      d: String): String =
-    graft.core.SharedRelations.directory(spark, "ingest_chunks", d) { dir =>
+  private def q278ChunkDir(spark: SparkSession, d: String): String =
+    SharedRelations.directory(spark, "ingest_chunks", d) { dir =>
       val docs = graft.core.Tables.documents(spark, d)
         .select(col("doc_id"), col("text"))
       ChunkBounds.zipWithIndex.foreach { case ((lo, hi), i) =>
@@ -129,35 +134,26 @@ object IngestDedup {
     * still works (POSIX delete needs directory write permission, not
     * file write permission).
     */
-  private def copyTree(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+  private def copyTree(src: Path, dst: Path): Unit = {
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.foreach { p =>
       val target = dst.resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(target)
+      if (Files.isDirectory(p)) Files.createDirectories(target)
       else
         try {
-          java.nio.file.Files.createLink(target, p)
+          Files.createLink(target, p)
           // a hard link shares the inode, so this also marks the
           // template's own file read-only
           if (!target.toFile.setWritable(false, false)) {
-            java.nio.file.Files.delete(target)
-            java.nio.file.Files.copy(p, target)
+            Files.delete(target)
+            Files.copy(p, target)
           }
         } catch {
           case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(p, target,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
         }
     }
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
+    finally walk.close()
   }
 
   /** Immutable template of the doc_id < 400 seed corpus table, built
@@ -166,9 +162,8 @@ object IngestDedup {
     * index as a sibling `_sig` directory, and q283's, which carries the
     * banded index as `_idx`.
     */
-  private def seedTemplate(spark: org.apache.spark.sql.SparkSession,
-      d: String, kind: String): String =
-    graft.core.SharedRelations.directory(spark, s"ingest_seed_$kind", d) { dir =>
+  private def seedTemplate(spark: SparkSession, d: String, kind: String): String =
+    SharedRelations.directory(spark, s"ingest_seed_$kind", d) { dir =>
       val seed = graft.core.Tables.documents(spark, d)
         .select(col("doc_id"), col("text"))
         .where(col("doc_id") < 400)
@@ -180,6 +175,35 @@ object IngestDedup {
         seedBandedIndex(seed, dir.resolve("_idx").toString,
           "doc_id", "text")
     }._1
+
+  /** One finite replay of the q278 chunk stream: a fresh copy of the
+    * `kind` seed template (its `tbl` doc table plus any index tree) in a
+    * scratch dir, `trigger(scratch)` as the foreachBatch over the three
+    * chunks, and the admitted batch doc_ids of the final `tbl` snapshot.
+    * The snapshot is materialized EAGERLY so the scratch tree (table,
+    * index and checkpoint) is deleted before returning, on every exit
+    * path — the bench reruns each row 3x.
+    */
+  private def replayIngest(spark: SparkSession, d: String, kind: String)(
+      trigger: Path => (DataFrame, Long) => Unit): DataFrame = {
+    val scratch = Files.createTempDirectory(s"graft_ingest_run_$kind")
+    try {
+      copyTree(Paths.get(seedTemplate(spark, d, kind)), scratch)
+      val onBatch = trigger(scratch)
+      val q = spark.readStream
+        .schema(StructType.fromDDL("doc_id BIGINT, text STRING"))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(q278ChunkDir(spark, d))
+        .writeStream
+        .foreachBatch((b: Dataset[Row], id: Long) => onBatch(b.toDF(), id))
+        .option("checkpointLocation", scratch.resolve("ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      spark.read.format("deltalike").load(scratch.resolve("tbl").toString)
+        .where(col("doc_id") >= 400).select(col("doc_id"))
+        .localCheckpoint()
+    } finally SharedRelations.deleteTree(scratch)
+  }
 
   /** Declared q278: the streaming ingest-dedup loop end-to-end — the
     * doc_id < 400 corpus is seeded as a deltalike table, docs ≥ 400
@@ -196,37 +220,13 @@ object IngestDedup {
     * Scale shape per trigger: corpus signatures are an index-shaped
     * scan, candidates are bucket-join rows with a batch side only,
     * verification touches candidates — cost tracks the batch and its
-    * collision set, never corpus². The scratch table and checkpoint
-    * are deleted after the snapshot is materialized.
+    * collision set, never corpus².
     */
-  def q278StreamIngestDedup(spark: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_ingest_run")
-    // cleanup in finally: an exception from the stream run or the
-    // final read must not leak the scratch tree under java.io.tmpdir
-    try {
-      val path = scratch.resolve("tbl")
-      val ckpt = scratch.resolve("ckpt")
-      copyTree(java.nio.file.Paths
-        .get(seedTemplate(spark, d, "plain"), "tbl"), path)
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType
-          .fromDDL("doc_id BIGINT, text STRING"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(q278ChunkDir(spark, d))
-      val q = writeStream(stream.writeStream, path.toString, "q278",
-        "doc_id", "text", threshold = 0.6)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      // materialize EAGERLY so the scratch tree can be deleted before
-      // returning (the bench reruns this 3x)
-      spark.read.format("deltalike").load(path.toString)
-        .where(col("doc_id") >= 400).select(col("doc_id"))
-        .localCheckpoint()
-    } finally deleteTree(scratch)
-  }
+  def q278StreamIngestDedup(spark: SparkSession, d: String): DataFrame =
+    replayIngest(spark, d, "plain") { dir =>
+      appendDeduped(dir.resolve("tbl").toString, "q278", "doc_id", "text",
+        threshold = 0.6)
+    }
 
   /** Oracle: the three ingest layers replayed sequentially in SQL —
     * layer k keeps a doc iff no trigram-Jaccard ≥ 0.6 match in
@@ -365,7 +365,7 @@ object IngestDedup {
     *   - `sig`: [[NearDup.signatureRows]] + `ingest_batch`, files
     *     RANGE-PARTITIONED by id (~[[SigDocsPerFile]] docs each) so a
     *     candidate-id lookup is file-pruned to the collision set;
-    *   - `band`: one (band, bh, id) row per (doc, band), files
+    *   - `band`: [[NearDup.bandRows]] of the sig table, files
     *     range-partitioned by bh (~[[BandRowsPerFile]] rows each) so a
     *     trigger's band-hash probe is file-pruned to the buckets it
     *     hits.
@@ -395,8 +395,6 @@ object IngestDedup {
       textCol: String,
       numHashes: Int = 128,
       bands: Int = 32): Unit = {
-    require(numHashes % bands == 0,
-      s"numHashes=$numHashes must be divisible by bands=$bands")
     val spark = corpus.sparkSession
     val sigRows = NearDup.signatureRows(corpus, idCol, textCol, numHashes)
       .withColumn("ingest_batch", org.apache.spark.sql.functions.lit(-1L))
@@ -409,29 +407,14 @@ object IngestDedup {
     // back instead of recomputing shingles + minhash
     val fb = ((n * bands + BandRowsPerFile - 1) / BandRowsPerFile).toInt
     DeltaLikeTable.write(
-      bandRowsOf(DeltaLikeTable.forPath(spark, sigPathOf(indexPath)).toDF,
-        idCol, numHashes, bands)
+      NearDup.bandRows(DeltaLikeTable.forPath(spark, sigPathOf(indexPath)).toDF,
+        idCol, "sig", numHashes, bands)
         .repartitionByRange(fb, col("bh")),
       s"$indexPath/band", "overwrite")
   }
 
   private def sigPathOf(indexPath: String) = s"$indexPath/sig"
   private def bandPathOf(indexPath: String) = s"$indexPath/band"
-
-  /** (band, bh, id) rows of sig-shaped `rows` — the banding relation,
-    * bit-identical to the hashes [[NearDup.bandedNearDupVerdicts]]
-    * probes with (same `band_hashes` expression, same slicing).
-    */
-  private def bandRowsOf(rows: DataFrame, idCol: String,
-      numHashes: Int, bands: Int): DataFrame = {
-    val r = numHashes / bands
-    rows.where(org.apache.spark.sql.functions.size(col("sig")) > 0)
-      .select(col(idCol), org.apache.spark.sql.functions.posexplode(
-        org.apache.spark.sql.functions.expr(s"band_hashes(sig, $bands, $r)")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bh")
-      .select(col("band"), col("bh"), col(idCol))
-  }
 
   /** The band-bucketed foreachBatch: [[appendDedupedIndexed]]'s
     * exactly-once contract (decision commits with the sig append,
@@ -515,7 +498,7 @@ object IngestDedup {
           Seq(org.apache.spark.sql.sources.EqualTo("ingest_batch", batchId)))
           .where(col("ingest_batch") === batchId)
       DeltaLikeSink.appendBatch(bandPath, queryId)(
-        bandRowsOf(keptSigs, idCol, numHashes, bands), batchId)
+        NearDup.bandRows(keptSigs, idCol, "sig", numHashes, bands), batchId)
     }
     DeltaLikeSink.appendBatch(docPath, queryId)(
       batch.join(keepIds, Seq(idCol)), batchId)
@@ -529,33 +512,11 @@ object IngestDedup {
     * changes a verdict; the per-trigger cost claim is measured by
     * `IngestLadder` in banded mode (BASELINE.md).
     */
-  def q283StreamIngestBanded(spark: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_ingest_run_band")
-    try {
-      val tpl = java.nio.file.Paths.get(seedTemplate(spark, d, "banded"))
-      val docPath = scratch.resolve("tbl")
-      val idxPath = scratch.resolve("_idx")
-      val ckpt = scratch.resolve("ckpt")
-      copyTree(tpl.resolve("tbl"), docPath)
-      copyTree(tpl.resolve("_idx"), idxPath)
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType
-          .fromDDL("doc_id BIGINT, text STRING"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(q278ChunkDir(spark, d))
-      val q = stream.writeStream.foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          appendDedupedBanded(docPath.toString, idxPath.toString, "q283",
-            "doc_id", "text", threshold = 0.6)(b.toDF(), id)
-      }.option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      spark.read.format("deltalike").load(docPath.toString)
-        .where(col("doc_id") >= 400).select(col("doc_id"))
-        .localCheckpoint()
-    } finally deleteTree(scratch)
-  }
+  def q283StreamIngestBanded(spark: SparkSession, d: String): DataFrame =
+    replayIngest(spark, d, "banded") { dir =>
+      appendDedupedBanded(dir.resolve("tbl").toString,
+        dir.resolve("_idx").toString, "q283", "doc_id", "text", threshold = 0.6)
+    }
 
   /** Declared q281: q278's ingest loop with the PERSISTED signature
     * index — same seed corpus, same three ascending-id micro-batches,
@@ -565,31 +526,9 @@ object IngestDedup {
     * final relation must be identical to q278's, which is exactly what
     * sharing the oracle asserts.
     */
-  def q281StreamIngestIndexed(spark: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_ingest_run_idx")
-    try {
-      val tpl = java.nio.file.Paths.get(seedTemplate(spark, d, "indexed"))
-      val docPath = scratch.resolve("tbl")
-      val sigPath = scratch.resolve("_sig")
-      val ckpt = scratch.resolve("ckpt")
-      copyTree(tpl.resolve("tbl"), docPath)
-      copyTree(tpl.resolve("_sig"), sigPath)
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType
-          .fromDDL("doc_id BIGINT, text STRING"))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(q278ChunkDir(spark, d))
-      val q = stream.writeStream.foreachBatch {
-        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          appendDedupedIndexed(docPath.toString, sigPath.toString, "q281",
-            "doc_id", "text", threshold = 0.6)(b.toDF(), id)
-      }.option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      spark.read.format("deltalike").load(docPath.toString)
-        .where(col("doc_id") >= 400).select(col("doc_id"))
-        .localCheckpoint()
-    } finally deleteTree(scratch)
-  }
+  def q281StreamIngestIndexed(spark: SparkSession, d: String): DataFrame =
+    replayIngest(spark, d, "indexed") { dir =>
+      appendDedupedIndexed(dir.resolve("tbl").toString,
+        dir.resolve("_sig").toString, "q281", "doc_id", "text", threshold = 0.6)
+    }
 }

@@ -92,6 +92,8 @@ class SharedRelationsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (dir, _) = SharedRelations.directory(sp, "spec_dir", "k") { p =>
       java.nio.file.Files.writeString(p.resolve("f"), "x")
     }
+    val scratch = SharedRelations.scratch(sp, "spec_scratch")
+    java.nio.file.Files.writeString(scratch.resolve("f"), "x")
     assert(memoed(sp) === 1 && memoed(sp) === 1)
     val sharedIds = sp.sparkContext.getPersistentRDDs.keySet
       .filter(SharedRelations.isShared(sp, _))
@@ -110,6 +112,8 @@ class SharedRelationsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!sharedIds.exists(SharedRelations.isShared(sp, _)))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)),
       "the stopped application's directory must be deleted")
+    assert(!java.nio.file.Files.exists(scratch),
+      "the stopped application's scratch dir must be deleted")
     spark = GraftSession.local("shared-relations-spec-2", cores = 4)
     assert(spark.sparkContext.applicationId != firstApp)
     // nothing registered under the new application: every id registered

@@ -192,11 +192,16 @@ class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bandedNearDupVerdicts equals indexedNearDupVerdicts, " +
     "including the past-cap full-scan fallback") {
+    val sp = spark; import sp.implicits._
     import org.apache.spark.sql.functions.{col, expr, posexplode, size}
     val d = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.documents(spark, d)
       .select(col("doc_id"), col("text"))
+    // plus a two-token batch doc: no shingles, so no signature, no band
+    // row and no candidate — every plan must still keep it
+    val short = 9000001L
     val batch = docs.where(col("doc_id") >= 400)
+      .unionByName(Seq((short, "two tokens")).toDF("doc_id", "text"))
     val corpus = docs.where(col("doc_id") < 400)
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) ->
@@ -220,6 +225,35 @@ class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(banded(100000) === indexed)
     // cap 0 forces the corpusShFor(None) fallback branch
     assert(banded(0) === indexed)
+    val fromText = asMap(graft.operators.NearDup
+      .incrementalNearDup(batch, corpus, "doc_id", "text", 0.6))
+    for (verdicts <- Seq(indexed, banded(100000), banded(0), fromText))
+      assert(verdicts(short) === ((false, false, true)))
+  }
+
+  test("a signature of the wrong length fails both signature-index plans, " +
+    "naming the doc") {
+    val sp = spark; import sp.implicits._
+    import org.apache.spark.sql.functions.col
+    val docs = Seq((7L, baseA), (8L, novelB)).toDF("doc_id", "text")
+    // doc 7 indexed with 64 hashes, banded under numHashes = 128
+    val batchSigs = graft.operators.NearDup.signatureRows(
+      docs.where(col("doc_id") === 7L), "doc_id", "text", numHashes = 64)
+    val corpusSigs = graft.operators.NearDup.signatureRows(
+      docs.where(col("doc_id") === 8L), "doc_id", "text")
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    val expected = "signature length != numHashes=128 for id 7"
+    val indexed = intercept[Exception](graft.operators.NearDup
+      .indexedNearDupVerdicts(batchSigs, corpusSigs, "doc_id", 0.6,
+        numHashes = 128).collect())
+    assert(messages(indexed).contains(expected), messages(indexed))
+    val banded = intercept[Exception](graft.operators.NearDup
+      .bandedNearDupVerdicts(batchSigs, _ => spark.emptyDataFrame,
+        _ => corpusSigs.select(col("doc_id"), col("sh")), "doc_id", 0.6,
+        numHashes = 128).collect())
+    assert(messages(banded).contains(expected), messages(banded))
   }
 
   test("banded ingest: decisions from the pruned index, derived band " +
