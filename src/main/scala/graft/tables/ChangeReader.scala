@@ -63,7 +63,7 @@ object ChangeReader {
       val adds = acts.collect { case a: AddFile => a }
       val op = acts.collectFirst { case c: CommitInfo => c.operation }.getOrElse("")
       if (removes.isEmpty) adds
-      else if (op.startsWith("OPTIMIZE") && skipRewrites) Seq.empty
+      else if (CommitInfo.isDataNeutral(op) && skipRewrites) Seq.empty
       else throw new UnsupportedOperationException(
         s"version $v of $path rewrites files (op=$op); " +
           "changesSince covers append-only history — use changeFeed for " +
@@ -124,7 +124,7 @@ object ChangeReader {
         if (removedPaths.isEmpty) {
           if (adds.isEmpty) None
           else Some(tag(readFiles(adds, v), "insert", v))
-        } else if (op.startsWith("OPTIMIZE")) None // logical no-op
+        } else if (CommitInfo.isDataNeutral(op)) None // logical no-op
         else {
           // pre-image rows live in the removed files; their AddFile
           // entries (stats, partition paths) come from the prior version

@@ -100,7 +100,7 @@ private[tables] final class DeltaLikeStreamSource(
           val removes = acts.collect { case r: RemoveFile => r }
           val op = acts.collectFirst { case c: CommitInfo => c.operation }.getOrElse("")
           if (removes.isEmpty) adds
-          else if (op.startsWith("OPTIMIZE") || skipChangeCommits) Seq.empty
+          else if (CommitInfo.isDataNeutral(op) || skipChangeCommits) Seq.empty
           else throw new UnsupportedOperationException(
             s"version $v of $path rewrites files (op=$op); a streaming read " +
               "delivers appends only — set option skipChangeCommits=true to " +

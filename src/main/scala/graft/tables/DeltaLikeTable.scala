@@ -1,6 +1,5 @@
 package graft.tables
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
@@ -64,17 +63,30 @@ final class DeltaLikeTable private (
     * rewrite path runs as before.
     */
   def delete(condition: Column): Long = {
-    val snap0 = log.snapshot()
-    requireDeterministic(condition, "DELETE", snap0)
-    if (snap0.deletionVectors) {
-      deleteViaVectors(condition, snap0) match {
+    val snap = log.snapshot()
+    requireDeterministic(condition, "DELETE", snap)
+    if (snap.deletionVectors) {
+      deleteViaVectors(condition, snap) match {
         case Some(n) => return n
         case None    => () // match set too large for an inline DV
       }
     }
-    rewriteTouched("DELETE",
-      touchFilter = condition,
-      rewrite = rows => rows.where(!coalesce(condition, lit(false))))
+    val scan = tagged(snap, DeltaLikeTable.FileCol, None)
+    val touched = DeltaLikeTable.touchedFiles(snap, "DELETE", scan.where(condition))
+    if (touched.isEmpty) return 0L
+    val kept = DeltaLikeTable.filterToFiles(scan, touched)
+      .drop(DeltaLikeTable.FileCol).where(!coalesce(condition, lit(false)))
+    val adds = DeltaLikeTable.rewriteFiles(log, snap, "DELETE", touched.map(_._2), kept)
+    touched.map(_._2.numRecords).sum - adds.map(_.numRecords).sum
+  }
+
+  /** Snapshot scan under this handle's alias (so SQL conditions like
+    * `t.x` resolve), with the file URI and, optionally, the physical
+    * row index attached as columns.
+    */
+  private def tagged(snap: Snapshot, fileC: String, idxC: Option[String]): DataFrame = {
+    val scan = DeltaLikeTable.readSnapshotWithMeta(spark, snap, Some(fileC), idxC)
+    tableAlias.fold(scan)(scan.as(_))
   }
 
   /** The deletion-vector half DELETE and UPDATE share: the rows of
@@ -83,41 +95,38 @@ final class DeltaLikeTable private (
     * left with no live row is dropped). Returns the matched scan, the
     * touched files, their replacements and the match count; None when
     * this statement's matches, or the vectors they would accumulate,
-    * exceed [[DeltaLikeTable.InlineDvMaxRows]] — the caller then rewrites,
-    * which also purges the touched vectors.
+    * exceed [[DeltaLikeTable.InlineDvMaxRows]], or when a touched file's
+    * name is shared by another active file (readers exclude vector rows
+    * by file name) — the caller then rewrites, which also purges the
+    * touched vectors.
     */
   private def markDeleted(op: String, condition: Column, snap: Snapshot)
       : Option[(DataFrame, Seq[AddFile], Seq[AddFile], Int)] = {
     val cap = DeltaLikeTable.InlineDvMaxRows
     val fileC = "__graft_dv_file"
     val idxC = "__graft_dv_row"
-    val scanBase = DeltaLikeTable.readSnapshotWithMeta(
-      spark, snap, Some(fileC), Some(idxC))
-    val matchedScan = tableAlias.fold(scanBase)(scanBase.as(_)).where(condition)
+    val matchedScan = tagged(snap, fileC, Some(idxC)).where(condition)
     val matched = matchedScan.select(col(fileC), col(idxC)).limit(cap + 1).collect()
     if (matched.length > cap) return None
-    val byFile = matched
-      .map(r => DeltaLikeTable.fileNameOf(new java.net.URI(r.getString(0)).getPath) ->
-        r.getLong(1))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val touched = snap.files.filter(f => byFile.contains(DeltaLikeTable.fileNameOf(f.path)))
-    require(touched.map(f => DeltaLikeTable.fileNameOf(f.path)).toSet == byFile.keySet,
-      s"deletion-vector $op could not resolve all touched files")
+    val rowsByUri = matched.groupMap(_.getString(0))(_.getLong(1))
+    val touched = DeltaLikeTable.resolveScanned(snap, s"deletion-vector $op", rowsByUri.keySet)
+    val names = snap.files.groupMapReduce(f => DeltaLikeTable.fileNameOf(f.path))(_ => 1)(_ + _)
+    if (touched.exists { case (_, f) => names(DeltaLikeTable.fileNameOf(f.path)) > 1 }) return None
     // the cap bounds the ACCUMULATED vector, not just this statement —
     // repeated small changes would otherwise grow the broadcast exclusion
     // set without limit
-    if (touched.map(_.deletedRows.length).sum + matched.length > cap) return None
-    val marked = touched.map { f =>
-      val add = byFile(DeltaLikeTable.fileNameOf(f.path))
+    if (touched.map(_._2.deletedRows.length).sum + matched.length > cap) return None
+    val marked = touched.map { case (uri, f) =>
+      val add = rowsByUri(uri)
       f.copy(
         numRecords = f.numRecords - add.length,
         nullCounts = Map.empty, // live subset's null counts are unknown
         deletedRows = (f.deletedRows ++ add).sorted)
     }.filter(_.numRecords > 0)
-    Some((matchedScan, touched, marked, matched.length))
+    Some((matchedScan, touched.map(_._2), marked, matched.length))
   }
 
-  /** Inline-DV delete; None when the match count exceeds the cap. */
+  /** Inline-DV delete; None when [[markDeleted]] declines. */
   private def deleteViaVectors(condition: Column, snap: Snapshot): Option[Long] =
     markDeleted("delete", condition, snap).map { case (_, touched, marked, n) =>
       if (n > 0)
@@ -137,39 +146,42 @@ final class DeltaLikeTable private (
     * pass over the touched files).
     */
   def update(condition: Column, set: Map[String, Column]): Long = {
-    val snap0 = log.snapshot()
-    requireDeterministic(condition, "UPDATE", snap0)
+    val snap = log.snapshot()
+    requireDeterministic(condition, "UPDATE", snap)
     require(set.nonEmpty, "UPDATE needs at least one assignment")
-    set.keys.foreach(c => require(snap0.schema.fieldNames.contains(c),
+    set.keys.foreach(c => require(snap.schema.fieldNames.contains(c),
       s"unknown column '$c' in UPDATE"))
-    set.keys.foreach(c => require(!snap0.generatedColumns.contains(c),
+    set.keys.foreach(c => require(!snap.generatedColumns.contains(c),
       s"cannot UPDATE generated column '$c' directly: it is always " +
-        s"recomputed as ${snap0.generatedColumns.getOrElse(c, "")}"))
-    if (snap0.deletionVectors) {
-      updateViaVectors(condition, set, snap0) match {
+        s"recomputed as ${snap.generatedColumns.getOrElse(c, "")}"))
+    if (snap.deletionVectors) {
+      updateViaVectors(condition, set, snap) match {
         case Some(n) => return n
         case None    => ()
       }
     }
-    rewriteTouched("UPDATE",
-      touchFilter = condition,
-      rewrite = rows => {
-        val cols = snap0.schema.fieldNames.toSeq.map { c =>
-          set.get(c) match {
-            case Some(v) =>
-              when(coalesce(condition, lit(false)), v)
-                .otherwise(col(c)).cast(snap0.schema(c).dataType).as(c)
-            case None => col(c)
-          }
-        }
-        rows.select(cols: _*)
-      })
+    val scan = tagged(snap, DeltaLikeTable.FileCol, None)
+    val touched = DeltaLikeTable.touchedFiles(snap, "UPDATE", scan.where(condition))
+    if (touched.isEmpty) return 0L
+    val cols = snap.schema.fieldNames.toSeq.map { c =>
+      set.get(c) match {
+        case Some(v) =>
+          when(coalesce(condition, lit(false)), v)
+            .otherwise(col(c)).cast(snap.schema(c).dataType).as(c)
+        case None => col(c)
+      }
+    }
+    val rewritten = DeltaLikeTable.filterToFiles(scan, touched)
+      .drop(DeltaLikeTable.FileCol).select(cols: _*)
+    val adds = DeltaLikeTable.rewriteFiles(log, snap, "UPDATE", touched.map(_._2),
+      DeltaLikeTable.checked(rewritten, snap))
+    touched.map(_._2.numRecords).sum - adds.map(_.numRecords).sum
   }
 
   /** DV-backed UPDATE: soft-delete the matched rows and append ONLY
     * their rewritten versions — updating 3 rows in a 1 GB file writes a
     * 3-row file plus a metadata exclusion, never a 1 GB rewrite. None
-    * when the match count exceeds the inline cap (→ rewrite path).
+    * when [[markDeleted]] declines (→ rewrite path).
     */
   private def updateViaVectors(
       condition: Column,
@@ -184,18 +196,8 @@ final class DeltaLikeTable private (
             case None    => col(c)
           }
         }
-        val rewritten = DeltaLikeTable.regenerate(
-          matchedScan.select(outCols: _*), snap.generatedColumns)
-        DeltaLikeTable.enforceConstraints(rewritten, snap.constraints)
-        val newAdds = DeltaLikeTable.stageFiles(rewritten, snap.tableRoot,
-          snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
-        try DeltaLikeTable.commitRewrite(log, snap.version,
-          touched.map(f => RemoveFile(f.path)) ++ marked ++ newAdds :+
-            CommitInfo("UPDATE", System.currentTimeMillis()),
-          touched.map(_.path).toSet)
-        catch {
-          case e: Throwable => DeltaLikeTable.discardStaged(path, newAdds); throw e
-        }
+        DeltaLikeTable.rewriteFiles(log, snap, "UPDATE", touched,
+          DeltaLikeTable.checked(matchedScan.select(outCols: _*), snap), marked)
       }
       0L // mirrors the rewrite path's removed − added = 0 for pure updates
     }
@@ -223,54 +225,6 @@ final class DeltaLikeTable private (
       s"$op condition must be deterministic: it is evaluated more than once " +
         "(file/row-match detection, then the rewrite), so non-deterministic " +
         "predicates would lose or duplicate rows")
-  }
-
-  /** Shared DELETE/UPDATE engine: find files containing a row matching
-    * `touchFilter`, rewrite those files through `rewrite`, commit
-    * remove+add as one version. Returns removed − added row counts.
-    */
-  private def rewriteTouched(
-      operation: String,
-      touchFilter: Column,
-      rewrite: DataFrame => DataFrame): Long = {
-    val snap = log.snapshot()
-    val scanBase = DeltaLikeTable.readSnapshotWithMeta(
-      spark, snap, Some(DeltaLikeTable.FileCol), None)
-    // honor a relation alias so SQL conditions like t.x resolve
-    val scan = tableAlias.fold(scanBase)(scanBase.as(_))
-    val touchedAbs = scan.where(touchFilter)
-      .select(col(DeltaLikeTable.FileCol)).distinct()
-      .collect().map(_.getString(0)).filter(_ != null).toSet
-    if (touchedAbs.isEmpty) return 0L
-    val touchedRel = MergeBuilder.resolveRelative(snap, touchedAbs)
-    // every scanned file URI must resolve to exactly one log entry; a
-    // partial resolution would rewrite rows WITHOUT removing their old
-    // file — silent duplication
-    require(touchedRel.size == touchedAbs.size,
-      s"$operation resolved ${touchedRel.size} of ${touchedAbs.size} touched files")
-    val relSet = touchedRel.toSet
-    val touchedFiles = snap.files.filter(f => relSet.contains(f.path))
-
-    val touchedRows = MergeBuilder.filterToFiles(scan, touchedAbs)
-      .drop(DeltaLikeTable.FileCol)
-    val rewritten0 = rewrite(touchedRows)
-    // DELETE keeps a subset of already-valid rows; UPDATE can violate
-    val rewritten =
-      if (operation == "UPDATE")
-        DeltaLikeTable.regenerate(rewritten0, snap.generatedColumns)
-      else rewritten0
-    if (operation == "UPDATE")
-      DeltaLikeTable.enforceConstraints(rewritten, snap.constraints)
-    val adds = DeltaLikeTable.stageFiles(rewritten, snap.tableRoot,
-      snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
-    try DeltaLikeTable.commitRewrite(log, snap.version,
-      touchedRel.map(RemoveFile(_)) ++ adds :+
-        CommitInfo(operation, System.currentTimeMillis()),
-      relSet)
-    catch {
-      case e: Throwable => DeltaLikeTable.discardStaged(path, adds); throw e
-    }
-    touchedFiles.map(_.numRecords).sum - adds.map(_.numRecords).sum
   }
 
   /** Version history (version, operation, timestampMs). */
@@ -356,21 +310,14 @@ final class DeltaLikeTable private (
           .sortWithinPartitions(zc)
           .drop(zc)
       }
-    val adds = DeltaLikeTable.stageFiles(compacted, path,
-      snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
     // compaction is a rewrite like any other: rebase over concurrent
     // commits that touched disjoint files (an OPTIMIZE WHERE on the hot
     // partition must not lose to a MERGE on a cold one)
-    try DeltaLikeTable.commitRewrite(log, snap.version,
-      selected.map(f => RemoveFile(f.path)) ++ adds :+
-        CommitInfo((if (zorderBy.isEmpty) "OPTIMIZE"
-          else s"OPTIMIZE ZORDER BY (${zorderBy.mkString(",")})") +
-          where.fold("")(w => s" WHERE $w"),
-          System.currentTimeMillis()),
-      selected.map(_.path).toSet)
-    catch {
-      case e: Throwable => DeltaLikeTable.discardStaged(path, adds); throw e
-    }
+    DeltaLikeTable.rewriteFiles(log, snap,
+      (if (zorderBy.isEmpty) "OPTIMIZE"
+        else s"OPTIMIZE ZORDER BY (${zorderBy.mkString(",")})") +
+        where.fold("")(w => s" WHERE $w"),
+      selected, compacted)
     this
   }
 
@@ -400,9 +347,7 @@ final class DeltaLikeTable private (
       snap.copy(files = candidates)).repartition(target)
     val adds = DeltaLikeTable.stageFiles(compacted, path,
       snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
-    // operation name MUST start with "OPTIMIZE": the change feed, the
-    // incremental reader, and the streaming source all classify
-    // data-neutral rewrites by that prefix — a differently-named
+    // the operation name must satisfy CommitInfo.isDataNeutral, or the
     // compaction would surface as spurious row-level changes
     try log.commit(snap.version + 1,
       candidates.map(f => RemoveFile(f.path)) ++ adds :+
@@ -744,12 +689,8 @@ final class DeltaLikeTable private (
     val snap = log.snapshot()
     val dir = s"$path/_symlink_format_manifest"
     log.io.mkdirs(dir)
-    val entries = snap.filePaths.map { p =>
-      if (new org.apache.hadoop.fs.Path(p).toUri.getScheme == null)
-        Paths.get(p).toAbsolutePath.toString
-      else p
-    }
-    log.io.writeString(s"$dir/manifest", entries.mkString("", "\n", "\n"))
+    log.io.writeString(s"$dir/manifest",
+      snap.filePaths.map(DeltaLog.absolutePath).mkString("", "\n", "\n"))
   }
 
   /** SHALLOW CLONE: a new table at `target` whose version 0 references
@@ -775,10 +716,7 @@ final class DeltaLikeTable private (
         "values derive from directory layout under the table root)")
     val tlog = DeltaLog.forPath(target)
     require(!tlog.exists, s"clone target is already a table: $target")
-    val srcRoot =
-      if (new org.apache.hadoop.fs.Path(path).toUri.getScheme == null)
-        Paths.get(path).toAbsolutePath.toString
-      else path
+    val srcRoot = DeltaLog.absolutePath(path)
     val refs = snap.files.map(f =>
       f.copy(path = DeltaLog.resolvePath(srcRoot, f.path)))
     tlog.commit(0L,
@@ -954,14 +892,8 @@ object DeltaLikeTable {
     // expression before anything stages — silent divergence between
     // stored and declared values is the failure mode this exists to
     // prevent.
-    val effectiveGenerated: Map[String, String] =
-      if (mode == "append" && prev.nonEmpty) {
-        require(generatedColumns.isEmpty ||
-          generatedColumns == prev.get.generatedColumns,
-          s"append with different generated columns: table has " +
-            s"${prev.get.generatedColumns}, write asked $generatedColumns")
-        prev.get.generatedColumns
-      } else generatedColumns
+    val effectiveGenerated =
+      sticky("generated columns", mode, prev, generatedColumns)(_.generatedColumns)
     effectiveGenerated.foreach { case (c, sql) =>
       val refs = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
         .parseExpression(sql).collect {
@@ -1029,6 +961,21 @@ object DeltaLikeTable {
       clusterBy, log, prev)
   }
 
+  /** A sticky table property (partitioning, bloom filter columns,
+    * generated columns, clustering): a create or overwrite declares
+    * `asked`; an append inherits the table's value and may re-state it
+    * but never change it.
+    */
+  private def sticky[T <: Iterable[_]](
+      name: String, mode: String, prev: Option[Snapshot], asked: T)(
+      current: Snapshot => T): T = prev match {
+    case Some(p) if mode == "append" =>
+      require(asked.isEmpty || asked == current(p),
+        s"append with different $name: table has ${current(p)}, write asked $asked")
+      current(p)
+    case _ => asked
+  }
+
   private def writeResolved(
       df: DataFrame,
       path: String,
@@ -1077,15 +1024,8 @@ object DeltaLikeTable {
         } ++ df.schema.fields.filterNot(f => existing(f.name)).map(_.copy(nullable = true)))
       case _ => df.schema
     }
-    // partitioning is a table property: appends inherit it, overwrite may
-    // re-declare it
     val effectiveParts =
-      if (mode == "append" && prev.nonEmpty) {
-        require(partitionBy.isEmpty || partitionBy == prev.get.partitionColumns,
-          s"append with different partitioning: table has " +
-            s"${prev.get.partitionColumns}, write asked $partitionBy")
-        prev.get.partitionColumns
-      } else partitionBy
+      sticky("partitioning", mode, prev, partitionBy)(_.partitionColumns)
     // widened columns are cast UP before staging so every new file
     // carries the committed (wide) physical type; only pre-evolution
     // files need read-time promotion
@@ -1102,16 +1042,8 @@ object DeltaLikeTable {
     }
     bloomFilterColumns.foreach(c => require(df.columns.contains(c),
       s"bloom filter column '$c' not in schema"))
-    // sticky table property: declared at creation/overwrite, inherited by
-    // appends (which may not silently change it)
-    val effectiveBlooms =
-      if (mode == "append" && prev.nonEmpty) {
-        require(bloomFilterColumns.isEmpty ||
-          bloomFilterColumns == prev.get.bloomFilterColumns,
-          s"append with different bloom filter columns: table has " +
-            s"${prev.get.bloomFilterColumns}, write asked $bloomFilterColumns")
-        prev.get.bloomFilterColumns
-      } else bloomFilterColumns
+    val effectiveBlooms = sticky("bloom filter columns", mode, prev,
+      bloomFilterColumns)(_.bloomFilterColumns)
     // CHECK constraints survive overwrite (dropConstraint removes them)
     // and gate every batch before anything is staged
     val effectiveConstraints = prev.map(_.constraints).getOrElse(Map.empty)
@@ -1135,14 +1067,8 @@ object DeltaLikeTable {
     // clustered writes (liquid-clustering-lite): a sticky CLUSTER BY
     // z-orders every batch AT WRITE TIME, so multi-dimension data
     // skipping works from the first commit without waiting for an
-    // OPTIMIZE ZORDER pass. Appends inherit; overwrite redeclares.
-    val effectiveCluster: Seq[String] =
-      if (mode == "append" && prev.nonEmpty) {
-        require(clusterBy.isEmpty || clusterBy == prev.get.clusterBy,
-          s"append with different clustering: table has " +
-            s"${prev.get.clusterBy}, write asked $clusterBy")
-        prev.get.clusterBy
-      } else clusterBy
+    // OPTIMIZE ZORDER pass.
+    val effectiveCluster = sticky("clustering", mode, prev, clusterBy)(_.clusterBy)
     effectiveCluster.foreach { c =>
       require(committedSchema.fieldNames.contains(c),
         s"cluster column '$c' not in schema")
@@ -1266,30 +1192,33 @@ object DeltaLikeTable {
   private[tables] def AutoCompactMinFiles: Int =
     Integer.getInteger("graft.autoCompact.minFiles", 8)
 
+  /** Rows a rewrite produced, made valid or rejected: every
+    * generated-column expression is re-applied over the final values
+    * (identity on rows that already satisfy it — whatever a clause chain
+    * produced, the stored value of a generated column is ALWAYS its
+    * expression of the stored inputs, Delta's UPDATE-recomputes
+    * behavior), then [[enforceConstraints]] gates the result. MERGE,
+    * UPDATE and DV-UPDATE go through here; DELETE and OPTIMIZE keep rows
+    * that are already valid.
+    */
+  private[tables] def checked(rows: DataFrame, snap: Snapshot): DataFrame = {
+    val out =
+      if (snap.generatedColumns.isEmpty) rows
+      else rows.select(rows.schema.fieldNames.toSeq.map { c =>
+        snap.generatedColumns.get(c) match {
+          case Some(sql) => expr(sql).cast(rows.schema(c).dataType).as(c)
+          case None      => col(c)
+        }
+      }: _*)
+    enforceConstraints(out, snap.constraints)
+    out
+  }
+
   /** Reject the batch if any row violates any CHECK constraint. One
     * action over the BATCH (not the table); reports the violated
     * constraint by name. Runs before staging, so a bad batch writes
     * nothing.
     */
-  /** Re-apply every generated-column expression over the (final) row
-    * values — identity on rows that already satisfy the invariant, and
-    * the universal enforcement point for rewrite paths (UPDATE, MERGE,
-    * DV-UPDATE): whatever the clause chain produced, the stored value of
-    * a generated column is ALWAYS its expression of the stored inputs.
-    * This is Delta's UPDATE-recomputes-generated-columns behavior,
-    * applied uniformly.
-    */
-  private[tables] def regenerate(
-      df: DataFrame,
-      generated: Map[String, String]): DataFrame =
-    if (generated.isEmpty) df
-    else df.select(df.schema.fieldNames.toSeq.map { c =>
-      generated.get(c) match {
-        case Some(sql) => expr(sql).cast(df.schema(c).dataType).as(c)
-        case None      => col(c)
-      }
-    }: _*)
-
   private[tables] def enforceConstraints(
       df: DataFrame,
       constraints: Map[String, String]): Unit = {
@@ -1333,19 +1262,19 @@ object DeltaLikeTable {
     * rebases cleanly and the result equals some serial order. Like
     * Delta under WriteSerializable, a concurrent append whose rows
     * WOULD have matched this transaction's predicate is not a conflict:
-    * the rewrite serializes before it. Schema-evolving merges carry a
-    * MetaData action of their own and fail fast (`rebaseable=false`).
+    * the rewrite serializes before it. A transaction carrying a MetaData
+    * action of its own (a schema-evolving merge) fails fast instead.
     */
   private[tables] def commitRewrite(
       log: DeltaLog,
       baseVersion: Long,
       actions: Seq[Action],
       touchedRel: Set[String],
-      rebaseable: Boolean = true,
       maxAttempts: Int = 20): Unit = {
     val hook = preRewriteCommitHook
     preRewriteCommitHook = () => ()
     hook()
+    val rebaseable = !actions.exists(_.isInstanceOf[MetaData])
     var version = baseVersion + 1
     var attempt = 0
     while (true) {
@@ -1368,6 +1297,89 @@ object DeltaLikeTable {
           version = head + 1
       }
     }
+  }
+
+  /** Above this many touched files, [[filterToFiles]] filters via a
+    * broadcast semi-join instead of an IN-list literal.
+    */
+  private[tables] val InListFileThreshold = 1000
+
+  /** The files of `snap` holding a row of `rows` (a [[FileCol]]-tagged
+    * scan of `snap`), found with one distinct collect and resolved by
+    * [[resolveScanned]]: the first step of every copy-on-write statement.
+    */
+  private[tables] def touchedFiles(
+      snap: Snapshot, op: String, rows: DataFrame): Seq[(String, AddFile)] =
+    resolveScanned(snap, op, rows.select(col(FileCol)).distinct()
+      .collect().map(_.getString(0)).filter(_ != null).toSet)
+
+  /** Each scanned `_metadata.file_path` URI paired with its log entry,
+    * in log order. The match is on the decoded filesystem path (the scan
+    * renders `file:/t/k=a%2520b/…` for the log's `k=a%20b/…`), against
+    * every active file relative or absolute (shallow clones reference
+    * their source by absolute path) — a set intersection, O(files). Every
+    * URI must resolve: a partial resolution would rewrite rows WITHOUT
+    * removing their old file, silent duplication.
+    */
+  private[tables] def resolveScanned(
+      snap: Snapshot, op: String, uris: Set[String]): Seq[(String, AddFile)] = {
+    val byPath = uris.map(u => new java.net.URI(u).getPath -> u).toMap
+    def fsPath(p: String): String = {
+      val uri = new org.apache.hadoop.fs.Path(p).toUri
+      if (uri.getScheme == null) DeltaLog.absolutePath(p) else uri.getPath
+    }
+    val hits = snap.files.flatMap(f =>
+      byPath.get(fsPath(DeltaLog.resolvePath(snap.tableRoot, f.path))).map(_ -> f))
+    require(hits.size == uris.size,
+      s"$op resolved ${hits.size} of ${uris.size} touched files")
+    hits
+  }
+
+  /** Restrict a FileCol-tagged scan to the touched files. A small set
+    * filters with an IN-list (pushable to the scan); past the threshold
+    * an IN-list literal would be a multi-MB expression at 100 TB file
+    * counts, so switch to a broadcast semi-join on the file-path
+    * metadata column — same pruning, plan-sized metadata.
+    */
+  private[tables] def filterToFiles(
+      target: DataFrame, touched: Seq[(String, AddFile)]): DataFrame = {
+    val uris = touched.map(_._1)
+    if (uris.isEmpty) target.where(lit(false))
+    else if (uris.size <= InListFileThreshold)
+      target.where(col(FileCol).isin(uris: _*))
+    else {
+      val touchedDf = target.sparkSession.createDataset(uris)(
+        org.apache.spark.sql.Encoders.STRING).toDF("__graft_touched_path")
+      target.join(broadcast(touchedDf),
+        col(FileCol) === col("__graft_touched_path"), "left_semi")
+    }
+  }
+
+  /** The copy-on-write commit of MERGE, DELETE, UPDATE and OPTIMIZE:
+    * stage `rows` under the snapshot's layout, commit remove(`touched`)
+    * ++ `extra` ++ the staged files as one version ([[commitRewrite]]),
+    * and delete the staged files if the commit throws. A [[MetaData]] in
+    * `extra` supplies the column mapping the files are staged under.
+    * Returns the staged files.
+    */
+  private[tables] def rewriteFiles(
+      log: DeltaLog,
+      snap: Snapshot,
+      operation: String,
+      touched: Seq[AddFile],
+      rows: DataFrame,
+      extra: Seq[Action] = Seq.empty): Seq[AddFile] = {
+    val mapping = extra.collectFirst { case m: MetaData => m.columnMapping }
+    val adds = stageFiles(rows, snap.tableRoot, snap.partitionColumns,
+      snap.bloomFilterColumns, mapping.getOrElse(snap.columnMapping))
+    try commitRewrite(log, snap.version,
+      touched.map(f => RemoveFile(f.path)) ++ extra ++ adds :+
+        CommitInfo(operation, System.currentTimeMillis()),
+      touched.map(_.path).toSet)
+    catch {
+      case e: Throwable => discardStaged(snap.tableRoot, adds); throw e
+    }
+    adds
   }
 
   /** Delete data files staged for a commit that will never happen. Never
@@ -1434,9 +1446,11 @@ object DeltaLikeTable {
       }
       toLogical(df, snap, extras)
     } else {
-      // exclusion set: (file name, physical row index). File names carry
-      // Spark's per-task UUID, so they are unique table-wide; the set is
-      // bounded by the inline-DV cap and broadcasts.
+      // exclusion set: (file name, physical row index), bounded by the
+      // inline-DV cap and broadcast. Sound because no file carrying a
+      // vector shares its name with another active file: staged files
+      // get table-wide unique names, and markDeleted rewrites instead of
+      // marking a file whose name is shared (a converted layout).
       val idxC = rowIdxCol.getOrElse("__graft_dv_idx")
       val nameC = "__graft_dv_fname"
       df = df
@@ -1662,16 +1676,25 @@ object DeltaLikeTable {
       .sorted
     if (parts.isEmpty) { io.deleteRecursively(stageDir); return Seq.empty }
 
+    // Spark names a task's files by task and job only, so one task
+    // writing two partition directories gives both files the same name;
+    // each file moves in under a name unique table-wide instead (the
+    // deletion-vector read matches rows by file name)
+    val uid = UUID.randomUUID().toString
+    val named = parts.zipWithIndex.map { case (rel, i) =>
+      val slash = rel.lastIndexOf('/')
+      val ext = rel.substring(rel.indexOf('.', slash))
+      rel -> f"${rel.substring(0, slash + 1)}part-$i%05d-$uid$ext"
+    }
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val statted = parts.map { rel =>
-      FooterStats.forFile(hadoopConf, s"$stageDir/$rel", rel,
+    val statted = named.map { case (rel, dest) =>
+      FooterStats.forFile(hadoopConf, s"$stageDir/$rel", dest,
         io.size(s"$stageDir/$rel"), df.schema, partitionBy)
     }
-    parts.foreach { rel =>
-      val target = s"$tableRoot/$rel"
-      val slash = rel.lastIndexOf('/')
-      if (slash > 0) io.mkdirs(s"$tableRoot/${rel.substring(0, slash)}")
-      io.rename(s"$stageDir/$rel", target)
+    named.foreach { case (rel, dest) =>
+      val slash = dest.lastIndexOf('/')
+      if (slash > 0) io.mkdirs(s"$tableRoot/${dest.substring(0, slash)}")
+      io.rename(s"$stageDir/$rel", s"$tableRoot/$dest")
     }
     io.deleteRecursively(stageDir)
     if (columnMapping.isEmpty) statted

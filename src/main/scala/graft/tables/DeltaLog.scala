@@ -70,6 +70,15 @@ final case class RemoveFile(path: String) extends Action
 final case class CommitInfo(operation: String, timestampMs: Long)
     extends Action
 
+object CommitInfo {
+  /** A commit whose operation starts with "OPTIMIZE" (compaction, ZORDER,
+    * auto-compaction) moves rows between files without changing any: the
+    * change feed, the incremental reader and the streaming source read
+    * it as carrying no row-level change.
+    */
+  def isDataNeutral(operation: String): Boolean = operation.startsWith("OPTIMIZE")
+}
+
 /** Idempotent-writer marker (Delta's SetTransaction): records that
   * application `appId` has committed through its own version counter
   * `txnVersion`. The snapshot keeps the max per appId, so an
@@ -321,6 +330,14 @@ object DeltaLog {
 
   def resolvePath(root: String, p: String): String =
     if (isAbsolute(p)) p else s"$root/$p"
+
+  /** `p` as an absolute path: a scheme-qualified path as given, a local
+    * one resolved against the working directory.
+    */
+  def absolutePath(p: String): String =
+    if (new org.apache.hadoop.fs.Path(p).toUri.getScheme == null)
+      java.nio.file.Paths.get(p).toAbsolutePath.toString
+    else p
   private val VersionFile = "([0-9]{8})\\.json".r
   private val CheckpointFile = "([0-9]{8})\\.checkpoint\\.json".r
 

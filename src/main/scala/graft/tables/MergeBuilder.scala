@@ -23,55 +23,6 @@ import org.apache.spark.sql.functions._
   *     nondeterministic otherwise).
   *  3. *Commit*: remove(touched) + add(new files) as one log version.
   */
-object MergeBuilder {
-  /** Above this many touched files, phase 1 filters via broadcast
-    * semi-join instead of an IN-list literal.
-    */
-  private[tables] val InListFileThreshold = 1000
-
-  /** Resolve `_metadata.file_path` URIs back to log-relative paths via a
-    * set intersection (O(files)), not a suffix scan (O(files × touched)).
-    */
-  private[tables] def resolveRelative(
-      snap: Snapshot, touchedAbs: Set[String]): Seq[String] = {
-    // normalize every active file (relative OR absolute — shallow clones
-    // reference their source by absolute path) to its filesystem path,
-    // then match the scan's `_metadata.file_path` URIs against that;
-    // prefix-stripping the table root would silently miss out-of-root
-    // references
-    def fsPath(p: String): String = {
-      val uri = new org.apache.hadoop.fs.Path(p).toUri
-      if (uri.getScheme == null)
-        java.nio.file.Paths.get(p).toAbsolutePath.toString
-      else uri.getPath
-    }
-    val touchedPaths = touchedAbs.map(abs => new java.net.URI(abs).getPath)
-    snap.files
-      .filter(f => touchedPaths.contains(
-        fsPath(DeltaLog.resolvePath(snap.tableRoot, f.path))))
-      .map(_.path)
-  }
-
-  /** Restrict a FileCol-tagged scan to the touched files. A small set
-    * filters with an IN-list (pushable to the scan); past the threshold
-    * an IN-list literal would be a multi-MB expression at 100 TB file
-    * counts, so switch to a broadcast semi-join on the file-path
-    * metadata column — same pruning, plan-sized metadata.
-    */
-  private[tables] def filterToFiles(
-      target: DataFrame, touchedAbs: Set[String]): DataFrame =
-    if (touchedAbs.isEmpty) target.where(lit(false))
-    else if (touchedAbs.size <= InListFileThreshold)
-      target.where(col(DeltaLikeTable.FileCol).isin(touchedAbs.toSeq: _*))
-    else {
-      import org.apache.spark.sql.Encoders
-      val touchedDf = target.sparkSession.createDataset(touchedAbs.toSeq)(Encoders.STRING)
-        .toDF("__graft_touched_path")
-      target.join(org.apache.spark.sql.functions.broadcast(touchedDf),
-        col(DeltaLikeTable.FileCol) === col("__graft_touched_path"), "left_semi")
-    }
-}
-
 final class MergeBuilder private[tables] (
     table: DeltaLikeTable,
     targetAlias: Option[String],
@@ -195,27 +146,21 @@ final class MergeBuilder private[tables] (
 
     // phase 1: touched files — files with matched rows, plus (when
     // by-source clauses exist) files with unmatched rows some by-source
-    // condition accepts. An unconditional by-source DELETE therefore
-    // touches every file containing an unmatched row — that rewrite
-    // footprint is inherent to the clause, not a pruning miss.
-    val matchedTouched = target.join(src, condition, "left_semi")
-      .select(col(DeltaLikeTable.FileCol)).distinct()
-      .collect().map(_.getString(0)).filter(_ != null).toSet
-    val bySourceTouched: Set[String] =
-      if (bySourceClauses.isEmpty) Set.empty
-      else target.join(src, condition, "left_anti")
-        .where(bySourceClauses.map(clauseGate).reduce(_ || _))
-        .select(col(DeltaLikeTable.FileCol)).distinct()
-        .collect().map(_.getString(0)).filter(_ != null).toSet
-    val touchedAbs = matchedTouched ++ bySourceTouched
-    val touchedRel = MergeBuilder.resolveRelative(snap, touchedAbs)
+    // condition accepts, in one collect. An unconditional by-source
+    // DELETE therefore touches every file containing an unmatched row —
+    // that rewrite footprint is inherent to the clause, not a pruning miss.
+    val matchedRows = target.join(src, condition, "left_semi")
+    val touched = DeltaLikeTable.touchedFiles(snap, "MERGE",
+      if (bySourceClauses.isEmpty) matchedRows
+      else matchedRows.union(target.join(src, condition, "left_anti")
+        .where(bySourceClauses.map(clauseGate).reduce(_ || _))))
 
     // rows that can possibly match live only in touched files
-    val touchedRows = MergeBuilder.filterToFiles(target, touchedAbs)
+    val touchedRows = DeltaLikeTable.filterToFiles(target, touched)
 
     // phase 2a: cardinality guard. (file, row_index) identifies a physical
     // target row uniquely without caching or driver-side ids.
-    if (matchedClauses.nonEmpty && touchedAbs.nonEmpty) {
+    if (matchedClauses.nonEmpty && touched.nonEmpty) {
       val rowId = concat_ws("#",
         col(DeltaLikeTable.FileCol), col(rowIdxCol))
       val dup = touchedRows.withColumn("__graft_rid", rowId)
@@ -233,12 +178,11 @@ final class MergeBuilder private[tables] (
     val isSourceOnly = col(tPresent).isNull && col(sPresent).isNotNull
     val isTargetOnly = col(tPresent).isNotNull && col(sPresent).isNull
 
-    def cc(c: Clause): Column = clauseGate(c)
     def chain(seed: Column)(f: (Column, Clause, Column) => Column): Column = {
       var e = seed
-      matchedClauses.foreach(cl => e = f(e, cl, isMatched && cc(cl)))
-      notMatchedClauses.foreach(cl => e = f(e, cl, isSourceOnly && cc(cl)))
-      bySourceClauses.foreach(cl => e = f(e, cl, isTargetOnly && cc(cl)))
+      matchedClauses.foreach(cl => e = f(e, cl, isMatched && clauseGate(cl)))
+      notMatchedClauses.foreach(cl => e = f(e, cl, isSourceOnly && clauseGate(cl)))
+      bySourceClauses.foreach(cl => e = f(e, cl, isTargetOnly && clauseGate(cl)))
       e
     }
 
@@ -266,34 +210,22 @@ final class MergeBuilder private[tables] (
     // generated columns are recomputed over the FINAL values, whatever
     // the clause chain produced (insert without them, explicit set, ...)
     // — the stored invariant survives every merge shape
-    val rewritten = DeltaLikeTable.regenerate(
-      joined.where(keepExpr).select(outCols: _*),
-      snap.generatedColumns)
+    val rewritten = DeltaLikeTable.checked(
+      joined.where(keepExpr).select(outCols: _*), snap)
 
     // phase 3: stage new files + atomic log commit (partition layout of
-    // the table is preserved through the rewrite)
-    DeltaLikeTable.enforceConstraints(rewritten, snap.constraints)
-    // evolved columns get fresh physical names when a mapping is active
-    // (same no-resurrection rule as the write path)
-    val mergedMapping =
-      if (snap.columnMapping.isEmpty || newFields.isEmpty) snap.columnMapping
-      else snap.columnMapping ++ newFields.map(f =>
-        f.name -> DeltaLikeTable.freshPhysicalName(f.name))
-    val adds = DeltaLikeTable.stageFiles(rewritten, snap.tableRoot,
-      snap.partitionColumns, snap.bloomFilterColumns, mergedMapping)
+    // the table is preserved through the rewrite). Evolved columns get
+    // fresh physical names when a mapping is active (same
+    // no-resurrection rule as the write path); the MetaData action that
+    // records them makes the commit fail fast instead of rebasing.
     val meta =
       if (newFields.isEmpty) Seq.empty
       else Seq(snap.toMetaData(schemaDdl = evolved.toDDL,
-        columnMapping = mergedMapping))
-    // schema-evolving merges commit MetaData and cannot rebase; plain
-    // merges rebase over concurrent commits that touch disjoint files
-    try DeltaLikeTable.commitRewrite(table.log, snap.version,
-      meta ++ touchedRel.map(RemoveFile(_)) ++ adds :+
-        CommitInfo("MERGE", System.currentTimeMillis()),
-      touchedRel.toSet, rebaseable = meta.isEmpty)
-    catch {
-      case e: Throwable =>
-        DeltaLikeTable.discardStaged(snap.tableRoot, adds); throw e
-    }
+        columnMapping =
+          if (snap.columnMapping.isEmpty) snap.columnMapping
+          else snap.columnMapping ++ newFields.map(f =>
+            f.name -> DeltaLikeTable.freshPhysicalName(f.name))))
+    DeltaLikeTable.rewriteFiles(table.log, snap, "MERGE",
+      touched.map(_._2), rewritten, meta)
   }
 }

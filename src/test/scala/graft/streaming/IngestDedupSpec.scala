@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 import graft.tables.DeltaLikeTable
 
@@ -19,11 +18,13 @@ import graft.tables.DeltaLikeTable
 class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("ingest-dedup-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private val baseA = "alpha beta gamma delta epsilon zeta eta theta iota " +
     "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
@@ -35,8 +36,8 @@ class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stream batches dedup against seed corpus, earlier batches, and replays") {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val tablePath = Files.createTempDirectory("ingest_tbl").toString
-    val ckpt = Files.createTempDirectory("ingest_ckpt").toString
+    val tablePath = tempDirs("ingest_tbl")
+    val ckpt = tempDirs("ingest_ckpt")
 
     // seed corpus: one doc
     DeltaLikeTable.write(
@@ -134,8 +135,8 @@ class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     "corpus text — and a sig-committed/doc-missing replay recovers") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.functions.{col, lit}
-    val docPath = Files.createTempDirectory("ingest_idx_tbl").toString
-    val sigPath = Files.createTempDirectory("ingest_idx_sig").toString
+    val docPath = tempDirs("ingest_idx_tbl")
+    val sigPath = tempDirs("ingest_idx_sig")
 
     val seed = Seq((1L, baseA)).toDF("doc_id", "text")
     DeltaLikeTable.write(seed, docPath)
@@ -260,8 +261,8 @@ class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     "table, and crash replays recover at every commit boundary") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.functions.{col, lit}
-    val docPath = Files.createTempDirectory("ingest_band_tbl").toString
-    val idxPath = Files.createTempDirectory("ingest_band_idx").toString
+    val docPath = tempDirs("ingest_band_tbl")
+    val idxPath = tempDirs("ingest_band_idx")
 
     val seed = Seq((1L, baseA)).toDF("doc_id", "text")
     DeltaLikeTable.write(seed, docPath)

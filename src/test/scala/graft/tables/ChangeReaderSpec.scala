@@ -1,25 +1,26 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 class ChangeReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("changereader-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("incremental reads deliver each appended row exactly once") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("cdc").toString
+    val path = tempDirs("cdc")
     DeltaLikeTable.write((1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
 
     // consumer loop: track offset, read deltas
@@ -46,7 +47,7 @@ class ChangeReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("OPTIMIZE versions are skipped; rewriting versions are rejected") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("cdc_opt").toString
+    val path = tempDirs("cdc_opt")
     DeltaLikeTable.write((1 to 30).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
     val offset = ChangeReader.latestVersion(path)
     DeltaLikeTable.write((31 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v"),
@@ -69,7 +70,7 @@ class ChangeReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("changeFeed delivers row-level changes across MERGE/DELETE exactly once") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("cdc_feed").toString
+    val path = tempDirs("cdc_feed")
     DeltaLikeTable.write((1 to 5).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
     val t = DeltaLikeTable.forPath(spark, path)
 
@@ -115,8 +116,8 @@ class ChangeReaderSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("incremental aggregate maintenance: netChanges + MERGE tracks the full recompute") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.functions._
-    val corpus = Files.createTempDirectory("cdc_corpus").toString
-    val agg = Files.createTempDirectory("cdc_agg").toString + "/t"
+    val corpus = tempDirs("cdc_corpus")
+    val agg = tempDirs("cdc_agg") + "/t"
 
     // v0 corpus + initial aggregate
     DeltaLikeTable.write(

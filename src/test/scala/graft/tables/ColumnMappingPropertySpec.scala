@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Randomized equivalence: arbitrary interleavings of RENAME COLUMN /
@@ -18,11 +17,13 @@ import graft.core.GraftSession
 class ColumnMappingPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("colmap-prop-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   /** The model: column names + rows as name→value maps (None = null). */
   private case class Model(cols: Vector[String], rows: Vector[Map[String, Long]])
@@ -48,7 +49,7 @@ class ColumnMappingPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("random rename/drop/append/evolve sequences match the model") {
     (1 to 3).foreach { run =>
       val rnd = new scala.util.Random(9000 + run)
-      val path = Files.createTempDirectory(s"cm_prop_$run").toString
+      val path = tempDirs(s"cm_prop_$run")
       var nextCol = 3
       var nextRow = 0
       def freshRows(cols: Vector[String], n: Int): Vector[Map[String, Long]] =

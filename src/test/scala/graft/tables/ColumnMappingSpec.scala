@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Column mapping (Delta-style, name-based): RENAME/DROP COLUMN as
@@ -16,14 +15,16 @@ import graft.core.GraftSession
 class ColumnMappingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("colmap-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDirs(prefix)
 
   test("RENAME COLUMN is metadata-only: same files, new name, old versions intact") {
     val sp = spark; import sp.implicits._

@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Multi-writer behavior of REWRITING commits (MERGE / DELETE / UPDATE):
@@ -23,13 +22,14 @@ import graft.core.GraftSession
 class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("concurrent-rewrite-spec", cores = 4)
   }
   override def afterAll(): Unit = {
     DeltaLikeTable.preRewriteCommitHook = () => ()
-    if (spark != null) spark.stop()
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
   }
 
   /** k-partitioned table, ONE file per k (coalesce(1) before the write),
@@ -38,7 +38,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   private def fresh(): String = {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("conc_rewrite").toString
+    val path = tempDirs("conc_rewrite")
     DeltaLikeTable.write(
       Seq((1, 1L, 10), (1, 2L, 20), (2, 3L, 30), (2, 4L, 40))
         .toDF("k", "id", "n").coalesce(1),
@@ -60,6 +60,20 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
       .execute()
   }
 
+  /** Every data file on disk belongs to some version of the log (removed
+    * files stay for time travel): a transaction that lost the commit race
+    * discarded the files it staged.
+    */
+  private def assertNoTrace(path: String): Unit = {
+    val t = DeltaLikeTable.forPath(spark, path)
+    val referenced = (0L to t.version).flatMap(v => t.log.snapshot(v).files.map(_.path)).toSet
+    val onDisk = new java.io.File(path).listFiles().filter(_.isDirectory)
+      .filter(_.getName.startsWith("k="))
+      .flatMap(d => d.listFiles().map(f => s"${d.getName}/${f.getName}"))
+      .toSet
+    assert(onDisk === referenced)
+  }
+
   test("partition-disjoint concurrent MERGEs both commit, state = serial") {
     val path = fresh()
     // the k=2 merge lands while the k=1 merge is between snapshot and commit
@@ -79,17 +93,9 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // winner's commit stands alone; loser's staged files were discarded —
     // every parquet on disk belongs to v0 or v1 (removed files stay for
     // time travel; nothing unreferenced survives)
-    val t = DeltaLikeTable.forPath(spark, path)
-    assert(t.version === 1)
+    assert(DeltaLikeTable.forPath(spark, path).version === 1)
     assert(state(path) === Seq((1, 1L, 10), (1, 2L, 200), (2, 3L, 30), (2, 4L, 40)))
-    val referenced =
-      t.log.snapshot(0).files.map(_.path).toSet ++
-        t.log.snapshot(1).files.map(_.path).toSet
-    val onDisk = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .filter(_.getName.startsWith("k="))
-      .flatMap(d => d.listFiles().map(f => s"${d.getName}/${f.getName}"))
-      .toSet
-    assert(onDisk === referenced)
+    assertNoTrace(path)
   }
 
   test("DELETE rebases over a partition-disjoint concurrent MERGE") {
@@ -109,6 +115,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
         .update(col("id") === 1L, Map("n" -> org.apache.spark.sql.functions.lit(999)))
     }
     assert(state(path) === Seq((1, 1L, 10), (1, 2L, 200), (2, 3L, 30), (2, 4L, 40)))
+    assertNoTrace(path)
   }
 
   test("OPTIMIZE WHERE rebases over a partition-disjoint concurrent MERGE") {
@@ -132,6 +139,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
         .optimize(targetFiles = 1, zorderBy = Seq.empty, where = Some("k = 1"))
     }
     assert(state(path) === Seq((1, 1L, 100), (1, 2L, 20), (2, 3L, 30), (2, 4L, 40)))
+    assertNoTrace(path)
   }
 
   test("schema-evolving MERGE fails fast on any concurrent commit") {

@@ -1,11 +1,10 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** CONVERT TO DELTALIKE: in-place registration of a plain parquet
@@ -15,15 +14,17 @@ import graft.core.GraftSession
 class ConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("convert-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("plain parquet dir becomes a full-featured table in place") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("convert_flat").toString + "/data"
+    val dir = tempDirs("convert_flat") + "/data"
     (1 to 100).map(i => (i.toLong, s"v$i", i * 2L)).toDF("id", "v", "n")
       .repartition(3).write.parquet(dir)
     val before = new java.io.File(dir).listFiles
@@ -52,7 +53,7 @@ class ConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hidden staging files are invisible to conversion, like plain Spark reads") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("convert_hidden").toString + "/data"
+    val dir = tempDirs("convert_hidden") + "/data"
     (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
       .coalesce(1).write.parquet(dir)
     // an aborted job's leftovers: dot-dir and underscore-dir parquet
@@ -67,7 +68,7 @@ class ConvertSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partitioned layout converts with directory-derived partition values") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("convert_part").toString + "/data"
+    val dir = tempDirs("convert_part") + "/data"
     (1 to 60).map(i => (i.toLong, i % 3, s"v$i")).toDF("id", "k", "v")
       .write.partitionBy("k").parquet(dir)
 

@@ -1,29 +1,30 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 import graft.streaming.EventStream
 
 class DeltaLikeSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("deltalike-sink-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("stream appends land as table versions; replayed batches are skipped") {
     val sp = spark; import sp.implicits._
-    val srcDir = Files.createTempDirectory("sink_src").toString
-    val tablePath = Files.createTempDirectory("sink_table").toString
-    val ckpt = Files.createTempDirectory("sink_ckpt").toString
+    val srcDir = tempDirs("sink_src")
+    val tablePath = tempDirs("sink_table")
+    val ckpt = tempDirs("sink_ckpt")
 
     def writeFile(ids: Range): Unit =
       ids.map(i => (i.toLong,

@@ -1,7 +1,5 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -9,18 +7,21 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 class DeltaLikeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("deltalike-source-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
-  private def tmp(): String = Files.createTempDirectory("dlsource").toString
+  private def tmp(): String = tempDirs("dlsource")
 
   test("format round-trip: write overwrite/append, read latest and versionAsOf") {
     val path = tmp()

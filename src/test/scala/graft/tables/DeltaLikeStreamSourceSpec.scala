@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** The deltalike table as a Structured Streaming source: version-offset
@@ -17,11 +16,13 @@ import graft.core.GraftSession
 class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("deltalike-stream-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def rows(n: Range): DataFrame = {
     val sp = spark; import sp.implicits._
@@ -29,7 +30,7 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream delivers snapshot then appends, each row exactly once") {
-    val path = Files.createTempDirectory("dls").toString
+    val path = tempDirs("dls")
     DeltaLikeTable.write(rows(1 to 20), path)
 
     val q = spark.readStream.format("deltalike").load(path)
@@ -55,7 +56,7 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rewriting commit fails the stream; skipChangeCommits skips it and continues") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("dls_rw").toString
+    val path = tempDirs("dls_rw")
     DeltaLikeTable.write(rows(1 to 10), path)
     val t = DeltaLikeTable.forPath(spark, path)
 
@@ -89,7 +90,7 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("readChangeFeed streams row-level changes, rewriting commits included") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("dls_cdf").toString
+    val path = tempDirs("dls_cdf")
     DeltaLikeTable.write(rows(1 to 5), path)
 
     val q = spark.readStream.format("deltalike")
@@ -120,9 +121,9 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming ETL: table → transform → table, exactly-once across restart") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.functions.col
-    val src = Files.createTempDirectory("etl_src").toString
-    val dst = Files.createTempDirectory("etl_dst").toString
-    val ckpt = Files.createTempDirectory("etl_ckpt").toString
+    val src = tempDirs("etl_src")
+    val dst = tempDirs("etl_dst")
+    val ckpt = tempDirs("etl_ckpt")
     DeltaLikeTable.write(rows(1 to 20), src)
 
     // versioned table → stream → filter/derive → versioned table: the
@@ -153,9 +154,9 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("checkpoint restart resumes from the committed version (no reprocessing)") {
-    val path = Files.createTempDirectory("dls_ck").toString
-    val ckpt = Files.createTempDirectory("dls_ckpt").toString
-    val out = Files.createTempDirectory("dls_out").toString
+    val path = tempDirs("dls_ck")
+    val ckpt = tempDirs("dls_ckpt")
+    val out = tempDirs("dls_out")
     DeltaLikeTable.write(rows(1 to 8), path)
 
     // parquet sink: supports checkpoint recovery AND appends, so any
@@ -188,7 +189,7 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("maxVersionsPerTrigger bounds each micro-batch; backlog drains completely") {
-    val path = Files.createTempDirectory("dls_rate").toString
+    val path = tempDirs("dls_rate")
     DeltaLikeTable.write(rows(1 to 5), path)
 
     val q = spark.readStream.format("deltalike")
@@ -225,7 +226,7 @@ class DeltaLikeStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Trigger.AvailableNow drains everything then terminates") {
-    val path = Files.createTempDirectory("dls_avnow").toString
+    val path = tempDirs("dls_avnow")
     DeltaLikeTable.write(rows(1 to 10), path)
     (0 until 3).foreach(i => DeltaLikeTable.write(
       rows((50 + 5 * i) until (50 + 5 * i + 5)), path, "append"))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Versioned-table semantics: the observable contract of the reference's
@@ -19,14 +20,16 @@ import graft.core.GraftSession
 class DeltaLikeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("deltalike-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def tmpTable(): String =
-    Files.createTempDirectory("deltalike").toString
+    tempDirs("deltalike")
 
   /** Titanic-shaped frame per the reference's DDL
     * (`/root/reference/sparkcode/titanic_example_delta.py:18`).
@@ -500,6 +503,62 @@ class DeltaLikeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.log.snapshot().files.forall(_.deletedRows.isEmpty))
     assert(t.toDF.count() === 996)
     assert(t.toDF.where("id IN (1, 2, 5, 999)").count() === 0)
+  }
+
+  /** One task writing two partition directories gives both files the
+    * same name (`k=1/part-00000-<job>…`, `k=2/part-00000-<job>…`).
+    */
+  private def oneTaskPartitioned(path: String): DeltaLikeTable = {
+    val sp = spark; import sp.implicits._
+    DeltaLikeTable.write(
+      Seq((1, 1L, "a"), (1, 2L, "b"), (2, 3L, "c"), (2, 4L, "d"))
+        .toDF("k", "id", "v").coalesce(1),
+      path, partitionBy = Seq("k"), enableDeletionVectors = true)
+    DeltaLikeTable.forPath(spark, path)
+  }
+
+  private def idsAndValues(df: DataFrame): Set[(Long, String)] =
+    df.select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+
+  test("deletion vectors: DELETE on a one-task partitioned write marks only its own file") {
+    val path = tmpTable()
+    val t = oneTaskPartitioned(path)
+    assert(t.delete("id = 1") === 1)
+    assert(idsAndValues(t.toDF) === Set((2L, "b"), (3L, "c"), (4L, "d")))
+    assert(t.log.snapshot().files.map(_.deletedRows.size).sum === 1)
+    assert(ChangeReader.changeFeed(spark, path, 0)
+      .select("id", "_change_type").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((1L, "delete")))
+  }
+
+  test("deletion vectors: UPDATE on a one-task partitioned write leaves the other partition alone") {
+    val path = tmpTable()
+    val t = oneTaskPartitioned(path)
+    assert(t.update(expr("id = 1"), Map("v" -> lit("A"))) === 0L)
+    assert(idsAndValues(t.toDF) ===
+      Set((1L, "A"), (2L, "b"), (3L, "c"), (4L, "d")))
+    assert(ChangeReader.changeFeed(spark, path, 0)
+      .select("id", "v", "_change_type").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet ===
+      Set((1L, "a", "delete"), (1L, "A", "insert")))
+  }
+
+  test("deletion vectors: a converted layout sharing a file name across partitions deletes by rewrite") {
+    val sp = spark; import sp.implicits._
+    val path = tmpTable() + "/data"
+    Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 2), (4L, "d", 2))
+      .toDF("id", "v", "k").coalesce(1)
+      .write.partitionBy("k").parquet(path)
+    val t = DeltaLikeTable.convert(spark, path, partitionColumns = Seq("k"))
+    val names = t.log.snapshot().files.map(f => f.path.substring(f.path.lastIndexOf('/') + 1))
+    assert(names.size === 2 && names.distinct.size === 1, names)
+    DeltaLikeTable.write(Seq((5L, "e", 3)).toDF("id", "v", "k"), path,
+      mode = "append", enableDeletionVectors = true)
+    assert(t.delete("id = 1") === 1)
+    assert(idsAndValues(t.toDF) === Set((2L, "b"), (3L, "c"), (4L, "d"), (5L, "e")))
+    val snap = t.log.snapshot()
+    assert(snap.files.forall(_.deletedRows.isEmpty), "shared name must take the rewrite path")
+    assert(!snap.files.exists(_.path == "k=1/" + names.head))
   }
 
   test("commit is create-exclusive: double commit of same version fails") {

@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Deletion vectors must be INVISIBLE semantics: a DV-enabled table and
@@ -20,13 +19,15 @@ import graft.core.GraftSession
 class DvEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
   private val Cases = 4
   private val OpsPerCase = 6
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("dv-equivalence", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def rows(r: Range, tag: String): DataFrame = {
     val sp = spark; import sp.implicits._
@@ -43,8 +44,8 @@ class DvEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("random delete/update/append sequences: DV table ≡ rewrite table, incl. CDC") {
     (0 until Cases).foreach { c =>
       val rnd = new scala.util.Random(1000 + c)
-      val dvPath = Files.createTempDirectory(s"dv_eq_dv$c").toString
-      val rwPath = Files.createTempDirectory(s"dv_eq_rw$c").toString
+      val dvPath = tempDirs(s"dv_eq_dv$c")
+      val rwPath = tempDirs(s"dv_eq_rw$c")
       val initial = rows(1 to 200, "v")
       DeltaLikeTable.write(initial.repartition(3), dvPath, enableDeletionVectors = true)
       DeltaLikeTable.write(initial.repartition(3), rwPath)

@@ -1,11 +1,10 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Generated columns (`GENERATED ALWAYS AS`): computed when missing,
@@ -15,15 +14,17 @@ import graft.core.GraftSession
 class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("gencol-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("missing generated column is computed; appends inherit the rule") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_compute").toString
+    val path = tempDirs("gen_compute")
     DeltaLikeTable.write(
       (1 to 10).map(i => (i.toLong, i * 100L)).toDF("id", "amount_cents"),
       path, generatedColumns = Map("amount" -> "CAST(amount_cents AS DOUBLE) / 100.0"))
@@ -39,7 +40,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("supplied values are validated against the expression") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_validate").toString
+    val path = tempDirs("gen_validate")
     DeltaLikeTable.write(
       (1 to 5).map(i => (i.toLong, i * 100L)).toDF("id", "amount_cents"),
       path, generatedColumns = Map("amount" -> "CAST(amount_cents AS DOUBLE) / 100.0"))
@@ -63,7 +64,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("generated partition column: date derived from a timestamp") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_part").toString
+    val path = tempDirs("gen_part")
     val rows = Seq(
       (1L, java.sql.Timestamp.valueOf("2026-01-01 10:00:00")),
       (2L, java.sql.Timestamp.valueOf("2026-01-02 11:30:00")),
@@ -79,7 +80,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("guards: no generated-on-generated, no dangling refs, rename/drop protection") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_guard").toString
+    val path = tempDirs("gen_guard")
     assert(intercept[IllegalArgumentException] {
       DeltaLikeTable.write(
         Seq((1L, 2L)).toDF("id", "v"), path,
@@ -88,11 +89,11 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     assert(intercept[IllegalArgumentException] {
       DeltaLikeTable.write(
-        Seq((1L, 2L)).toDF("id", "v"), Files.createTempDirectory("gen_g2").toString,
+        Seq((1L, 2L)).toDF("id", "v"), tempDirs("gen_g2"),
         generatedColumns = Map("a" -> "missing_col + 1"))
     }.getMessage.contains("unknown column"))
 
-    val p2 = Files.createTempDirectory("gen_guard2").toString
+    val p2 = tempDirs("gen_guard2")
     DeltaLikeTable.write(
       Seq((1L, 2L)).toDF("id", "v"), p2,
       generatedColumns = Map("doubled" -> "v * 2"))
@@ -111,7 +112,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("UPDATE and MERGE keep the generated invariant (recompute, not drift)") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_rewrite").toString
+    val path = tempDirs("gen_rewrite")
     DeltaLikeTable.write(
       Seq((1L, 2L), (2L, 5L)).toDF("id", "v"), path,
       generatedColumns = Map("doubled" -> "v * 2"))
@@ -144,7 +145,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("append omitting a NON-last generated column still lands in order") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_order").toString
+    val path = tempDirs("gen_order")
     // create with columns (id, gen, v) — gen supplied, in the middle
     DeltaLikeTable.write(
       Seq((1L, 4L, 2L)).toDF("id", "gen", "v"), path,
@@ -159,7 +160,7 @@ class GeneratedColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MERGE schema evolution rejects untyped NULL source columns fast") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("gen_nulltype").toString
+    val path = tempDirs("gen_nulltype")
     DeltaLikeTable.write(Seq((1L, "a")).toDF("k", "v"), path)
     val t = DeltaLikeTable.forPath(spark, path)
     val src = Seq((1L, "A")).toDF("k", "v")

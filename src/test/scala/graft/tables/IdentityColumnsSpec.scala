@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 import DeltaLikeTable.IdentityColumn
 
@@ -17,13 +16,15 @@ import DeltaLikeTable.IdentityColumn
 class IdentityColumnsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("identity-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
-  private def tmp(): String = Files.createTempDirectory("identity").toString
+  private def tmp(): String = tempDirs("identity")
 
   test("ALWAYS identity assigns dense unique ids and appends continue the sequence") {
     val sp = spark; import sp.implicits._

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** OPTIMIZE (compaction) and VACUUM semantics: logical no-op, version
@@ -14,15 +15,17 @@ import graft.core.GraftSession
 class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("maintenance-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def freshTable(): (String, DeltaLikeTable) = {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("maint").toString
+    val path = tempDirs("maint")
     // several appends → many small files
     (0 until 4).foreach { i =>
       DeltaLikeTable.write(
@@ -52,7 +55,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("optimize zorder clusters files so stats prune on every keyed dimension") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.sources.EqualTo
-    val path = Files.createTempDirectory("zorder").toString
+    val path = tempDirs("zorder")
     // 64x64 grid, written hash-shuffled: every file spans the full range
     // of both x and y, so nothing prunes
     val grid = (0 until 4096).map(i => (i.toLong, (i % 64).toLong, (i / 64).toLong))
@@ -97,7 +100,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concurrent appends all land via optimistic retry") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("concur").toString
+    val path = tempDirs("concur")
     DeltaLikeTable.write((1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -121,7 +124,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("log checkpoints: snapshot equals full replay; time travel spans checkpoints") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("ckpt").toString
+    val path = tempDirs("ckpt")
     // 25 versions → checkpoints at v10 and v20
     (0 until 25).foreach { i =>
       DeltaLikeTable.write(
@@ -152,7 +155,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("txn watermarks ride the snapshot and survive checkpoints") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("txns").toString
+    val path = tempDirs("txns")
     (0 until 12).foreach { i =>
       DeltaLikeTable.write(
         Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1),
@@ -168,7 +171,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cleanupLogs drops pre-checkpoint segments; retained reads and history survive") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("logclean").toString
+    val path = tempDirs("logclean")
     (0 until 25).foreach { i =>
       DeltaLikeTable.write(
         Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1),
@@ -236,7 +239,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("RESTORE resurrects deletion-vector'd rows (entry-level diff, not path-level)") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("restore_dv").toString
+    val path = tempDirs("restore_dv")
     DeltaLikeTable.write(
       (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"),
       path, enableDeletionVectors = true)
@@ -259,7 +262,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("non-deterministic DELETE/UPDATE conditions are rejected up front") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("nondet").toString
+    val path = tempDirs("nondet")
     DeltaLikeTable.write((1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
     val t = DeltaLikeTable.forPath(spark, path)
     val e1 = intercept[IllegalArgumentException] { t.delete("rand() < 0.5") }
@@ -275,7 +278,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("VACUUM DRY RUN lists reclaimable files without deleting them") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("vac_dry").toString
+    val path = tempDirs("vac_dry")
     DeltaLikeTable.write((1 to 20).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
     val t = DeltaLikeTable.forPath(spark, path)
     t.optimize() // old files become unreferenced by the head
@@ -293,7 +296,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("OPTIMIZE WHERE compacts only the matching partitions") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("opt_where").toString
+    val path = tempDirs("opt_where")
     // 3 partitions, several files each (repartition forces multiple)
     val df = (1 to 300).map(i => (i.toLong, i % 3, s"v$i")).toDF("id", "k", "v")
       .repartition(4)
@@ -324,7 +327,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("timestampAsOf resolves the newest version at or before the instant") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("ts_travel").toString
+    val path = tempDirs("ts_travel")
     DeltaLikeTable.write(Seq((1L, "a")).toDF("id", "v"), path)
     DeltaLikeTable.write(Seq((2L, "b")).toDF("id", "v"), path, "append")
     DeltaLikeTable.write(Seq((3L, "c")).toDF("id", "v"), path, "append")
@@ -390,7 +393,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("clustered writes: CLUSTER BY z-orders every batch, sticky, OPTIMIZE preserves it") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.sources.EqualTo
-    val path = Files.createTempDirectory("clusterby").toString
+    val path = tempDirs("clusterby")
     val grid = (0 until 4096).map(i => (i.toLong, (i % 64).toLong, (i / 64).toLong))
       .toDF("id", "x", "y")
       .repartition(8, org.apache.spark.sql.functions.xxhash64($"id"))
@@ -425,7 +428,7 @@ class MaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("autoCompact collapses small-file buildup in the written partition only") {
     val sp = spark; import sp.implicits._
-    val path = java.nio.file.Files.createTempDirectory("autocompact").toString
+    val path = tempDirs("autocompact")
     System.setProperty("graft.autoCompact.minFiles", "4")
     try {
       DeltaLikeTable.write(

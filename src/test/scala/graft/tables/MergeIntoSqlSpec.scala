@@ -1,11 +1,10 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** SQL `MERGE INTO deltalike.`path`` through the injected resolution
@@ -14,15 +13,17 @@ import graft.core.GraftSession
 class MergeIntoSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("merge-sql-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def fresh(): String = {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("mergesql").toString
+    val path = tempDirs("mergesql")
     DeltaLikeTable.write(
       Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("k", "v", "n"),
       path)
@@ -116,7 +117,7 @@ class MergeIntoSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CREATE TABLE ... AS SELECT: plain, partitioned, from deltalike, IF NOT EXISTS") {
     val path = fresh()
-    val ctas = Files.createTempDirectory("ctas").toString + "/t"
+    val ctas = tempDirs("ctas") + "/t"
     spark.sql(s"CREATE TABLE deltalike.`$ctas` AS " +
       s"SELECT k, v, n * 10 AS n10 FROM deltalike.`$path` WHERE k <= 2")
     val t = DeltaLikeTable.forPath(spark, ctas)
@@ -131,7 +132,7 @@ class MergeIntoSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.toDF.count() === 2)
 
     // partitioned CTAS lays out partition directories
-    val part = Files.createTempDirectory("ctasp").toString + "/t"
+    val part = tempDirs("ctasp") + "/t"
     spark.sql(s"CREATE TABLE deltalike.`$part` PARTITIONED BY (v) AS " +
       s"SELECT k, v, n FROM deltalike.`$path`")
     val tp = DeltaLikeTable.forPath(spark, part)
@@ -214,7 +215,7 @@ class MergeIntoSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("by-source clauses prune: files with no accepted unmatched row survive") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("mergesql").toString
+    val path = tempDirs("mergesql")
     DeltaLikeTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), path)
     DeltaLikeTable.write(
       Seq((3L, "c"), (4L, "d")).toDF("k", "v").coalesce(1), path, "append")

@@ -1,12 +1,11 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Property-style checks (SURVEY.md §5.4) of the merge algebra against
@@ -18,12 +17,14 @@ import graft.core.GraftSession
 class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
   private val Cases = 8
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("merge-props", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private val schema = StructType.fromDDL("k INT, v STRING")
 
@@ -45,7 +46,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to Cases).foreach { i =>
       val target = genRows(rnd, "t")
       val source = genRows(rnd, "s")
-      val path = Files.createTempDirectory("prop_merge").toString
+      val path = tempDirs("prop_merge")
       DeltaLikeTable.write(df(target), path)
       val t = DeltaLikeTable.forPath(spark, path)
       t.as("t").merge(df(source).as("s"), "t.k = s.k")
@@ -63,7 +64,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to Cases).foreach { i =>
       val target = genRows(rnd, "t")
       val source = genRows(rnd, "s")
-      val path = Files.createTempDirectory("prop_del").toString
+      val path = tempDirs("prop_del")
       DeltaLikeTable.write(df(target), path)
       val t = DeltaLikeTable.forPath(spark, path)
       t.as("t").merge(df(source).as("s"), "t.k = s.k")
@@ -81,7 +82,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to Cases).foreach { i =>
       val target = genRows(rnd, "t")
       val source = genRows(rnd, "s")
-      val path = Files.createTempDirectory("prop_sync").toString
+      val path = tempDirs("prop_sync")
       DeltaLikeTable.write(df(target), path)
       val t = DeltaLikeTable.forPath(spark, path)
       t.as("t").merge(df(source).as("s"), "t.k = s.k")
@@ -98,7 +99,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to Cases).foreach { i =>
       val target = genRows(rnd, "t")
       val source = genRows(rnd, "s")
-      val path = Files.createTempDirectory("prop_bysrc").toString
+      val path = tempDirs("prop_bysrc")
       DeltaLikeTable.write(df(target), path)
       val t = DeltaLikeTable.forPath(spark, path)
       t.as("t").merge(df(source).as("s"), "t.k = s.k")
@@ -121,7 +122,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       val v0 = genRows(rnd, "a")
       val v1 = genRows(rnd, "b")
       val src = genRows(rnd, "c")
-      val path = Files.createTempDirectory("prop_tt").toString
+      val path = tempDirs("prop_tt")
       DeltaLikeTable.write(df(v0), path)
       val t = DeltaLikeTable.forPath(spark, path)
       val before = collect(t.toDF(0))
@@ -145,7 +146,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("withSchemaEvolution appends source-only columns through a merge") {
     val sp = spark; import sp.implicits._
-    val path = java.nio.file.Files.createTempDirectory("merge_evolve").toString
+    val path = tempDirs("merge_evolve")
     DeltaLikeTable.write(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), path)
     val t = DeltaLikeTable.forPath(spark, path)
@@ -169,7 +170,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.toDF(0).schema.fieldNames.toSeq === Seq("k", "v"))
 
     // WITHOUT evolution, the same merge ignores the extra column
-    val path2 = java.nio.file.Files.createTempDirectory("merge_noevo").toString
+    val path2 = tempDirs("merge_noevo")
     DeltaLikeTable.write(Seq((1L, "a")).toDF("k", "v"), path2)
     val t2 = DeltaLikeTable.forPath(spark, path2)
     t2.as("t").merge(
@@ -181,7 +182,7 @@ class MergePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("schema evolution composes with column mapping (fresh physical names)") {
     val sp = spark; import sp.implicits._
-    val path = java.nio.file.Files.createTempDirectory("merge_evo_map").toString
+    val path = tempDirs("merge_evo_map")
     DeltaLikeTable.write(Seq((1L, "a")).toDF("k", "v"), path)
     val t = DeltaLikeTable.forPath(spark, path)
     t.renameColumn("v", "label") // materializes the mapping

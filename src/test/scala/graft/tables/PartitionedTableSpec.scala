@@ -8,6 +8,7 @@ import org.apache.spark.sql.sources.EqualTo
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Partitioned deltalike tables: hive-style directory layout, partition
@@ -17,11 +18,13 @@ import graft.core.GraftSession
 class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("partitioned-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def df(n: Int) = {
     val sp = spark; import sp.implicits._
@@ -29,7 +32,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned write round-trips with reconstructed partition column") {
-    val path = Files.createTempDirectory("part_rt").toString
+    val path = tempDirs("part_rt")
     DeltaLikeTable.write(df(400), path, partitionBy = Seq("bucket"))
     val t = DeltaLikeTable.forPath(spark, path)
     assert(t.log.snapshot().partitionColumns === Seq("bucket"))
@@ -43,7 +46,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partition predicates prune files via stats") {
-    val path = Files.createTempDirectory("part_prune").toString
+    val path = tempDirs("part_prune")
     DeltaLikeTable.write(df(400), path, partitionBy = Seq("bucket"))
     val snap = DeltaLog.forPath(path).snapshot()
     assert(snap.files.size >= 4)
@@ -58,7 +61,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partition values with escaped chars, spaces, dates, and nulls round-trip") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("part_esc").toString
+    val path = tempDirs("part_esc")
     // '=' ':' '%' are Hive-%-escaped in directory names; spaces are not;
     // null becomes __HIVE_DEFAULT_PARTITION__
     val keys = Seq("a=b", "x:y", "p%q", "has space", null)
@@ -87,7 +90,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(notNull.size < snap.files.size)
 
     // date partition values encode as epoch days in stats
-    val path2 = Files.createTempDirectory("part_date").toString
+    val path2 = tempDirs("part_date")
     val d0 = java.sql.Date.valueOf("2024-03-01")
     val d1 = java.sql.Date.valueOf("2024-03-02")
     DeltaLikeTable.write(
@@ -100,7 +103,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("append inherits partitioning; mismatched repartitioning rejected") {
-    val path = Files.createTempDirectory("part_append").toString
+    val path = tempDirs("part_append")
     DeltaLikeTable.write(df(100), path, partitionBy = Seq("bucket"))
     DeltaLikeTable.write(df(40), path, "append") // inherits
     val t = DeltaLikeTable.forPath(spark, path)
@@ -113,7 +116,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("merge on a partitioned table preserves layout and values") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("part_merge").toString
+    val path = tempDirs("part_merge")
     DeltaLikeTable.write(df(200), path, partitionBy = Seq("bucket"))
     val t = DeltaLikeTable.forPath(spark, path)
     val src = Seq((1L, 1, "UPDATED"), (9001L, 1, "NEW")).toDF("id", "bucket", "v")
@@ -131,7 +134,7 @@ class PartitionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("optimize compacts within partitions") {
-    val path = Files.createTempDirectory("part_opt").toString
+    val path = tempDirs("part_opt")
     DeltaLikeTable.write(df(100).repartition(8), path, partitionBy = Seq("bucket"))
     val t = DeltaLikeTable.forPath(spark, path)
     val before = t.log.snapshot().files.size

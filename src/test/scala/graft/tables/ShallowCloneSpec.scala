@@ -1,11 +1,10 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Shallow clone: zero-copy table fork via absolute-path AddFile
@@ -15,11 +14,13 @@ import graft.core.GraftSession
 class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("clone-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def parquetCount(dir: String): Int = {
     val d = new java.io.File(dir)
@@ -29,8 +30,8 @@ class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("clone reads the source's data without copying a single byte") {
     val sp = spark; import sp.implicits._
-    val src = Files.createTempDirectory("clone_src").toString
-    val dst = Files.createTempDirectory("clone_dst").toString + "/t"
+    val src = tempDirs("clone_src")
+    val dst = tempDirs("clone_dst") + "/t"
     DeltaLikeTable.write(
       (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"), src)
 
@@ -43,8 +44,8 @@ class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("clone and source diverge independently") {
     val sp = spark; import sp.implicits._
-    val src = Files.createTempDirectory("clone_div_src").toString
-    val dst = Files.createTempDirectory("clone_div_dst").toString + "/t"
+    val src = tempDirs("clone_div_src")
+    val dst = tempDirs("clone_div_dst") + "/t"
     DeltaLikeTable.write(
       (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v"), src)
     val source = DeltaLikeTable.forPath(spark, src)
@@ -69,8 +70,8 @@ class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("OPTIMIZE localizes the clone; its vacuum never touches source bytes") {
     val sp = spark; import sp.implicits._
-    val src = Files.createTempDirectory("clone_opt_src").toString
-    val dst = Files.createTempDirectory("clone_opt_dst").toString + "/t"
+    val src = tempDirs("clone_opt_src")
+    val dst = tempDirs("clone_opt_dst") + "/t"
     DeltaLikeTable.write(
       (1 to 80).map(i => (i.toLong, s"v$i")).toDF("id", "v"), src)
     val source = DeltaLikeTable.forPath(spark, src)
@@ -92,8 +93,8 @@ class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SQL surface + guards: partitioned source and existing target refused") {
     val sp = spark; import sp.implicits._
-    val src = Files.createTempDirectory("clone_sql_src").toString
-    val dst = Files.createTempDirectory("clone_sql_dst").toString + "/t"
+    val src = tempDirs("clone_sql_src")
+    val dst = tempDirs("clone_sql_dst") + "/t"
     DeltaLikeTable.write(
       (1 to 30).map(i => (i.toLong, s"v$i")).toDF("id", "v"), src)
     spark.sql(s"CREATE TABLE deltalike.`$dst` SHALLOW CLONE deltalike.`$src`")
@@ -103,20 +104,20 @@ class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
       DeltaLikeTable.forPath(spark, src).shallowCloneTo(dst)
     }.getMessage.contains("already a table"))
 
-    val psrc = Files.createTempDirectory("clone_part_src").toString
+    val psrc = tempDirs("clone_part_src")
     DeltaLikeTable.write(
       (1 to 30).map(i => (i.toLong, i % 3, s"v$i")).toDF("id", "p", "v"),
       psrc, partitionBy = Seq("p"))
     assert(intercept[IllegalArgumentException] {
       DeltaLikeTable.forPath(spark, psrc)
-        .shallowCloneTo(Files.createTempDirectory("clone_part_dst").toString + "/t")
+        .shallowCloneTo(tempDirs("clone_part_dst") + "/t")
     }.getMessage.contains("partitioned"))
   }
 
   test("deep clone is fully independent: vacuuming the source cannot break it") {
     val sp = spark; import sp.implicits._
-    val src = Files.createTempDirectory("dclone_src").toString
-    val dst = Files.createTempDirectory("dclone_dst").toString + "/t"
+    val src = tempDirs("dclone_src")
+    val dst = tempDirs("dclone_dst") + "/t"
     DeltaLikeTable.write(
       (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"), src)
     val srcT = DeltaLikeTable.forPath(spark, src)
@@ -138,8 +139,8 @@ class ShallowCloneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("deep clone of a partitioned table keeps layout and pruning") {
     val sp = spark; import sp.implicits._
-    val src = Files.createTempDirectory("dclone_psrc").toString
-    val dst = Files.createTempDirectory("dclone_pdst").toString + "/t"
+    val src = tempDirs("dclone_psrc")
+    val dst = tempDirs("dclone_pdst") + "/t"
     DeltaLikeTable.write(
       (1 to 30).map(i => (i.toLong, i % 3, s"v$i")).toDF("id", "p", "v"),
       src, partitionBy = Seq("p"))

@@ -1,13 +1,12 @@
 package graft.tables
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Property: for ANY pushable predicate, scanning only the files
@@ -19,15 +18,17 @@ import graft.core.GraftSession
 class SkippingPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("skipping-props", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("pruned scans equal full scans for random pushable predicates") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("skip_prop").toString
+    val path = tempDirs("skip_prop")
     val rnd = new scala.util.Random(99)
     val rows = (1 to 2000).map { i =>
       (i.toLong,
@@ -76,7 +77,7 @@ class SkippingPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("integral In fast path: large probe sets prune correctly and tightly") {
     val sp = spark; import sp.implicits._
-    val path = Files.createTempDirectory("skip_in").toString
+    val path = tempDirs("skip_in")
     (1 to 4000).map(i => (i.toLong, i % 7))
       .toDF("id", "g")
       .repartitionByRange(8, org.apache.spark.sql.functions.col("id"))

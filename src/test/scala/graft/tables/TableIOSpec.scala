@@ -1,10 +1,13 @@
 package graft.tables
 
-import java.nio.file.{FileAlreadyExistsException, Files}
+import java.nio.file.FileAlreadyExistsException
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempDirs
 
 /** Contract spec for the deltalike filesystem facade: the NIO and the
   * Hadoop implementations must behave identically for every operation
@@ -12,16 +15,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * directory tree (Hadoop via RawLocalFileSystem), so the non-local
   * path is exercised without needing a cluster.
   */
-class TableIOSpec extends AnyFunSuite {
+class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private val tempDirs = new TempDirs
+
+  override def afterAll(): Unit = tempDirs.deleteAll()
 
   private def impls(tmp: String): Seq[(String, TableIO)] = Seq(
     "nio" -> NioTableIO,
     "hadoop" -> new HadoopTableIO(new HPath(tmp), new Configuration()))
 
   private def withTmp(f: String => Unit): Unit = {
-    val tmp = Files.createTempDirectory("graft-io-").toString
-    try f(tmp)
-    finally NioTableIO.deleteRecursively(tmp)
+    f(tempDirs("graft-io-"))
   }
 
   test("read/write/list/walk/rename/delete contract holds for both impls") {
@@ -82,7 +87,7 @@ class TableIOSpec extends AnyFunSuite {
       val spark = graft.core.GraftSession.local("tableio-e2e", cores = 4)
       try {
         import spark.implicits._
-        val path = Files.createTempDirectory("graft-io-e2e").toString
+        val path = tempDirs("graft-io-e2e")
         DeltaLikeTable.write(
           (1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v"), path)
         val t = DeltaLikeTable.forPath(spark, path)
