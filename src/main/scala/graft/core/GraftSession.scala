@@ -78,6 +78,25 @@ object GraftSession {
     physical - Runtime.getRuntime.maxMemory
   }
 
+  /** Runs `body` with `settings` set on `spark`'s session conf, then puts
+    * each key back as it was — its prior value, or unset if it was not
+    * set — also when `body` throws. The settings are visible to anything
+    * else running on the session meanwhile; the engine's drivers run one
+    * query at a time.
+    */
+  private[graft] def withConf[T](spark: SparkSession,
+      settings: Map[String, String])(body: => T): T = {
+    val set = spark.conf.getAll
+    val prior = settings.keys.map(k => k -> set.get(k))
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Invariants of every session this factory builds; `extraConf` keys
     * override them:
     *

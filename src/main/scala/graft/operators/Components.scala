@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.GraftSession.withConf
 import graft.core.Tables
 
 /** Distributed connected components — the last stage of a dedup
@@ -49,13 +50,9 @@ object Components {
       maxIter: Int = 30): DataFrame = {
     // symmetrize once; this relation is re-joined every iteration, so
     // cut its lineage (at cluster scale: persist) up front
-    val sym = edges
-      .select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u") =!= col("v"))
-      .select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
+    val sym = symmetric(edges
+        .select(col(srcCol).as("u"), col(dstCol).as("v"))
+        .where(col("u") =!= col("v")), "u", "v")
       .distinct()
       .localCheckpoint()
 
@@ -131,69 +128,16 @@ object Components {
     *
     *   rank'(v) = (1−d)/N + d · Σ_{u∈N(v)} rank(u)/deg(u)
     *
-    * Scale shape: the (edge ⋈ degree) relation is built once,
-    * HASH-PARTITIONED ON `src`, and localCheckpointed — the
-    * checkpointed partitioning survives in the plan, so every
-    * iteration's join reuses it and only the node-sized rank relation
-    * (itself partitioned on `node` by the previous iteration's
-    * groupBy) moves; the single edge-cardinality shuffle left per
-    * iteration is the grouped sum on `dst`, which is inherent to
-    * power iteration. State is one row per node; lineage is bounded
-    * by checkpointing every second iteration (O(2) plan depth, half
-    * the materialization jobs of per-iteration checkpoints — measured
-    * ~20% end-to-end at sf0.1). Fixed iteration count keeps the
-    * engine and the oracle bit-comparable (both compute the SAME
-    * truncated power iteration).
+    * It is [[trustRank]] with the teleport spread uniformly over all N
+    * nodes; both run [[powerIteration]].
     */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iterations: Int = 8,
-      damping: Double = 0.85): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val symDeg = sym.join(deg, Seq("src"))
-      .repartition(col("src"))
-      .localCheckpoint()
-    val n = symDeg.select(col("src")).distinct().count()
-    var ranks = symDeg.select(col("src").as("node")).distinct()
-      .select(col("node"), (lit(1.0) / n).as("rank"))
-      .localCheckpoint()
-    // measured strategy select (the q98 BFS lesson): the rank relation
-    // is node-sized and COUNTED, so when it fits an executor the
-    // per-iteration join carries an explicit broadcast hint and AQE is
-    // off for the loop — the edge relation then never shuffles (only
-    // the inherent grouped sum on dst does), and each iteration stops
-    // paying an AQE stage-job per exchange. Past the bound: no hint,
-    // AQE on — the 100 TB path.
-    val spark = edges.sparkSession
-    val hint = n <= 4000000L
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (hint) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try (1 to iterations).foreach { i =>
-      val rsrc = ranks.select(col("node").as("src"), col("rank"))
-      val next = symDeg
-        .join(if (hint) broadcast(rsrc) else rsrc, Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("rank") / col("deg")).as("in_rank"))
-        .select(col("dst").as("node"),
-          (lit((1 - damping)) / n + lit(damping) * col("in_rank")).as("rank"))
-      // LAZY checkpoint every iteration: no scheduled job of its own —
-      // iteration i materializes exactly once, inside iteration i+1's
-      // broadcast build (or the caller's action) — while keeping the
-      // loop's lineage O(1)
-      ranks = next.localCheckpoint(false)
-    } finally if (hint) spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    ranks
-  }
+      damping: Double = 0.85): DataFrame =
+    powerIteration(edges, srcCol, dstCol, None, iterations, damping, "rank")
 
   /** Declared q81: centrality of the customer↔supplier interaction
     * graph (high-value orders only), suppliers offset into a disjoint
@@ -201,17 +145,24 @@ object Components {
     * power iterations as chained CTEs — float divergence is far below
     * the compare's 1e-6 rounding.
     */
-  def q81PageRank(spark: SparkSession, d: String): DataFrame = {
-    val o = graft.core.Tables.orders(spark, d)
+  def q81PageRank(spark: SparkSession, d: String): DataFrame =
+    pageRank(counterpartyEdges(spark, d).distinct(), "src", "dst", iterations = 8)
+
+  /** The customer→supplier counterparty graph of high-value orders
+    * (`o_totalprice > 150000`): one (src = customer, dst = supplier)
+    * row per line item, suppliers offset by 10⁶ into an id space
+    * disjoint from customers. Not deduplicated; callers that need a
+    * set distinct it themselves.
+    */
+  private def counterpartyEdges(spark: SparkSession, d: String): DataFrame = {
+    val o = Tables.orders(spark, d)
       .where(col("o_totalprice") > 150000)
       .select(col("o_orderkey"), col("o_custkey"))
-    val li = graft.core.Tables.lineitem(spark, d)
+    val li = Tables.lineitem(spark, d)
       .select(col("l_orderkey"), col("l_suppkey"))
-    val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
+    o.join(li, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"),
         (col("l_suppkey") + lit(1000000L)).as("dst"))
-      .distinct()
-    pageRank(edges, "src", "dst", iterations = 8)
   }
 
   val q81Sql: String = {
@@ -242,12 +193,12 @@ object Components {
     * scores measure "how reachable from trust" — the classic
     * quality-propagation signal for web-corpus curation (seed trusted
     * domains, damp trust through the link graph, downweight pages no
-    * trust flows to). Same power-iteration scale shape as [[pageRank]]:
-    * the (edge ⋈ degree) relation builds once, hash-partitioned on
-    * `src` and checkpointed; per iteration one node-sized join and one
-    * grouped sum; the teleport vector is one row per node, checkpointed
-    * once. Fixed iteration count keeps engine and oracle
-    * bit-comparable.
+    * trust flows to):
+    *
+    *   trust'(v) = (1−d) · tp(v) + d · Σ_{u∈N(v)} trust(u)/deg(u)
+    *
+    * with tp(v) = 1/|seeds| on a seed and 0 elsewhere, the start
+    * vector too. Runs [[powerIteration]].
     */
   def trustRank(
       edges: DataFrame,
@@ -255,48 +206,87 @@ object Components {
       dstCol: String,
       seeds: DataFrame,
       iterations: Int = 8,
-      damping: Double = 0.85): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .where(col("src") =!= col("dst"))
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      damping: Double = 0.85): DataFrame =
+    powerIteration(edges, srcCol, dstCol, Some(seeds), iterations, damping,
+      "trust")
+
+  /** The truncated power iteration of [[pageRank]] (`seeds` = None: the
+    * uniform teleport (1−d)/N, a literal, and the start vector 1/N) and
+    * [[trustRank]] (the teleport (1−d)·tp(v), one row per node,
+    * checkpointed once and joined each iteration). Returns (node,
+    * `score`).
+    *
+    * Scale shape: the (edge ⋈ degree) relation is built once,
+    * HASH-PARTITIONED ON `src`, and localCheckpointed — the
+    * checkpointed partitioning survives in the plan, so every
+    * iteration's join reuses it and only the node-sized score relation
+    * (itself partitioned on `node` by the previous iteration's
+    * groupBy) moves; the single edge-cardinality shuffle left per
+    * iteration is the grouped sum on `dst`, which is inherent to
+    * power iteration. State is one row per node. Fixed iteration count
+    * keeps the engine and the oracle bit-comparable (both compute the
+    * SAME truncated power iteration).
+    *
+    * Measured strategy select (the q98 BFS lesson): the score relation
+    * is node-sized and COUNTED, so when it fits [[BcastSymRows]] the
+    * per-iteration joins carry explicit broadcast hints and AQE is off
+    * for the loop — the edge relation then never shuffles (only the
+    * inherent grouped sum on dst does), and each iteration stops paying
+    * an AQE stage-job per exchange. Past the bound: no hint, AQE on —
+    * the 100 TB path.
+    */
+  private def powerIteration(edges: DataFrame, srcCol: String,
+      dstCol: String, seeds: Option[DataFrame], iterations: Int,
+      damping: Double, score: String): DataFrame = {
+    val sym = symmetric(edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .where(col("src") =!= col("dst")), "src", "dst")
       .distinct()
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val symDeg = sym.join(deg, Seq("src"))
       .repartition(col("src"))
       .localCheckpoint()
-    val seedSet = seeds.select(col("node")).distinct()
-    val ns = seedSet.count()
-    require(ns > 0, "trustRank needs at least one seed")
-    val teleport = symDeg.select(col("src").as("node")).distinct()
-      .join(seedSet.withColumn("__s", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("__s"), lit(1.0 / ns)).otherwise(lit(0.0)).as("tp"))
-      .localCheckpoint()
-    // same measured strategy select + lazy per-iteration checkpoints as
-    // [[pageRank]] (the node count bounds every per-iteration relation)
-    val spark = edges.sparkSession
-    val nNodes = teleport.count()
-    val hint = nNodes <= 4000000L
-    var trust = teleport.select(col("node"), col("tp").as("trust"))
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if (hint) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try (1 to iterations).foreach { i =>
-      val tsrc = trust.select(col("node").as("src"), col("trust"))
-      val next = symDeg
-        .join(if (hint) broadcast(tsrc) else tsrc, Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(col("trust") / col("deg")).as("in_t"))
-        .select(col("dst").as("node"), col("in_t"))
-        .join(if (hint) broadcast(teleport) else teleport, Seq("node"))
-        .select(col("node"),
-          (lit(1 - damping) * col("tp") + lit(damping) * col("in_t")).as("trust"))
-      trust = next.localCheckpoint(false)
-    } finally if (hint) spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    trust
+    val nodes = symDeg.select(col("src").as("node")).distinct()
+    val (start, n, teleport) = seeds match {
+      case None =>
+        val n = nodes.count()
+        (nodes.select(col("node"), (lit(1.0) / n).as(score)).localCheckpoint(),
+          n, None)
+      case Some(s) =>
+        val seedSet = s.select(col("node")).distinct()
+        val ns = seedSet.count()
+        require(ns > 0, "trustRank needs at least one seed")
+        val tp = nodes
+          .join(seedSet.withColumn("__s", lit(true)), Seq("node"), "left")
+          .select(col("node"),
+            when(col("__s"), lit(1.0 / ns)).otherwise(lit(0.0)).as("tp"))
+          .localCheckpoint()
+        (tp.select(col("node"), col("tp").as(score)), tp.count(), Some(tp))
+    }
+    val hint = n <= BcastSymRows
+    def hinted(df: DataFrame): DataFrame = if (hint) broadcast(df) else df
+    var ranks = start
+    withConf(edges.sparkSession, if (hint) AqeOff else Map.empty) {
+      (1 to iterations).foreach { _ =>
+        val in = symDeg
+          .join(hinted(ranks.select(col("node").as("src"), col(score))), Seq("src"))
+          .groupBy(col("dst"))
+          .agg(sum(col(score) / col("deg")).as("in"))
+          .select(col("dst").as("node"), col("in"))
+        val next = teleport match {
+          case None => in.select(col("node"),
+            (lit(1 - damping) / n + lit(damping) * col("in")).as(score))
+          case Some(tp) => in.join(hinted(tp), Seq("node")).select(col("node"),
+            (lit(1 - damping) * col("tp") + lit(damping) * col("in")).as(score))
+        }
+        // LAZY checkpoint every iteration: no scheduled job of its own —
+        // iteration i materializes exactly once, inside iteration i+1's
+        // broadcast build (or the caller's action) — while keeping the
+        // loop's lineage O(1)
+        ranks = next.localCheckpoint(false)
+      }
+    }
+    ranks
   }
 
   /** Declared q104: trust propagation from the q98 seed customers over
@@ -305,15 +295,7 @@ object Components {
     * pattern, teleport restricted to seeds).
     */
   def q104TrustRank(spark: SparkSession, d: String): DataFrame = {
-    val o = graft.core.Tables.orders(spark, d)
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = graft.core.Tables.lineitem(spark, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst"))
-      .distinct()
+    val edges = counterpartyEdges(spark, d).distinct()
     val seeds = edges.select(col("src").as("node")).where(col("node") < 50)
     trustRank(edges, "src", "dst", seeds, iterations = 8)
   }
@@ -379,11 +361,7 @@ object Components {
     // one job materializes the lazy checkpoint AND yields the scalar
     // the strategy select below needs
     val symRows = 2L * dir.count()
-    val sym = dir
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val sym = symmetric(dir, "src", "dst")
     val smallGraph = symRows <= 20000000L
     // only the shuffle-join path benefits from pre-partitioning the
     // edge relation on src (each hop's join then reuses it); the
@@ -400,7 +378,6 @@ object Components {
     // dedup anti-join needs only the LAST TWO frontiers — the full
     // visited set is never re-materialized per hop, just unioned once
     // at the end from the per-hop checkpoints.
-    val spark = edges.sparkSession
     var acc = List(seed)
     var frontier = seed.select(col("node"))
     var frontierRows = 0L
@@ -419,15 +396,11 @@ object Components {
       // small-scale BFS). Past either bound: no hints, AQE on, shuffle
       // joins against the src-partitioned checkpoint — the 100 TB path.
       val hint = smallGraph && frontierRows <= (4L << 20)
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-      if (hint) {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        // the only exchange left on this path is the frontier distinct,
-        // over at most `frontierRows` kilobyte-scale rows
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-      }
-      try {
+      // on the hinted path the only exchange left is the frontier
+      // distinct, over at most `frontierRows` kilobyte-scale rows
+      withConf(edges.sparkSession,
+          if (hint) AqeOff + ("spark.sql.shuffle.partitions" -> "1")
+          else Map.empty) {
         val fr = if (hint) broadcast(frontier) else frontier
         val visited = frontier.unionByName(prevFrontier)
         val vis = if (hint) broadcast(visited) else visited
@@ -449,9 +422,6 @@ object Components {
           frontierRows = n
           hop += 1
         }
-      } finally if (hint) {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
     }
     acc.reduce(_ unionByName _)
@@ -466,16 +436,9 @@ object Components {
     * distances.
     */
   def q98BfsReach(spark: SparkSession, d: String): DataFrame = {
-    val o = graft.core.Tables.orders(spark, d)
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = graft.core.Tables.lineitem(spark, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
     // no caller-side distinct: bfsHops is multiplicity-insensitive, so
     // deduplicating ~600k join rows here would be a pure extra shuffle
-    val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst"))
+    val edges = counterpartyEdges(spark, d)
     val seeds = edges.select(col("src").as("node"))
       .where(col("node") < 50)
     bfsHops(edges, "src", "dst", seeds, maxHops = 6)
@@ -796,24 +759,30 @@ object Components {
     * (co-occurrence bounded per order by TPC-H's ≤7 lineitems, so the
     * edge build is linear in lineitem count at any scale).
     */
-  def q107Triangles(spark: SparkSession, d: String): DataFrame = {
-    // co-occurrence pairs WITHOUT a self-join: one shuffle groups each
-    // order's parts into an array (≤7 elements), the pairs explode
-    // map-side, and the global dedup is [[canonicalEdges]]' distinct.
-    // Double codegen explode + where, NOT a higher-order `filter`
-    // lambda inside the second explode: interpreted lambdas cost ~7x
-    // per element (the q76/q116 lesson), and with k ≤ 7 parts per
-    // order the k² generated-then-filtered rows are cheaper than
-    // k(k−1)/2 interpreted ones
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val co = li.groupBy(col("ok"))
+  def q107Triangles(spark: SparkSession, d: String): DataFrame =
+    triangleCounts(coPurchaseEdges(Tables.lineitem(spark, d)), "u", "v")
+
+  /** The part co-purchase graph of `lineitem` rows: (u, v) with u < v
+    * for every two parts some order contains, one row per order that
+    * has both — not deduplicated; callers that need a set distinct it
+    * themselves (the common-neighbour operators' [[canonicalEdges]]
+    * does).
+    *
+    * Pairs WITHOUT a self-join: one shuffle groups each order's parts
+    * into an array (≤7 elements), the pairs explode map-side. Double
+    * codegen explode + where, NOT a higher-order `filter` lambda inside
+    * the second explode: interpreted lambdas cost ~7x per element (the
+    * q76/q116 lesson), and with k ≤ 7 parts per order the k²
+    * generated-then-filtered rows are cheaper than k(k−1)/2
+    * interpreted ones.
+    */
+  private def coPurchaseEdges(lineitem: DataFrame): DataFrame =
+    lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .groupBy(col("ok"))
       .agg(collect_set(col("pk")).as("ps"))
       .select(explode(col("ps")).as("u"), col("ps"))
       .select(col("u"), explode(col("ps")).as("v"))
       .where(col("u") < col("v"))
-    triangleCounts(co, "u", "v")
-  }
 
   val q107Sql: String =
     """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
@@ -867,54 +836,48 @@ object Components {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"hits: iterations must be >= 1, got $iterations")
-    val spark0 = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
       .repartition(col("src"))
       .localCheckpoint()
-    val h0 = e0.select(col("src")).distinct().withColumn("h", lit(1.0))
+    var h = e.select(col("src")).distinct().withColumn("h", lit(1.0))
       .localCheckpoint()
-    val hint = h0.count() <= 4000000L
+    val hint = h.count() <= BcastSymRows
     // guard the denominator: an all-null/zero score mass (possible only
     // on degenerate inputs) yields null scores, not ±Infinity
     def l1(df: DataFrame, c: String): DataFrame =
       df.crossJoin(broadcast(df.agg(sum(col(c)).as("__t"))))
         .select(df.columns.filter(_ != c).map(col) :+
           (col(c) / when(col("__t") =!= 0.0, col("__t"))).as(c): _*)
-    val e = e0
-    var h = h0
-    // Scoped AQE override for the broadcast loop, try/finally-restored.
-    // A per-query override was measured via a cloned CHILD session
-    // (GraftSqlBridge.cloneSession + plan rebind — no session-global
-    // mutation): it costs a consistent +0.7 s per invocation (fresh
-    // SessionState) vs 2.86 s for the in-session flip at sf0.1, so the
-    // flip stays, with the known caveat that it is visible to
-    // concurrent queries on the same session for the loop's duration
-    // (this engine's drivers run queries sequentially).
-    val prevAqe = spark0.conf.get("spark.sql.adaptive.enabled", "true")
-    if (hint) spark0.conf.set("spark.sql.adaptive.enabled", "false")
+    // Scoped AQE override for the broadcast loop. A per-query override
+    // was measured via a cloned CHILD session (GraftSqlBridge.cloneSession
+    // + plan rebind — no session-global mutation): it costs a consistent
+    // +0.7 s per invocation (fresh SessionState) vs 2.86 s for the
+    // in-session flip at sf0.1, so the flip stays.
     var a: DataFrame = null
-    try for (i <- 1 to iterations) {
-      a = e.join(if (hint) broadcast(h) else h, Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("a"))
-      // EAGER checkpoints on the broadcast path: each iteration's two
-      // half-steps materialize as one static-plan job while the AQE
-      // override is in force (lazy checkpoints would defer execution
-      // to the caller's consumption, escaping it — the r6 bug); the
-      // shuffle path keeps lazy checkpoints for O(1) lineage
-      if (i == iterations) a = a.localCheckpoint(eager = hint)
-      h = e.join(if (hint) broadcast(a) else a, Seq("dst"))
-        .groupBy(col("src")).agg(sum(col("a")).as("h"))
-      // checkpoint every FOURTH iteration (and the last): four full
-      // iterations chain into one static-plan job on the broadcast
-      // path (the intermediate broadcast exchanges execute inside it),
-      // trimming job-scheduling overhead — measured 4.6 -> 4.0 s at
-      // sf0.1. Deeper chaining was flat; the co-partitioned
-      // shuffle-join alternative measured 3.9 s bare but 6.4 s with
-      // the dst-copy checkpoint it needs at scale, so broadcast stays
-      if (i % 4 == 0 || i == iterations)
-        h = h.localCheckpoint(eager = hint)
-    } finally if (hint) spark0.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    withConf(edges.sparkSession, if (hint) AqeOff else Map.empty) {
+      for (i <- 1 to iterations) {
+        a = e.join(if (hint) broadcast(h) else h, Seq("src"))
+          .groupBy(col("dst")).agg(sum(col("h")).as("a"))
+        // EAGER checkpoints on the broadcast path: each iteration's two
+        // half-steps materialize as one static-plan job while the AQE
+        // override is in force (lazy checkpoints would defer execution
+        // to the caller's consumption, escaping it — the r6 bug); the
+        // shuffle path keeps lazy checkpoints for O(1) lineage
+        if (i == iterations) a = a.localCheckpoint(eager = hint)
+        h = e.join(if (hint) broadcast(a) else a, Seq("dst"))
+          .groupBy(col("src")).agg(sum(col("a")).as("h"))
+        // checkpoint every FOURTH iteration (and the last): four full
+        // iterations chain into one static-plan job on the broadcast
+        // path (the intermediate broadcast exchanges execute inside it),
+        // trimming job-scheduling overhead — measured 4.6 -> 4.0 s at
+        // sf0.1. Deeper chaining was flat; the co-partitioned
+        // shuffle-join alternative measured 3.9 s bare but 6.4 s with
+        // the dst-copy checkpoint it needs at scale, so broadcast stays
+        if (i % 4 == 0 || i == iterations)
+          h = h.localCheckpoint(eager = hint)
+      }
+    }
     l1(h, "h").select(lit("hub").as("role"), col("src").as("node"),
         col("h").as("score"))
       .unionAll(l1(a, "a").select(lit("authority").as("role"),
@@ -925,18 +888,8 @@ object Components {
     * counterparty graph (q81's edges kept directed) — hubs are
     * broad-reach buyers, authorities widely-bought-from suppliers.
     */
-  def q163Hits(spark: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(spark, d)
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst"))
-      .distinct()
-    hits(edges, "src", "dst", iterations = 8)
-  }
+  def q163Hits(spark: SparkSession, d: String): DataFrame =
+    hits(counterpartyEdges(spark, d).distinct(), "src", "dst", iterations = 8)
 
   val q163Sql: String = {
     val base =
@@ -991,14 +944,8 @@ object Components {
     */
   private[operators] def kCorePeel(edges: DataFrame, srcCol: String,
       dstCol: String, k: Int, maxIterations: Int, maxSymRows: Long): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    var sym = canon
-      .unionAll(canon.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    val canon = canonicalEdges(edges, srcCol, dstCol, checkpoint = false)
+    var sym = symmetric(canon, "u", "v").localCheckpoint()
     var keep = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .where(col("deg") >= k)
       .localCheckpoint()
@@ -1047,17 +994,9 @@ object Components {
     * predecessor three times, and inlining would re-expand the chain
     * 3¹²-fold.
     */
-  def q153KCore(spark: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val co = li.groupBy(col("ok"))
-      .agg(collect_set(col("pk")).as("ps"))
-      .select(explode(col("ps")).as("u"), col("ps"))
-      .select(col("u"), explode(col("ps")).as("v"))
-      .where(col("u") < col("v"))
-      .distinct()
-    kCore(co, "u", "v", k = 80, maxIterations = 12)
-  }
+  def q153KCore(spark: SparkSession, d: String): DataFrame =
+    kCore(coPurchaseEdges(Tables.lineitem(spark, d)).distinct(), "u", "v",
+      k = 80, maxIterations = 12)
 
   val q153Sql: String = {
     val base =
@@ -1100,21 +1039,35 @@ object Components {
     jaccardFromCanon(canon, topN, AdjacencyCsr.collect(canon, BcastSymRows))
   }
 
-  /** (u, v) with u < v, self-loops dropped, deduplicated and
-    * checkpointed, so the CSR collect, the probes and the wedge plans
-    * all read ONE materialization of the graph build. The checkpoint is
-    * lazy: its first reader (the CSR collect) materializes it, so it
-    * costs no job of its own. Every common-neighbour operator starts
-    * here.
+  /** (u, v) with u < v, self-loops dropped, deduplicated: the one
+    * canonical form of an undirected edge relation. Checkpointed by
+    * default, so the CSR collect, the probes and the wedge plans all
+    * read ONE materialization of the graph build; the checkpoint is
+    * lazy — its first reader (the CSR collect) materializes it, so it
+    * costs no job of its own. `checkpoint = false` leaves it
+    * unmaterialized, for operators that read it once, into their own
+    * checkpoint or join.
     */
   private[operators] def canonicalEdges(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame =
-    edges
+      dstCol: String, checkpoint: Boolean = true): DataFrame = {
+    val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = false)
+    if (checkpoint) canon.localCheckpoint(eager = false) else canon
+  }
+
+  /** Both directions of every (a, b) row of `edges`, as (a, b) rows —
+    * one explode per input row, so an unmaterialized input is computed
+    * once, not once per direction. No distinct.
+    */
+  private def symmetric(edges: DataFrame, a: String, b: String): DataFrame =
+    edges
+      .select(explode(array(
+        struct(col(a), col(b)),
+        struct(col(b).as(a), col(a).as(b)))).as("e"))
+      .select(col(s"e.$a").as(a), col(s"e.$b").as(b))
 
   /** Exact top-N Jaccard over an already-canonicalized, already-
     * checkpointed (u < v, distinct) edge relation. Two routes, both
@@ -1141,7 +1094,7 @@ object Components {
       csr: Option[AdjacencyCsr]): DataFrame = csr match {
     case Some(g) => jaccardCsr(canon, g, topN)
     case None =>
-      val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
+      val sym = symmetric(canon, "u", "v")
       val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .localCheckpoint()
       jaccardNodeLevel(canon, sym, deg, topN)
@@ -1563,6 +1516,13 @@ object Components {
     */
   private val BcastSymRows = 4000000L
 
+  /** The conf of an iterative loop whose per-iteration joins are
+    * broadcast under [[BcastSymRows]]: AQE off, so each iteration runs
+    * as one static-plan job instead of paying an AQE stage-job per
+    * exchange. Applied through [[graft.core.GraftSession.withConf]].
+    */
+  private val AqeOff = Map("spark.sql.adaptive.enabled" -> "false")
+
   /** Unpacked node-level shuffle plan — [[jaccardNodeLevel]] for ids
     * that do not pack (not LongType, or outside [0, 2³¹)).
     */
@@ -1635,7 +1595,7 @@ object Components {
       // returns an unordered thresholded set). orderBy+limit compiles
       // to TakeOrderedAndProject — per-partition top-N heaps, no
       // global sort — so determinism costs nothing at scale.
-      approxJaccardLinks(canon, "u", "v", threshold)
+      approxFromCanon(canon, threshold)
         .orderBy(col("jaccard").desc, col("node_a"), col("node_b"))
         .limit(topN)
   }
@@ -1650,23 +1610,7 @@ object Components {
     * ratios, so the boundary is engine-stable.
     */
   def q154JaccardLinks(spark: SparkSession, d: String): DataFrame =
-    jaccardLinksAuto(q154Edges(spark, d), "src", "dst", topN = 50)
-
-  /** The q81/q154 bipartite customer–supplier edge list (shared
-    * counterparties on high-value orders) — the graph both the exact
-    * (q154) and forced-LSH (q279) link-prediction rows run on.
-    */
-  private def q154Edges(spark: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(spark, d)
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-    o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst"))
-      .distinct()
-  }
+    jaccardLinksAuto(counterpartyEdges(spark, d).distinct(), "src", "dst", topN = 50)
 
   /** Declared q279: q154's graph FORCED through the post-flip LSH path
     * (`maxExactDegree = 0`) — the row that makes the router's approx
@@ -1681,7 +1625,7 @@ object Components {
     * scaling exponent (BASELINE.md round-11).
     */
   def q279JaccardLinksLsh(spark: SparkSession, d: String): DataFrame =
-    jaccardLinksAuto(q154Edges(spark, d), "src", "dst", topN = 50,
+    jaccardLinksAuto(counterpartyEdges(spark, d).distinct(), "src", "dst", topN = 50,
       maxExactDegree = 0L)
 
   val q279Sql: String =
@@ -1748,7 +1692,7 @@ object Components {
     * are keyed by it.
     */
   def q282JaccardLinksCollapsed(spark: SparkSession, d: String): DataFrame =
-    jaccardLinkPrediction(q154Edges(spark, d), "src", "dst", 50)
+    jaccardLinkPrediction(counterpartyEdges(spark, d).distinct(), "src", "dst", 50)
 
   /** Degree assortativity of an undirected graph — the Pearson
     * correlation of endpoint degrees over the symmetric edge list
@@ -1770,11 +1714,8 @@ object Components {
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
+    // an eager checkpoint: the lazy one measured ~10 % slower on q170
+    val canon = canonicalEdges(edges, srcCol, dstCol, checkpoint = false)
       .localCheckpoint()
     val deg = canon.select(col("u"))
       .unionAll(canon.select(col("v").as("u")))
@@ -1860,11 +1801,7 @@ object Components {
   def partitionModularity(edges: DataFrame, srcCol: String,
       dstCol: String, nodes: DataFrame, nodeCol: String,
       communityCol: String): DataFrame = {
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
+    val canon = canonicalEdges(edges, srcCol, dstCol, checkpoint = false)
     val comm = nodes.select(col(nodeCol).as("__n"),
       col(communityCol).as("__c"))
     val tagged = canon
@@ -1900,15 +1837,7 @@ object Components {
     * partition (customers AND suppliers carry their nation key).
     */
   def q176Modularity(spark: SparkSession, d: String): DataFrame = {
-    val o = Tables.orders(spark, d)
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst"))
-      .distinct()
+    val edges = counterpartyEdges(spark, d).distinct()
     val custNation = Tables.customer(spark, d)
       .select(col("c_custkey").as("node"), col("c_nationkey").as("nation"))
     val suppNation = Tables.supplier(spark, d)
@@ -2007,16 +1936,30 @@ object Components {
       bands: Int = 64,
       seed: Long = 42L,
       pairFilter: Column = lit(true),
+      nodeFilter: Column => Column = _ => lit(true)): DataFrame =
+    // an eager checkpoint: the lazy one measured ~10 % slower on q191
+    approxFromCanon(
+      canonicalEdges(edges, srcCol, dstCol, checkpoint = false).localCheckpoint(),
+      threshold, numHashes, bands, seed, pairFilter, nodeFilter)
+
+  /** [[approxJaccardLinks]] over [[canonicalEdges]], the entry of
+    * [[jaccardLinksAuto]]'s LSH branch, which holds the canonical
+    * relation already.
+    */
+  private def approxFromCanon(
+      canon: DataFrame,
+      threshold: Double,
+      numHashes: Int = 256,
+      bands: Int = 64,
+      seed: Long = 42L,
+      pairFilter: Column = lit(true),
       nodeFilter: Column => Column = _ => lit(true)): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val r = numHashes / bands
     val P = graft.functions.MinHashAgg.P
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+    // a union, not [[symmetric]]: `canon` is materialized, so reading it
+    // twice is cheap, and the nodeFilter below pushes into both branches
+    // (it cannot pass an explode — measured ~10 % slower on q191)
     val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
     // nodeFilter restricts which nodes get SIGNATURES (and thus may
     // appear in output pairs) — filtered-out nodes still count as
@@ -2180,42 +2123,37 @@ object Components {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
-    val spark0 = edges.sparkSession
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    val sym = canon.unionAll(canon.select(col("v").as("u"), col("u").as("v")))
+    val canon = canonicalEdges(edges, srcCol, dstCol, checkpoint = false)
+    val sym = symmetric(canon, "u", "v")
       .repartition(col("v"))
       .localCheckpoint()
     var labels = sym.select(col("u").as("node")).distinct()
       .withColumn("community", col("node"))
       .localCheckpoint()
-    val hint = labels.count() <= 4000000L
-    val prevAqe = spark0.conf.get("spark.sql.adaptive.enabled", "true")
-    if (hint) spark0.conf.set("spark.sql.adaptive.enabled", "false")
-    try for (i <- 1 to rounds) {
-      val nbr = sym.join(
-        (if (hint) broadcast(labels) else labels)
-          .select(col("node").as("v"), col("community")), Seq("v"))
-      // ONE node-keyed exchange per round: the neighbor-vote count and
-      // the (max count, min label) argmax both live inside the
-      // ModeMinAgg buffer — the two-aggregation formulation paid a
-      // second full shuffle of the (node, label) relation every round
-      labels = nbr
-        .groupBy(col("u"))
-        .agg(graft.functions.ModeMinAgg.of(col("community")).as("community"))
-        .withColumnRenamed("u", "node")
-      // checkpoint every SECOND round (and the last) on the broadcast
-      // path — two rounds chain into one static-plan job (the hits
-      // every-4 discipline, shallower because each LPA round carries a
-      // full ObjectHashAggregate whose partial state is heavier than
-      // hits' sum); the shuffle path keeps per-round lazy checkpoints
-      // for O(1) lineage
-      if (!hint || i % 2 == 0 || i == rounds)
-        labels = labels.localCheckpoint(eager = hint)
-    } finally if (hint) spark0.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val hint = labels.count() <= BcastSymRows
+    withConf(edges.sparkSession, if (hint) AqeOff else Map.empty) {
+      for (i <- 1 to rounds) {
+        val nbr = sym.join(
+          (if (hint) broadcast(labels) else labels)
+            .select(col("node").as("v"), col("community")), Seq("v"))
+        // ONE node-keyed exchange per round: the neighbor-vote count and
+        // the (max count, min label) argmax both live inside the
+        // ModeMinAgg buffer — the two-aggregation formulation paid a
+        // second full shuffle of the (node, label) relation every round
+        labels = nbr
+          .groupBy(col("u"))
+          .agg(graft.functions.ModeMinAgg.of(col("community")).as("community"))
+          .withColumnRenamed("u", "node")
+        // checkpoint every SECOND round (and the last) on the broadcast
+        // path — two rounds chain into one static-plan job (the hits
+        // every-4 discipline, shallower because each LPA round carries a
+        // full ObjectHashAggregate whose partial state is heavier than
+        // hits' sum); the shuffle path keeps per-round lazy checkpoints
+        // for O(1) lineage
+        if (!hint || i % 2 == 0 || i == rounds)
+          labels = labels.localCheckpoint(eager = hint)
+      }
+    }
     labels
   }
 
@@ -2224,17 +2162,9 @@ object Components {
     * discovery on the same relation q107/q153 analyze. Output is one
     * (node, community) row per part in the graph.
     */
-  def q193LabelPropagation(spark: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val co = li.groupBy(col("ok"))
-      .agg(collect_set(col("pk")).as("ps"))
-      .select(explode(col("ps")).as("u"), col("ps"))
-      .select(col("u"), explode(col("ps")).as("v"))
-      .where(col("u") < col("v"))
-      .distinct()
-    labelPropagation(co, "u", "v", rounds = 4)
-  }
+  def q193LabelPropagation(spark: SparkSession, d: String): DataFrame =
+    labelPropagation(coPurchaseEdges(Tables.lineitem(spark, d)).distinct(),
+      "u", "v", rounds = 4)
 
   val q193Sql: String = {
     val base =
@@ -2307,17 +2237,10 @@ object Components {
     * analytically distinct slice of the q107 relation; the full graph's
     * census is q107's own declared cost).
     */
-  def q194ClusteringCoefficient(spark: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(spark, d)
-      .where(col("l_quantity") >= 40)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val co = li.groupBy(col("ok"))
-      .agg(collect_set(col("pk")).as("ps"))
-      .select(explode(col("ps")).as("u"), col("ps"))
-      .select(col("u"), explode(col("ps")).as("v"))
-      .where(col("u") < col("v"))
-    localClusteringCoefficient(co, "u", "v")
-  }
+  def q194ClusteringCoefficient(spark: SparkSession, d: String): DataFrame =
+    localClusteringCoefficient(
+      coPurchaseEdges(Tables.lineitem(spark, d).where(col("l_quantity") >= 40)),
+      "u", "v")
 
   val q194Sql: String =
     """WITH li AS (
@@ -2528,16 +2451,8 @@ object Components {
     * co-purchase graph — edges that sit in ≥ 2 triangles even after
     * their weakly-supported neighbors are removed.
     */
-  def q209Ktruss(spark: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(spark, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val co = li.groupBy(col("ok"))
-      .agg(collect_set(col("pk")).as("ps"))
-      .select(explode(col("ps")).as("u"), col("ps"))
-      .select(col("u"), explode(col("ps")).as("v"))
-      .where(col("u") < col("v"))
-    ktruss(co, "u", "v", k = 4, rounds = 2)
-  }
+  def q209Ktruss(spark: SparkSession, d: String): DataFrame =
+    ktruss(coPurchaseEdges(Tables.lineitem(spark, d)), "u", "v", k = 4, rounds = 2)
 
   val q209Sql: String =
     """WITH li AS (SELECT l_orderkey, l_partkey FROM lineitem),
@@ -2592,11 +2507,7 @@ object Components {
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src") =!= col("dst"))
       .localCheckpoint()
-    val sym = dir
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    val sym = symmetric(dir, "src", "dst")
     val seed = landmarks.select(col("lm")).distinct()
       .select(col("lm"), col("lm").as("node"), lit(0).as("hops"))
       .localCheckpoint()
@@ -2640,14 +2551,7 @@ object Components {
     * bipartite graph from the landmark set {custkey < 8}, 4 hops.
     */
   def q212Closeness(spark: SparkSession, d: String): DataFrame = {
-    val o = graft.core.Tables.orders(spark, d)
-      .where(col("o_totalprice") > 150000)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = graft.core.Tables.lineitem(spark, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-    val edges = o.join(li, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst"))
+    val edges = counterpartyEdges(spark, d)
     val lms = edges.select(col("src").as("lm"))
       .where(col("lm") < 8).distinct()
     landmarkHarmonicCloseness(edges, "src", "dst", lms, maxHops = 4)

@@ -86,21 +86,26 @@ object EventStream {
   def q276StreamEventWindows(spark: SparkSession, d: String): DataFrame = {
     val stream = readEventStream(spark, replayDir(spark, d),
       maxFilesPerTrigger = 2)
-    val name = s"q276_sink_${sinkCounter.incrementAndGet()}"
-    // the streaming state is windows × event-types — domain-bounded and
-    // tiny — but every shuffle partition carries a state store whose
-    // checkpoint files are written per trigger; 32 partitions of
-    // near-empty state triple the replay's wall-clock in pure store
-    // I/O. Size the stateful shuffle to the state, not to the cores
-    // (the conf is read once at query start; restored after).
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        windowedByType(stream)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Complete).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    drainToMemory(spark, "q276", OutputMode.Complete)(windowedByType(stream))
+  }
+
+  /** Runs `query` into a fresh memory sink named after `prefix` until
+    * its finite replay drains, stops it, and returns the sink table.
+    * The streaming state is domain-bounded and tiny, but every shuffle
+    * partition carries a state store whose checkpoint files are written
+    * per trigger; 32 partitions of near-empty state triple the replay's
+    * wall-clock in pure store I/O. So the stateful shuffle is sized to
+    * the state, not to the cores: 4 partitions while the query starts
+    * (the conf is read once, at start).
+    */
+  private def drainToMemory(spark: SparkSession, prefix: String,
+      mode: OutputMode)(query: => DataFrame): DataFrame = {
+    val name = s"${prefix}_sink_${sinkCounter.incrementAndGet()}"
+    val q = graft.core.GraftSession.withConf(spark,
+        Map("spark.sql.shuffle.partitions" -> "4")) {
+      query.writeStream.format("memory").queryName(name)
+        .outputMode(mode).start()
+    }
     try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
@@ -157,14 +162,15 @@ object EventStream {
   private[streaming] def writeReplayChunk(
       df: DataFrame, dir: String, idx: Int): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_chunk")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = tmp.toFile.listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.toPath
-    val dest = java.nio.file.Paths.get(dir, f"chunk_$idx%02d.parquet")
-    java.nio.file.Files.move(part, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 1000L))
-    graft.core.SharedRelations.deleteTree(tmp)
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.toFile.listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      val dest = java.nio.file.Paths.get(dir, f"chunk_$idx%02d.parquet")
+      java.nio.file.Files.move(part, dest)
+      java.nio.file.Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 1000L))
+    } finally graft.core.SharedRelations.deleteTree(tmp)
   }
 
   /** Declared q277: the streaming twin of q66 — gap-based sessions via
@@ -187,19 +193,10 @@ object EventStream {
     import spark.implicits._
     val stream = readEventStream(spark, orderedReplayDir(spark, d),
       maxFilesPerTrigger = 2)
-    val name = s"q277_sink_${sinkCounter.incrementAndGet()}"
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        sessionize(stream.withWatermark("ts", "10 minutes").as[EventRow],
-          gapMs = 30L * 60 * 1000)
-          .toDF()
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).where(col("user_id") >= 0)
+    drainToMemory(spark, "q277", OutputMode.Append)(
+      sessionize(stream.withWatermark("ts", "10 minutes").as[EventRow],
+        gapMs = 30L * 60 * 1000).toDF())
+      .where(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
         col("n_events"))
   }
@@ -227,18 +224,9 @@ object EventStream {
     import spark.implicits._
     val stream = readEventStream(spark, orderedReplayDir(spark, d),
       maxFilesPerTrigger = 2)
-    val name = s"q280_sink_${sinkCounter.incrementAndGet()}"
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        anomalies(stream.as[EventRow], minN = 30, threshold = 3.0)
-          .toDF()
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).where(col("event_type") =!= "__sentinel")
+    drainToMemory(spark, "q280", OutputMode.Append)(
+      anomalies(stream.as[EventRow], minN = 30, threshold = 3.0).toDF())
+      .where(col("event_type") =!= "__sentinel")
       .select(col("event_type"), col("event_id"), col("ts"),
         col("value"), col("z"), col("n_seen"))
   }

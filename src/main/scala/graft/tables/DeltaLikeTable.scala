@@ -1650,10 +1650,8 @@ object DeltaLikeTable {
     val stageName = s"_stage-${UUID.randomUUID().toString.take(8)}"
     val stageDir = s"$tableRoot/$stageName"
     val spark = df.sparkSession
-    val tsConfKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsConfKey)
-    spark.conf.set(tsConfKey, "TIMESTAMP_MICROS")
-    try {
+    graft.core.GraftSession.withConf(spark,
+        Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")) {
       var writer = df.write.mode("overwrite")
       // parquet-native bloom filters: written into each file's column
       // chunks, applied by the reader at row-group level on pushed
@@ -1665,9 +1663,6 @@ object DeltaLikeTable {
       }
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(stageDir)
-    } finally prevTs match {
-      case Some(v) => spark.conf.set(tsConfKey, v)
-      case None    => spark.conf.unset(tsConfKey)
     }
     // relative paths, partition subdirs included (e.g. "k=1/part-….parquet")
     val parts = io.walkFiles(stageDir)

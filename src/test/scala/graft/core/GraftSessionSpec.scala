@@ -45,6 +45,26 @@ class GraftSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getConf.get("spark.ui.retainedJobs") === "300")
   }
 
+  test("withConf: restores a prior value, unsets an absent key, also on a throw") {
+    val set = "spark.sql.shuffle.partitions"
+    val absent = "spark.graft.spec.scoped"
+    assert(spark.conf.getOption(absent) === None)
+    val seen = GraftSession.withConf(spark, Map(set -> "1", absent -> "x")) {
+      (spark.conf.get(set), spark.conf.get(absent))
+    }
+    assert(seen === ("1", "x"))
+    assert(spark.conf.get(set) === "3")
+    assert(spark.conf.getOption(absent) === None)
+    val thrown = intercept[IllegalStateException] {
+      GraftSession.withConf(spark, Map(set -> "1", absent -> "x")) {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(thrown.getMessage === "body failed")
+    assert(spark.conf.get(set) === "3")
+    assert(spark.conf.getOption(absent) === None)
+  }
+
   test("Harness.each: runs only the admitted names, each under its job group") {
     val ran = ListBuffer[(String, String)]()
     val errors = Harness.each(spark, Seq("a", "b", "c"), Some(Set("a", "c")), rep = 2) { n =>

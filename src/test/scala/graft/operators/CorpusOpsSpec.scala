@@ -5,17 +5,20 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 class CorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("corpus-ops-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("weightedSample: exact k, deterministic, heavier rows favored, zero-weight excluded") {
     val sp = spark; import sp.implicits._
@@ -407,7 +410,7 @@ class CorpusOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the keep rule is a stateless per-row expression (md5 uniform vs
     // weight) — the SAME curation step must run incrementally over a
     // document stream with no state store and no re-scoring drift
-    val dir = java.nio.file.Files.createTempDirectory("corpstream").toString
+    val dir = tempDirs("corpstream")
     val docs = graft.core.Tables.documents(spark, sfDir)
       .select("doc_id", "text")
     docs.repartition(4).write.mode("overwrite").parquet(dir)

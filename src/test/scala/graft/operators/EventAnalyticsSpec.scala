@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Funnel ordering semantics and cohort week arithmetic on planted
@@ -13,11 +14,13 @@ import graft.core.GraftSession
 class EventAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("event-analytics-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("funnel: strict ordering, equal-timestamp rejection, repeats harmless") {
     val sp = spark; import sp.implicits._
@@ -340,8 +343,7 @@ class EventAnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1L, 5000L, 3L), (1L, 5500L, 4L),        // B straddles cut=5200
       (1L, 9000L, 5L),                          // C
       (2L, 2000L, 6L)).toDF("user_id", "us", "event_id")
-    val path = java.nio.file.Files
-      .createTempDirectory("inc_sessions_spec").toString
+    val path = tempDirs("inc_sessions_spec")
     val got = EventAnalytics.incrementalSessions(e, cutUs = 5200L,
         gapUs = gap, path = path)
       .collect().map(r => (r.getAs[Long]("user_id"),

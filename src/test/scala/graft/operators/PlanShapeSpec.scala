@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Physical-plan regression pins for the headline queries: each
@@ -16,12 +17,14 @@ import graft.core.GraftSession
 class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
   private val sfDir = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("plan-shape", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   /** Executed plan string after running the query (final AQE plan only —
     * the rendering appends the pre-execution "Initial Plan" section,
@@ -74,7 +77,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("deltalike scan pushes filters and prunes files via stats") {
-    val dir = java.nio.file.Files.createTempDirectory("planshape").toString
+    val dir = tempDirs("planshape")
     val sp = spark; import sp.implicits._
     // two files with disjoint key ranges → stats prune one
     graft.tables.DeltaLikeTable.write(

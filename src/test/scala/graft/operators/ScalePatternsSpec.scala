@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -9,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** The two explicit shuffle-management patterns: salting for skewed
@@ -18,16 +17,18 @@ import graft.core.GraftSession
 class ScalePatternsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("scale-patterns", cores = 4,
       extraConf = Map(
         "spark.sql.warehouse.dir" ->
-          Files.createTempDirectory("graft_wh").toString,
+          tempDirs("graft_wh"),
         // force real shuffle joins so the bucketing effect is observable
         "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   test("salted join equals plain join on skewed data (inner and left)") {
     val sp = spark; import sp.implicits._

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 import graft.sources.Sources
 import graft.tables.DeltaLikeTable
@@ -20,11 +21,13 @@ import graft.tables.DeltaLikeTable
 class ReferenceReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("reference-replay", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private val ddl =
     "PassengerId INT, Survived INT, Pclass INT, Name STRING, Sex STRING, " +
@@ -48,8 +51,8 @@ class ReferenceReplaySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("full reference pipeline: csv → v0 → merge → reads → time travel → manifest") {
-    val csvDir = Files.createTempDirectory("titanic_csv").toString
-    val tablePath = Files.createTempDirectory("titanic_table").toString
+    val csvDir = tempDirs("titanic_csv")
+    val tablePath = tempDirs("titanic_table")
     writeCsv(csvDir)
 
     val pipeline = new Pipeline(Seq(

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Streaming Welford z-score anomaly detection: the stream
@@ -16,11 +15,13 @@ import graft.core.GraftSession
 class AnomalyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("anomaly-stream-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def ts(s: Int) = new java.sql.Timestamp(1700000000000L + s * 1000L)
 
@@ -43,7 +44,7 @@ class AnomalyStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stream flags exactly the replay's anomalies across micro-batches") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("anomalies").toString
+    val dir = tempDirs("anomalies")
     // several files → several micro-batches; state must carry across
     eventRows.sortBy(_._2.getTime).grouped(13).foreach { chunk =>
       chunk.toDF("event_id", "ts", "user_id", "event_type", "value", "props")

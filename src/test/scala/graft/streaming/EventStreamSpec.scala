@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.{GraftSession, Tables}
 
 /** Batch-vs-stream equivalence (SURVEY.md §5.5): the same aggregation
@@ -18,19 +17,21 @@ import graft.core.{GraftSession, Tables}
 class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
   private val sfDir = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("stream-spec", cores = 4,
       extraConf = Map("spark.sql.streaming.schemaInference" -> "false"))
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
   test("windowed aggregation: stream (complete mode) equals batch") {
-    val dir = Files.createTempDirectory("evstream").toString
+    val dir = tempDirs("evstream")
     val events = Tables.events(spark, sfDir).drop("props")
       .withColumn("props", lit(null).cast("string"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -53,7 +54,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("watermark: late events dropped, closed windows emitted once") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("evlate").toString
+    val dir = tempDirs("evlate")
     def ts(h: Int, m: Int = 0) =
       java.sql.Timestamp.valueOf(f"2024-03-01 ${h}%02d:${m}%02d:00")
     def write(name: String, rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]): Unit =
@@ -91,7 +92,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream-stream interval join equals the batch join") {
-    val dir = Files.createTempDirectory("evjoin").toString
+    val dir = tempDirs("evjoin")
     Tables.events(spark, sfDir).drop("props")
       .withColumn("props", lit(null).cast("string"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -116,7 +117,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming dedup within watermark: duplicates across batches collapse to one") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("evdedup").toString
+    val dir = tempDirs("evdedup")
     def ts(h: Int, m: Int = 0) =
       java.sql.Timestamp.valueOf(f"2024-03-01 ${h}%02d:${m}%02d:00")
     def write(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)]): Unit =
@@ -159,7 +160,7 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("mapGroupsWithState per-user profiles: streaming final state equals batch") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("evstate").toString
+    val dir = tempDirs("evstate")
     Tables.events(spark, sfDir).drop("props")
       .withColumn("props", lit(null).cast("string"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.GraftSession
 
 /** Gap-based sessionization: streaming (flatMapGroupsWithState +
@@ -16,12 +15,14 @@ import graft.core.GraftSession
 class SessionizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tempDirs = new TempDirs
   private val GapMs = 30L * 60 * 1000 // 30 minutes
 
   override def beforeAll(): Unit = {
     spark = GraftSession.local("sessionize-spec", cores = 4)
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
 
   private def ts(h: Int, m: Int) =
     java.sql.Timestamp.valueOf(f"2024-04-01 $h%02d:$m%02d:00")
@@ -47,7 +48,7 @@ class SessionizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming sessions equal batch sessions for watermark-closed sessions") {
     val sp = spark; import sp.implicits._
-    val dir = Files.createTempDirectory("sessions").toString
+    val dir = tempDirs("sessions")
     // one file per trigger, in EVENT-TIME order — otherwise earlier
     // events of one user arrive below the watermark advanced by another
     // user's later events and are (correctly) dropped as late
