@@ -130,10 +130,8 @@ final class DeltaLikeTable private (
   private def deleteViaVectors(condition: Column, snap: Snapshot): Option[Long] =
     markDeleted("delete", condition, snap).map { case (_, touched, marked, n) =>
       if (n > 0)
-        DeltaLikeTable.commitRewrite(log, snap.version,
-          touched.map(f => RemoveFile(f.path)) ++ marked :+
-            CommitInfo("DELETE", System.currentTimeMillis()),
-          touched.map(_.path).toSet)
+        log.transact(Some(snap), "DELETE",
+          touched.map(f => RemoveFile(f.path)) ++ marked, Some(touched.map(_.path).toSet))
       n.toLong
     }
 
@@ -322,42 +320,33 @@ final class DeltaLikeTable private (
   }
 
   /** Post-write auto-compaction (Delta's `autoCompact`): best-effort,
-    * scoped to the PARTITION DIRECTORIES this write just touched — an
+    * scoped to the PARTITION DIRECTORIES of the `written` files — an
     * append to the hot ingest partition of a 100 TB table can only ever
     * rewrite that partition's small files, never the cold ones. Fires
-    * when ≥ `minFiles` live small files (< `smallBytes`) sit in the
-    * written directories; losing the commit race to a concurrent writer
-    * abandons the compaction (the next write retries it naturally).
+    * when ≥ [[DeltaLikeTable.AutoCompactMinFiles]] live small files (<
+    * [[DeltaLikeTable.AutoCompactSmallBytes]]) sit in those directories.
+    * A rewrite like OPTIMIZE: it rebases over disjoint concurrent
+    * commits, and a conflict skips it (the next write retries it).
     */
-  private[tables] def autoCompactIfNeeded(
-      writtenDirs: Set[String],
-      smallBytes: Long,
-      minFiles: Int): Unit = {
+  private[tables] def autoCompactIfNeeded(written: Seq[AddFile]): Unit = {
     val snap = log.snapshot()
     def dirOf(p: String): String = {
       val i = p.lastIndexOf('/'); if (i < 0) "" else p.substring(0, i)
     }
+    val writtenDirs = written.map(a => dirOf(a.path)).toSet
+    val smallBytes = DeltaLikeTable.AutoCompactSmallBytes
     val candidates = snap.files.filter(f =>
       f.sizeBytes < smallBytes && !DeltaLog.isAbsolute(f.path) &&
         writtenDirs.contains(dirOf(f.path)))
-    if (candidates.size < minFiles) return
+    if (candidates.size < DeltaLikeTable.AutoCompactMinFiles) return
     val target = math.max(1, math.ceil(
       candidates.map(_.sizeBytes).sum.toDouble / smallBytes).toInt)
     val compacted = DeltaLikeTable.readSnapshot(spark,
       snap.copy(files = candidates)).repartition(target)
-    val adds = DeltaLikeTable.stageFiles(compacted, path,
-      snap.partitionColumns, snap.bloomFilterColumns, snap.columnMapping)
     // the operation name must satisfy CommitInfo.isDataNeutral, or the
     // compaction would surface as spurious row-level changes
-    try log.commit(snap.version + 1,
-      candidates.map(f => RemoveFile(f.path)) ++ adds :+
-        CommitInfo("OPTIMIZE (AUTO COMPACT)", System.currentTimeMillis()))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        DeltaLikeTable.discardStaged(path, adds) // lost the race: skip
-      case e: Throwable =>
-        DeltaLikeTable.discardStaged(path, adds); throw e
-    }
+    try DeltaLikeTable.rewriteFiles(log, snap, "OPTIMIZE (AUTO COMPACT)", candidates, compacted)
+    catch { case _: java.util.ConcurrentModificationException => () }
   }
 
   /** ADD a CHECK constraint (name → boolean SQL expression over the
@@ -374,9 +363,8 @@ final class DeltaLikeTable private (
       .where(!coalesce(expr(constraintExpr), lit(false))).limit(1).count()
     require(bad == 0,
       s"cannot add CHECK constraint '$name': existing rows violate ($constraintExpr)")
-    log.commit(snap.version + 1, Seq(
-      snap.toMetaData(constraints = snap.constraints + (name -> constraintExpr)),
-      CommitInfo(s"ADD CONSTRAINT $name", System.currentTimeMillis())))
+    log.transact(Some(snap), s"ADD CONSTRAINT $name",
+      Seq(snap.toMetaData(constraints = snap.constraints + (name -> constraintExpr))))
     this
   }
 
@@ -398,9 +386,8 @@ final class DeltaLikeTable private (
       if (snap.columnMapping.isEmpty) snap.columnMapping
       else snap.columnMapping +
         (name -> DeltaLikeTable.freshPhysicalName(name))
-    log.commit(snap.version + 1, Seq(
-      snap.toMetaData(schemaDdl = newSchema.toDDL, columnMapping = mapping),
-      CommitInfo(s"ADD COLUMN $name", System.currentTimeMillis())))
+    log.transact(Some(snap), s"ADD COLUMN $name",
+      Seq(snap.toMetaData(schemaDdl = newSchema.toDDL, columnMapping = mapping)))
     this
   }
 
@@ -421,19 +408,16 @@ final class DeltaLikeTable private (
         "chain, float→double)")
     val newSchema = StructType(snap.schema.fields.map(f =>
       if (f.name.equalsIgnoreCase(name)) f.copy(dataType = dt) else f))
-    log.commit(snap.version + 1, Seq(
-      snap.toMetaData(schemaDdl = newSchema.toDDL),
-      CommitInfo(s"ALTER COLUMN $name TYPE ${dt.catalogString}",
-        System.currentTimeMillis())))
+    log.transact(Some(snap), s"ALTER COLUMN $name TYPE ${dt.catalogString}",
+      Seq(snap.toMetaData(schemaDdl = newSchema.toDDL)))
     this
   }
 
   def dropConstraint(name: String): DeltaLikeTable = {
     val snap = log.snapshot()
     require(snap.constraints.contains(name), s"no such constraint '$name'")
-    log.commit(snap.version + 1, Seq(
-      snap.toMetaData(constraints = snap.constraints - name),
-      CommitInfo(s"DROP CONSTRAINT $name", System.currentTimeMillis())))
+    log.transact(Some(snap), s"DROP CONSTRAINT $name",
+      Seq(snap.toMetaData(constraints = snap.constraints - name)))
     this
   }
 
@@ -460,10 +444,9 @@ final class DeltaLikeTable private (
     val gens = snap.generatedColumns.map { case (k, v) =>
       (if (k == oldName) newName else k) -> v
     }
-    log.commit(snap.version + 1, Seq(
-      snap.toMetaData(schemaDdl = schema.toDDL, bloomFilterColumns = blooms,
-        columnMapping = mapping, generatedColumns = gens),
-      CommitInfo(s"RENAME COLUMN $oldName TO $newName", System.currentTimeMillis())))
+    log.transact(Some(snap), s"RENAME COLUMN $oldName TO $newName",
+      Seq(snap.toMetaData(schemaDdl = schema.toDDL, bloomFilterColumns = blooms,
+        columnMapping = mapping, generatedColumns = gens)))
     this
   }
 
@@ -480,11 +463,10 @@ final class DeltaLikeTable private (
     val mapping = materialized(snap) - name
     val schema = StructType(snap.schema.fields.filterNot(_.name == name))
     val blooms = snap.bloomFilterColumns.filterNot(_ == name)
-    log.commit(snap.version + 1, Seq(
-      snap.toMetaData(schemaDdl = schema.toDDL, bloomFilterColumns = blooms,
+    log.transact(Some(snap), s"DROP COLUMN $name",
+      Seq(snap.toMetaData(schemaDdl = schema.toDDL, bloomFilterColumns = blooms,
         columnMapping = mapping,
-        generatedColumns = snap.generatedColumns - name),
-      CommitInfo(s"DROP COLUMN $name", System.currentTimeMillis())))
+        generatedColumns = snap.generatedColumns - name)))
     this
   }
 
@@ -612,9 +594,7 @@ final class DeltaLikeTable private (
       if (target.toMetaData(identityColumns = cur.identityColumns) ==
         cur.toMetaData()) Seq.empty
       else Seq(target.toMetaData(identityColumns = cur.identityColumns))
-    log.commit(cur.version + 1,
-      meta ++ removes ++ readds :+
-        CommitInfo(s"RESTORE VERSION AS OF $version", System.currentTimeMillis()))
+    log.transact(Some(cur), s"RESTORE VERSION AS OF $version", meta ++ removes ++ readds)
     this
   }
 
@@ -719,10 +699,8 @@ final class DeltaLikeTable private (
     val srcRoot = DeltaLog.absolutePath(path)
     val refs = snap.files.map(f =>
       f.copy(path = DeltaLog.resolvePath(srcRoot, f.path)))
-    tlog.commit(0L,
-      snap.toMetaData() +: (refs :+
-        CommitInfo(s"SHALLOW CLONE FROM $srcRoot@v${snap.version}",
-          System.currentTimeMillis())))
+    tlog.transact(None, s"SHALLOW CLONE FROM $srcRoot@v${snap.version}",
+      snap.toMetaData() +: refs)
     new DeltaLikeTable(spark, target, None)
   }
 
@@ -751,10 +729,8 @@ final class DeltaLikeTable private (
       tio.copy(DeltaLog.resolvePath(path, f.path), s"$target/$rel")
       f.copy(path = rel)
     }
-    tlog.commit(0L,
-      snap.toMetaData() +: (copied :+
-        CommitInfo(s"DEEP CLONE FROM $path@v${snap.version}",
-          System.currentTimeMillis())))
+    tlog.transact(None, s"DEEP CLONE FROM $path@v${snap.version}",
+      snap.toMetaData() +: copied)
     new DeltaLikeTable(spark, target, None)
   }
 }
@@ -834,12 +810,14 @@ object DeltaLikeTable {
     * evolved files may miss dropped-from-df ones; the schema-on-read
     * parquet scan fills both.
     *
-    * `skipCommitIf` is re-evaluated against the log before every commit
-    * attempt (including rebased retries after a concurrent-writer
-    * conflict); returning true abandons the commit and DELETES the
-    * staged files (they were never logged, so no later vacuum could
-    * reclaim them) — the hook the streaming sink uses to make its
-    * (queryId, batchId) idempotence check race-free.
+    * The write commits through [[DeltaLog.transact]]. An append rebases
+    * over concurrent commits that change no metadata; an overwrite, or
+    * an append that carries metadata (a create, schema evolution, an
+    * identity watermark), fails on any concurrent commit. A [[Txn]] in
+    * `extraActions` that the table already holds at or past its version,
+    * or that a concurrent commit lands first, abandons the write and
+    * DELETES its staged files — the streaming sink's race-free
+    * (queryId, batchId) idempotence check.
     */
   def write(
       df: DataFrame,
@@ -847,7 +825,6 @@ object DeltaLikeTable {
       mode: String = "overwrite",
       operation: String = "WRITE",
       partitionBy: Seq[String] = Seq.empty,
-      skipCommitIf: DeltaLog => Boolean = _ => false,
       mergeSchema: Boolean = false,
       extraActions: Seq[Action] = Seq.empty,
       bloomFilterColumns: Seq[String] = Seq.empty,
@@ -955,10 +932,9 @@ object DeltaLikeTable {
           s"its expression (${effectiveGenerated(c)})"
       })
     }
-    writeResolved(df0, path, mode, operation, partitionBy, skipCommitIf,
-      mergeSchema, extraActions, bloomFilterColumns, enableDeletionVectors,
-      effectiveGenerated, effectiveIdentity, identityAssigned, autoCompact,
-      clusterBy, log, prev)
+    writeResolved(df0, path, mode, operation, partitionBy, mergeSchema,
+      extraActions, bloomFilterColumns, enableDeletionVectors, effectiveGenerated,
+      effectiveIdentity, identityAssigned, autoCompact, clusterBy, log, prev)
   }
 
   /** A sticky table property (partitioning, bloom filter columns,
@@ -982,7 +958,6 @@ object DeltaLikeTable {
       mode: String,
       operation: String,
       partitionBy: Seq[String],
-      skipCommitIf: DeltaLog => Boolean,
       mergeSchema: Boolean,
       extraActions: Seq[Action],
       bloomFilterColumns: Seq[String],
@@ -1103,92 +1078,31 @@ object DeltaLikeTable {
           case None => c -> enc
         }
       }
-    val identityChanged =
-      identityCommitted != prev.map(_.identityColumns).getOrElse(Map.empty)
-    val removes = mode match {
-      case "overwrite" => prev.map(_.files.map(f => RemoveFile(f.path))).getOrElse(Seq.empty)
-      case "append"    => Seq.empty
+    val append = mode == "append"
+    val removes = if (append) Seq.empty else prev.toSeq.flatMap(_.files.map(f => RemoveFile(f.path)))
+    val meta = prev match {
+      case Some(p) if append && sameSchema(p.schema, committedSchema) &&
+        identityCommitted == p.identityColumns &&
+        (p.deletionVectors || !enableDeletionVectors) => Seq.empty
+      case _ =>
+        Seq(MetaData(committedSchema.toDDL, effectiveParts, effectiveBlooms,
+          effectiveConstraints, effectiveDv, effectiveMapping,
+          effectiveGenerated, identityCommitted, effectiveCluster))
     }
-    // Optimistic concurrency: the create-exclusive commit detects a
-    // concurrent writer. An APPEND commutes with any other commit (no
-    // removes; data files are already uniquely named), so it rebases to
-    // the new head and retries — after re-checking the schema, which a
-    // concurrent overwrite could have changed. Overwrites are genuine
-    // conflicts and fail fast; merges/deletes/updates rebase iff the
-    // concurrent commit touched disjoint files ([[commitRewrite]]).
-    // Any abandoned commit — skipCommitIf, a lost overwrite race, an
-    // exhausted/failed rebase — deletes its staged files: they were
-    // never logged as AddFile, so nothing else (vacuum included) would
-    // ever reclaim them.
-    var attempt = 0
-    var done = false
-    val schemaChanged = prev.exists(s => !sameSchema(s.schema, committedSchema))
-    try {
-      while (!done) {
-        if (skipCommitIf(log)) {
-          discardStaged(path, adds)
-          return new DeltaLikeTable(df.sparkSession, path, None)
-        }
-        val version = log.latestVersion + 1
-        val meta =
-          if (version == 0 || mode == "overwrite" || schemaChanged ||
-            identityChanged ||
-            (enableDeletionVectors && !prev.exists(_.deletionVectors)))
-            Seq(MetaData(committedSchema.toDDL, effectiveParts, effectiveBlooms,
-              effectiveConstraints, effectiveDv, effectiveMapping,
-              effectiveGenerated, identityCommitted, effectiveCluster))
-          else Seq.empty
-        try {
-          log.commit(version,
-            meta ++ removes ++ adds ++ extraActions :+
-              CommitInfo(operation, System.currentTimeMillis()))
-          done = true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException
-              if mode == "append" && attempt < 20 =>
-            attempt += 1
-            val head = log.snapshot()
-            // an evolved append rebases only onto the schema it merged from
-            require(
-              if (mergeSchema) prev.exists(p => sameSchema(head.schema, p.schema))
-              else sameSchema(head.schema, df.schema),
-              s"append conflict: concurrent writer changed schema to ${head.schema.toDDL}")
-            // files were staged under the pre-conflict partition layout; a
-            // concurrent overwrite that re-partitioned the table would make
-            // their paths lie about partition values — fail, don't rebase
-            require(head.partitionColumns == effectiveParts,
-              s"append conflict: concurrent writer changed partitioning to " +
-                s"${head.partitionColumns} (append staged ${effectiveParts})")
-            // ids were assigned from the pre-conflict watermark; if a
-            // concurrent commit advanced it, a rebase would duplicate
-            // ids — this write must fail and be retried from the top
-            require(identityAssigned.isEmpty ||
-              head.identityColumns == prev.map(_.identityColumns).getOrElse(Map.empty),
-              "append conflict: concurrent identity assignment (ids were " +
-                "allocated from a stale watermark; retry the write)")
-        }
-      }
-    } catch {
-      case e: Throwable => discardStaged(path, adds); throw e
-    }
+    // an append reads none of the table's files; an overwrite, all of them
+    val committed = log.transact(prev, operation, meta ++ removes ++ adds ++ extraActions,
+      read = if (append) Some(Set.empty) else None, staged = adds)
     val table = new DeltaLikeTable(df.sparkSession, path, None)
-    if (autoCompact) {
-      def dirOf(p: String): String = {
-        val i = p.lastIndexOf('/'); if (i < 0) "" else p.substring(0, i)
-      }
-      table.autoCompactIfNeeded(adds.map(a => dirOf(a.path)).toSet,
-        AutoCompactSmallBytes, AutoCompactMinFiles)
-    }
+    if (committed && autoCompact) table.autoCompactIfNeeded(adds)
     table
   }
 
   /** Auto-compaction thresholds (Delta's defaults scaled to this
     * engine): files below `AutoCompactSmallBytes` count as small;
     * `AutoCompactMinFiles` of them in the written partitions trigger a
-    * compaction commit. Overridable for tests via system properties.
+    * compaction commit. Specs lower the count via a system property.
     */
-  private[tables] def AutoCompactSmallBytes: Long =
-    java.lang.Long.getLong("graft.autoCompact.smallBytes", 128L * 1024 * 1024)
+  private[tables] val AutoCompactSmallBytes: Long = 128L * 1024 * 1024
   private[tables] def AutoCompactMinFiles: Int =
     Integer.getInteger("graft.autoCompact.minFiles", 8)
 
@@ -1234,68 +1148,6 @@ object DeltaLikeTable {
       val name = bad.head.getString(0)
       throw new IllegalArgumentException(
         s"CHECK constraint '$name' violated by write: ${constraints(name)}")
-    }
-  }
-
-  /** One-shot test seam: invoked (and cleared) immediately before a
-    * rewriting transaction's first commit attempt, so specs can inject
-    * a concurrent commit deterministically — the only way to pin the
-    * interleaving without a racy multi-threaded test.
-    */
-  @volatile private[tables] var preRewriteCommitHook: () => Unit = () => ()
-
-  /** Commit a REWRITING transaction (MERGE / DELETE / UPDATE) with
-    * file-disjoint rebase — Delta's WriteSerializable default. The
-    * transaction was built against `baseVersion`; if another writer
-    * committed first, it retries onto the new head iff every concurrent
-    * commit is data-disjoint:
-    *
-    *   - no concurrent `MetaData` action (a schema / partitioning /
-    *     constraint change invalidates the staged rewrite wholesale), and
-    *   - no concurrent `RemoveFile` of a file this transaction touched
-    *     (the rewrite read those rows and re-removes those files — a
-    *     write-write conflict on the same data).
-    *
-    * Concurrent `AddFile`s never intersect the touched set (they are
-    * fresh names by construction), so a concurrent append — or a
-    * rewrite of OTHER files, e.g. two MERGEs on disjoint partitions —
-    * rebases cleanly and the result equals some serial order. Like
-    * Delta under WriteSerializable, a concurrent append whose rows
-    * WOULD have matched this transaction's predicate is not a conflict:
-    * the rewrite serializes before it. A transaction carrying a MetaData
-    * action of its own (a schema-evolving merge) fails fast instead.
-    */
-  private[tables] def commitRewrite(
-      log: DeltaLog,
-      baseVersion: Long,
-      actions: Seq[Action],
-      touchedRel: Set[String],
-      maxAttempts: Int = 20): Unit = {
-    val hook = preRewriteCommitHook
-    preRewriteCommitHook = () => ()
-    hook()
-    val rebaseable = !actions.exists(_.isInstanceOf[MetaData])
-    var version = baseVersion + 1
-    var attempt = 0
-    while (true) {
-      try { log.commit(version, actions); return }
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1
-          if (!rebaseable || attempt > maxAttempts) throw e
-          val head = log.latestVersion
-          val conflict = (version to head).flatMap(log.actions).collectFirst {
-            case _: MetaData => "a metadata change"
-            case RemoveFile(p) if touchedRel.contains(p) =>
-              s"removal of touched file $p"
-          }
-          conflict.foreach { why =>
-            throw new java.util.ConcurrentModificationException(
-              s"rewrite built at version $baseVersion cannot rebase over " +
-                s"concurrent commit(s) $version..$head: $why")
-          }
-          version = head + 1
-      }
     }
   }
 
@@ -1356,11 +1208,11 @@ object DeltaLikeTable {
   }
 
   /** The copy-on-write commit of MERGE, DELETE, UPDATE and OPTIMIZE:
-    * stage `rows` under the snapshot's layout, commit remove(`touched`)
-    * ++ `extra` ++ the staged files as one version ([[commitRewrite]]),
-    * and delete the staged files if the commit throws. A [[MetaData]] in
-    * `extra` supplies the column mapping the files are staged under.
-    * Returns the staged files.
+    * stage `rows` under the snapshot's layout and commit remove(`touched`)
+    * ++ `extra` ++ the staged files as one version through
+    * [[DeltaLog.transact]], with `touched` as the files read. A
+    * [[MetaData]] in `extra` supplies the column mapping the files are
+    * staged under. Returns the staged files.
     */
   private[tables] def rewriteFiles(
       log: DeltaLog,
@@ -1372,25 +1224,10 @@ object DeltaLikeTable {
     val mapping = extra.collectFirst { case m: MetaData => m.columnMapping }
     val adds = stageFiles(rows, snap.tableRoot, snap.partitionColumns,
       snap.bloomFilterColumns, mapping.getOrElse(snap.columnMapping))
-    try commitRewrite(log, snap.version,
-      touched.map(f => RemoveFile(f.path)) ++ extra ++ adds :+
-        CommitInfo(operation, System.currentTimeMillis()),
-      touched.map(_.path).toSet)
-    catch {
-      case e: Throwable => discardStaged(snap.tableRoot, adds); throw e
-    }
+    log.transact(Some(snap), operation,
+      touched.map(f => RemoveFile(f.path)) ++ extra ++ adds,
+      Some(touched.map(_.path).toSet), adds)
     adds
-  }
-
-  /** Delete data files staged for a commit that will never happen. Never
-    * throws — the original failure (if any) is the interesting one.
-    */
-  private[tables] def discardStaged(tableRoot: String, adds: Seq[AddFile]): Unit = {
-    val io = TableIO.forPath(tableRoot)
-    adds.foreach { a =>
-      try io.delete(s"$tableRoot/${a.path}")
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
   }
 
   private[tables] def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
@@ -1536,9 +1373,7 @@ object DeltaLikeTable {
       FooterStats.forFile(hadoopConf, s"$path/$rel", rel,
         io.size(s"$path/$rel"), inferred, partitionColumns)
     }
-    log.commit(0L,
-      MetaData(inferred.toDDL, partitionColumns) +: (adds :+
-        CommitInfo("CONVERT", System.currentTimeMillis())))
+    log.transact(None, "CONVERT", MetaData(inferred.toDDL, partitionColumns) +: adds)
     new DeltaLikeTable(spark, path, None)
   }
 

@@ -228,10 +228,90 @@ final class DeltaLog(val tableRoot: String) {
       genCols, idCols, clusterCols)
   }
 
+  /** The one optimistic transaction every table operation commits
+    * through (Delta's OptimisticTransaction): `acts` plus one
+    * [[CommitInfo]] for `operation`, built on `base`, the snapshot the
+    * caller validated against (None: the table does not exist yet).
+    * `read` holds the log paths of the files the operation read (None:
+    * the whole table); `staged` the data files it wrote, deleted if the
+    * commit does not happen — they were never logged, so no vacuum
+    * would reclaim them. Version base + 1 is attempted first; on a
+    * collision the commits since are read and:
+    *
+    *   - a `Txn` at or past one this transaction carries (or one already
+    *     in `base`) abandons it: an exactly-once writer (the streaming
+    *     sink's (queryId, batchId)) commits each of its versions once;
+    *   - a transaction carrying `MetaData`, or reading the whole table
+    *     (overwrite, RESTORE), never rebases: the collision is rethrown;
+    *   - a concurrent `MetaData` (schema, partitioning, constraint,
+    *     identity watermark), or a concurrent `RemoveFile` of a file in
+    *     `read`, throws [[java.util.ConcurrentModificationException]];
+    *   - otherwise it rebases onto the new head and retries, up to
+    *     [[MaxCommitAttempts]] attempts.
+    *
+    * Concurrent `AddFile`s never intersect `read` (they are fresh names),
+    * so an append, or a rewrite of other files, rebases cleanly and the
+    * result equals some serial order (Delta's WriteSerializable: a
+    * concurrent append whose rows would have matched a rewrite's
+    * predicate is not a conflict). Returns false when abandoned.
+    */
+  private[tables] def transact(
+      base: Option[Snapshot],
+      operation: String,
+      acts: Seq[Action],
+      read: Option[Set[String]] = None,
+      staged: Seq[AddFile] = Seq.empty): Boolean = {
+    val baseVersion = base.fold(-1L)(_.version)
+    val own = acts.collect { case Txn(app, v) => app -> v }.toMap
+    def supersedes(held: Iterable[(String, Long)]): Boolean =
+      held.exists { case (app, v) => own.get(app).exists(_ <= v) }
+    val rebaseable = read.isDefined && !acts.exists(_.isInstanceOf[MetaData])
+    @annotation.tailrec
+    def attempt(version: Long, n: Int): Boolean = {
+      val collision =
+        try { commit(version, acts :+ CommitInfo(operation, System.currentTimeMillis())); None }
+        catch { case e: java.nio.file.FileAlreadyExistsException => Some(e) }
+      if (collision.isEmpty) return true
+      val head = latestVersion
+      val concurrent = (version to head).flatMap(actions)
+      if (supersedes(concurrent.collect { case Txn(app, v) => app -> v })) return false
+      if (!rebaseable) throw collision.get
+      val conflict = concurrent.collectFirst {
+        case _: MetaData => "a metadata change"
+        case RemoveFile(p) if read.exists(_.contains(p)) => s"removal of read file $p"
+      }.orElse(Option.when(n >= MaxCommitAttempts)(s"$n attempts lost the race"))
+      conflict.foreach { why =>
+        throw new java.util.ConcurrentModificationException(
+          s"$operation built at version $baseVersion cannot rebase over " +
+            s"concurrent commit(s) $version..$head: $why")
+      }
+      attempt(head + 1, n + 1)
+    }
+    val committed =
+      try {
+        val hook = preCommitHook
+        preCommitHook = () => ()
+        hook()
+        !base.exists(b => supersedes(b.txns)) && attempt(baseVersion + 1, 1)
+      } catch { case e: Throwable => discard(staged); throw e }
+    if (!committed) discard(staged)
+    committed
+  }
+
+  /** Delete data files staged for a commit that will never happen. Never
+    * throws — the original failure (if any) is the interesting one.
+    */
+  private def discard(staged: Seq[AddFile]): Unit =
+    staged.foreach { a =>
+      try io.delete(s"$tableRoot/${a.path}")
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+
   /** Atomically publish `version`; throws if it was already committed.
     * Every `CheckpointInterval`-th version also writes a checkpoint
     * (best-effort: a concurrent writer's identical checkpoint wins
-    * harmlessly; failures never fail the commit).
+    * harmlessly; failures never fail the commit). Table operations
+    * commit through [[transact]]; this is its create-exclusive primitive.
     */
   def commit(version: Long, acts: Seq[Action]): Unit = {
     io.mkdirs(logDir)
@@ -319,6 +399,18 @@ object DeltaLog {
   val LogDirName = "_graft_log"
   /** Checkpoint cadence in versions. */
   val CheckpointInterval = 10L
+
+  /** Commit attempts a rebasing [[DeltaLog.transact]] makes before it
+    * gives up with a ConcurrentModificationException.
+    */
+  private[tables] val MaxCommitAttempts = 20
+
+  /** One-shot test seam: invoked (and cleared) immediately before a
+    * transaction's first commit attempt, so specs can land a concurrent
+    * commit deterministically — the only way to pin the interleaving
+    * without a racy multi-threaded test.
+    */
+  @volatile private[graft] var preCommitHook: () => Unit = () => ()
 
   /** An AddFile path is normally relative to the table root; a SHALLOW
     * CLONE records absolute paths into the source table instead (Delta's

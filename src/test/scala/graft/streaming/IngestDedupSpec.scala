@@ -325,6 +325,59 @@ class IngestDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.toDF.count() === 4L)
   }
 
+  /** Arm the commit hook so that the transaction `skip` commits from now
+    * throws before its first attempt: a crash after staging.
+    */
+  private def armCrash(skip: Int): Unit =
+    graft.tables.DeltaLog.preCommitHook = () =>
+      if (skip == 0) throw new IllegalStateException("crash") else armCrash(skip - 1)
+
+  test("banded ingest: a crash before the band or the doc commit replays " +
+    "to the uncrashed doc set, with one Txn per batch per table") {
+    val sp = spark; import sp.implicits._
+    import graft.tables.{DeltaLikeSink, DeltaLog, Txn}
+    val q = "crash-spec"
+    val batches = Seq(
+      Seq((10L, baseA + " phi"), (11L, novelB)).toDF("doc_id", "text"),
+      Seq((20L, novelB + " postscript"), (21L, novelC)).toDF("doc_id", "text"))
+    // crashAt(batch) = how many of its commits (sig, band, doc) land first
+    def run(crashAt: Int => Option[Int]): Seq[String] = {
+      val docPath = tempDirs("ingest_crash_tbl")
+      val idxPath = tempDirs("ingest_crash_idx")
+      val seed = Seq((1L, baseA)).toDF("doc_id", "text")
+      DeltaLikeTable.write(seed, docPath)
+      IngestDedup.seedBandedIndex(seed, idxPath, "doc_id", "text")
+      val tables = Seq(s"$idxPath/sig", s"$idxPath/band", docPath)
+      def trigger(b: Int): Unit = IngestDedup.appendDedupedBanded(docPath, idxPath, q,
+        "doc_id", "text")(batches(b), b.toLong)
+      batches.indices.foreach { b =>
+        crashAt(b).foreach { landed =>
+          armCrash(landed)
+          intercept[IllegalStateException](trigger(b))
+          assert(tables.map(DeltaLikeSink.lastCommittedBatchIn(_, q) >= b) ===
+            tables.indices.map(_ < landed), s"crash of batch $b after $landed commits")
+        }
+        trigger(b) // the replay
+      }
+      tables
+    }
+    val clean = run(_ => None)
+    val crashed =
+      try run(Map(0 -> 1, 1 -> 2).get)
+      finally DeltaLog.preCommitHook = () => ()
+    def docs(tables: Seq[String]): Set[Long] =
+      DeltaLikeTable.forPath(spark, tables(2)).toDF.select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+    assert(docs(crashed) === docs(clean))
+    assert(docs(clean) === Set(1L, 11L, 21L))
+    crashed.foreach { p =>
+      val log = DeltaLog.forPath(p)
+      val txns = (0L to log.latestVersion).flatMap(v =>
+        log.actions(v).collect { case Txn(`q`, b) => b })
+      assert(txns.sorted === Seq(0L, 1L), p)
+    }
+  }
+
   test("q283 (banded) final relation equals q278 (from-text)") {
     val d = "/root/testdata/sf0.001"
     val band = IngestDedup.q283StreamIngestBanded(spark, d)

@@ -8,13 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TempDirs
 import graft.core.GraftSession
 
-/** Multi-writer behavior of REWRITING commits (MERGE / DELETE / UPDATE):
-  * a transaction that lost the commit race rebases onto the new head iff
-  * the concurrent commit touched disjoint files, and fails as a genuine
-  * conflict otherwise ([[DeltaLikeTable.commitRewrite]]).
+/** Multi-writer behavior of the one commit transaction
+  * ([[DeltaLog.transact]]): a REWRITING commit (MERGE / DELETE / UPDATE /
+  * OPTIMIZE) that lost the commit race rebases onto the new head iff the
+  * concurrent commit touched disjoint files, and fails as a genuine
+  * conflict otherwise; an overwrite never rebases, an append fails over a
+  * concurrent metadata change, and a duplicate [[Txn]] is abandoned.
   *
   * The interleaving is pinned deterministically with the one-shot
-  * [[DeltaLikeTable.preRewriteCommitHook]] seam: the "concurrent" writer
+  * [[DeltaLog.preCommitHook]] seam: the "concurrent" writer
   * runs to completion between the outer transaction's snapshot read and
   * its first commit attempt — exactly the window where optimistic
   * concurrency matters.
@@ -28,7 +30,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark = GraftSession.local("concurrent-rewrite-spec", cores = 4)
   }
   override def afterAll(): Unit = {
-    DeltaLikeTable.preRewriteCommitHook = () => ()
+    DeltaLog.preCommitHook = () => ()
     try { if (spark != null) spark.stop() } finally tempDirs.deleteAll()
   }
 
@@ -77,7 +79,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("partition-disjoint concurrent MERGEs both commit, state = serial") {
     val path = fresh()
     // the k=2 merge lands while the k=1 merge is between snapshot and commit
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 3L, 300)
+    DeltaLog.preCommitHook = () => mergeN(path, 3L, 300)
     mergeN(path, 1L, 100)
     assert(DeltaLikeTable.forPath(spark, path).version === 2)
     assert(state(path) === Seq((1, 1L, 100), (1, 2L, 20), (2, 3L, 300), (2, 4L, 40)))
@@ -86,7 +88,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("same-file concurrent MERGEs conflict; loser leaves no trace") {
     val path = fresh()
     // both merges rewrite the k=1 file (ids 1 and 2 share it)
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 2L, 200)
+    DeltaLog.preCommitHook = () => mergeN(path, 2L, 200)
     intercept[java.util.ConcurrentModificationException] {
       mergeN(path, 1L, 100)
     }
@@ -100,7 +102,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("DELETE rebases over a partition-disjoint concurrent MERGE") {
     val path = fresh()
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 3L, 300)
+    DeltaLog.preCommitHook = () => mergeN(path, 3L, 300)
     val removed = DeltaLikeTable.forPath(spark, path).delete("id = 1")
     assert(removed === 1L)
     assert(DeltaLikeTable.forPath(spark, path).version === 2)
@@ -109,7 +111,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("UPDATE conflicts when the concurrent commit rewrote its file") {
     val path = fresh()
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 2L, 200)
+    DeltaLog.preCommitHook = () => mergeN(path, 2L, 200)
     intercept[java.util.ConcurrentModificationException] {
       DeltaLikeTable.forPath(spark, path)
         .update(col("id") === 1L, Map("n" -> org.apache.spark.sql.functions.lit(999)))
@@ -122,7 +124,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val path = fresh()
     // split k=1 into two files so the compaction has work to do
     mergeN(path, 1L, 100) // v1 rewrites the k=1 file
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 3L, 300)
+    DeltaLog.preCommitHook = () => mergeN(path, 3L, 300)
     DeltaLikeTable.forPath(spark, path)
       .optimize(targetFiles = 1, zorderBy = Seq.empty, where = Some("k = 1"))
     val t = DeltaLikeTable.forPath(spark, path)
@@ -133,7 +135,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("OPTIMIZE conflicts when the concurrent commit rewrote a selected file") {
     val path = fresh()
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 1L, 100)
+    DeltaLog.preCommitHook = () => mergeN(path, 1L, 100)
     intercept[java.util.ConcurrentModificationException] {
       DeltaLikeTable.forPath(spark, path)
         .optimize(targetFiles = 1, zorderBy = Seq.empty, where = Some("k = 1"))
@@ -145,7 +147,7 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("schema-evolving MERGE fails fast on any concurrent commit") {
     val sp = spark; import sp.implicits._
     val path = fresh()
-    DeltaLikeTable.preRewriteCommitHook = () => mergeN(path, 3L, 300)
+    DeltaLog.preCommitHook = () => mergeN(path, 3L, 300)
     intercept[java.nio.file.FileAlreadyExistsException] {
       DeltaLikeTable.forPath(spark, path).as("t")
         .merge(Seq((1, 1L, 100, "x")).toDF("k", "id", "n", "tag").as("s"),
@@ -160,5 +162,49 @@ class ConcurrentRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = DeltaLikeTable.forPath(spark, path)
     assert(t.version === 1)
     assert(state(path) === Seq((1, 1L, 10), (1, 2L, 20), (2, 3L, 300), (2, 4L, 40)))
+  }
+
+  test("overwrite fails fast when an append lands first") {
+    val sp = spark; import sp.implicits._
+    val path = fresh()
+    DeltaLog.preCommitHook = () =>
+      DeltaLikeTable.write(Seq((2, 9L, 90)).toDF("k", "id", "n"), path, "append")
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      DeltaLikeTable.write(Seq((2, 5L, 50)).toDF("k", "id", "n"), path, "overwrite",
+        partitionBy = Seq("k"))
+    }
+    // the overwrite removed only the files it read: committed, it would
+    // leave the appended row live beside its own
+    assert(DeltaLikeTable.forPath(spark, path).version === 1)
+    assert(state(path) ===
+      Seq((1, 1L, 10), (1, 2L, 20), (2, 3L, 30), (2, 4L, 40), (2, 9L, 90)))
+    assertNoTrace(path)
+  }
+
+  test("append conflicts with a concurrent constraint it would violate") {
+    val sp = spark; import sp.implicits._
+    val path = fresh()
+    DeltaLog.preCommitHook = () =>
+      DeltaLikeTable.forPath(spark, path).addConstraint("pos", "id > 0")
+    intercept[java.util.ConcurrentModificationException] {
+      DeltaLikeTable.write(Seq((1, -5L, 0)).toDF("k", "id", "n"), path, "append")
+    }
+    assert(DeltaLikeTable.forPath(spark, path).version === 1)
+    assert(state(path) === Seq((1, 1L, 10), (1, 2L, 20), (2, 3L, 30), (2, 4L, 40)))
+    assertNoTrace(path)
+  }
+
+  test("two sink commits of one (query, batch): exactly one lands") {
+    val sp = spark; import sp.implicits._
+    val path = fresh()
+    DeltaLog.preCommitHook = () =>
+      DeltaLikeSink.appendBatch(path, "twin")(Seq((2, 7L, 70)).toDF("k", "id", "n"), 3L)
+    DeltaLikeSink.appendBatch(path, "twin")(Seq((2, 8L, 80)).toDF("k", "id", "n"), 3L)
+    val t = DeltaLikeTable.forPath(spark, path)
+    val carrying = (0L to t.version).filter(v => t.log.actions(v).contains(Txn("twin", 3L)))
+    assert(carrying === Seq(1L))
+    assert(state(path) ===
+      Seq((1, 1L, 10), (1, 2L, 20), (2, 3L, 30), (2, 4L, 40), (2, 7L, 70)))
+    assertNoTrace(path)
   }
 }

@@ -329,15 +329,19 @@ class DeltaLikeTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       NioTableIO.walkFiles(path).filter(_.endsWith(".parquet")).toSet
     val before = dataFiles()
 
-    // skipCommitIf abandons after staging → staged files must be gone
+    // a twin commit of the same Txn lands first: the write is abandoned
+    // after staging → staged files must be gone
+    val log = DeltaLog.forPath(path)
+    DeltaLog.preCommitHook = () =>
+      log.commit(log.latestVersion + 1, Seq(Txn("twin", 1L), CommitInfo("TWIN", 0L)))
     DeltaLikeTable.write(Seq((2L, "b")).toDF("id", "v"), path, "append",
-      skipCommitIf = _ => true)
-    assert(dataFiles() === before, "skipCommitIf left orphan files")
+      extraActions = Seq(Txn("twin", 1L)))
+    assert(dataFiles() === before, "abandoned commit left orphan files")
 
     // a commit attempt that dies (hook throws) also cleans up
+    DeltaLog.preCommitHook = () => throw new RuntimeException("boom")
     intercept[RuntimeException] {
-      DeltaLikeTable.write(Seq((3L, "c")).toDF("id", "v"), path, "append",
-        skipCommitIf = _ => throw new RuntimeException("boom"))
+      DeltaLikeTable.write(Seq((3L, "c")).toDF("id", "v"), path, "append")
     }
     assert(dataFiles() === before, "failed commit left orphan files")
     assert(DeltaLikeTable.forPath(spark, path).toDF.count() === 1)
